@@ -1,33 +1,35 @@
-"""Protobuf binary wire format — portable column-expression encoder.
+"""Protobuf binary wire format — Python reference encoder and the portable
+SQL oracle template.
 
 The reference codec's actual job is protobuf wire bytes in and out
 (`@pb_builder.decode(data)`, protobuf.rb:212-218; `serialize_to_string`,
-protobuf.rb:635-636). Round 1 exercised the *semantics* (enums, oneofs,
-defaults) over a textual stand-in; this module puts real varint /
-length-delimited bytes on the table.
+protobuf.rb:635-636). This module holds two renderings of the encoder, and
+neither is the one Spark runs:
 
-Encoding is expressed as pure SQL arithmetic over one template rendered in two
-dialects (functions.portable pattern), producing the payload as a lowercase
-hex string — bit-exact across Spark and DuckDB, so the encoder gets a full
-rows+schema+hash CORRECTNESS oracle instead of a rows-only check:
+- ``py_*``: a pure-Python reference encoder, checked in tests against
+  hand-computed byte vectors from the protobuf encoding spec (e.g. field 1 =
+  varint 150 -> 08 96 01); also the fixture builder.
+- SQL templates rendering the payload as a lowercase hex string in one
+  portable dialect (functions.portable pattern). DuckDB runs them as the
+  bit-exact oracle of ``operators.pb_wire.encode_turn_wire``:
 
-- ``varint_hex``   : base-128 varint of a non-negative int64, unrolled to the
-                     9 groups an int64 < 2^63 can need (each group is plain
-                     intdiv/mod arithmetic — no engine-specific bit ops).
-- ``zigzag``       : sint zigzag mapping as a CASE (2x / -2x-1), no shifts.
-- ``string_field`` : tag + varint(byte_length) + hex(utf8 bytes); both engines'
-                     hex() emits uppercase hex of the raw UTF-8 bytes.
-- proto3 field presence: scalar fields are omitted at their default (0 / ''),
-  oneof members are ALWAYS emitted when chosen — even at the default value
-  (the default-valued-winner case, spec/codecs/pb3_decode_spec.rb:519-546).
+  - ``varint_hex``   : base-128 varint of a non-negative int64, unrolled to
+                       a bounded number of groups (plain intdiv/mod
+                       arithmetic — no engine-specific bit ops); a value out
+                       of bound, or negative, poisons the payload to NULL.
+  - ``zigzag``       : sint zigzag mapping as a CASE (2x / -2x-1), no shifts.
+  - ``string_field`` : tag + varint(byte_length) + hex(utf8 bytes).
+  - proto3 field presence: scalar fields are omitted at their default
+    (0 / ''), oneof members are ALWAYS emitted when chosen — even at the
+    default value (spec/codecs/pb3_decode_spec.rb:519-546).
 
-Ground truth is anchored by a pure-Python reference encoder (`py_*`) checked
-in tests against hand-computed byte vectors from the protobuf encoding spec
-(e.g. field 1 = varint 150 -> 08 96 01).
-
-At 100 TB the Spark side stays entirely inside whole-stage codegen: the
-payload is built by string/arithmetic expressions fused into the scan stage —
-no Python worker, no shuffle.
+Spark used to run these templates too. The rendered turn_wire expression
+fused into a whole-stage-codegen method of 35,725 bytes, and HotSpot never
+JIT-compiles a method over 8,000 bytes (``HugeMethodLimit``), so it ran in
+the bytecode interpreter: a median 3.1 CPU-s per 50k rows on a 4-core host.
+Spark now encodes with the Arrow-batch kernel
+``operators.pb_wire_vec.flat_encode`` (1.1 CPU-s for the same rows);
+``tests/test_codegen_size.py`` guards the limit.
 """
 
 from __future__ import annotations
@@ -170,7 +172,10 @@ def varint_hex(d: Dialect, x: str, max_bytes: int = 9) -> str:
     first-run cost of the encoder (~8 s Janino compile at 10 fields x 9
     groups). Out-of-bound values poison the result to NULL (NULL || s is
     NULL in both engines), so a violated bound surfaces as a dead-letter
-    payload, never silent truncation.
+    payload, never silent truncation. A bounded varint also poisons a
+    NEGATIVE value: a conformant encoder writes it as a 10-byte two's
+    complement varint, which the group arithmetic here would instead
+    corrupt silently (-1 came out as ``00``).
     """
     parts = []
     for i in range(max_bytes):
@@ -188,7 +193,8 @@ def varint_hex(d: Dialect, x: str, max_bytes: int = 9) -> str:
             parts.append(f"CASE WHEN ({x}) >= {lo_t} THEN {term} ELSE '' END")
     if max_bytes < 9:
         parts.append(
-            f"CASE WHEN ({x}) >= {128 ** max_bytes} THEN NULL ELSE '' END"
+            f"CASE WHEN ({x}) >= {128 ** max_bytes} OR ({x}) < 0 "
+            "THEN NULL ELSE '' END"
         )
     return "(" + " || ".join(parts) + ")"
 
@@ -238,12 +244,6 @@ def string_field_hex(d: Dialect, field_num: int, s: str,
     return (f"CASE WHEN {cond} THEN '{tag_hex(field_num, WT_LEN)}' || "
             f"{varint_hex(d, strlen_bytes(d, s), max_len_bytes)} || "
             f"{hex_utf8(d, s)} ELSE '' END")
-
-
-def bool_field_hex(d: Dialect, field_num: int, b: str) -> str:
-    """bool field: true -> tag + 01, false omitted (proto3 default)."""
-    return (f"CASE WHEN ({b}) IS NOT NULL AND ({b}) THEN "
-            f"'{tag_hex(field_num, WT_VARINT)}01' ELSE '' END")
 
 
 def concat_fields_hex(parts: list[str]) -> str:

@@ -1,4 +1,4 @@
-"""Protobuf binary wire-format decode (and the turn_wire encode template).
+"""Protobuf binary wire-format decode (and the turn_wire encoder).
 
 This is the engine's re-expression of the reference codec's real hot path:
 ``@pb_builder.decode(data)`` (protobuf.rb:212-218) consuming actual varint /
@@ -7,9 +7,11 @@ producing them.
 
 Split of labor, Spark-first:
 
-- **Encode** stays 100% JVM-side: ``functions.wire`` renders the message as
-  pure column arithmetic (hex string -> ``unhex`` -> BinaryType). No Python
-  worker; fuses into whole-stage codegen; bit-exact DuckDB oracle.
+- **Encode** is one Arrow-batch UDF (``pb_wire_vec.flat_encode``: numpy
+  varints, Arrow string buffers). ``functions.wire`` renders the same bytes
+  as portable SQL, which DuckDB runs as the bit-exact oracle; in Spark that
+  SQL fused into a 35,725-byte generated method that HotSpot never
+  JIT-compiles (limit 8,000 bytes), see ``encode_turn_wire``.
 - **Decode** is genuinely non-relational (variable-length fields, arbitrary
   field order, unknown-field skipping, nested recursion) — the sanctioned
   Arrow-batched pandas UDF path (SURVEY.md §2.11). One Python worker exchange
@@ -37,6 +39,7 @@ Wire parser semantics mirrored from the reference:
 from __future__ import annotations
 
 import base64
+import functools
 import json
 import os
 import struct
@@ -45,7 +48,7 @@ from decimal import Decimal
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from ..functions.portable import DUCK, SPARK, Dialect
+from ..functions.portable import DUCK, Dialect
 from ..functions.wire import (
     concat_fields_hex,
     py_unzigzag,
@@ -610,41 +613,60 @@ def py_tag_bytes(field_num: int, wire_type: int) -> bytes:
 # turn_wire: the transcript turn as real protobuf bytes
 # ---------------------------------------------------------------------------
 
+# Per-field varint bound of turn_wire, in base-128 groups: a varint field's
+# value, or a string field's UTF-8 byte length, must be < 128**groups. int32
+# fields need 5 groups, the enum 1, the sint64 cents 6 (|cents| < 2^41),
+# string lengths 2 (< 16 KiB). A value outside its bound, or a negative
+# int32/enum value, poisons the payload to NULL: a dead-letter, never
+# truncated bytes. Read by BOTH encoders: the Arrow kernel that runs in
+# Spark (pb_wire_vec.flat_encode) and the SQL oracle template below.
+TURN_WIRE_VARINT_GROUPS = {
+    "conv_id": 2, "turn_idx": 5, "role": 2, "tool": 2, "colour": 1,
+    "cents": 6, "horn": 5, "wings": 5, "msg": 2,
+}
+
+# oneof ``body`` member -> the ``body_type`` discriminator value choosing it
+TURN_WIRE_BODY = {"horn": "unicorn", "wings": "pegasus"}
+
+
 def turn_wire_hex(d: Dialect, c: dict[str, str]) -> str:
-    """Hex of the turn_wire message (schema.default_registry 'turn_wire').
+    """Hex of the turn_wire message (schema.default_registry 'turn_wire'),
+    rendered as portable SQL — the DuckDB oracle of ``encode_turn_wire``.
 
     ``c`` maps logical field -> SQL expression in dialect ``d``. Scalar fields
     follow proto3 implicit presence (omitted at 0/''); the oneof member is
     emitted whenever chosen, even at value 0 (default-valued winner,
-    spec/codecs/pb3_decode_spec.rb:519-546).
+    spec/codecs/pb3_decode_spec.rb:519-546). Field numbers and kinds come
+    from the registry spec, bounds from ``TURN_WIRE_VARINT_GROUPS``.
     """
-    horn_when = f"({c['body_type']}) = 'unicorn' AND ({c['horn']}) IS NOT NULL"
-    wings_when = f"({c['body_type']}) = 'pegasus' AND ({c['wings']}) IS NOT NULL"
-    # Per-field varint bounds (declared value ranges, NULL-poisoned if
-    # violated — varint_hex): int32 fields need 5 groups, the enum 1, the
-    # sint64 cents 6 (|cents| < 2^41), string lengths 2 (< 16 KiB). The full
-    # 9-group unroll everywhere made Janino compilation of the fused stage
-    # the encoder's dominant first-run cost (~8 s -> ~3 s at sf0.1).
-    return concat_fields_hex([
-        string_field_hex(d, 1, c["conv_id"], max_len_bytes=2),
-        varint_field_hex(d, 2, c["turn_idx"], max_bytes=5),
-        string_field_hex(d, 3, c["role"], max_len_bytes=2),
-        string_field_hex(d, 4, c["tool"], max_len_bytes=2),
-        varint_field_hex(d, 5, c["colour"], max_bytes=1),
-        sint_field_hex(d, 6, c["cents"], max_bytes=6),
-        varint_field_hex(d, 8, c["horn"], when=horn_when, max_bytes=5),
-        varint_field_hex(d, 9, c["wings"], when=wings_when, max_bytes=5),
-        string_field_hex(d, 10, c["msg"], max_len_bytes=2),
-    ])
+    parts = []
+    for num, f in default_registry().messages["turn_wire"].wire_fields():
+        x, g = c[f.name], TURN_WIRE_VARINT_GROUPS[f.name]
+        when = (f"({c['body_type']}) = '{TURN_WIRE_BODY[f.name]}' "
+                f"AND ({x}) IS NOT NULL") if f.oneof else None
+        if f.type == "string":
+            parts.append(string_field_hex(d, num, x, max_len_bytes=g))
+        elif f.type.startswith("sint"):
+            parts.append(sint_field_hex(d, num, x, when, max_bytes=g))
+        else:
+            parts.append(varint_field_hex(d, num, x, when, max_bytes=g))
+    return concat_fields_hex(parts)
 
 
-def py_encode_turn(v: dict) -> bytes:
+def py_encode_turn(v: dict) -> bytes | None:
     """Pure-Python twin of ``turn_wire_hex`` (test anchor): same field order,
-    same presence rules."""
+    same presence rules. Returns None where the engine's encoders poison the
+    payload for a negative turn_idx/colour/horn/wings; the per-field group
+    bounds are NOT applied here (this is the unbounded spec encoder)."""
     from ..functions.wire import (
         py_field_sint, py_field_string, py_field_varint,
     )
 
+    horn = v.get("horn") if v.get("body_type") == "unicorn" else None
+    wings = v.get("wings") if v.get("body_type") == "pegasus" else None
+    if any(x is not None and x < 0
+           for x in (v.get("turn_idx"), v.get("colour"), horn, wings)):
+        return None
     out = b""
     if v.get("conv_id"):
         out += py_field_string(1, v["conv_id"])
@@ -658,20 +680,14 @@ def py_encode_turn(v: dict) -> bytes:
         out += py_field_varint(5, v["colour"])
     if v.get("cents"):
         out += py_field_sint(6, v["cents"])
-    if v.get("body_type") == "unicorn" and v.get("horn") is not None:
-        out += py_field_varint(8, v["horn"])
-    if v.get("body_type") == "pegasus" and v.get("wings") is not None:
-        out += py_field_varint(9, v["wings"])
+    if horn is not None:
+        out += py_field_varint(8, horn)
+    if wings is not None:
+        out += py_field_varint(9, wings)
     if v.get("msg"):
         out += py_field_string(10, v["msg"])
     return out
 
-
-SPARK_TURN_COLS = {
-    "conv_id": "conv_id", "turn_idx": "turn_idx", "role": "role",
-    "tool": "tool", "colour": "colour", "cents": "cents",
-    "body_type": "body_type", "horn": "horn", "wings": "wings", "msg": "msg",
-}
 
 DUCK_TURN_COLS = {
     "conv_id": "'conv-' || conv_key", "turn_idx": "turn_idx", "role": "role",
@@ -680,22 +696,57 @@ DUCK_TURN_COLS = {
     "msg": "'m' || CAST(event_id AS STRING)",
 }
 
+# encode_turn_wire's input columns, in the kernel's argument order
+TURN_ENCODE_INPUTS = ("conv_id", "turn_idx", "role", "tool", "colour",
+                      "cents", "body_type", "horn", "wings", "msg")
 
-def encode_turn_wire(df: DataFrame, binary: bool = True,
-                     materialize: bool = False) -> DataFrame:
-    """Append ``payload_hex`` (and BinaryType ``payload`` when ``binary``) —
-    pure column expressions, zero Python workers.
 
-    ``materialize=True`` persists the result: consumers that touch BOTH
-    payload columns (a round trip compares payload_hex while decoding
-    payload) would otherwise evaluate the full encode expression tree once
-    per reference."""
-    out = df.withColumn("payload_hex", F.expr(turn_wire_hex(SPARK, SPARK_TURN_COLS)))
-    if binary:
-        out = out.withColumn("payload", F.unhex(F.col("payload_hex")))
-    from .. import cache as _cache
+@functools.cache
+def _turn_encode_plan():
+    from .pb_wire_vec import build_encode_plan
 
-    return _cache.track(out) if materialize else out
+    return build_encode_plan(default_registry(), "turn_wire",
+                             TURN_WIRE_VARINT_GROUPS)
+
+
+def turn_wire_encode_arrow(*arrays):
+    """The encode kernel over one Arrow batch: ``pa.Array`` per column of
+    ``TURN_ENCODE_INPUTS`` -> ``pa.binary()`` payloads (NULL = poisoned)."""
+    import pyarrow.compute as pc
+
+    from .pb_wire_vec import flat_encode
+
+    cols = dict(zip(TURN_ENCODE_INPUTS, arrays))
+    body = cols.pop("body_type")
+    chosen = {m: pc.fill_null(pc.equal(body, v), False)
+              .to_numpy(zero_copy_only=False)
+              for m, v in TURN_WIRE_BODY.items()}
+    return flat_encode(cols, _turn_encode_plan(), chosen)
+
+
+def encode_turn_wire(df: DataFrame, binary: bool = True) -> DataFrame:
+    """Append ``payload_hex`` (and BinaryType ``payload`` when ``binary``).
+
+    ``payload`` is ONE Arrow UDF call (``turn_wire_encode_arrow``: numpy
+    varints, Arrow string buffers, one element-wise binary join per batch);
+    ``payload_hex`` is ``lower(hex(payload))`` of that same output, so a
+    consumer touching both columns encodes once. ``turn_wire_hex`` renders
+    the same bytes in DuckDB SQL and is the oracle.
+
+    Why not SQL in Spark as well: the rendered hex expression fused into a
+    whole-stage-codegen method of 35,725 bytes, and HotSpot never compiles a
+    method over 8,000 bytes (``HugeMethodLimit``), so the encode ran in the
+    bytecode interpreter. Encoding the 50k-row perfbench ``wire_codec``
+    input to a noop sink on a 4-core host (driver JVM + Python workers, 10
+    jobs per side) took a median 3.1 CPU-s that way and 1.1 CPU-s with the
+    kernel. ``tests/test_codegen_size.py`` keeps every generated method
+    under the limit."""
+    payload = F.arrow_udf(turn_wire_encode_arrow, T.BinaryType())(
+        *TURN_ENCODE_INPUTS)
+    if not binary:
+        return df.withColumn("payload_hex", F.lower(F.hex(payload)))
+    return df.withColumn("payload", payload).withColumn(
+        "payload_hex", F.lower(F.hex(F.col("payload"))))
 
 
 # ---------------------------------------------------------------------------
@@ -806,11 +857,10 @@ def _make_decode_udf(registry: SchemaRegistry, proto_version: int = 3,
 def encode_turn_wire_jvm(df: DataFrame) -> DataFrame:
     """JVM-native encode via ``to_protobuf`` + the compiled descriptor set —
     the symmetric swap-in to ``decode_turn_wire_jvm`` when the
-    spark-protobuf jar is present. The SQL-expression encoder remains the
-    DEFAULT even on such clusters (it is already zero-Python, fuses into
-    whole-stage codegen, and carries the bit-exact DuckDB oracle); this path
-    exists for schema evolution cases where the descriptor, not the
-    hand-rendered template, must be authoritative."""
+    spark-protobuf jar is present. ``encode_turn_wire`` remains the DEFAULT
+    even on such clusters (it carries the bit-exact DuckDB oracle); this
+    path exists for schema evolution cases where the descriptor, not the
+    registry-driven kernel, must be authoritative."""
     from pyspark.sql.protobuf.functions import to_protobuf
 
     from ..descriptors import descriptor_set_bytes

@@ -714,8 +714,8 @@ FROM _tr_num WHERE event_id % 37 <> 0
 def pb_wire_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real protobuf wire bytes OUT (serialize_to_string, protobuf.rb:635-636):
     varints, zigzag sint64, length-delimited UTF-8, proto3 implicit presence,
-    always-emitted oneof winner. Pure column arithmetic (whole-stage codegen,
-    no Python worker); the oracle renders the SAME portable template in DuckDB,
+    always-emitted oneof winner. One Arrow-batch kernel encodes in Spark; the
+    oracle renders the portable SQL template (``turn_wire_hex``) in DuckDB,
     so the payload hex is compared bit-for-bit."""
     flat = _good_flat(spark, sf_dir)
     return PW.encode_turn_wire(flat, binary=False).select(
@@ -847,8 +847,7 @@ def pb_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-serialization."""
     from .sources.dims import enums_df
 
-    enc_df = PW.encode_turn_wire(_good_flat(spark, sf_dir),
-                                 materialize=True)
+    enc_df = PW.encode_turn_wire(_good_flat(spark, sf_dir))
     dec = PW.decode_turn_wire(enc_df).select(
         F.col("payload_hex").alias("orig_hex"), F.col("decoded").alias("d")
     )
@@ -936,7 +935,7 @@ def pb2_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     flat = _good_flat(spark, sf_dir).withColumnRenamed("ts", "@timestamp")
     flat = strip_at_keys(flat)  # '@timestamp' -> 'timestamp'
-    enc_df = PW.encode_turn_wire(flat, materialize=True)
+    enc_df = PW.encode_turn_wire(flat)
     dec = PW.decode_turn_wire(enc_df, proto_version=2)
     d = F.col("decoded")
     again = dec.select(
@@ -1132,11 +1131,11 @@ def pb_wire_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
         p["error"].isNotNull().alias("_corrupt"),
     )
     flat = cache.track(flat)
-    enc = PW.encode_turn_wire(flat, binary=False)
+    enc = PW.encode_turn_wire(flat)
     enc = enc.withColumn(
         "payload",
         F.when(F.col("_corrupt"), F.unhex(F.lit("ff")))
-        .otherwise(F.unhex(F.col("payload_hex"))),
+        .otherwise(F.col("payload")),
     )
     dec = PW.decode_turn_wire(enc)
     d = F.col("decoded")

@@ -574,6 +574,43 @@ def test_varint_bounds_edges_sql_encoder(spark):
     assert got[3]["payload_hex"] is None   # msg length over bound
 
 
+def test_negative_varints_poison_in_every_encoder(spark):
+    """turn_idx=-1 used to encode as ``10 00`` and horn=-5 as ``40 0c``
+    (which decodes to horn=12): silent corruption. Spark's kernel, the
+    DuckDB template and the Python anchor must all refuse a negative
+    int32/enum value with a NULL payload — the bound-violation dead-letter.
+    A negative on an UNCHOSEN oneof member is never emitted, so harmless."""
+    cols = ("conv_id", "turn_idx", "role", "tool", "colour", "cents",
+            "body_type", "horn", "wings", "msg")
+    rows = [
+        ("c", -1, "user", "sql", 2, 9, "unicorn", 1, 0, "m"),
+        ("c", 1, "user", "sql", 2, 9, "unicorn", -5, 0, "m"),
+        ("c", 1, "user", "sql", -1, 9, "unicorn", 1, 0, "m"),
+        ("c", 1, "user", "sql", 2, 9, "pegasus", 1, -5, "m"),
+        ("c", 1, "user", "sql", 2, -9, "pegasus", -5, 3, "m"),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx long, role string, tool string, "
+        "colour int, cents long, body_type string, horn int, wings int, "
+        "msg string",
+    )
+    got = [r["payload_hex"] for r in W.encode_turn_wire(df, binary=False)
+           .collect()]
+    con = duckdb.connect()
+    duck_hex = W.turn_wire_hex(W.DUCK, {c: c for c in cols})
+    values = ", ".join(
+        "(" + ", ".join(f"'{v}'" if isinstance(v, str) else str(v)
+                        for v in r) + ")" for r in rows)
+    duck = [h for (h,) in con.execute(
+        f"SELECT {duck_hex} FROM (VALUES {values}) t({', '.join(cols)})"
+    ).fetchall()]
+    py = [W.py_encode_turn(dict(zip(cols, r))) for r in rows]
+    assert got[:4] == duck[:4] == [None] * 4
+    assert py[:4] == [None] * 4
+    assert got[4] == duck[4] == py[4].hex()
+
+
 def test_value_unknown_fields_skipped_by_wire_type():
     """A google.protobuf.Value carrying fields from a NEWER schema revision
     (unknown field numbers) must decode, skipping them by wire type — not
@@ -743,9 +780,13 @@ def test_typed_varint_enum_int32_truncation():
 
 
 def _enum_probe_frame(spark):
+    # the generic spec encoder writes the negative code as the 10-byte
+    # two's-complement varint a conformant producer sends (py_encode_turn
+    # refuses negatives, like the engine's encoders)
     base = {"conv_id": "c", "turn_idx": 1, "role": "user", "tool": "",
-            "cents": 5, "body_type": None, "horn": 0, "wings": 0, "msg": "m"}
-    rows = [(i, bytearray(W.py_encode_turn({**base, "colour": c})))
+            "cents": 5, "msg": "m"}
+    rows = [(i, bytearray(W.py_encode({**base, "colour": c},
+                                      default_registry(), "turn_wire")))
             for i, c in enumerate([2, 99, -1])]
     return spark.createDataFrame(rows, "id int, payload binary")
 

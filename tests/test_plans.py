@@ -77,9 +77,10 @@ def test_salted_agg_partial_before_shuffle(spark, tr):
     assert "partial_" in plan  # HashAggregate(partial) present
 
 
-def test_wire_encode_is_pure_columnar(spark, tr):
-    """The wire ENCODER must stay entirely JVM-side: no Python eval node of
-    any kind — the payload hex is built by expressions fused into the scan."""
+def test_wire_encode_is_one_arrow_batch(spark, tr):
+    """The wire ENCODER is exactly one ArrowEvalPython (the Arrow-batch
+    kernel), never row-at-a-time BatchEvalPython, and ``payload_hex`` is
+    derived from that one output rather than encoding a second time."""
     from logstash_codec_protobuf_spark.operators import pb_wire as PW
     from logstash_codec_protobuf_spark.operators.parse import split_dead_letter
 
@@ -89,13 +90,15 @@ def test_wire_encode_is_pure_columnar(spark, tr):
         "conv_id", "turn_idx", "role", "tool", "colour", "cents",
         "body_type", "horn", "wings", "msg")])
     plan = _executed(PW.encode_turn_wire(flat))
-    assert "EvalPython" not in plan, plan[:500]  # no Batch/ArrowEvalPython
+    assert plan.count("ArrowEvalPython") == 1, plan[:500]
+    assert plan.count("turn_wire_encode_arrow(") == 1, plan[:500]
+    assert "BatchEvalPython" not in plan
 
 
 def test_wire_decode_is_arrow_batched(spark, tr):
-    """The wire DECODER is the sanctioned Python seam — exactly one
-    ArrowEvalPython (vectorized batch exchange), never row-at-a-time
-    BatchEvalPython."""
+    """The wire DECODER is exactly one ArrowEvalPython (vectorized batch
+    exchange), never row-at-a-time BatchEvalPython; the encoder feeding it
+    is the plan's only other one."""
     from logstash_codec_protobuf_spark.operators import pb_wire as PW
     from logstash_codec_protobuf_spark.operators.parse import split_dead_letter
 
@@ -105,7 +108,9 @@ def test_wire_decode_is_arrow_batched(spark, tr):
         "conv_id", "turn_idx", "role", "tool", "colour", "cents",
         "body_type", "horn", "wings", "msg")])
     plan = _executed(PW.decode_turn_wire(PW.encode_turn_wire(flat)))
-    assert plan.count("ArrowEvalPython") == 1, plan[:500]
+    assert plan.count("ArrowEvalPython") == 2, plan[:500]
+    assert plan.count("_decode_vec(") == 1, plan[:500]
+    assert plan.count("turn_wire_encode_arrow(") == 1, plan[:500]
     assert "BatchEvalPython" not in plan
 
 

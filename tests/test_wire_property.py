@@ -914,3 +914,115 @@ def test_vector_decoder_matches_scalar_on_fixed32_floats(payloads):
             assert _veq(gv, wv), (
                 f"row {i} field {k}: vector={gv!r} scalar={wv!r} "
                 f"payload={bytes(p)!r}")
+
+
+# ---------------------------------------------------------------------------
+# Arrow encode kernel == py_encode_turn == DuckDB turn_wire_hex, no Spark:
+# the kernel is called directly on pyarrow batches
+# ---------------------------------------------------------------------------
+
+import duckdb as _duckdb
+import pyarrow as _pa
+
+from logstash_codec_protobuf_spark.functions.portable import DUCK
+
+_ENC_TYPES = {
+    "conv_id": _pa.string(), "turn_idx": _pa.int64(), "role": _pa.string(),
+    "tool": _pa.string(), "colour": _pa.int32(), "cents": _pa.int64(),
+    "body_type": _pa.string(), "horn": _pa.int64(), "wings": _pa.int64(),
+    "msg": _pa.string(),
+}
+# bound edges written out independently of TURN_WIRE_VARINT_GROUPS:
+# int32 fields < 2^35 (5 groups), colour < 2^7, zigzag(cents) < 2^42,
+# string UTF-8 length < 2^14
+_IDX_EDGES = [0, 1, 127, 128, 2**35 - 1, 2**35, -1, -5, -(2**31)]
+_CENTS_EDGES = [0, 1, -1, 2**41 - 1, 2**41, -(2**41), -(2**41) - 1]
+_LONG_STRINGS = ["x" * (2**14 - 1), "x" * 2**14,
+                 "é" * (2**13 - 1) + "x", "é" * 2**13]
+
+
+def _nullable(s):
+    return st.one_of(st.none(), s)
+
+
+_enc_text = st.one_of(st.just(""), st.text(max_size=12),
+                      st.sampled_from(["héllo", "日本",
+                                       "\U0001f984"] + _LONG_STRINGS))
+_enc_idx = st.one_of(st.sampled_from(_IDX_EDGES),
+                     st.integers(min_value=-(2**40), max_value=2**40))
+_enc_row = st.fixed_dictionaries({
+    "conv_id": _nullable(_enc_text), "turn_idx": _nullable(_enc_idx),
+    "role": _nullable(_enc_text), "tool": _nullable(_enc_text),
+    "colour": _nullable(st.sampled_from([0, 1, 6, 127, 128, -1, -5])),
+    "cents": _nullable(st.one_of(
+        st.sampled_from(_CENTS_EDGES),
+        st.integers(min_value=-(2**60), max_value=2**60))),
+    "body_type": st.sampled_from(["unicorn", "pegasus", None, "other"]),
+    "horn": _nullable(_enc_idx), "wings": _nullable(_enc_idx),
+    "msg": _nullable(_enc_text),
+})
+
+
+def _over_bound(v) -> bool:
+    chosen = {"horn": v["body_type"] == "unicorn",
+              "wings": v["body_type"] == "pegasus"}
+    if any(len(v[k].encode()) >= 2**14 for k in ("conv_id", "role", "tool",
+                                                   "msg") if v[k]):
+        return True
+    if v["colour"] and v["colour"] >= 2**7:
+        return True
+    if v["cents"] and py_zigzag(v["cents"]) >= 2**42:
+        return True
+    return any(
+        v[k] is not None and v[k] >= 2**35
+        for k in ("turn_idx", "horn", "wings") if chosen.get(k, True))
+
+
+def _assert_encode_parity(rows):
+    table = _pa.table({c: _pa.array([r[c] for r in rows], t)
+                       for c, t in _ENC_TYPES.items()})
+    got = W.turn_wire_encode_arrow(
+        *[table[c].combine_chunks() for c in W.TURN_ENCODE_INPUTS])
+    assert got.type == _pa.binary() and len(got) == len(rows)
+    got = got.to_pylist()
+    con = _duckdb.connect()
+    con.register("t", table.append_column(
+        "rid", _pa.array(range(len(rows)), _pa.int64())))
+    hex_sql = W.turn_wire_hex(DUCK, {c: c for c in _ENC_TYPES})
+    duck = [None if h is None else bytes.fromhex(h) for (h,) in con.execute(
+        f"SELECT {hex_sql} FROM t ORDER BY rid").fetchall()]
+    con.close()
+    for i, v in enumerate(rows):
+        want = None if _over_bound(v) else W.py_encode_turn(v)
+        assert got[i] == want, (i, v, got[i], want)
+        assert duck[i] == want, (i, v, duck[i], want)
+
+
+def test_encode_kernel_parity_on_edge_batch():
+    """Every edge in one batch: NULLs, '', zero scalars, a default-valued
+    oneof winner (horn=0 on unicorn), multi-byte UTF-8, each bound edge
+    +-1, and negatives (-1, -5) that must poison instead of corrupting."""
+    base = {"conv_id": "c", "turn_idx": 1, "role": "user", "tool": "sql",
+            "colour": 2, "cents": 9, "body_type": "unicorn", "horn": 1,
+            "wings": None, "msg": "m"}
+    rows = [dict.fromkeys(_ENC_TYPES),
+            {**dict.fromkeys(_ENC_TYPES, 0), **dict.fromkeys(
+                ("conv_id", "role", "tool", "msg"), ""), "body_type": None},
+            {**base, "horn": 0},
+            {**base, "body_type": "pegasus", "horn": -5, "wings": 0},
+            {**base, "msg": "héllo 日本 \U0001f984"}]
+    rows += [{**base, "turn_idx": x} for x in _IDX_EDGES]
+    rows += [{**base, "horn": x} for x in _IDX_EDGES]
+    rows += [{**base, "body_type": "pegasus", "wings": x} for x in _IDX_EDGES]
+    rows += [{**base, "colour": x} for x in (127, 128, -1)]
+    rows += [{**base, "cents": x} for x in _CENTS_EDGES]
+    rows += [{**base, "msg": s} for s in _LONG_STRINGS]
+    _assert_encode_parity(rows)
+    assert W.py_encode_turn({**base, "turn_idx": -1}) is None
+    assert W.py_encode_turn({**base, "horn": -5}) is None
+
+
+@given(st.lists(_enc_row, min_size=1, max_size=24))
+@settings(max_examples=150, deadline=None)
+def test_encode_kernel_matches_python_and_duckdb(rows):
+    _assert_encode_parity(rows)

@@ -567,21 +567,15 @@ plan grows with executor count except parallelism.
 
 
 def run_wiredecode_ab(sf_dir: str, sf: str) -> dict:
-    """Wire-decode implementation A/B (round-5 verdict item 1 fallback: the
-    sandbox ships no spark-protobuf jar and no network to fetch one, so the
-    prescribed alternative is vectorizing the Python varint walk). Times the
-    decode UDF alone over a persisted payload frame — vector (numpy
-    record-transposed walker) vs scalar (per-payload Python loop) —
-    interleaved N times warm, plus the full encode+decode roundtrip both
-    ways. Done-bar from the verdict: >=2x on the decode path.
+    """Wire-decode implementation A/B over a persisted payload frame,
+    interleaved N times warm: the Arrow decode (numpy record-transposed
+    walker) and, when the shaded protobuf runtime is on the classpath, the
+    vendored JVM DynamicMessage decode (zero Python workers), each alone
+    and as the full encode+decode roundtrip.
 
-    Also times a PASS-THROUGH pandas UDF over the same payload frame: that
-    is the fixed Arrow serialize->python->deserialize floor both decode
-    impls pay identically, so ``decode_compute_speedup`` =
-    (scalar - floor) / (vector - floor) isolates the decode kernel itself —
-    the end-to-end ``decode_speedup`` understates the kernel win because
-    the floor dominates at this payload size (and would be paid by ANY
-    python-side impl; only the JVM from_protobuf path removes it)."""
+    Also times a PASS-THROUGH pandas UDF over the same payload frame: the
+    fixed Arrow serialize->python->deserialize floor any Python-side decode
+    pays (``arrow_floor_*``); only a JVM path removes it."""
     from pyspark.sql import functions as F
 
     from logstash_codec_protobuf_spark.operators import pb_wire as PW
@@ -631,27 +625,24 @@ def run_wiredecode_ab(sf_dir: str, sf: str) -> dict:
             dec = PW.decode_turn_wire(PW.encode_turn_wire(flat), impl=impl)
             return _consume(dec.filter(F.col("decoded")["error"].isNull()))
 
-        # third arm: the vendored JVM DynamicMessage harness (zero Python
+        # second arm: the vendored JVM DynamicMessage harness (zero Python
         # workers, no Arrow floor at all) — present when the shaded protobuf
         # runtime is on the classpath (it ships with the Spark distro)
         jvm_ok = PW.jvm_dynamic_available(spark)
 
         # warm both paths (python worker pool + codegen)
-        decode_run("arrow"); decode_run("arrow_scalar"); floor_run()
+        decode_run("arrow"); floor_run()
         if jvm_ok:
-            decode_run("jvm_dynamic"); decode_run("jvm_json")
-        vec, scal, vec_rt, scal_rt, floor = [], [], [], [], []
-        jvm, jvm_js, jvm_rt = [], [], []
+            decode_run("jvm_dynamic")
+        vec, vec_rt, floor = [], [], []
+        jvm, jvm_rt = [], []
         for _ in range(n_ab):
             floor.append(_timed(floor_run))
             vec.append(_timed(lambda: decode_run("arrow")))
-            scal.append(_timed(lambda: decode_run("arrow_scalar")))
             if jvm_ok:
                 jvm.append(_timed(lambda: decode_run("jvm_dynamic")))
-                jvm_js.append(_timed(lambda: decode_run("jvm_json")))
                 jvm_rt.append(_timed(lambda: roundtrip_run("jvm_dynamic")))
             vec_rt.append(_timed(lambda: roundtrip_run("arrow")))
-            scal_rt.append(_timed(lambda: roundtrip_run("arrow_scalar")))
         payloads.unpersist()
         flat.unpersist()
         med = lambda xs: sorted(xs)[len(xs) // 2]
@@ -659,8 +650,6 @@ def run_wiredecode_ab(sf_dir: str, sf: str) -> dict:
             report.update({
                 "decode_jvm_dynamic_sec": [round(x, 3) for x in jvm],
                 "decode_jvm_dynamic_median": round(med(jvm), 3),
-                "decode_jvm_json_sec": [round(x, 3) for x in jvm_js],
-                "decode_jvm_json_median": round(med(jvm_js), 3),
                 "roundtrip_jvm_dynamic_sec": [round(x, 3) for x in jvm_rt],
                 "roundtrip_jvm_dynamic_median": round(med(jvm_rt), 3),
                 "decode_payloads_per_sec_jvm_dynamic": round(
@@ -668,21 +657,11 @@ def run_wiredecode_ab(sf_dir: str, sf: str) -> dict:
             })
         report.update({
             "decode_vector_sec": [round(x, 3) for x in vec],
-            "decode_scalar_sec": [round(x, 3) for x in scal],
             "roundtrip_vector_sec": [round(x, 3) for x in vec_rt],
-            "roundtrip_scalar_sec": [round(x, 3) for x in scal_rt],
             "decode_vector_median": round(med(vec), 3),
-            "decode_scalar_median": round(med(scal), 3),
-            "decode_speedup": round(med(scal) / max(med(vec), 1e-9), 2),
-            "roundtrip_speedup": round(
-                med(scal_rt) / max(med(vec_rt), 1e-9), 2),
             "decode_payloads_per_sec_vector": round(n / max(med(vec), 1e-9)),
-            "decode_payloads_per_sec_scalar": round(n / max(med(scal), 1e-9)),
             "arrow_floor_sec": [round(x, 3) for x in floor],
             "arrow_floor_median": round(med(floor), 3),
-            "decode_compute_speedup": round(
-                max(med(scal) - med(floor), 1e-9)
-                / max(med(vec) - med(floor), 1e-9), 2),
         })
     finally:
         spark.stop()

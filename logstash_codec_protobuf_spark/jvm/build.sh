@@ -18,7 +18,6 @@ SQL_API_JAR=$(ls "$SPARK_JARS"/spark-sql-api_2.13-*.jar | head -1)
 rm -rf classes && mkdir -p classes
 javac --release 17 -encoding UTF-8 \
   -cp "$CONNECT_JAR:$SQL_API_JAR" \
-  -d classes src/org/sparkgraft/WireDecodeJson.java \
-  src/org/sparkgraft/WireDecodeRow.java
+  -d classes src/org/sparkgraft/WireDecodeRow.java
 jar cf sparkgraft-jvm-wire.jar -C classes .
 echo "built $(pwd)/sparkgraft-jvm-wire.jar"

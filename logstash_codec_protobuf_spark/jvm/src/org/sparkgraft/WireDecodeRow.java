@@ -18,10 +18,9 @@ import org.sparkproject.connect.protobuf.Descriptors;
 import org.sparkproject.connect.protobuf.DynamicMessage;
 
 /**
- * JVM-side protobuf wire decode straight to a Catalyst struct row — the
- * fast variant of {@link WireDecodeJson} (no JSON print, no from_json
- * re-parse): payload bytes -> DynamicMessage -> Row, zero Python workers
- * and zero Arrow exchange anywhere in the plan.
+ * JVM-side protobuf wire decode straight to a Catalyst struct row (no
+ * JSON print, no from_json re-parse): payload bytes -> DynamicMessage ->
+ * Row, zero Python workers and zero Arrow exchange anywhere in the plan.
  *
  * Row layout (must match the StructType the Python side registers),
  * applied RECURSIVELY: a message's fields in DECLARED order — nested
@@ -138,7 +137,6 @@ public class WireDecodeRow implements UDF2<byte[], String, Row> {
                 // synthetic descriptor (index -1, UNKNOWN_ENUM_VALUE_* name)
                 // — the engine contract decodes it as the DECIMAL STRING of
                 // the int32 code, matching the Arrow decoder's passthrough
-                // and JsonFormat's number print in the jvm_json foil
                 return ev.getIndex() == -1
                     ? String.valueOf(ev.getNumber())
                     : (Object) ev.getName();

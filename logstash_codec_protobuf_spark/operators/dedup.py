@@ -88,7 +88,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
     # intersects long arrays at a fraction of the string-array cost
     shingle_fn = _shingles_packed_udf(k) if 21 * k <= 63 else _shingles_udf(k)
     shingle_col = shingle_fn(F.col("text"))
-    sh = _spread(docs.select("doc_id", "text")).select(
+    sh = spread(docs.select("doc_id", "text")).select(
         "doc_id", shingle_col.alias("shingles")
     ).select(
         "doc_id", "shingles", F.size("shingles").alias("n_sh")
@@ -270,14 +270,15 @@ def _shingles_packed_udf(k: int):
     return shingles
 
 
-def _spread(df: DataFrame) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition a NARROW source up to the session's default
     parallelism before a per-row Arrow kernel — scale-adaptive (guide §2.2):
-    a small corpus packs into one scan split (documents.parquet at bench SF
-    is one 0.6 MB file), which serializes every fingerprint UDF on a single
-    task; a corpus already wider than the core count is left untouched, so
-    no shuffle is ever added at real scale. The exchange moves only the
-    rows the kernel needs (doc_id + text), never derived arrays."""
+    a small input packs into one scan split (documents.parquet at bench SF
+    is one 0.6 MB file, the embeddings one 0.8 MB file), which serializes
+    every per-row UDF on a single task; an input already wider than the
+    core count is left untouched, so no shuffle is ever added at real
+    scale. Callers select only the columns the kernel needs first, so the
+    exchange never moves derived arrays."""
     n = df.sparkSession.sparkContext.defaultParallelism
     try:
         cur = df.rdd.getNumPartitions()
@@ -347,7 +348,7 @@ def minhash_bands(docs: DataFrame) -> DataFrame:
     projection + explode; no shuffle until the candidate join. The 16
     signatures come from ONE fused Arrow kernel (text in, 16 longs out) —
     no basis array ever crosses the Python boundary."""
-    sigs = _spread(docs.select("doc_id", "text")).select(
+    sigs = spread(docs.select("doc_id", "text")).select(
         "doc_id", _minhash_sigs_text_udf(F.col("text")).alias("_sigs")
     )
     items = ", ".join(
@@ -626,7 +627,7 @@ def _simhash32_text_udf(text: pd.Series) -> pd.Series:
 def simhash(docs: DataFrame) -> DataFrame:
     """One fused Arrow kernel: text in, 32-bit vote out (the SQL template
     remains the oracle's definition)."""
-    return _spread(docs.select("doc_id", "text")).select(
+    return spread(docs.select("doc_id", "text")).select(
         "doc_id", _simhash32_text_udf(F.col("text")).alias("simhash32")
     )
 
@@ -923,7 +924,7 @@ def simhash_weighted(docs: DataFrame) -> DataFrame:
     """Weighted (term-frequency) SimHash: the identical majority vote run
     over the frequency-preserving multiset — a shingle occurring 3x casts 3
     votes. One fused Arrow kernel, like the unweighted variant."""
-    return _spread(docs.select("doc_id", "text")).select(
+    return spread(docs.select("doc_id", "text")).select(
         "doc_id", _simhash32_all_text_udf(F.col("text")).alias("simhash32_w")
     )
 

@@ -1,33 +1,35 @@
-"""Protobuf binary wire-format decode (and the turn_wire encoder).
+"""Protobuf binary wire format: one registry-driven codec for every message.
 
 This is the engine's re-expression of the reference codec's real hot path:
 ``@pb_builder.decode(data)`` (protobuf.rb:212-218) consuming actual varint /
 length-delimited bytes, and ``serialize_to_string`` (protobuf.rb:635-636)
-producing them.
+producing them. Like the reference, there is no per-message code: the
+registry spec drives both directions.
 
-Split of labor, Spark-first:
-
-- **Encode** is one Arrow-batch UDF (``pb_wire_vec.flat_encode``: numpy
-  varints, Arrow string buffers). ``functions.wire`` renders the same bytes
-  as portable SQL, which DuckDB runs as the bit-exact oracle; in Spark that
-  SQL fused into a 35,725-byte generated method that HotSpot never
-  JIT-compiles (limit 8,000 bytes), see ``encode_turn_wire``.
-- **Decode** is genuinely non-relational (variable-length fields, arbitrary
-  field order, unknown-field skipping, nested recursion) — the sanctioned
-  Arrow-batched pandas UDF path (SURVEY.md §2.11). One Python worker exchange
-  per batch, ~10^4 payloads per round trip, never per-row SQL UDFs. On a
-  cluster with the spark-protobuf jar, ``decode_turn_wire(impl='auto')``
-  swaps in JVM-native ``from_protobuf`` with a descriptor set compiled from
-  the registry (``descriptors.descriptor_set_bytes``) — zero Python workers;
-  the sandbox ships no jar, so the Arrow path is what runs here, validated
-  against hand-computed vectors from the protobuf encoding spec.
+- ``encode_message`` / ``decode_message``: any registered message, from a
+  struct column shaped like the spec to wire bytes and back to a
+  ``decoded`` struct (``decoded_schema``: fields in wire order, one
+  ``oneof_<group>`` slot per oneof, then ``error``). ``py_encode`` and
+  ``py_decode`` are the per-row cores and the reference the tests compare
+  against; decode picks the numpy record-transposed walker
+  (``pb_wire_vec``) whenever the message shape allows.
+- turn_wire, the transcript turn, has its own fast encoder:
+  ``encode_turn_wire`` is one Arrow-batch kernel (``pb_wire_vec.
+  flat_encode``: numpy varints, Arrow string buffers), and
+  ``functions.wire`` renders the same bytes as portable SQL, which DuckDB
+  runs as the bit-exact oracle. ``decode_turn_wire`` is ``decode_message``
+  over turn_wire, or JVM-native ``from_protobuf`` (zero Python workers)
+  when the spark-protobuf jar is on the classpath.
+- ``impl='jvm_dynamic'`` decodes JVM-side without that jar: a vendored
+  Java UDF parses with the protobuf-java runtime the Spark Connect jar
+  ships shaded.
 
 Wire parser semantics mirrored from the reference:
 - unknown fields are skipped by wire type (forward compatibility),
 - pb3 enums decode to NAMES, pb2 to ints (protobuf.rb:330-331); codes are
   int32-truncated like protobuf-java, and an UNREGISTERED pb3 code decodes
   to its decimal string (type-stable forward compatibility — identical
-  across the arrow, vector, jvm_dynamic and jvm_json impls),
+  across the arrow and jvm_dynamic impls),
 - proto3 defaults are emitted for absent scalars (protobuf.rb:297),
 - the oneof discriminator is whichever member was last seen on the wire —
   recorded as metadata, value preserved even when it equals the default
@@ -514,10 +516,12 @@ def py_encode(value: dict, registry: SchemaRegistry, message: str,
     - message fields are emitted whenever non-None (explicit presence),
     - repeated varint/enum fields use proto3 PACKED encoding; repeated
       strings/bytes/messages emit one tag per element,
-    - maps emit one {1: key, 2: value} entry message per item.
+    - maps emit one {1: key, 2: value} entry message per item,
+    - a ``struct`` (google.protobuf.Struct) field takes a dict of JSON-like
+      values and is emitted whenever non-None.
     """
     from ..functions.wire import (
-        py_field_len, py_field_varint, py_varint,
+        py_field_len, py_field_varint, py_struct, py_varint,
     )
 
     spec = registry.messages[message]
@@ -528,7 +532,9 @@ def py_encode(value: dict, registry: SchemaRegistry, message: str,
             continue
         if f.type.startswith("map<"):
             ktype, vtype = (t.strip() for t in f.type[4:-1].split(",", 1))
-            for k, mv in v.items():
+            # a dict, or (key, value) pairs: how pyarrow's to_pylist()
+            # hands over an Arrow map
+            for k, mv in (v.items() if isinstance(v, dict) else v):
                 entry = b""
                 if k != ("" if ktype == "string" else 0):
                     entry += (py_field_len(1, k.encode("utf-8"))
@@ -545,6 +551,8 @@ def py_encode(value: dict, registry: SchemaRegistry, message: str,
         if f.repeated:
             if not v:
                 continue
+            if any(x is None for x in v):
+                raise ValueError(f"NULL element in repeated {f.name}")
             kind = _scalar_kind(f.type)
             if kind == "varint":
                 if proto_version == 2:
@@ -575,6 +583,10 @@ def py_encode(value: dict, registry: SchemaRegistry, message: str,
         if f.type.startswith("message:"):
             out += py_field_len(num, py_encode(v, registry, f.type[8:],
                                                proto_version))
+            continue
+        if f.type == "struct":  # explicit presence, like a message field
+            out += py_field_len(num, py_struct(
+                v if isinstance(v, dict) else dict(v)))
             continue
         kind = _scalar_kind(f.type)
         if kind == "varint":
@@ -749,10 +761,13 @@ def encode_turn_wire(df: DataFrame, binary: bool = True) -> DataFrame:
         "payload_hex", F.lower(F.hex(F.col("payload"))))
 
 
+
 # ---------------------------------------------------------------------------
-# Arrow-batched decode UDF
+# the decoded shape: one StructType per (message, dialect), every backend
 # ---------------------------------------------------------------------------
 
+# turn_wire's ``decoded`` contract (what ``decoded_schema`` builds for it,
+# plus ``error``): pinned because downstream consumers fingerprint it
 TURN_WIRE_DECODED = T.StructType([
     T.StructField("conv_id", T.StringType()),
     T.StructField("turn_idx", T.IntegerType()),
@@ -767,10 +782,6 @@ TURN_WIRE_DECODED = T.StructType([
     T.StructField("error", T.StringType()),
 ])
 
-_TURN_FIELDS = ["conv_id", "turn_idx", "role", "tool", "colour", "cents",
-                "horn", "wings", "msg"]
-
-
 # pb2 dialect: enum codes pass through as ints (protobuf.rb:134-136,
 # spec/codecs/pb2_spec.rb:96-99) — same struct, colour is a LONG.
 TURN_WIRE_DECODED_PB2 = T.StructType([
@@ -778,81 +789,301 @@ TURN_WIRE_DECODED_PB2 = T.StructType([
     for f in TURN_WIRE_DECODED
 ])
 
+_ROW_TYPES = {
+    "string": T.StringType(), "int32": T.IntegerType(),
+    "sint32": T.IntegerType(), "int64": T.LongType(),
+    "sint64": T.LongType(), "bool": T.BooleanType(),
+    "double": T.DoubleType(), "float": T.FloatType(),
+    "bytes": T.BinaryType(),
+    # unsigned widths widen so every value fits
+    "uint32": T.LongType(), "fixed32": T.LongType(),
+    "uint64": T.DecimalType(20, 0), "fixed64": T.DecimalType(20, 0),
+    # google.protobuf.Struct: canonical sorted-key JSON text
+    "struct": T.StringType(),
+}
 
-def _make_decode_udf(registry: SchemaRegistry, proto_version: int = 3,
-                     vectorized: bool = True):
-    """Build the Arrow-batch decode UDF around a specific registry. The
-    registry (frozen dataclasses + dicts) is captured in the closure and
-    pickled to each executor ONCE — no per-batch rebuild, and the same UDF
-    works for a registry loaded from a schema file on disk
-    (schema.load_schema_file) as for the built-in one.
 
-    When the message shape allows (flat scalar fields — turn_wire does), the
-    batch decodes through the numpy record-transposed walker
-    (``pb_wire_vec``) instead of the per-payload Python loop: same
-    semantics (fuzz-pinned), ~no Python-interpreter byte-walking.
-    ``vectorized=False`` keeps the scalar loop (bench A/B + parity foil)."""
-    schema = TURN_WIRE_DECODED if proto_version == 3 else TURN_WIRE_DECODED_PB2
-    from .pb_wire_vec import build_flat_plan, flat_decode_frame
+def _scalar_type(ftype: str, proto_version: int) -> T.DataType:
+    if ftype.startswith("enum:"):
+        return T.StringType() if proto_version == 3 else T.LongType()
+    t = _ROW_TYPES.get(ftype)
+    if t is None:
+        raise NotImplementedError(f"unsupported field type {ftype}")
+    return t
 
-    plan = (build_flat_plan(registry, "turn_wire", proto_version)
-            if vectorized else None)
-    if plan is not None:
-        @F.pandas_udf(schema)
-        def _decode_vec(payload: pd.Series) -> pd.DataFrame:
-            cols = flat_decode_frame(payload, plan)
-            out = pd.DataFrame({
-                **{k: cols[k] for k in _TURN_FIELDS},
-                "oneof_body": cols["_pb_oneof_body"],
-                "error": cols["error"],
-            }, columns=[f.name for f in schema])
-            int_cols = ["turn_idx", "cents", "horn", "wings"]
-            if proto_version == 2:
-                int_cols.append("colour")
-            for c in int_cols:
-                if out[c].dtype != "Int64":
-                    out[c] = out[c].astype("Int64")
-            return out
 
-        return _decode_vec
+def decoded_schema(registry: SchemaRegistry, message: str,
+                   proto_version: int = 3, depth: int | None = None,
+                   _stack: tuple[str, ...] = ()) -> T.StructType:
+    """The ``decoded`` struct of ``message`` without its trailing ``error``:
+    wire fields in descriptor order (what ``Descriptor.getFields()`` yields
+    for the set ``descriptors.descriptor_set_bytes`` emits) — nested
+    singular messages as nested structs, repeated fields as arrays,
+    ``map<k,v>`` fields as ``array<struct<key,value>>`` in first-seen key
+    order — then one ``oneof_<group>`` string slot per oneof.
+
+    ``depth`` is ``max_recursion_depth``: message fields more than
+    ``depth`` levels below the root are dropped, which gives the recursive
+    ``unicorn`` and ``human`` a finite shape (``py_decode`` dead-letters a
+    deeper payload with DEPTH_ERROR, so nothing is lost silently).
+    ``depth=None`` refuses a recursive message graph instead (the JVM row
+    path has no depth bound)."""
+    if depth is None and message in _stack:
+        raise NotImplementedError(
+            f"recursive message type {message} (via {' -> '.join(_stack)}) "
+            "has no finite struct schema — use the arrow impl")
+    stack = _stack + (message,)
+    sub = None if depth is None else depth - 1
+    fields = []
+    groups: list[str] = []
+    for _num, f in registry.messages[message].wire_fields():
+        if f.type.startswith("message:"):
+            if depth == 0:
+                continue  # below the recursion bound
+            t: T.DataType = decoded_schema(registry, f.type[8:],
+                                           proto_version, sub, stack)
+        elif f.type.startswith("map<"):
+            kt, vt = (s.strip() for s in f.type[4:-1].split(",", 1))
+            vtype = (decoded_schema(registry, vt[8:], proto_version, sub,
+                                    stack)
+                     if vt.startswith("message:")
+                     else _scalar_type(vt, proto_version))
+            t = T.ArrayType(T.StructType([
+                T.StructField("key", _scalar_type(kt, proto_version)),
+                T.StructField("value", vtype),
+            ]))
+        else:
+            t = _scalar_type(f.type, proto_version)
+        if f.repeated and not f.type.startswith("map<"):
+            t = T.ArrayType(t)
+        fields.append(T.StructField(f.name, t))
+        if f.oneof and f.oneof not in groups:
+            groups.append(f.oneof)
+    for g in groups:
+        fields.append(T.StructField(f"oneof_{g}", T.StringType()))
+    return T.StructType(fields)
+
+
+def _with_error(schema: T.StructType) -> T.StructType:
+    return T.StructType(list(schema.fields)
+                        + [T.StructField("error", T.StringType())])
+
+
+def _decoded_or_dead_letter(df: DataFrame, raw: Column, fields,
+                            schema: T.StructType) -> DataFrame:
+    """Append ``decoded`` from a JVM-side parse ``raw`` (NULL when the
+    bytes do not parse): ``fields(parsed)`` plus a NULL ``error``, else the
+    dead-letter row — every field NULL, ``error`` WIRE_ERROR — with the
+    original bytes left in place. ``raw`` is materialized once as a column
+    so a non-deterministic UDF runs once per row however often the
+    projection references it."""
+    p = F.col("_pb")
+    ok = F.when(p.isNull(), F.lit(None)).otherwise(F.struct(
+        *fields(p), F.lit(None).cast("string").alias("error")))
+    dead = F.struct(*[
+        (F.lit(WIRE_ERROR) if f.name == "error" else F.lit(None))
+        .cast(f.dataType).alias(f.name) for f in schema])
+    return (df.withColumn("_pb", raw)
+            .withColumn("decoded", F.coalesce(ok.cast(schema), dead))
+            .drop("_pb"))
+
+
+# ---------------------------------------------------------------------------
+# the registry-driven codec: one encoder and one decoder for every message
+# ---------------------------------------------------------------------------
+
+def encode_message(value: Column, message: str,
+                   registry: SchemaRegistry | None = None,
+                   proto_version: int = 3) -> Column:
+    """Wire bytes of ``value``, a struct column shaped like the registry
+    message (the reference's ``serialize_to_string`` seat,
+    protobuf.rb:635-636): one Arrow UDF running ``py_encode`` per row.
+    Enum fields take names or codes, maps take Spark maps, ``struct``
+    fields take a struct of JSON-like values. A NULL row, or a value
+    ``py_encode`` refuses (an unknown enum name), gives a NULL payload,
+    which decodes to the WIRE_ERROR dead-letter."""
+    reg = registry if registry is not None else default_registry()
+
+    def _encode(values):
+        import pyarrow as pa
+
+        out = []
+        for v in values.to_pylist():
+            try:
+                out.append(None if v is None
+                           else py_encode(v, reg, message, proto_version))
+            except ValueError:
+                out.append(None)
+        return pa.array(out, pa.binary())
+
+    return F.arrow_udf(_encode, T.BinaryType())(value)
+
+
+def decode_message(df: DataFrame, payload_col: str, message: str,
+                   registry: SchemaRegistry | None = None,
+                   proto_version: int = 3, impl: str = "arrow",
+                   max_recursion_depth: int = 3) -> DataFrame:
+    """BinaryType payload -> ``df`` plus a ``decoded`` struct of
+    ``decoded_schema(registry, message, proto_version)`` then ``error``
+    (NULL on success; WIRE_ERROR, or DEPTH_ERROR past
+    ``max_recursion_depth`` nested levels, with every field NULL and the
+    original bytes kept) — the reference's recursive walk
+    (protobuf.rb:212-218, 287-336) for any registered message.
+
+    ``impl='arrow'``: one Arrow UDF. A message ``build_flat_plan`` compiles
+    (flat scalars plus at most one level of singular nesting, e.g.
+    turn_wire, probe_result, user_agent) decodes through the numpy
+    record-transposed walker; any other runs ``py_decode`` per payload.
+
+    ``impl='jvm_dynamic'``: a vendored Java UDF (``jvm/src/.../
+    WireDecodeRow``, compiled against the protobuf-java runtime the Spark
+    Connect jar ships shaded) parses the bytes with ``DynamicMessage``
+    against the registry's descriptor set (``descriptors.
+    descriptor_set_bytes``) and returns the row directly: zero Python
+    workers, no spark-protobuf jar needed. pb3 symbolizes enums and emits
+    proto3 defaults; pb2 passes codes through. Recursive messages (no
+    finite schema without a depth bound) and ``struct`` fields (no
+    descriptor) are refused."""
+    reg = registry if registry is not None else default_registry()
+    if impl == "jvm_dynamic":
+        row_schema = decoded_schema(reg, message, proto_version)
+        name = _ensure_jvm_row_udf(df.sparkSession, message, proto_version,
+                                   row_schema)
+        cfg = _jvm_wire_cfg(reg, proto_version, message)
+        return _decoded_or_dead_letter(
+            df, F.call_udf(name, F.col(payload_col), F.lit(cfg)),
+            lambda p: [p[f.name].alias(f.name) for f in row_schema.fields],
+            _with_error(row_schema))
+    if impl != "arrow":
+        raise ValueError(f"unknown decode impl: {impl}")
+    schema = _with_error(decoded_schema(reg, message, proto_version,
+                                        max_recursion_depth))
+    from .pb_wire_vec import build_flat_plan
+
+    plan = build_flat_plan(reg, message, proto_version)
+    if plan is not None and "uint64" not in _plan_types(plan):
+        udf = _flat_decode_udf(plan, schema)
+    else:
+        udf = _row_decode_udf(reg, message, proto_version,
+                              max_recursion_depth, schema)
+    return df.withColumn("decoded", udf(F.col(payload_col)))
+
+
+def _plan_types(plan) -> set[str]:
+    out = {f.ftype for f in plan.varints}
+    for sub in plan.subplans.values():
+        out |= _plan_types(sub)
+    return out
+
+
+def _flat_columns(cols: dict, plan, prefix: str = "") -> dict:
+    """``flat_decode_frame`` columns -> the decoded shape's top-level
+    columns: fields in spec order (a nested message re-assembled from its
+    flattened ``<field>.<sub>`` columns, NULL where absent), then the
+    ``oneof_<group>`` slots."""
+    out = {}
+    for name in plan.field_names:
+        if name in plan.subplans:
+            sub = _flat_columns(cols, plan.subplans[name], f"{prefix}{name}.")
+            out[name] = [
+                dict(zip(sub, vals)) if present else None
+                for present, *vals in zip(cols[f"{prefix}{name}._present"],
+                                          *sub.values())]
+        else:
+            out[name] = cols[prefix + name]
+    for g in plan.oneof_groups:
+        out[f"oneof_{g}"] = cols[f"{prefix}_pb_oneof_{g}"]
+    return out
+
+
+def _flat_decode_udf(plan, schema: T.StructType):
+    """The Arrow-batch decode over the numpy record-transposed walker
+    (``pb_wire_vec``): same semantics as ``py_decode`` (fuzz-pinned in
+    tests/test_wire_property.py), no per-payload Python byte walk. The
+    plan (registry included) rides in the closure, pickled to each
+    executor once."""
+    from .pb_wire_vec import flat_decode_frame
+
+    names = schema.fieldNames()
+    int_cols = [f.name for f in schema
+                if isinstance(f.dataType, (T.IntegerType, T.LongType))]
 
     @F.pandas_udf(schema)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        names = [f.name for f in schema]
-        cols: dict[str, list] = {n: [] for n in names}
-        for buf in payload:
-            if buf is None:
-                for n in names:
-                    cols[n].append(None if n != "error" else WIRE_ERROR)
-                continue
-            try:
-                d = py_decode(bytes(buf), registry, "turn_wire",
-                              proto_version=proto_version)
-                for k in ("turn_idx", "cents", "horn", "wings"):
-                    v = d[k]
-                    # representability boundary (same rule as the vector
-                    # path): a varint past int64 dead-letters, the astype
-                    # below must never blow up the whole batch (enum codes
-                    # are int32-truncated upstream and always fit)
-                    if v is not None and not (-(1 << 63) <= v < (1 << 63)):
-                        raise ValueError(WIRE_ERROR)
-                for k in _TURN_FIELDS:
-                    cols[k].append(d[k])
-                cols["oneof_body"].append(d["_pb_oneof"].get("body"))
-                cols["error"].append(None)
-            except ValueError:
-                for n in names:
-                    cols[n].append(None if n != "error" else WIRE_ERROR)
-        out = pd.DataFrame(cols, columns=names)
-        int_cols = ["turn_idx", "cents", "horn", "wings"]
-        if proto_version == 2:
-            int_cols.append("colour")
+    def _decode_vec(payload: pd.Series) -> pd.DataFrame:
+        cols = flat_decode_frame(payload, plan)
+        out = pd.DataFrame({**_flat_columns(cols, plan),
+                            "error": cols["error"]}, columns=names)
         for c in int_cols:
-            out[c] = out[c].astype("Int64")
+            if out[c].dtype != "Int64":
+                out[c] = out[c].astype("Int64")
         return out
 
-    return _decode
+    return _decode_vec
 
+
+def _cell(v, dt: T.DataType):
+    """One ``py_decode`` value -> its value in the decoded shape."""
+    if v is None:
+        return None
+    if isinstance(dt, T.StructType):
+        return _row(v, dt)
+    if isinstance(dt, T.ArrayType):
+        et = dt.elementType
+        if isinstance(v, dict):  # map: entries in first-seen key order
+            vt = et["value"].dataType
+            return [{"key": k, "value": _cell(x, vt)} for k, x in v.items()]
+        return [_cell(x, et) for x in v]
+    if isinstance(dt, T.IntegerType):
+        # int32 truncation, like protobuf-java's readInt32
+        return ((v & 0xFFFFFFFF) ^ 0x80000000) - 0x80000000
+    if isinstance(dt, T.LongType) and not -(1 << 63) <= v < (1 << 63):
+        raise ValueError(WIRE_ERROR)  # a varint past the int64 column
+    if isinstance(dt, T.DecimalType):
+        if not 0 <= v < (1 << 64):
+            raise ValueError(WIRE_ERROR)
+        return Decimal(v)
+    return v
+
+
+def _row(d: dict, schema: T.StructType) -> dict:
+    chosen = d["_pb_oneof"]
+    return {f.name: (_cell(d[f.name], f.dataType) if f.name in d
+                     else chosen.get(f.name[6:]))  # oneof_<group> slot
+            for f in schema}
+
+
+def _row_decode_udf(registry: SchemaRegistry, message: str,
+                    proto_version: int, max_recursion_depth: int,
+                    schema: T.StructType):
+    """The Arrow-batch decode that runs ``py_decode`` per payload: maps,
+    repeated and recursive messages, bytes, uint64, Struct."""
+    fields = T.StructType(schema.fields[:-1])
+
+    def _decode(payload):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        rows = []
+        for buf in payload.to_pylist():
+            try:
+                if buf is None:
+                    raise ValueError(WIRE_ERROR)
+                d = py_decode(buf, registry, message, proto_version,
+                              depth=max_recursion_depth + 1)
+                rows.append({**_row(d, fields), "error": None})
+            except ValueError as e:
+                # keep the tag: DEPTH_ERROR routes apart from malformed bytes
+                rows.append({"error": DEPTH_ERROR if str(e) == DEPTH_ERROR
+                             else WIRE_ERROR})
+        return pa.array(rows, to_arrow_type(schema))
+
+    return F.arrow_udf(_decode, schema)
+
+
+# ---------------------------------------------------------------------------
+# JVM paths: spark-protobuf's from_protobuf/to_protobuf, and the vendored
+# DynamicMessage harness
+# ---------------------------------------------------------------------------
 
 def encode_turn_wire_jvm(df: DataFrame) -> DataFrame:
     """JVM-native encode via ``to_protobuf`` + the compiled descriptor set —
@@ -914,60 +1145,32 @@ def decode_turn_wire_jvm(df: DataFrame, payload_col: str = "payload",
         options["enums.as.ints"] = "true"  # pb2: codes pass through
     raw = from_protobuf(F.col(payload_col), "sparkgraft.turn_wire",
                         binaryDescriptorSet=desc, options=options)
-    p = F.col("_pb")
-    colour = (p["colour"].cast("long") if proto_version == 2
-              else p["colour"].cast("string"))
-    decoded = F.when(p.isNull(), F.lit(None)).otherwise(F.struct(
-        p["conv_id"].alias("conv_id"),
-        p["turn_idx"].cast("int").alias("turn_idx"),
-        p["role"].alias("role"), p["tool"].alias("tool"),
-        colour.alias("colour"),
-        p["cents"].cast("long").alias("cents"),
-        p["horn"].cast("int").alias("horn"),
-        p["wings"].cast("int").alias("wings"),
-        p["msg"].alias("msg"),
-        F.when(p["horn"].isNotNull(), F.lit("horn"))
-         .when(p["wings"].isNotNull(), F.lit("wings")).alias("oneof_body"),
-        F.lit(None).cast("string").alias("error"),
-    ))
+
+    def fields(p: Column) -> list:
+        colour = (p["colour"].cast("long") if proto_version == 2
+                  else p["colour"].cast("string"))
+        return [
+            p["conv_id"].alias("conv_id"),
+            p["turn_idx"].cast("int").alias("turn_idx"),
+            p["role"].alias("role"), p["tool"].alias("tool"),
+            colour.alias("colour"),
+            p["cents"].cast("long").alias("cents"),
+            p["horn"].cast("int").alias("horn"),
+            p["wings"].cast("int").alias("wings"),
+            p["msg"].alias("msg"),
+            F.when(p["horn"].isNotNull(), F.lit("horn"))
+             .when(p["wings"].isNotNull(), F.lit("wings"))
+             .alias("oneof_body"),
+        ]
+
     schema = TURN_WIRE_DECODED if proto_version == 3 else TURN_WIRE_DECODED_PB2
-    return (
-        df.withColumn("_pb", raw)
-        .withColumn(
-            "decoded",
-            F.coalesce(
-                decoded.cast(schema),
-                F.struct(*[
-                    (F.lit(WIRE_ERROR) if f.name == "error"
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in schema
-                ]),
-            ),
-        )
-        .drop("_pb")
-    )
+    return _decoded_or_dead_letter(df, raw, fields, schema)
 
 
 _JVM_WIRE_JAR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "jvm", "sparkgraft-jvm-wire.jar",
 )
-_JVM_WIRE_UDF = "sg_pb_decode_json"
-
-# from_json schema for the canonical protobuf JSON the JVM decoder prints:
-# int64-family values arrive as JSON STRINGS (proto3 JSON spec), enums as
-# names (pb3) or ints (pb2) — both land in a string column and cast after.
-_TURN_WIRE_JSON = T.StructType([
-    T.StructField("conv_id", T.StringType()),
-    T.StructField("turn_idx", T.IntegerType()),
-    T.StructField("role", T.StringType()),
-    T.StructField("tool", T.StringType()),
-    T.StructField("colour", T.StringType()),
-    T.StructField("cents", T.StringType()),
-    T.StructField("horn", T.IntegerType()),
-    T.StructField("wings", T.IntegerType()),
-    T.StructField("msg", T.StringType()),
-])
 
 
 def jvm_dynamic_available(spark) -> bool:
@@ -1028,91 +1231,6 @@ def _register_java_udf(spark, name: str, cls_name: str,
         spark.udf.registerJavaFunction(name, cls_name, return_type)
 
 
-def _ensure_jvm_wire_udf(spark) -> None:
-    """Idempotently ADD JAR the vendored harness and register the
-    JSON-variant Java UDF.
-
-    ``ADD JAR`` puts the jar on the session's shared classloader (drivers
-    and executors alike), after which class resolution works — no
-    session-construction config needed, so the path works on sessions the
-    engine did not itself create (e.g. the correctness driver's)."""
-    if getattr(spark, "_sg_jvm_wire_registered", False):
-        return
-    spark.sql(f"ADD JAR '{_JVM_WIRE_JAR}'")
-    _register_java_udf(spark, _JVM_WIRE_UDF,
-                       "org.sparkgraft.WireDecodeJson", T.StringType())
-    spark._sg_jvm_wire_registered = True
-
-
-_JVM_ROW_TYPES = {
-    "string": T.StringType(), "int32": T.IntegerType(),
-    "sint32": T.IntegerType(), "int64": T.LongType(),
-    "sint64": T.LongType(), "bool": T.BooleanType(),
-    "double": T.DoubleType(), "float": T.FloatType(),
-    "bytes": T.BinaryType(),
-    # unsigned widths widen exactly like the Arrow decoder's columns
-    "uint32": T.LongType(), "fixed32": T.LongType(),
-    "uint64": T.DecimalType(20, 0), "fixed64": T.DecimalType(20, 0),
-}
-
-
-def _jvm_scalar_type(ftype: str, proto_version: int) -> T.DataType:
-    if ftype.startswith("enum:"):
-        return T.StringType() if proto_version == 3 else T.LongType()
-    t = _JVM_ROW_TYPES.get(ftype)
-    if t is None:
-        raise NotImplementedError(
-            f"jvm_dynamic: unsupported field type {ftype}")
-    return t
-
-
-def _jvm_row_schema(spec, proto_version: int,
-                    registry: SchemaRegistry | None = None,
-                    _stack: tuple[str, ...] = ()) -> T.StructType:
-    """The StructType WireDecodeRow returns for ``spec``, RECURSIVELY: wire
-    fields in descriptor order (what ``Descriptor.getFields()`` yields for
-    the set ``descriptors.descriptor_set_bytes`` emits) — nested singular
-    messages as nested structs, repeated fields as arrays, ``map<k,v>``
-    fields as ``array<struct<key,value>>`` in first-seen key order — then
-    one ``oneof_<group>`` string slot per oneof. Raises for RECURSIVE
-    message graphs (unicorn, human): a cycle has no finite StructType, so
-    callers route those to the Arrow decoder (which depth-bounds them via
-    ``max_recursion_depth``)."""
-    reg = registry if registry is not None else default_registry()
-    if spec.name in _stack:
-        raise NotImplementedError(
-            f"jvm_dynamic: recursive message type {spec.name} "
-            f"(via {' -> '.join(_stack)}) has no finite struct schema — "
-            "use the arrow impl")
-    stack = _stack + (spec.name,)
-    fields = []
-    groups: list[str] = []
-    for _num, f in spec.wire_fields():
-        if f.type.startswith("message:"):
-            t: T.DataType = _jvm_row_schema(
-                reg.messages[f.type[8:]], proto_version, reg, stack)
-        elif f.type.startswith("map<"):
-            kt, vt = (s.strip() for s in f.type[4:-1].split(",", 1))
-            vtype = (_jvm_row_schema(reg.messages[vt[8:]], proto_version,
-                                     reg, stack)
-                     if vt.startswith("message:")
-                     else _jvm_scalar_type(vt, proto_version))
-            t = T.ArrayType(T.StructType([
-                T.StructField("key", _jvm_scalar_type(kt, proto_version)),
-                T.StructField("value", vtype),
-            ]))
-        else:
-            t = _jvm_scalar_type(f.type, proto_version)
-        if f.repeated and not f.type.startswith("map<"):
-            t = T.ArrayType(t)
-        fields.append(T.StructField(f.name, t))
-        if f.oneof and f.oneof not in groups:
-            groups.append(f.oneof)
-    for g in groups:
-        fields.append(T.StructField(f"oneof_{g}", T.StringType()))
-    return T.StructType(fields)
-
-
 def _ensure_jvm_row_udf(spark, message: str, proto_version: int,
                         schema: T.StructType) -> str:
     """Idempotently ADD JAR the vendored harness and register the
@@ -1135,221 +1253,46 @@ def _ensure_jvm_row_udf(spark, message: str, proto_version: int,
 
 
 def _jvm_wire_cfg(reg: SchemaRegistry, proto_version: int,
-                  message: str = "turn_wire") -> str:
+                  message: str) -> str:
     from ..descriptors import descriptor_set_bytes
 
     dialect = "pb3" if proto_version == 3 else "pb2"
     # proto3 syntax for BOTH dialects: the engine's pb2 contract keeps
-    # proto3-style default emission (decode-plan template, pb_wire.py:169)
+    # proto3-style default emission (decode-plan template, _decode_plan)
     # and differs only in enum passthrough, carried by the dialect flag
     desc = descriptor_set_bytes(reg, [message], syntax="proto3")
     return (base64.b64encode(desc).decode("ascii")
             + f"|sparkgraft.{message}|" + dialect)
 
 
-def decode_turn_wire_jvm_dynamic(df: DataFrame, payload_col: str = "payload",
-                                 registry: SchemaRegistry | None = None,
-                                 proto_version: int = 3) -> DataFrame:
-    """JVM-side decode with ZERO Python workers, runnable WITHOUT the
-    spark-protobuf jar: a vendored Java UDF (``jvm/src/.../WireDecodeRow``,
-    compiled against the protobuf-java runtime the Spark Connect jar ships
-    shaded) parses the wire bytes with ``DynamicMessage`` against the same
-    compiled FileDescriptorSet the ``from_protobuf`` path uses
-    (``descriptors.descriptor_set_bytes``) and returns the struct row
-    directly — no Arrow exchange, no JSON detour (reference hot loop:
-    protobuf.rb:212-218).
-
-    Dialect parity with the Arrow decoder: pb3 symbolizes enums and emits
-    proto3 defaults (no-presence ``getField``); pb2 passes enum codes
-    through as ints. Parse failures return NULL from the UDF -> the
-    PERMISSIVE dead-letter error row, original bytes preserved.
-
-    A canonical-JSON variant (``WireDecodeJson`` + ``from_json``) rides in
-    the same jar as ``impl='jvm_json'`` — the A/B foil that prices the
-    JSON print/parse detour this path avoids."""
-    reg = registry if registry is not None else default_registry()
-    spec = reg.messages["turn_wire"]
-    row_schema = _jvm_row_schema(spec, proto_version)
-    name = _ensure_jvm_row_udf(df.sparkSession, "turn_wire", proto_version,
-                               row_schema)
-    cfg = _jvm_wire_cfg(reg, proto_version)
-
-    out = df.withColumn(
-        "_pb", F.call_udf(name, F.col(payload_col), F.lit(cfg))
-    )
-    p = F.col("_pb")
-    decoded = F.when(p.isNull(), F.lit(None)).otherwise(
-        F.struct(
-            *[p[f.name].alias(f.name) for f in row_schema.fields],
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    schema = TURN_WIRE_DECODED if proto_version == 3 else TURN_WIRE_DECODED_PB2
-    return (
-        out.withColumn(
-            "decoded",
-            F.coalesce(
-                decoded.cast(schema),
-                F.struct(*[
-                    (F.lit(WIRE_ERROR) if f.name == "error"
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in schema
-                ]),
-            ),
-        )
-        .drop("_pb")
-    )
-
-
-def decode_message_wire_jvm_dynamic(df: DataFrame, message: str,
-                                    payload_col: str = "payload",
-                                    registry: SchemaRegistry | None = None,
-                                    proto_version: int = 3) -> DataFrame:
-    """Generic JVM-side wire decode for ANY registered non-recursive message
-    (round-6 verdict item 3: the jvm_dynamic path previously refused
-    repeated/message/map fields). ``WireDecodeRow`` walks the
-    ``DynamicMessage`` recursively — repeated fields to arrays, nested
-    singular messages to nested structs, proto3 maps to
-    ``array<struct<key,value>>`` entries collapsed last-wins in first-seen
-    key order (a Python dict built in wire order, matching ``py_decode``) —
-    the exact shape the reference's recursive walk emits
-    (protobuf.rb:287-336; DNS repeated nested structs
-    spec/codecs/pb3_decode_spec.rb:172-241). Zero Python workers.
-
-    Returns ``df`` plus a ``decoded`` struct: the message's fields in
-    descriptor order, ``oneof_<group>`` slots, then ``error`` (NULL on
-    success; parse failures dead-letter with WIRE_ERROR, bytes kept).
-    Recursive types (unicorn, human) raise NotImplementedError — the Arrow
-    decoder with ``max_recursion_depth`` is the path for those."""
-    reg = registry if registry is not None else default_registry()
-    spec = reg.messages[message]
-    row_schema = _jvm_row_schema(spec, proto_version, reg)
-    name = _ensure_jvm_row_udf(df.sparkSession, message, proto_version,
-                               row_schema)
-    cfg = _jvm_wire_cfg(reg, proto_version, message)
-
-    out = df.withColumn(
-        "_pb", F.call_udf(name, F.col(payload_col), F.lit(cfg))
-    )
-    p = F.col("_pb")
-    schema = T.StructType(
-        list(row_schema.fields)
-        + [T.StructField("error", T.StringType())]
-    )
-    decoded = F.when(p.isNull(), F.lit(None)).otherwise(
-        F.struct(
-            *[p[f.name].alias(f.name) for f in row_schema.fields],
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    return (
-        out.withColumn(
-            "decoded",
-            F.coalesce(
-                decoded.cast(schema),
-                F.struct(*[
-                    (F.lit(WIRE_ERROR) if f.name == "error"
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in schema
-                ]),
-            ),
-        )
-        .drop("_pb")
-    )
-
-
-def decode_turn_wire_jvm_json(df: DataFrame, payload_col: str = "payload",
-                              registry: SchemaRegistry | None = None,
-                              proto_version: int = 3) -> DataFrame:
-    """The canonical-JSON variant of the vendored JVM path: the
-    ``WireDecodeJson`` UDF prints protobuf canonical JSON and Catalyst's
-    ``from_json`` lands the struct. Still zero Python workers, but pays a
-    JSON print+parse detour per row — kept as the A/B foil and as the
-    shape a jar-less cluster would use if it needed the canonical-JSON
-    contract itself (e.g. sinking decoded events as JSON strings)."""
-    reg = registry if registry is not None else default_registry()
-    cfg = _jvm_wire_cfg(reg, proto_version)
-    _ensure_jvm_wire_udf(df.sparkSession)
-
-    out = df.withColumn(
-        "_pbjson",
-        F.call_udf(_JVM_WIRE_UDF, F.col(payload_col), F.lit(cfg)),
-    ).withColumn("_pb", F.from_json(F.col("_pbjson"), _TURN_WIRE_JSON))
-    p = F.col("_pb")
-    colour = (p["colour"].cast("long") if proto_version == 2
-              else p["colour"])
-    decoded = F.when(F.col("_pbjson").isNull(), F.lit(None)).otherwise(
-        F.struct(
-            p["conv_id"].alias("conv_id"),
-            p["turn_idx"].alias("turn_idx"),
-            p["role"].alias("role"), p["tool"].alias("tool"),
-            colour.alias("colour"),
-            p["cents"].cast("long").alias("cents"),
-            p["horn"].alias("horn"),
-            p["wings"].alias("wings"),
-            p["msg"].alias("msg"),
-            F.when(p["horn"].isNotNull(), F.lit("horn"))
-             .when(p["wings"].isNotNull(), F.lit("wings"))
-             .alias("oneof_body"),
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    schema = TURN_WIRE_DECODED if proto_version == 3 else TURN_WIRE_DECODED_PB2
-    return (
-        out.withColumn(
-            "decoded",
-            F.coalesce(
-                decoded.cast(schema),
-                F.struct(*[
-                    (F.lit(WIRE_ERROR) if f.name == "error"
-                     else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in schema
-                ]),
-            ),
-        )
-        .drop("_pb").drop("_pbjson")
-    )
-
-
 def decode_turn_wire(df: DataFrame, payload_col: str = "payload",
                      registry: SchemaRegistry | None = None,
                      proto_version: int = 3, impl: str = "auto",
                      oneof_metainfo: bool = True) -> DataFrame:
-    """BinaryType payload -> ``decoded`` struct column (1:1 projection).
-    Pass ``registry`` to decode with schema specs loaded from disk;
-    ``proto_version=2`` keeps enum codes as ints (pb2 dialect).
+    """BinaryType payload -> ``decoded`` struct column (1:1 projection) of
+    shape ``TURN_WIRE_DECODED`` (``TURN_WIRE_DECODED_PB2`` under
+    ``proto_version=2``, which keeps enum codes as ints). Pass ``registry``
+    to decode with schema specs loaded from disk.
 
     ``impl``: 'auto' uses the JVM-native ``from_protobuf`` path whenever the
-    spark-protobuf jar is on the classpath (no Python workers), else the
-    Arrow-batch UDF (numpy record-transposed walker for flat messages);
-    'jvm'/'arrow' force a path; 'jvm_dynamic' forces the vendored
-    DynamicMessage harness (JVM-side, zero Python workers, no
-    spark-protobuf jar needed — see ``decode_turn_wire_jvm_dynamic``);
-    'arrow_scalar' forces the per-payload Python loop inside the Arrow UDF
-    (bench A/B + parity foil).
+    spark-protobuf jar is on the classpath (no Python workers), else
+    'arrow'; 'jvm' forces ``from_protobuf``; 'arrow' and 'jvm_dynamic' are
+    ``decode_message``'s impls.
 
     ``oneof_metainfo``: mirrors the reference's ``pb3_set_oneof_metainfo``
     config (protobuf.rb:110-116, spec/codecs/pb3_decode_spec.rb:347-452 —
     whose DEFAULT is false): when disabled the chosen-member discriminator
     column is nulled; member values themselves always decode."""
-    if impl not in ("auto", "jvm", "jvm_dynamic", "jvm_json", "arrow",
-                    "arrow_scalar"):
+    if impl not in ("auto", "jvm", "jvm_dynamic", "arrow"):
         raise ValueError(f"unknown decode impl: {impl}")
     if impl == "jvm" or (
         impl == "auto" and spark_protobuf_available(df.sparkSession)
     ):
         out = decode_turn_wire_jvm(df, payload_col, registry, proto_version)
-    elif impl == "jvm_dynamic":
-        out = decode_turn_wire_jvm_dynamic(df, payload_col, registry,
-                                           proto_version)
-    elif impl == "jvm_json":
-        out = decode_turn_wire_jvm_json(df, payload_col, registry,
-                                        proto_version)
     else:
-        udf = _make_decode_udf(registry if registry is not None
-                               else default_registry(), proto_version,
-                               vectorized=(impl != "arrow_scalar"))
-        out = df.withColumn("decoded", udf(F.col(payload_col)))
+        out = decode_message(df, payload_col, "turn_wire", registry,
+                             proto_version,
+                             "arrow" if impl == "auto" else impl)
     if not oneof_metainfo:
         schema = (TURN_WIRE_DECODED if proto_version == 3
                   else TURN_WIRE_DECODED_PB2)
@@ -1359,977 +1302,3 @@ def decode_turn_wire(df: DataFrame, payload_col: str = "payload",
             for f in schema
         ]))
     return out
-
-
-# ---------------------------------------------------------------------------
-# unicorn: nested message + packed repeated enums/ints on the wire
-# (spec/helpers/pb3/unicorn_pb.rb:7-18; spec/codecs/pb3_decode_spec.rb:78-136)
-# ---------------------------------------------------------------------------
-
-UNICORN_DECODED = T.StructType([
-    T.StructField("name", T.StringType()),
-    T.StructField("age", T.IntegerType()),
-    T.StructField("fur_colour", T.StringType()),          # pb3 enum name
-    T.StructField("favourite_colours", T.ArrayType(T.StringType())),
-    T.StructField("favourite_numbers", T.ArrayType(T.IntegerType())),
-    T.StructField("is_pegasus", T.BooleanType()),
-    T.StructField("mother_name", T.StringType()),
-    T.StructField("mother_age", T.IntegerType()),
-    T.StructField("mother_fur", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_unicorn_udf(name: pd.Series, age: pd.Series, fur: pd.Series,
-                        favc: pd.Series, favn: pd.Series, is_peg: pd.Series,
-                        m_name: pd.Series, m_age: pd.Series,
-                        m_fur: pd.Series) -> pd.Series:
-    """unicorn wire bytes with proto3 packed encoding for the repeated
-    numeric fields (the proto3 default a real encoder emits) and a nested
-    length-delimited mother message."""
-    from ..functions.wire import (
-        py_field_len, py_field_string, py_field_varint, py_varint,
-    )
-
-    out = []
-    for n, a, f, fc, fn, p, mn, ma, mf in zip(
-            name, age, fur, favc, favn, is_peg, m_name, m_age, m_fur):
-        buf = b""
-        if n:
-            buf += py_field_string(1, n)
-        if a:
-            buf += py_field_varint(2, int(a))
-        if f:
-            buf += py_field_varint(3, int(f))
-        if len(fc):
-            buf += py_field_len(4, b"".join(py_varint(int(c)) for c in fc))
-        if len(fn):
-            buf += py_field_len(5, b"".join(py_varint(int(v)) for v in fn))
-        if p:
-            buf += py_field_varint(6, 1)
-        mother = b""
-        if mn:
-            mother += py_field_string(1, mn)
-        if ma:
-            mother += py_field_varint(2, int(ma))
-        if mf:
-            mother += py_field_varint(3, int(mf))
-        buf += py_field_len(7, mother)  # mother always serialized (even empty)
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_unicorn_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(UNICORN_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        names = [f.name for f in UNICORN_DECODED]
-        cols: dict[str, list] = {n: [] for n in names}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "unicorn")
-                m = d["mother"] or {}
-                cols["name"].append(d["name"])
-                cols["age"].append(d["age"])
-                cols["fur_colour"].append(d["fur_colour"])
-                cols["favourite_colours"].append(d["favourite_colours"])
-                cols["favourite_numbers"].append(d["favourite_numbers"])
-                cols["is_pegasus"].append(d["is_pegasus"])
-                cols["mother_name"].append(m.get("name"))
-                cols["mother_age"].append(m.get("age"))
-                cols["mother_fur"].append(m.get("fur_colour"))
-                cols["error"].append(None)
-            except ValueError:
-                for n in names:
-                    cols[n].append(None if n != "error" else WIRE_ERROR)
-        out = pd.DataFrame(cols, columns=names)
-        for c in ("age", "mother_age"):
-            out[c] = out[c].astype("Int64")
-        return out
-
-    return _decode
-
-
-def unicorn_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                      ) -> DataFrame:
-    """Encode (name, age, fur, favc, favn, is_peg, m_*) columns as unicorn
-    wire bytes and decode back -> ``decoded`` struct. Exercises nested
-    messages and proto3 PACKED repeated enum/int fields end to end."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_unicorn_udf(
-            F.col("u_name"), F.col("u_age"), F.col("u_fur"),
-            F.col("u_favc"), F.col("u_favn"), F.col("u_peg"),
-            F.col("m_name"), F.col("m_age"), F.col("m_fur"),
-        ),
-    )
-    return enc.withColumn("decoded",
-                          _make_unicorn_decode_udf(reg)(F.col("payload")))
-
-
-# ---------------------------------------------------------------------------
-# contact: map<string,int32> entries on the wire
-# (spec/helpers/pb3/PhoneDirectory_pb.rb:7-28; map entry = message {1:k, 2:v})
-# ---------------------------------------------------------------------------
-
-CONTACT_DECODED = T.StructType([
-    T.StructField("name", T.StringType()),
-    T.StructField("phones", T.ArrayType(T.StructType([
-        T.StructField("label", T.StringType()),
-        T.StructField("number", T.IntegerType()),
-    ]))),  # map entries, sorted by label (maps hash-compare unreliably)
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_contact_udf(name: pd.Series, labels: pd.Series,
-                        numbers: pd.Series) -> pd.Series:
-    """contact wire bytes: each map entry is its own length-delimited
-    sub-message {field 1: key, field 2: value} — the proto3 map encoding."""
-    from ..functions.wire import py_field_len, py_field_string, py_field_varint
-
-    out = []
-    for n, ls, ns in zip(name, labels, numbers):
-        buf = py_field_string(1, n) if n else b""
-        for lab, num in zip(ls, ns):
-            entry = py_field_string(1, lab) + (
-                py_field_varint(2, int(num)) if int(num) else b""
-            )
-            buf += py_field_len(2, entry)
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_contact_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(CONTACT_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"name": [], "phones": [], "error": []}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "contact")
-                cols["name"].append(d["name"])
-                cols["phones"].append(
-                    [(k, v) for k, v in sorted(d["phone_numbers"].items())]
-                )
-                cols["error"].append(None)
-            except ValueError:
-                cols["name"].append(None)
-                cols["phones"].append(None)
-                cols["error"].append(WIRE_ERROR)
-        return pd.DataFrame(cols)
-
-    return _decode
-
-
-def contact_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None,
-                      impl: str = "arrow") -> DataFrame:
-    """Encode (c_name, c_labels array<string>, c_numbers array<int>) as
-    contact wire bytes (proto3 map entries) and decode back.
-
-    ``impl='jvm_dynamic'`` decodes the SAME bytes through the vendored
-    ``WireDecodeRow`` harness (round-6 verdict item 3: maps past the flat
-    scope) and re-projects to the Arrow twin's ``CONTACT_DECODED`` shape
-    with pure Column ops — entries sorted by label via ``array_sort``,
-    matching the Python ``sorted(dict.items())``."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_contact_udf(F.col("c_name"), F.col("c_labels"),
-                            F.col("c_numbers")),
-    )
-    if impl == "jvm_dynamic":
-        dec = decode_message_wire_jvm_dynamic(enc, "contact", "payload",
-                                              reg)
-        d = F.col("_jvm_decoded")
-        return (
-            dec.withColumnRenamed("decoded", "_jvm_decoded")
-            .withColumn(
-                "decoded",
-                F.struct(
-                    d["name"].alias("name"),
-                    F.array_sort(F.transform(
-                        d["phone_numbers"],
-                        lambda e: F.struct(e["key"].alias("label"),
-                                           e["value"].alias("number")),
-                    )).alias("phones"),
-                    d["error"].alias("error"),
-                ).cast(CONTACT_DECODED),
-            )
-            .drop("_jvm_decoded")
-        )
-    return enc.withColumn("decoded",
-                          _make_contact_decode_udf(reg)(F.col("payload")))
-
-
-# ---------------------------------------------------------------------------
-# dns_message: uint64 above int64 range + bytes columns on the wire
-# (spec/helpers/pb3/dnsmessage_pb.rb:8-18; spec/codecs/pb3_decode_spec.rb:172-241)
-# ---------------------------------------------------------------------------
-
-DNS_DECODED = T.StructType([
-    T.StructField("id", T.DecimalType(20, 0)),      # uint64: full 2^64 range
-    T.StructField("response_code", T.LongType()),   # uint32
-    T.StructField("payload", T.BinaryType()),       # bytes stay raw
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_dns_udf(id_dec: pd.Series, response_code: pd.Series,
-                    payload: pd.Series) -> pd.Series:
-    """dns_message wire bytes. Python ints are unbounded, so uint64 varints
-    above 2^63 encode exactly (the SQL-expression encoder is int64-bound —
-    this is the documented seam where unsigned-64 leaves Column arithmetic)."""
-    from ..functions.wire import py_field_len, py_field_varint
-
-    out = []
-    for i, rc, p in zip(id_dec, response_code, payload):
-        buf = py_field_varint(1, int(i))
-        if int(rc):
-            buf += py_field_varint(2, int(rc))
-        if p is not None and len(p):
-            buf += py_field_len(5, bytes(p))
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_dns_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(DNS_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        rows = []
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "dns_message")
-                rows.append({
-                    "id": Decimal(d["id"]),
-                    "response_code": d["response_code"],
-                    "payload": d["payload"],
-                    "error": None,
-                })
-            except (ValueError, TypeError):
-                rows.append({"error": WIRE_ERROR})
-        out = pd.DataFrame(rows, columns=[f.name for f in DNS_DECODED])
-        out["response_code"] = out["response_code"].astype("Int64")
-        return out
-
-    return _decode
-
-
-def dns_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                  ) -> DataFrame:
-    """Encode (id_dec, response_code, payload_bin) columns as dns_message wire
-    bytes and decode them back -> ``decoded`` struct. Exercises uint64 values
-    >= 2^63 (DECIMAL(20,0) end to end — LongType would corrupt them) and raw
-    BinaryType round-tripping."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_dns_udf(F.col("id_dec"), F.col("response_code"),
-                        F.col("payload_bin")),
-    )
-    return enc.withColumn("decoded", _make_dns_decode_udf(reg)(F.col("payload")))
-
-
-# ---------------------------------------------------------------------------
-# directory: REPEATED messages that each carry a map — the repeated-top-level
-# pattern (spec/helpers/pb3/events_pb.rb:7-16) at full nesting depth
-# ---------------------------------------------------------------------------
-
-DIRECTORY_DECODED = T.StructType([
-    T.StructField("scope", T.StringType()),
-    T.StructField("contacts", T.ArrayType(T.StructType([
-        T.StructField("name", T.StringType()),
-        T.StructField("phones", T.ArrayType(T.StructType([
-            T.StructField("label", T.StringType()),
-            T.StructField("number", T.IntegerType()),
-        ]))),
-    ]))),
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_directory_udf(scope: pd.Series, c_names: pd.Series,
-                          c_labels: pd.Series, c_numbers: pd.Series
-                          ) -> pd.Series:
-    """directory wire bytes: field 2 repeated contact, each contact a
-    length-delimited sub-message whose own field 2 is the repeated map-entry
-    encoding — two levels of length-delimited nesting per phone number."""
-    from ..functions.wire import py_field_len, py_field_string, py_field_varint
-
-    out = []
-    for sc, names, labels, numbers in zip(scope, c_names, c_labels, c_numbers):
-        buf = py_field_string(1, sc) if sc else b""
-        for j, nm in enumerate(names):
-            contact = py_field_string(1, nm) if nm else b""
-            for lab, num in zip(labels[j], numbers[j]):
-                entry = py_field_string(1, lab) + (
-                    py_field_varint(2, int(num)) if int(num) else b""
-                )
-                contact += py_field_len(2, entry)
-            buf += py_field_len(2, contact)
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_directory_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(DIRECTORY_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"scope": [], "contacts": [], "error": []}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "directory")
-                cols["scope"].append(d["scope"])
-                cols["contacts"].append([
-                    (c["name"],
-                     [(k, v) for k, v in sorted(c["phone_numbers"].items())])
-                    for c in d["contacts"]
-                ])
-                cols["error"].append(None)
-            except ValueError:
-                cols["scope"].append(None)
-                cols["contacts"].append(None)
-                cols["error"].append(WIRE_ERROR)
-        return pd.DataFrame(cols)
-
-    return _decode
-
-
-def directory_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                        ) -> DataFrame:
-    """Encode (scope, c_names array<string>, c_labels array<array<string>>,
-    c_numbers array<array<int>>) as a directory message — repeated contact
-    sub-messages each holding a proto3 map — and decode back."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_directory_udf(F.col("scope"), F.col("c_names"),
-                              F.col("c_labels"), F.col("c_numbers")),
-    )
-    return enc.withColumn(
-        "decoded", _make_directory_decode_udf(reg)(F.col("payload"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# float (fixed32) + double (fixed64) on the wire
-# (ProbeResult latency double: spec/helpers/pb3/ProbeResult_pb.rb:13;
-#  RUM user-agent major/minor float: spec/helpers/pb3/rum_pb.rb:41-44)
-# ---------------------------------------------------------------------------
-
-PROBE_UA_DECODED = T.StructType([
-    T.StructField("uuid", T.StringType()),
-    T.StructField("status", T.StringType()),      # pb3 enum name
-    T.StructField("latency", T.DoubleType()),     # fixed64
-    T.StructField("ip", T.StringType()),
-    T.StructField("family", T.StringType()),
-    T.StructField("major", T.FloatType()),        # fixed32
-    T.StructField("minor", T.FloatType()),        # fixed32
-    T.StructField("os", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_probe_udf(uuid: pd.Series, status: pd.Series, latency: pd.Series,
-                      ip: pd.Series) -> pd.Series:
-    """probe_result wire bytes: nested PingIPv4Result with a fixed64 IEEE
-    double. proto3 implicit presence: 0.0 doubles are omitted (and re-emerge
-    as the decoded default), the nested message is serialized whenever the
-    task was set — mirroring how the reference's probe fixture always carries
-    TaskPingIPv4Result (ProbeResult_pb.rb:9)."""
-    from ..functions.wire import (
-        py_field_double, py_field_len, py_field_string, py_field_varint,
-    )
-
-    out = []
-    for u, st, lat, i in zip(uuid, status, latency, ip):
-        task = b""
-        if int(st):
-            task += py_field_varint(2, int(st))
-        if float(lat) != 0.0:
-            task += py_field_double(3, float(lat))
-        if i:
-            task += py_field_string(4, i)
-        buf = b""
-        if u:
-            buf += py_field_string(1, u)
-        buf += py_field_len(2, task)
-        out.append(buf)
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_ua_udf(family: pd.Series, major: pd.Series, minor: pd.Series,
-                   os: pd.Series) -> pd.Series:
-    """user_agent wire bytes: fixed32 IEEE floats at non-contiguous field
-    numbers 2 and 4 (rum_pb.rb:41-44)."""
-    from ..functions.wire import py_field_float, py_field_string
-
-    out = []
-    for fam, ma, mi, o in zip(family, major, minor, os):
-        buf = b""
-        if fam:
-            buf += py_field_string(1, fam)
-        if float(ma) != 0.0:
-            buf += py_field_float(2, float(ma))
-        if float(mi) != 0.0:
-            buf += py_field_float(4, float(mi))
-        if o:
-            buf += py_field_string(7, o)
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_probe_ua_decode_udf(registry: SchemaRegistry,
-                              impl: str = "scalar"):
-    if impl == "vector":
-        # round-7 (round-6 verdict item 6): ONE NESTING LEVEL in the numpy
-        # record-transposed walker — probe_result.task (singular nested
-        # message, rum_pb.rb ProbeResult/PingIPv4Result) decodes in a
-        # recursive vector pass over sub-slices of the same batch buffer,
-        # and user_agent's fixed32 floats decode via byte gathers. Parity
-        # with py_decode is fuzz-pinned (tests/test_wire_property.py).
-        from .pb_wire_vec import build_flat_plan, flat_decode_frame
-
-        pplan = build_flat_plan(registry, "probe_result", 3)
-        uplan = build_flat_plan(registry, "user_agent", 3)
-        if pplan is None or uplan is None:  # pragma: no cover - registry
-            raise ValueError("probe_result/user_agent not flat-plannable")
-
-        @F.pandas_udf(PROBE_UA_DECODED)
-        def _decode_vec(probe_payload: pd.Series,
-                        ua_payload: pd.Series) -> pd.DataFrame:
-            import numpy as np
-
-            p = flat_decode_frame(probe_payload, pplan)
-            u = flat_decode_frame(ua_payload, uplan)
-            bad = (pd.Series(p["error"]).notna().to_numpy()
-                   | pd.Series(u["error"]).notna().to_numpy())
-            out = pd.DataFrame({
-                "uuid": pd.Series(p["uuid"]),
-                "status": pd.Series(p["task.status"]),
-                "latency": pd.Series(p["task.latency"]),
-                "ip": pd.Series(p["task.ip"]),
-                "family": pd.Series(u["family"]),
-                "major": pd.Series(u["major"]),
-                "minor": pd.Series(u["minor"]),
-                "os": pd.Series(u["os"]),
-            })
-            if bad.any():
-                keep = ~bad
-                for c in out.columns:
-                    out[c] = out[c].where(keep)
-            err = np.empty(len(out), object)
-            err[:] = None
-            err[bad] = WIRE_ERROR
-            out["error"] = err
-            return out
-
-        return _decode_vec
-
-    @F.pandas_udf(PROBE_UA_DECODED)
-    def _decode(probe_payload: pd.Series, ua_payload: pd.Series) -> pd.DataFrame:
-        names = [f.name for f in PROBE_UA_DECODED]
-        cols: dict[str, list] = {n: [] for n in names}
-        for pb, ub in zip(probe_payload, ua_payload):
-            try:
-                p = py_decode(bytes(pb), registry, "probe_result")
-                ua = py_decode(bytes(ub), registry, "user_agent")
-                task = p["task"] or {}
-                cols["uuid"].append(p["uuid"])
-                cols["status"].append(task.get("status"))
-                cols["latency"].append(task.get("latency"))
-                cols["ip"].append(task.get("ip"))
-                cols["family"].append(ua["family"])
-                cols["major"].append(ua["major"])
-                cols["minor"].append(ua["minor"])
-                cols["os"].append(ua["os"])
-                cols["error"].append(None)
-            except ValueError:
-                for n in names:
-                    cols[n].append(None if n != "error" else WIRE_ERROR)
-        return pd.DataFrame(cols, columns=names)
-
-    return _decode
-
-
-def probe_ua_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None,
-                       impl: str = "scalar") -> DataFrame:
-    """Encode (uuid, status, latency, ip) as probe_result and (ua_family,
-    ua_major, ua_minor, ua_os) as user_agent wire bytes, decode both back ->
-    ``decoded`` struct. Exercises wire types 1 (fixed64 double) and 5
-    (fixed32 float) end to end, bit-exact IEEE round trips.
-
-    ``impl='vector'`` decodes through the numpy record-transposed walker —
-    probe_result.task is its one-nesting-level showcase (recursive vector
-    pass over sub-slices; round-6 verdict item 6)."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "probe_payload",
-        _encode_probe_udf(F.col("uuid"), F.col("status"), F.col("latency"),
-                          F.col("ip")),
-    ).withColumn(
-        "ua_payload",
-        _encode_ua_udf(F.col("ua_family"), F.col("ua_major"),
-                       F.col("ua_minor"), F.col("ua_os")),
-    )
-    return enc.withColumn(
-        "decoded",
-        _make_probe_ua_decode_udf(reg, impl=impl)(F.col("probe_payload"),
-                                                  F.col("ua_payload")),
-    )
-
-
-# ---------------------------------------------------------------------------
-# repeated nested messages on the wire: dns_message.question
-# (spec/helpers/pb3/events_pb.rb:11-12 pattern, exercised
-#  spec/codecs/pb3_decode_spec.rb:311-335; dnsmessage_pb.rb:8-13)
-# ---------------------------------------------------------------------------
-
-DNS_Q_DECODED = T.StructType([
-    T.StructField("id", T.DecimalType(20, 0)),
-    T.StructField("questions", T.ArrayType(T.StructType([
-        T.StructField("name", T.StringType()),   # bytes, generator emits ASCII
-        T.StructField("qtype", T.LongType()),
-        T.StructField("qclass", T.LongType()),
-    ]))),
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_dns_questions_udf(id_dec: pd.Series, q_names: pd.Series,
-                              q_types: pd.Series, q_classes: pd.Series
-                              ) -> pd.Series:
-    """dns_message wire bytes with REPEATED message field 4: each question is
-    its own length-delimited sub-message, repeated by emitting the tag once
-    per element (the unpacked encoding messages always use)."""
-    from ..functions.wire import py_field_len, py_field_varint
-
-    out = []
-    for i, ns, ts, cs in zip(id_dec, q_names, q_types, q_classes):
-        buf = py_field_varint(1, int(i))
-        for n, t, c in zip(ns, ts, cs):
-            q = py_field_len(1, n.encode("utf-8"))
-            if int(t):
-                q += py_field_varint(2, int(t))
-            if int(c):
-                q += py_field_varint(3, int(c))
-            buf += py_field_len(4, q)
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_dns_questions_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(DNS_Q_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"id": [], "questions": [], "error": []}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "dns_message")
-                cols["id"].append(Decimal(d["id"]))
-                cols["questions"].append([
-                    (q["name"].decode("utf-8"), q["qtype"], q["qclass"])
-                    for q in d["question"]
-                ])
-                cols["error"].append(None)
-            except (ValueError, UnicodeDecodeError):
-                cols["id"].append(None)
-                cols["questions"].append(None)
-                cols["error"].append(WIRE_ERROR)
-        return pd.DataFrame(cols)
-
-    return _decode
-
-
-def dns_questions_roundtrip(df: DataFrame,
-                            registry: SchemaRegistry | None = None,
-                            impl: str = "arrow") -> DataFrame:
-    """Encode (id_dec, q_names, q_types, q_classes) as a dns_message with a
-    populated REPEATED nested-message field and decode back. Each element
-    carries its own proto3 defaults (qtype/qclass omitted at 0).
-
-    ``impl='jvm_dynamic'`` decodes the SAME bytes via ``WireDecodeRow``
-    (round-6 verdict item 3) and re-projects to the Arrow twin's
-    ``DNS_Q_DECODED`` shape with pure Column ops — the reference's exact
-    repeated-nested-struct scenario (spec/codecs/pb3_decode_spec.rb:172-241).
-    One documented seam: the JVM path decodes question names with a
-    binary->string cast (replacement chars on invalid UTF-8) where the
-    Arrow twin dead-letters — identical on any valid-UTF-8 corpus."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_dns_questions_udf(F.col("id_dec"), F.col("q_names"),
-                                  F.col("q_types"), F.col("q_classes")),
-    )
-    if impl == "jvm_dynamic":
-        dec = decode_message_wire_jvm_dynamic(enc, "dns_message", "payload",
-                                              reg)
-        d = F.col("_jvm_decoded")
-        return (
-            dec.withColumnRenamed("decoded", "_jvm_decoded")
-            .withColumn(
-                "decoded",
-                F.struct(
-                    d["id"].alias("id"),
-                    F.transform(
-                        d["question"],
-                        lambda q: F.struct(
-                            q["name"].cast("string").alias("name"),
-                            q["qtype"].alias("qtype"),
-                            q["qclass"].alias("qclass"),
-                        ),
-                    ).alias("questions"),
-                    d["error"].alias("error"),
-                ).cast(DNS_Q_DECODED),
-            )
-            .drop("_jvm_decoded")
-        )
-    return enc.withColumn(
-        "decoded", _make_dns_questions_decode_udf(reg)(F.col("payload"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# depth-3 recursion on the wire: human mother/father lineage, pb2 dialect
-# (spec/helpers/pb2/human.pb.rb:16-17; walked 3 generations deep in
-#  spec/codecs/pb2_spec.rb:43-77 — grandma = mother.mother.first_name)
-# ---------------------------------------------------------------------------
-
-LINEAGE_DECODED = T.StructType([
-    T.StructField("first_name", T.StringType()),
-    T.StructField("last_name", T.StringType()),
-    T.StructField("age", T.IntegerType()),
-    T.StructField("mother_first", T.StringType()),
-    T.StructField("mother_age", T.IntegerType()),
-    T.StructField("grandma_first", T.StringType()),
-    T.StructField("grandma_age", T.IntegerType()),
-    T.StructField("father_first", T.StringType()),
-    T.StructField("father_age", T.IntegerType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_human_udf(first: pd.Series, last: pd.Series, age: pd.Series,
-                      m_first: pd.Series, m_age: pd.Series,
-                      gm_first: pd.Series, gm_age: pd.Series,
-                      f_first: pd.Series, f_age: pd.Series) -> pd.Series:
-    """human wire bytes, three generations on the mother line (self ->
-    mother -> mother.mother) plus a father — pb2 dialect (explicit presence:
-    only set fields are serialized)."""
-    from ..functions.wire import py_field_len, py_field_string, py_field_varint
-
-    def person(fn, a, mother: bytes | None = None) -> bytes:
-        buf = py_field_string(1, fn)
-        if mother is not None:
-            buf += py_field_len(4, mother)
-        buf += py_field_varint(6, int(a))
-        return buf
-
-    out = []
-    for fi, la, a, mf, ma, gf, ga, ff, fa in zip(
-            first, last, age, m_first, m_age, gm_first, gm_age,
-            f_first, f_age):
-        grandma = person(gf, ga)
-        mother = person(mf, ma, mother=grandma)
-        father = person(ff, fa)
-        buf = py_field_string(1, fi) + py_field_string(3, la)
-        buf += py_field_len(4, mother) + py_field_len(5, father)
-        buf += py_field_varint(6, int(a))
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_human_decode_udf(registry: SchemaRegistry,
-                           max_recursion_depth: int = 3):
-    """human (pb2, SELF-REFERENCING via ``mother``) decode. Payloads nested
-    deeper than ``max_recursion_depth`` dead-letter with the DISTINCT
-    ``DEPTH_ERROR`` tag (loud bound enforcement — the output schema only
-    carries 3 generations, so a deeper message must never pass silently)."""
-    @F.pandas_udf(LINEAGE_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        names = [f.name for f in LINEAGE_DECODED]
-        cols: dict[str, list] = {n: [] for n in names}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "human", proto_version=2,
-                              depth=max_recursion_depth + 1)
-                m = d["mother"] or {}
-                gm = m.get("mother") or {}
-                f = d["father"] or {}
-                cols["first_name"].append(d["first_name"])
-                cols["last_name"].append(d["last_name"])
-                cols["age"].append(d["age"])
-                cols["mother_first"].append(m.get("first_name"))
-                cols["mother_age"].append(m.get("age"))
-                cols["grandma_first"].append(gm.get("first_name"))
-                cols["grandma_age"].append(gm.get("age"))
-                cols["father_first"].append(f.get("first_name"))
-                cols["father_age"].append(f.get("age"))
-                cols["error"].append(None)
-            except ValueError as e:
-                # preserve the tag: DEPTH_ERROR routes separately from
-                # malformed-bytes WIRE_ERROR in the dead-letter split
-                for n in names:
-                    cols[n].append(None if n != "error" else str(e))
-        out = pd.DataFrame(cols, columns=names)
-        for c in ("age", "mother_age", "grandma_age", "father_age"):
-            out[c] = out[c].astype("Int64")
-        return out
-
-    return _decode
-
-
-def human_lineage_roundtrip(df: DataFrame,
-                            registry: SchemaRegistry | None = None,
-                            max_recursion_depth: int = 3) -> DataFrame:
-    """Encode (h_first, h_last, h_age, m_first, m_age, gm_first, gm_age,
-    f_first, f_age) as a 3-generation human message and decode back —
-    the pb2_spec.rb:43-77 walk (``mother.mother.first_name``) over real
-    wire bytes. ``max_recursion_depth`` (config.max_recursion_depth) bounds
-    the decode: deeper lineages dead-letter with DEPTH_ERROR."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_human_udf(
-            F.col("h_first"), F.col("h_last"), F.col("h_age"),
-            F.col("m_first"), F.col("m_age"),
-            F.col("gm_first"), F.col("gm_age"),
-            F.col("f_first"), F.col("f_age"),
-        ),
-    )
-    return enc.withColumn(
-        "decoded",
-        _make_human_decode_udf(reg, max_recursion_depth)(F.col("payload")))
-
-
-# ---------------------------------------------------------------------------
-# ColourProtoTest: pb2 repeated-enum / repeated-bool dialect
-# (spec/helpers/pb2/ColourTestcase.pb.rb; spec/codecs/pb2_spec.rb:82-104)
-# ---------------------------------------------------------------------------
-
-COLOUR_DECODED = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("n_bytes", T.IntegerType()),
-    # arrays rendered as CSV strings: the driver canonicalizer can't sort
-    # list-typed cells, and the CSV pins element ORDER too
-    T.StructField("colours_csv", T.StringType()),
-    T.StructField("bools_csv", T.StringType()),
-    T.StructField("least_liked", T.LongType()),
-    T.StructField("version", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-def colour_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                     ) -> DataFrame:
-    """Encode (c1, c2, b1, b2, b3, least_liked, version) as a ColourProtoTest
-    message under the pb2 dialect (UNPACKED repeated varints — proto2's
-    default packing) and decode the real wire bytes back with
-    ``proto_version=2``: enum codes must stay ints INSIDE the arrays, never
-    symbolized (spec/codecs/pb2_spec.rb:96-99), and repeated bools round-trip
-    zeros (false) without proto3's default-dropping."""
-    reg = registry if registry is not None else default_registry()
-
-    def _roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                value = {
-                    "favourite_colours": [int(r.c1), int(r.c2)],
-                    "booleantest": [bool(r.b1), bool(r.b2), bool(r.b3)],
-                    "least_liked": int(r.least_liked),
-                    "version": r.version,
-                }
-                buf = py_encode(value, reg, "colour_testcase",
-                                proto_version=2)
-                try:
-                    d = py_decode(buf, reg, "colour_testcase",
-                                  proto_version=2)
-                    rows.append((
-                        int(r.event_id), len(buf),
-                        ",".join(str(int(c)) for c in d["favourite_colours"]),
-                        ",".join("1" if b else "0" for b in d["booleantest"]),
-                        int(d["least_liked"]), d["version"], None,
-                    ))
-                except ValueError:
-                    rows.append((int(r.event_id), len(buf),
-                                 None, None, None, None, WIRE_ERROR))
-            out = pd.DataFrame(rows,
-                               columns=[f.name for f in COLOUR_DECODED])
-            out["n_bytes"] = out["n_bytes"].astype("Int32")
-            yield out
-
-    return df.mapInPandas(_roundtrip, COLOUR_DECODED)
-
-
-# ---------------------------------------------------------------------------
-# akamai_rum: the reference's widest real-world fixture on the wire
-# (spec/helpers/pb3/rum_pb.rb:7-77): 15-field envelope, four nested
-# messages, floats at depth 2, bool, repeated string
-# ---------------------------------------------------------------------------
-
-RUM_DECODED = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("n_bytes", T.LongType()),
-    T.StructField("hdr_ts", T.LongType()),
-    T.StructField("sender", T.StringType()),
-    T.StructField("version", T.StringType()),
-    T.StructField("url", T.StringType()),
-    T.StructField("session_id", T.StringType()),
-    T.StructField("locale", T.StringType()),
-    T.StructField("ua_family", T.StringType()),
-    T.StructField("ua_major", T.DoubleType()),
-    T.StructField("geo_cc", T.StringType()),
-    T.StructField("geo_lat", T.DoubleType()),
-    T.StructField("geo_ovr", T.BooleanType()),
-    T.StructField("fcp", T.IntegerType()),
-    T.StructField("tti", T.IntegerType()),
-    T.StructField("longtasks", T.DoubleType()),
-    T.StructField("ctests", T.StringType()),
-    T.StructField("dom_script", T.IntegerType()),
-    T.StructField("domain", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-
-def akamai_rum_roundtrip(df: DataFrame,
-                         registry: SchemaRegistry | None = None) -> DataFrame:
-    """Encode each row as a full akamai_rum message via the generic
-    registry-driven encoder (py_encode), decode the REAL wire bytes back
-    (py_decode), and emit the flattened projection — one mapInPandas Arrow
-    stage for the whole width (a 20-series pandas_udf signature would add
-    nothing but plumbing). ``n_bytes`` carries the wire size as evidence the
-    bytes exist."""
-    reg = registry if registry is not None else default_registry()
-
-    def _roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                value = {
-                    "header": {"unix_timestamp": int(r.hdr_ts),
-                               "sender_id": r.sender},
-                    "version": r.version, "url": r.url,
-                    "session_id": r.session_id, "locale": r.locale,
-                    "user_agent": {"family": r.ua_family,
-                                   "major": float(r.ua_major),
-                                   "minor": float(r.ua_minor),
-                                   "os": r.ua_os},
-                    "geo": {"cc": r.geo_cc, "city": r.geo_city,
-                            "lat": float(r.geo_lat), "lon": float(r.geo_lon),
-                            "ovr": bool(r.geo_ovr)},
-                    "timers": {"t_resp": int(r.t_resp), "fid": int(r.fid),
-                               "fcp": int(r.fcp), "tti": int(r.tti),
-                               "ttvr": int(r.ttvr),
-                               "longtasks": float(r.longtasks)},
-                    "page_group": r.page_group,
-                    "active_ctests": [r.ctest1, r.ctest2],
-                    "dom": {"script": int(r.dom_script),
-                            "ext": int(r.dom_ext), "ln": int(r.dom_ln)},
-                    "domain": r.domain, "timestamp": r.ts_str,
-                }
-                buf = py_encode(value, reg, "akamai_rum")
-                try:
-                    d = py_decode(buf, reg, "akamai_rum")
-                    h, ua = d["header"] or {}, d["user_agent"] or {}
-                    geo, tm = d["geo"] or {}, d["timers"] or {}
-                    dom = d["dom"] or {}
-                    rows.append((
-                        int(r.event_id), len(buf),
-                        h.get("unix_timestamp"), h.get("sender_id"),
-                        d["version"], d["url"], d["session_id"], d["locale"],
-                        ua.get("family"), ua.get("major"),
-                        geo.get("cc"), geo.get("lat"), geo.get("ovr"),
-                        tm.get("fcp"), tm.get("tti"), tm.get("longtasks"),
-                        ",".join(d["active_ctests"]), dom.get("script"),
-                        d["domain"], None,
-                    ))
-                except ValueError:
-                    rows.append((int(r.event_id), len(buf))
-                                + (None,) * 17 + (WIRE_ERROR,))
-            out = pd.DataFrame(rows, columns=[f.name for f in RUM_DECODED])
-            for c in ("fcp", "tti", "dom_script"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return df.mapInPandas(_roundtrip, RUM_DECODED)
-
-
-# ---------------------------------------------------------------------------
-# google.protobuf.Struct on the wire (protobuf.rb:290-294;
-#  spec/helpers/pb3/struct_test_pb.rb:8-14)
-# ---------------------------------------------------------------------------
-
-STRUCT_DECODED = T.StructType([
-    T.StructField("user_id", T.StringType()),
-    T.StructField("details_json", T.StringType()),  # canonical sorted-key JSON
-    T.StructField("error", T.StringType()),
-])
-
-
-@F.pandas_udf(T.BinaryType())
-def _encode_struct_req_udf(user_id: pd.Series, vendor: pd.Series,
-                           count: pd.Series, active: pd.Series,
-                           tag1: pd.Series, tag2: pd.Series,
-                           lat: pd.Series, city: pd.Series) -> pd.Series:
-    """send_json_request wire bytes: UserID + a Details Struct holding every
-    Value kind — string, number (double), bool, null, a nested struct, and a
-    list — in the well-known map<string,Value> encoding."""
-    from ..functions.wire import py_field_len, py_field_string, py_struct
-
-    out = []
-    for u, v, c, a, t1, t2, la, ci in zip(user_id, vendor, count, active,
-                                          tag1, tag2, lat, city):
-        details = {
-            "vendor": v,
-            "count": float(c),
-            "active": bool(a),
-            "note": None,
-            "tags": [t1, t2],
-            "geo": {"lat": float(la), "city": ci},
-        }
-        buf = py_field_string(1, u) + py_field_len(2, py_struct(details))
-        out.append(buf)
-    return pd.Series(out)
-
-
-def _make_struct_req_decode_udf(registry: SchemaRegistry):
-    @F.pandas_udf(STRUCT_DECODED)
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        cols: dict[str, list] = {"user_id": [], "details_json": [], "error": []}
-        for buf in payload:
-            try:
-                d = py_decode(bytes(buf), registry, "send_json_request")
-                cols["user_id"].append(d["user_id"])
-                cols["details_json"].append(d["details"])
-                cols["error"].append(None)
-            except ValueError:
-                cols["user_id"].append(None)
-                cols["details_json"].append(None)
-                cols["error"].append(WIRE_ERROR)
-        return pd.DataFrame(cols)
-
-    return _decode
-
-
-def struct_roundtrip(df: DataFrame, registry: SchemaRegistry | None = None
-                     ) -> DataFrame:
-    """Encode (user_id, s_vendor, s_count, s_active, s_tag1, s_tag2, s_lat,
-    s_city) as send_json_request wire bytes (Details = google.protobuf.Struct)
-    and decode back -> ``decoded`` struct with the Struct as canonical JSON."""
-    reg = registry if registry is not None else default_registry()
-    enc = df.withColumn(
-        "payload",
-        _encode_struct_req_udf(
-            F.col("user_id"), F.col("s_vendor"), F.col("s_count"),
-            F.col("s_active"), F.col("s_tag1"), F.col("s_tag2"),
-            F.col("s_lat"), F.col("s_city"),
-        ),
-    )
-    return enc.withColumn("decoded",
-                          _make_struct_req_decode_udf(reg)(F.col("payload")))

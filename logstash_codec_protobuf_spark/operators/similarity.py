@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 from .. import cache
 from ..functions.portable import DUCK, SPARK
+from .dedup import spread
 
 DIM = 64  # driver embeddings are 64-d
 
@@ -61,19 +62,6 @@ def pair_dot(a: str | Column, b: str | Column) -> Column:
     """Arrow-batched exact dot for per-pair scoring."""
     return _dot_seq_udf(F.col(a) if isinstance(a, str) else a,
                         F.col(b) if isinstance(b, str) else b)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a narrow source up to default parallelism
-    before per-row kernels — scale-adaptive (guide §2.2): the bench corpus
-    is one 0.8 MB parquet split, which serializes hashing/norms on a single
-    task; an input already wider than the core count is left untouched."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    return df.repartition(n) if cur < n else df
 
 
 def _nrm_np(V: "object") -> "object":
@@ -222,7 +210,7 @@ def neardup_pairs(emb: DataFrame, threshold: float = 0.9,
     # exact DuckDB oracle. Block memory is bounded by chunking the probe
     # side, so a hot bucket can never OOM a task.
     h = cache.track(
-        _spread(emb.select("vec_id", "embedding")).select(
+        spread(emb.select("vec_id", "embedding")).select(
             "vec_id", "embedding",
             _bucket_nrm_udf(n_planes)(F.col("embedding")).alias("_bn"))
         .select("vec_id", "embedding", F.col("_bn.bucket").alias("bucket"))

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from . import cache
 from .config import CodecConfig
@@ -723,8 +723,13 @@ def pb_wire_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shared by pb_wire_decode (Arrow path) and pb_wire_decode_jvmdyn (vendored
-# JVM path): both must reproduce the generator's pre-serialization fields
+# the turn_wire ``decoded`` fields every turn decode query projects
+_TURN_DECODED = ("conv_id", "turn_idx", "role", "tool", "colour", "cents",
+                 "horn", "wings", "msg", "oneof_body")
+
+# shared by pb_wire_decode (Arrow path), pb_wire_decode_jvmdyn (vendored
+# JVM path) and pb_schema_file_decode (registry loaded from disk): all must
+# reproduce the generator's pre-serialization fields
 _WIRE_DECODE_ORACLE = """
 SELECT 'conv-' || conv_key AS conv_id, turn_idx, role, tool,
        e.name AS colour, cents,
@@ -748,14 +753,7 @@ def pb_wire_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full encode->decode round trip against an independent derivation."""
     enc_df = PW.encode_turn_wire(_good_flat(spark, sf_dir))
     dec = PW.decode_turn_wire(enc_df)
-    d = F.col("decoded")
-    return dec.select(
-        d["conv_id"].alias("conv_id"), d["turn_idx"].alias("turn_idx"),
-        d["role"].alias("role"), d["tool"].alias("tool"),
-        d["colour"].alias("colour"), d["cents"].alias("cents"),
-        d["horn"].alias("horn"), d["wings"].alias("wings"),
-        d["msg"].alias("msg"), d["oneof_body"].alias("oneof_body"),
-    )
+    return dec.select(*(f"decoded.{c}" for c in _TURN_DECODED))
 
 
 @query("pb_wire_decode_jvmdyn", _oracle(_WIRE_DECODE_ORACLE))
@@ -764,24 +762,16 @@ def pb_wire_decode_jvmdyn(spark: SparkSession, sf_dir: str) -> DataFrame:
     vendored JVM ``DynamicMessage`` harness (round-5 verdict item 1: the
     spark-protobuf jar is unobtainable in-sandbox, but the Spark Connect jar
     shades a complete protobuf-java runtime, so
-    ``operators/pb_wire.decode_turn_wire_jvm_dynamic`` decodes the wire
-    bytes JVM-side with ZERO Python workers — descriptor set compiled by
+    ``decode_message(impl='jvm_dynamic')`` decodes the wire bytes JVM-side
+    with ZERO Python workers — descriptor set compiled by
     ``descriptors.descriptor_set_bytes``, ``WireDecodeRow`` materializing
-    the ``DynamicMessage`` directly as a Catalyst Row; no JSON detour —
-    that is the separate ``jvm_json`` foil). Shares ``pb_wire_decode``'s
-    oracle verbatim:
-    a green row here is execution evidence for the cluster decode path
-    (reference hot loop protobuf.rb:212-218)."""
+    the ``DynamicMessage`` directly as a Catalyst Row). Shares
+    ``pb_wire_decode``'s oracle verbatim: a green row here is execution
+    evidence for the cluster decode path (reference hot loop
+    protobuf.rb:212-218)."""
     enc_df = PW.encode_turn_wire(_good_flat(spark, sf_dir))
     dec = PW.decode_turn_wire(enc_df, impl="jvm_dynamic")
-    d = F.col("decoded")
-    return dec.select(
-        d["conv_id"].alias("conv_id"), d["turn_idx"].alias("turn_idx"),
-        d["role"].alias("role"), d["tool"].alias("tool"),
-        d["colour"].alias("colour"), d["cents"].alias("cents"),
-        d["horn"].alias("horn"), d["wings"].alias("wings"),
-        d["msg"].alias("msg"), d["oneof_body"].alias("oneof_body"),
-    )
+    return dec.select(*(f"decoded.{c}" for c in _TURN_DECODED))
 
 
 @query(
@@ -873,23 +863,7 @@ def pb_wire_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PB_WIRE_DECODE_ORACLE = _oracle(
-    """
-SELECT 'conv-' || conv_key AS conv_id, turn_idx, role, tool,
-       e.name AS colour, cents,
-       CASE WHEN oneof_kind = 'unicorn' THEN horn END AS horn,
-       CASE WHEN oneof_kind = 'pegasus' THEN wings END AS wings,
-       'm' || CAST(event_id AS STRING) AS msg,
-       CASE WHEN oneof_kind = 'unicorn' THEN 'horn' ELSE 'wings' END
-           AS oneof_body
-FROM _tr_num t
-LEFT JOIN enums e ON e.enum_class = 'Colour' AND e.code = t.colour
-WHERE event_id % 37 <> 0
-"""
-)
-
-
-@query("pb_schema_file_decode", _PB_WIRE_DECODE_ORACLE)
+@query("pb_schema_file_decode", _oracle(_WIRE_DECODE_ORACLE))
 def pb_schema_file_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same wire decode as pb_wire_decode, but the registry is loaded FROM A
     SCHEMA FILE ON DISK (schema.load_schema_file + register_codec — the
@@ -904,14 +878,7 @@ def pb_schema_file_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     reg = register_codec("turn_wire", class_file=spec)
     enc_df = PW.encode_turn_wire(_good_flat(spark, sf_dir))
     dec = PW.decode_turn_wire(enc_df, registry=reg)
-    d = F.col("decoded")
-    return dec.select(
-        d["conv_id"].alias("conv_id"), d["turn_idx"].alias("turn_idx"),
-        d["role"].alias("role"), d["tool"].alias("tool"),
-        d["colour"].alias("colour"), d["cents"].alias("cents"),
-        d["horn"].alias("horn"), d["wings"].alias("wings"),
-        d["msg"].alias("msg"), d["oneof_body"].alias("oneof_body"),
-    )
+    return dec.select(*(f"decoded.{c}" for c in _TURN_DECODED))
 
 
 @query(
@@ -979,19 +946,20 @@ def pb_wire_uint64_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses DuckDB DECIMAL(20,0) to float64 (lossy above 2^53)."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
-        F.expr("CAST('9223372036854775808' AS DECIMAL(20,0)) + event_id")
-        .cast("decimal(20,0)").alias("id_dec"),
-        (F.col("event_id") % 100).cast("bigint").alias("response_code"),
-        F.unhex(F.substring(F.md5(F.col("event_id").cast("string")), 1, 16))
-        .alias("payload_bin"),
+        PW.encode_message(F.struct(
+            F.expr("CAST('9223372036854775808' AS DECIMAL(20,0)) + event_id")
+            .cast("decimal(20,0)").alias("id"),
+            (F.col("event_id") % 100).cast("bigint").alias("response_code"),
+            F.unhex(F.substring(F.md5(F.col("event_id").cast("string")),
+                                1, 16)).alias("payload"),
+        ), "dns_message").alias("payload"),
     )
-    out = PW.dns_roundtrip(ev)
-    d = F.col("decoded")
+    out = PW.decode_message(ev, "payload", "dns_message")
     return out.select(
         "event_id",
-        d["id"].cast("string").alias("id"),
-        d["response_code"].alias("response_code"),
-        F.lower(F.hex(d["payload"])).alias("payload_hex"),
+        F.col("decoded.id").cast("string").alias("id"),
+        "decoded.response_code",
+        F.lower(F.hex(F.col("decoded.payload"))).alias("payload_hex"),
     )
 
 
@@ -1019,18 +987,29 @@ def pb2_wire_repeated_enum(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpacked wire size: 2 bytes/enum elem * 2 + 2 bytes/bool * 3 + 2 for
     least_liked (0 when its code is 0: scalar default omitted) + 5 for the
     3-char version string."""
+    e = F.col("event_id")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
-        (F.col("event_id") % 7).cast("int").alias("c1"),
-        ((F.col("event_id") + 3) % 7).cast("int").alias("c2"),
-        (F.col("event_id") % 2 == 0).alias("b1"),
-        (F.col("event_id") % 3 == 0).alias("b2"),
-        F.lit(True).alias("b3"),
-        ((F.col("event_id") + 5) % 7).cast("int").alias("least_liked"),
-        F.concat(F.lit("1."), (F.col("event_id") % 4).cast("string"))
-        .alias("version"),
+        PW.encode_message(F.struct(
+            F.array((e % 7).cast("int"), ((e + 3) % 7).cast("int"))
+            .alias("favourite_colours"),
+            F.array(e % 2 == 0, e % 3 == 0, F.lit(True)).alias("booleantest"),
+            ((e + 5) % 7).cast("int").alias("least_liked"),
+            F.concat(F.lit("1."), (e % 4).cast("string")).alias("version"),
+        ), "colour_testcase", proto_version=2).alias("payload"),
     )
-    return PW.colour_roundtrip(ev).drop("error")
+    out = PW.decode_message(ev, "payload", "colour_testcase",
+                            proto_version=2)
+    return out.select(
+        "event_id",
+        F.length("payload").cast("int").alias("n_bytes"),
+        F.array_join(F.col("decoded.favourite_colours").cast(
+            "array<string>"), ",").alias("colours_csv"),
+        F.array_join(F.transform(
+            "decoded.booleantest",
+            lambda b: F.when(b, "1").otherwise("0")), ",").alias("bools_csv"),
+        "decoded.least_liked", "decoded.version",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1070,34 +1049,36 @@ def pb_wire_nested_repeated(spark: SparkSession, sf_dir: str) -> DataFrame:
     enum symbolization inside arrays, proto3 defaults for omitted scalars
     (age 0 / fur code 0 -> 'UNDEFINED'). The oracle reconstructs the expected
     decode independently from the generator arithmetic."""
+    e = F.col("event_id")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
-        F.concat(F.lit("u"), F.col("event_id").cast("string")).alias("u_name"),
-        (F.col("event_id") % 30).cast("int").alias("u_age"),
-        (F.col("event_id") % 7).cast("int").alias("u_fur"),
-        F.array((F.col("event_id") % 7).cast("int"),
-                ((F.col("event_id") + 1) % 7).cast("int")).alias("u_favc"),
-        F.array((F.col("event_id") % 10).cast("int"),
-                (F.col("event_id") % 100).cast("int"),
-                F.lit(150)).alias("u_favn"),
-        (F.col("event_id") % 2 == 0).alias("u_peg"),
-        F.concat(F.lit("m"), F.col("event_id").cast("string")).alias("m_name"),
-        (F.col("event_id") % 30 + 20).cast("int").alias("m_age"),
-        ((F.col("event_id") + 3) % 7).cast("int").alias("m_fur"),
+        PW.encode_message(F.struct(
+            F.concat(F.lit("u"), e.cast("string")).alias("name"),
+            (e % 30).cast("int").alias("age"),
+            (e % 7).cast("int").alias("fur_colour"),
+            F.array((e % 7).cast("int"), ((e + 1) % 7).cast("int"))
+            .alias("favourite_colours"),
+            F.array((e % 10).cast("int"), (e % 100).cast("int"), F.lit(150))
+            .alias("favourite_numbers"),
+            (e % 2 == 0).alias("is_pegasus"),
+            F.struct(
+                F.concat(F.lit("m"), e.cast("string")).alias("name"),
+                (e % 30 + 20).cast("int").alias("age"),
+                ((e + 3) % 7).cast("int").alias("fur_colour"),
+            ).alias("mother"),
+        ), "unicorn").alias("payload"),
     )
-    out = PW.unicorn_roundtrip(ev)
-    d = F.col("decoded")
+    out = PW.decode_message(ev, "payload", "unicorn")
     return out.select(
-        "event_id",
-        d["name"].alias("name"), d["age"].alias("age"),
-        d["fur_colour"].alias("fur_colour"),
-        F.array_join(d["favourite_colours"], ",").alias("favourite_colours"),
-        F.array_join(d["favourite_numbers"].cast("array<string>"), ",")
-        .alias("favourite_numbers"),
-        d["is_pegasus"].alias("is_pegasus"),
-        d["mother_name"].alias("mother_name"),
-        d["mother_age"].alias("mother_age"),
-        d["mother_fur"].alias("mother_fur"),
+        "event_id", "decoded.name", "decoded.age", "decoded.fur_colour",
+        F.array_join("decoded.favourite_colours", ",")
+        .alias("favourite_colours"),
+        F.array_join(F.col("decoded.favourite_numbers").cast("array<string>"),
+                     ",").alias("favourite_numbers"),
+        "decoded.is_pegasus",
+        F.col("decoded.mother.name").alias("mother_name"),
+        F.col("decoded.mother.age").alias("mother_age"),
+        F.col("decoded.mother.fur_colour").alias("mother_fur"),
     )
 
 
@@ -1159,24 +1140,22 @@ FROM events
 
 def _map_entries_frame(spark: SparkSession, sf_dir: str,
                        impl: str = "arrow") -> DataFrame:
+    e = F.col("event_id")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
-        F.concat(F.lit("c"), F.col("event_id").cast("string")).alias("c_name"),
-        F.array(F.lit("home"), F.lit("work")).alias("c_labels"),
-        F.array((F.col("event_id") % 1000).cast("int"),
-                (F.col("event_id") % 97).cast("int")).alias("c_numbers"),
+        PW.encode_message(F.struct(
+            F.concat(F.lit("c"), e.cast("string")).alias("name"),
+            F.create_map(F.lit("home"), (e % 1000).cast("int"),
+                         F.lit("work"), (e % 97).cast("int"))
+            .alias("phone_numbers"),
+        ), "contact").alias("payload"),
     )
-    out = PW.contact_roundtrip(ev, impl=impl)
-    d = F.col("decoded")
-    exploded = out.select(
-        "event_id", d["name"].alias("name"),
-        F.explode(d["phones"]).alias("ph"),
-    )
-    return exploded.select(
-        "event_id", "name",
-        F.col("ph")["label"].alias("label"),
-        F.col("ph")["number"].alias("number"),
-    )
+    out = PW.decode_message(ev, "payload", "contact", impl=impl)
+    return out.select(
+        "event_id", "decoded.name",
+        F.explode("decoded.phone_numbers").alias("ph"),
+    ).select("event_id", "name", F.col("ph.key").alias("label"),
+             F.col("ph.value").alias("number"))
 
 
 @query("pb_wire_map_entries", _MAP_ENTRIES_ORACLE)
@@ -1184,7 +1163,7 @@ def pb_wire_map_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """proto3 map<string,int32> through REAL wire bytes (PhoneDirectory
     fixture): each entry rides as its own {1:key, 2:value} sub-message,
     zero-valued entries omit the value field (decoded back as 0). Decoded
-    maps are exploded to rows — multiset comparison is order-independent,
+    entries are exploded to rows — multiset comparison is order-independent,
     unlike map hash equality."""
     return _map_entries_frame(spark, sf_dir)
 
@@ -1195,9 +1174,9 @@ def pb_wire_map_entries_jvmdyn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vendored JVM ``DynamicMessage`` harness (round-6 verdict item 3:
     jvm_dynamic past flat messages). ``WireDecodeRow`` now walks maps —
     entries collapsed last-wins in first-seen key order, exactly a Python
-    dict built in wire order — and the label sort happens in pure Column
-    ops (``array_sort``). Shares the original's oracle verbatim: a green
-    row here is execution evidence for the nested JVM decode path."""
+    dict built in wire order. Shares the original's oracle and projection
+    verbatim: a green row here is execution evidence for the nested JVM
+    decode path."""
     return _map_entries_frame(spark, sf_dir, impl="jvm_dynamic")
 
 
@@ -1224,34 +1203,40 @@ def pb_wire_directory(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated-top-level pattern (spec/helpers/pb3/events_pb.rb:7-16) at full
     nesting depth: directory -> repeated contact -> map<string,int32>, three
     levels of length-delimited framing. Decoded structure is double-exploded
-    to scalar rows (position-pinned contacts, label-sorted map entries)."""
+    to scalar rows (position-pinned contacts, map entries)."""
+    out = _directory_frame(spark, sf_dir)
+    return out.select(
+        "event_id", F.posexplode("decoded.contacts").alias("c_pos", "c")
+    ).select(
+        "event_id", "c_pos", F.col("c.name").alias("name"),
+        F.explode("c.phone_numbers").alias("ph"),
+    ).select("event_id", "c_pos", "name", F.col("ph.key").alias("label"),
+             F.col("ph.value").alias("number"))
+
+
+def _directory_frame(spark: SparkSession, sf_dir: str,
+                     registry=None) -> DataFrame:
+    """Events encoded as directory messages (two contacts, each with a
+    two-entry phone map) and decoded back."""
     e = F.col("event_id")
+
+    def contact(prefix: str, home: Column, work: Column) -> Column:
+        return F.struct(
+            F.concat(F.lit(prefix), e.cast("string")).alias("name"),
+            F.create_map(F.lit("home"), home.cast("int"),
+                         F.lit("work"), work.cast("int"))
+            .alias("phone_numbers"))
+
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
-        F.concat(F.lit("dir"), (e % 10).cast("string")).alias("scope"),
-        F.array(F.concat(F.lit("ca"), e.cast("string")),
-                F.concat(F.lit("cb"), e.cast("string"))).alias("c_names"),
-        F.array(F.array(F.lit("home"), F.lit("work")),
-                F.array(F.lit("home"), F.lit("work"))).alias("c_labels"),
-        F.array(
-            F.array((e % 1000).cast("int"), (e % 97).cast("int")),
-            F.array(((e + 7) % 1000).cast("int"), ((e * 3) % 97).cast("int")),
-        ).alias("c_numbers"),
+        PW.encode_message(F.struct(
+            F.concat(F.lit("dir"), (e % 10).cast("string")).alias("scope"),
+            F.array(contact("ca", e % 1000, e % 97),
+                    contact("cb", (e + 7) % 1000, (e * 3) % 97))
+            .alias("contacts"),
+        ), "directory", registry).alias("payload"),
     )
-    out = PW.directory_roundtrip(ev)
-    d = F.col("decoded")
-    contacts = out.select(
-        "event_id", F.posexplode(d["contacts"]).alias("c_pos", "c")
-    )
-    return contacts.select(
-        "event_id", "c_pos",
-        F.col("c")["name"].alias("name"),
-        F.explode(F.col("c")["phones"]).alias("ph"),
-    ).select(
-        "event_id", "c_pos", "name",
-        F.col("ph")["label"].alias("label"),
-        F.col("ph")["number"].alias("number"),
-    )
+    return PW.decode_message(ev, "payload", "directory", registry)
 
 
 @query(
@@ -1289,27 +1274,11 @@ def pb_schema_multifile_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     except SchemaRegistryError:
         pass
     reg = register_codec("directory", include_path=[contact, directory])
-    e = F.col("event_id")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.concat(F.lit("dir"), (e % 10).cast("string")).alias("scope"),
-        F.array(F.concat(F.lit("ca"), e.cast("string")),
-                F.concat(F.lit("cb"), e.cast("string"))).alias("c_names"),
-        F.array(F.array(F.lit("home"), F.lit("work")),
-                F.array(F.lit("home"), F.lit("work"))).alias("c_labels"),
-        F.array(
-            F.array((e % 1000).cast("int"), (e % 97).cast("int")),
-            F.array(((e + 7) % 1000).cast("int"), ((e * 3) % 97).cast("int")),
-        ).alias("c_numbers"),
-    )
-    out = PW.directory_roundtrip(ev, registry=reg)
-    d = F.col("decoded")
+    out = _directory_frame(spark, sf_dir, reg)
     return out.select(
-        "event_id", F.col("scope"),
-        F.posexplode(d["contacts"]).alias("c_pos", "c"),
-    ).select(
-        "event_id", "scope", "c_pos", F.col("c")["name"].alias("name"),
-    )
+        "event_id", "decoded.scope",
+        F.posexplode("decoded.contacts").alias("c_pos", "c"),
+    ).select("event_id", "scope", "c_pos", F.col("c.name").alias("name"))
 
 
 @query(
@@ -1343,52 +1312,75 @@ FROM events
 def pb_wire_rum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's widest real-world fixture — the 15-field Akamai-RUM
     envelope (rum_pb.rb:7-77, the pb3_decode_spec akamai scenario) — through
-    REAL wire bytes via the GENERIC registry-driven encoder (py_encode) and
-    the wire parser: header int64 at depth 1, float32s at depth 2
+    REAL wire bytes via the registry-driven codec (encode_message /
+    decode_message): header int64 at depth 1, float32s at depth 2
     (user_agent.major, geo.lat, timers.longtasks), bool, repeated string,
     four nested messages, proto3 zero-omission throughout (tti/fcp/dom
     values hit 0). The oracle reconstructs every projected field from the
     generator arithmetic."""
     e = F.col("event_id")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        (e * 1000 + 1700000000000).alias("hdr_ts"),
-        F.concat(F.lit("s"), (e % 20).cast("string")).alias("sender"),
+
+    def f32(x: Column, frac: float) -> Column:
+        return (x.cast("float") + F.lit(frac).cast("float")).cast("float")
+
+    rum = F.struct(
+        F.struct((e * 1000 + 1700000000000).alias("unix_timestamp"),
+                 F.concat(F.lit("s"), (e % 20).cast("string"))
+                 .alias("sender_id")).alias("header"),
         F.concat(F.lit("1."), (e % 3).cast("string")).alias("version"),
         F.concat(F.lit("https://ex.com/p"), (e % 100).cast("string"))
         .alias("url"),
         F.concat(F.lit("sess"), e.cast("string")).alias("session_id"),
         F.when(e % 2 == 0, "en-US").otherwise("de-DE").alias("locale"),
-        F.concat(F.lit("fam"), (e % 5).cast("string")).alias("ua_family"),
-        ((e % 100).cast("float") + F.lit(0.25).cast("float"))
-        .cast("float").alias("ua_major"),
-        (e * 0.1).cast("float").alias("ua_minor"),
-        F.concat(F.lit("os"), (e % 3).cast("string")).alias("ua_os"),
-        F.concat(F.lit("C"), (e % 26).cast("string")).alias("geo_cc"),
-        F.concat(F.lit("city"), (e % 50).cast("string")).alias("geo_city"),
-        ((e % 180 - 90).cast("float") + F.lit(0.5).cast("float"))
-        .cast("float").alias("geo_lat"),
-        ((e % 360 - 180).cast("float") + F.lit(0.25).cast("float"))
-        .cast("float").alias("geo_lon"),
-        (e % 3 == 0).alias("geo_ovr"),
-        (e % 500).cast("int").alias("t_resp"),
-        (e % 100).cast("int").alias("fid"),
-        (e % 3000).cast("int").alias("fcp"),
-        (e % 5000).cast("int").alias("tti"),
-        (e % 7).cast("int").alias("ttvr"),
-        ((e % 50).cast("float") + F.lit(0.5).cast("float"))
-        .cast("float").alias("longtasks"),
+        F.struct(F.concat(F.lit("fam"), (e % 5).cast("string"))
+                 .alias("family"),
+                 f32(e % 100, 0.25).alias("major"),
+                 (e * 0.1).cast("float").alias("minor"),
+                 F.concat(F.lit("os"), (e % 3).cast("string")).alias("os"))
+        .alias("user_agent"),
+        F.struct(F.concat(F.lit("C"), (e % 26).cast("string")).alias("cc"),
+                 F.concat(F.lit("city"), (e % 50).cast("string"))
+                 .alias("city"),
+                 f32(e % 180 - 90, 0.5).alias("lat"),
+                 f32(e % 360 - 180, 0.25).alias("lon"),
+                 (e % 3 == 0).alias("ovr")).alias("geo"),
+        F.struct((e % 500).cast("int").alias("t_resp"),
+                 (e % 100).cast("int").alias("fid"),
+                 (e % 3000).cast("int").alias("fcp"),
+                 (e % 5000).cast("int").alias("tti"),
+                 (e % 7).cast("int").alias("ttvr"),
+                 f32(e % 50, 0.5).alias("longtasks")).alias("timers"),
         F.concat(F.lit("pg"), (e % 4).cast("string")).alias("page_group"),
-        F.concat(F.lit("t"), (e % 7).cast("string")).alias("ctest1"),
-        F.concat(F.lit("u"), (e % 11).cast("string")).alias("ctest2"),
-        (e % 40).cast("int").alias("dom_script"),
-        (e % 20).cast("int").alias("dom_ext"),
-        (e % 1000).cast("int").alias("dom_ln"),
+        F.array(F.concat(F.lit("t"), (e % 7).cast("string")),
+                F.concat(F.lit("u"), (e % 11).cast("string")))
+        .alias("active_ctests"),
+        F.struct((e % 40).cast("int").alias("script"),
+                 (e % 20).cast("int").alias("ext"),
+                 (e % 1000).cast("int").alias("ln")).alias("dom"),
         F.concat(F.lit("d"), (e % 30).cast("string")).alias("domain"),
-        F.lit("2026-01-01T00:00:00").alias("ts_str"),
+        F.lit("2026-01-01T00:00:00").alias("timestamp"),
     )
-    out = PW.akamai_rum_roundtrip(ev)
-    return out.drop("n_bytes", "error")  # n_bytes is pytest evidence
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", PW.encode_message(rum, "akamai_rum").alias("payload"))
+    out = PW.decode_message(ev, "payload", "akamai_rum")
+    return out.select(
+        "event_id",
+        F.col("decoded.header.unix_timestamp").alias("hdr_ts"),
+        F.col("decoded.header.sender_id").alias("sender"),
+        "decoded.version", "decoded.url", "decoded.session_id",
+        "decoded.locale",
+        F.col("decoded.user_agent.family").alias("ua_family"),
+        F.col("decoded.user_agent.major").cast("double").alias("ua_major"),
+        F.col("decoded.geo.cc").alias("geo_cc"),
+        F.col("decoded.geo.lat").cast("double").alias("geo_lat"),
+        F.col("decoded.geo.ovr").alias("geo_ovr"),
+        F.col("decoded.timers.fcp").alias("fcp"),
+        F.col("decoded.timers.tti").alias("tti"),
+        F.col("decoded.timers.longtasks").cast("double").alias("longtasks"),
+        F.array_join("decoded.active_ctests", ",").alias("ctests"),
+        F.col("decoded.dom.script").alias("dom_script"),
+        "decoded.domain",
+    )
 
 
 _FLOAT_DOUBLE_ORACLE = """
@@ -1410,37 +1402,41 @@ FROM events
 """
 
 
-def _float_double_frame(spark: SparkSession, sf_dir: str,
-                        impl: str = "scalar") -> DataFrame:
+def _float_double_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = F.col("event_id")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
-        F.concat(F.lit("uuid-"), F.col("event_id").cast("string"))
-        .alias("uuid"),
-        (F.col("event_id") % 2).cast("int").alias("status"),
-        F.when(F.col("event_id") % 50 == 0, F.lit(0.0))
-        .otherwise(F.col("event_id") * 0.001 + 0.5).alias("latency"),
-        F.concat(F.lit("10.0.0."), (F.col("event_id") % 256).cast("string"))
-        .alias("ip"),
-        F.concat(F.lit("fam"), (F.col("event_id") % 5).cast("string"))
-        .alias("ua_family"),
-        F.when(F.col("event_id") % 40 == 0, F.lit(0.0))
-        .otherwise((F.col("event_id") % 100).cast("float")
-                   + F.lit(0.25).cast("float"))
-        .cast("float").alias("ua_major"),
-        (F.col("event_id") * 0.1).cast("float").alias("ua_minor"),
-        F.concat(F.lit("os"), (F.col("event_id") % 3).cast("string"))
-        .alias("ua_os"),
+        PW.encode_message(F.struct(
+            F.concat(F.lit("uuid-"), e.cast("string")).alias("uuid"),
+            F.struct(
+                (e % 2).cast("int").alias("status"),
+                F.when(e % 50 == 0, F.lit(0.0))
+                .otherwise(e * 0.001 + 0.5).alias("latency"),
+                F.concat(F.lit("10.0.0."), (e % 256).cast("string"))
+                .alias("ip"),
+            ).alias("task"),
+        ), "probe_result").alias("probe_payload"),
+        PW.encode_message(F.struct(
+            F.concat(F.lit("fam"), (e % 5).cast("string")).alias("family"),
+            F.when(e % 40 == 0, F.lit(0.0))
+            .otherwise((e % 100).cast("float") + F.lit(0.25).cast("float"))
+            .cast("float").alias("major"),
+            (e * 0.1).cast("float").alias("minor"),
+            F.concat(F.lit("os"), (e % 3).cast("string")).alias("os"),
+        ), "user_agent").alias("ua_payload"),
     )
-    out = PW.probe_ua_roundtrip(ev, impl=impl)
-    d = F.col("decoded")
+    probe = PW.decode_message(ev, "probe_payload", "probe_result")
+    out = PW.decode_message(probe.withColumnRenamed("decoded", "probe"),
+                            "ua_payload", "user_agent")
     return out.select(
-        "event_id",
-        d["uuid"].alias("uuid"), d["status"].alias("status"),
-        d["latency"].alias("latency"), d["ip"].alias("ip"),
-        d["family"].alias("family"),
-        d["major"].cast("double").alias("major_d"),
-        d["minor"].cast("double").alias("minor_d"),
-        d["os"].alias("os"),
+        "event_id", "probe.uuid",
+        F.col("probe.task.status").alias("status"),
+        F.col("probe.task.latency").alias("latency"),
+        F.col("probe.task.ip").alias("ip"),
+        "decoded.family",
+        F.col("decoded.major").cast("double").alias("major_d"),
+        F.col("decoded.minor").cast("double").alias("minor_d"),
+        "decoded.os",
     )
 
 
@@ -1453,21 +1449,20 @@ def pb_wire_float_double(spark: SparkSession, sf_dir: str) -> DataFrame:
     — 0-valued fields are omitted on the wire and re-emerge as proto3
     defaults; the float32 rounding of event_id*0.1 is identical in Spark and
     DuckDB (both IEEE round-to-nearest), so the oracle compares exactly with
-    no truncation."""
+    no truncation. Both messages are flat enough for the numpy walker, so
+    ``decode_message`` decodes them there (probe_result.task, one nested
+    level, in a recursive vector pass over sub-slices of the same batch
+    buffer; the floats and doubles by byte gathers)."""
     return _float_double_frame(spark, sf_dir)
 
 
 @query("pb_wire_float_double_vec", _FLOAT_DOUBLE_ORACLE)
 def pb_wire_float_double_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME probe+user_agent decode forced through the numpy
-    record-transposed walker — its round-7 one-nesting-level extension:
-    probe_result.task (singular nested message) decodes in a recursive
-    vector pass over sub-slices of the same batch buffer, and the fixed32
-    floats / fixed64 doubles decode via byte gathers instead of the scalar
-    struct.unpack loop. Shares pb_wire_float_double's oracle verbatim; a
-    green row is driver evidence for the nested vector path (parity is also
-    hypothesis-fuzzed in tests/test_wire_property.py)."""
-    return _float_double_frame(spark, sf_dir, impl="vector")
+    """Registered twin of ``pb_wire_float_double``: the same query, oracle
+    and decode path (``decode_message`` picks the numpy walker for both
+    messages by their shape). Parity of that walker with ``py_decode`` is
+    hypothesis-fuzzed in tests/test_wire_property.py."""
+    return _float_double_frame(spark, sf_dir)
 
 
 _REPEATED_MESSAGE_ORACLE = """
@@ -1485,29 +1480,40 @@ FROM events
 
 def _repeated_message_frame(spark: SparkSession, sf_dir: str,
                             impl: str = "arrow") -> DataFrame:
+    e = F.col("event_id")
+
+    def question(name: Column, qtype: Column, qclass: Column) -> Column:
+        return F.struct(name.cast("binary").alias("name"),
+                        qtype.cast("int").alias("qtype"),
+                        qclass.cast("int").alias("qclass"))
+
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
-        F.col("event_id").cast("decimal(20,0)").alias("id_dec"),
-        F.array(
-            F.concat(F.lit("h"), F.col("event_id").cast("string"),
-                     F.lit(".example")),
-            F.concat(F.lit("alt"), F.col("event_id").cast("string")),
-        ).alias("q_names"),
-        F.array((F.col("event_id") % 16).cast("int"), F.lit(28))
-        .alias("q_types"),
-        F.array(F.lit(1), (F.col("event_id") % 3).cast("int"))
-        .alias("q_classes"),
+        PW.encode_message(F.struct(
+            e.cast("decimal(20,0)").alias("id"),
+            F.array(
+                question(F.concat(F.lit("h"), e.cast("string"),
+                                  F.lit(".example")), e % 16, F.lit(1)),
+                question(F.concat(F.lit("alt"), e.cast("string")),
+                         F.lit(28), e % 3),
+            ).alias("question"),
+        ), "dns_message").alias("payload"),
     )
-    out = PW.dns_questions_roundtrip(ev, impl=impl)
-    d = F.col("decoded")
-    exploded = out.select(
-        "event_id", F.posexplode(d["questions"]).alias("pos", "q")
-    )
-    return exploded.select(
+    return dns_question_rows(
+        PW.decode_message(ev, "payload", "dns_message", impl=impl))
+
+
+def dns_question_rows(dec: DataFrame) -> DataFrame:
+    """One row per decoded ``dns_message.question``, position-pinned. The
+    name is ``bytes`` on the wire; a name that is not valid UTF-8 comes out
+    NULL (flagged, never rewritten with replacement characters), the same
+    for every decode impl."""
+    return dec.select(
+        "event_id", F.posexplode("decoded.question").alias("pos", "q")
+    ).select(
         "event_id", "pos",
-        F.col("q")["name"].alias("name"),
-        F.col("q")["qtype"].alias("qtype"),
-        F.col("q")["qclass"].alias("qclass"),
+        F.try_validate_utf8(F.col("q.name").cast("string")).alias("name"),
+        F.col("q.qtype").alias("qtype"), F.col("q.qclass").alias("qclass"),
     )
 
 
@@ -1531,8 +1537,8 @@ def pb_wire_repeated_message_jvmdyn(spark: SparkSession,
     JVM ``DynamicMessage`` harness (round-6 verdict item 3: jvm_dynamic
     past flat messages). ``WireDecodeRow`` walks the message recursively:
     repeated submessages become array<struct> with per-element proto3
-    defaults, uint64 widens to DECIMAL(20,0), bytes names re-project to
-    string via a Column cast. Shares the original's oracle verbatim."""
+    defaults, uint64 widens to DECIMAL(20,0), bytes names stay bytes.
+    Shares the original's oracle and projection verbatim."""
     return _repeated_message_frame(spark, sf_dir, impl="jvm_dynamic")
 
 
@@ -1557,32 +1563,37 @@ def pb2_wire_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec/codecs/pb2_spec.rb:43-77 walk (``mother.mother.first_name`` — three
     generations: self -> mother -> grandmother, plus a father branch) through
     encode and back. The recursive human spec (human.pb.rb:16-17) nests as
-    length-delimited sub-messages; py_decode recurses with a depth bound."""
+    length-delimited sub-messages; py_decode recurses with a depth bound
+    (max_recursion_depth, which also bounds the decoded struct)."""
     e = F.col("event_id")
+
+    def person(prefix: str, age: Column, *more: Column) -> Column:
+        return F.struct(F.concat(F.lit(prefix), e.cast("string"))
+                        .alias("first_name"), *more,
+                        age.cast("int").alias("age"))
+
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
-        F.concat(F.lit("hf"), e.cast("string")).alias("h_first"),
-        F.concat(F.lit("hl"), (e % 100).cast("string")).alias("h_last"),
-        (e % 80 + 1).cast("int").alias("h_age"),
-        F.concat(F.lit("mf"), e.cast("string")).alias("m_first"),
-        (e % 60 + 20).cast("int").alias("m_age"),
-        F.concat(F.lit("gm"), e.cast("string")).alias("gm_first"),
-        (e % 40 + 45).cast("int").alias("gm_age"),
-        F.concat(F.lit("ff"), e.cast("string")).alias("f_first"),
-        (e % 70 + 18).cast("int").alias("f_age"),
+        PW.encode_message(F.struct(
+            F.concat(F.lit("hf"), e.cast("string")).alias("first_name"),
+            F.concat(F.lit("hl"), (e % 100).cast("string"))
+            .alias("last_name"),
+            person("mf", e % 60 + 20,
+                   person("gm", e % 40 + 45).alias("mother"))
+            .alias("mother"),
+            person("ff", e % 70 + 18).alias("father"),
+            (e % 80 + 1).cast("int").alias("age"),
+        ), "human", proto_version=2).alias("payload"),
     )
-    out = PW.human_lineage_roundtrip(ev)
-    d = F.col("decoded")
+    out = PW.decode_message(ev, "payload", "human", proto_version=2)
     return out.select(
-        "event_id",
-        d["first_name"].alias("first_name"), d["last_name"].alias("last_name"),
-        d["age"].alias("age"),
-        d["mother_first"].alias("mother_first"),
-        d["mother_age"].alias("mother_age"),
-        d["grandma_first"].alias("grandma_first"),
-        d["grandma_age"].alias("grandma_age"),
-        d["father_first"].alias("father_first"),
-        d["father_age"].alias("father_age"),
+        "event_id", "decoded.first_name", "decoded.last_name", "decoded.age",
+        F.col("decoded.mother.first_name").alias("mother_first"),
+        F.col("decoded.mother.age").alias("mother_age"),
+        F.col("decoded.mother.mother.first_name").alias("grandma_first"),
+        F.col("decoded.mother.mother.age").alias("grandma_age"),
+        F.col("decoded.father.first_name").alias("father_first"),
+        F.col("decoded.father.age").alias("father_age"),
     )
 
 
@@ -1615,23 +1626,28 @@ def pb_wire_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reconstructs the exact canonical JSON text from the generator
     arithmetic."""
     e = F.col("event_id")
+    details = F.struct(
+        F.concat(F.lit("v"), (e % 50).cast("string")).alias("vendor"),
+        (e % 1000).cast("double").alias("count"),
+        (e % 2 == 0).alias("active"),
+        F.lit(None).cast("string").alias("note"),
+        F.array(F.concat(F.lit("a"), (e % 7).cast("string")),
+                F.concat(F.lit("b"), (e % 11).cast("string"))).alias("tags"),
+        F.struct((e % 180).cast("double").alias("lat"),
+                 F.concat(F.lit("c"), (e % 20).cast("string")).alias("city"))
+        .alias("geo"),
+    )
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
-        F.concat(F.lit("u"), e.cast("string")).alias("user_id"),
-        F.concat(F.lit("v"), (e % 50).cast("string")).alias("s_vendor"),
-        (e % 1000).cast("long").alias("s_count"),
-        (e % 2 == 0).alias("s_active"),
-        F.concat(F.lit("a"), (e % 7).cast("string")).alias("s_tag1"),
-        F.concat(F.lit("b"), (e % 11).cast("string")).alias("s_tag2"),
-        (e % 180).cast("long").alias("s_lat"),
-        F.concat(F.lit("c"), (e % 20).cast("string")).alias("s_city"),
+        PW.encode_message(F.struct(
+            F.concat(F.lit("u"), e.cast("string")).alias("user_id"),
+            details.alias("details"),
+        ), "send_json_request").alias("payload"),
     )
-    out = PW.struct_roundtrip(ev)
-    d = F.col("decoded")
-    j = d["details_json"]
+    out = PW.decode_message(ev, "payload", "send_json_request")
+    j = F.col("decoded.details")
     return out.select(
-        "event_id",
-        d["user_id"].alias("user_id"),
+        "event_id", "decoded.user_id",
         j.alias("details_json"),
         F.get_json_object(j, "$.vendor").alias("vendor"),
         F.get_json_object(j, "$.count").cast("double").cast("long")

@@ -208,9 +208,12 @@ def neardup_pairs(emb: DataFrame, threshold: float = 0.9,
     # bucket block with vectorized index-order folds — arithmetic identical
     # to the pair_dot/try_divide/trunc6 expression tree, pinned by the
     # exact DuckDB oracle. Block memory is bounded by chunking the probe
-    # side, so a hot bucket can never OOM a task.
+    # side, so a hot bucket can never OOM a task. A NULL vector's cosine is
+    # NULL in the oracle, so it never passes the threshold: drop it before
+    # the kernels, whose np.stack cannot take a missing row.
     h = cache.track(
-        spread(emb.select("vec_id", "embedding")).select(
+        spread(emb.select("vec_id", "embedding")
+               .filter(F.col("embedding").isNotNull())).select(
             "vec_id", "embedding",
             _bucket_nrm_udf(n_planes)(F.col("embedding")).alias("_bn"))
         .select("vec_id", "embedding", F.col("_bn.bucket").alias("bucket"))

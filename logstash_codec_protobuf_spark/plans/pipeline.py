@@ -83,9 +83,12 @@ def _combos_per_partition(sf_dir: str, transcripts_path: str | None) -> int:
         return max(1, int(env))
     try:
         if transcripts_path is not None:
+            # the whole tree: a Hive-partitioned input keeps its files
+            # under key=value/ subdirectories
             size = sum(
-                os.path.getsize(os.path.join(transcripts_path, f))
-                for f in os.listdir(transcripts_path)
+                os.path.getsize(os.path.join(root, f))
+                for root, _, files in os.walk(transcripts_path)
+                for f in files
                 if f.endswith(".parquet")
             )
         else:

@@ -4,8 +4,10 @@ Generalizes the reference's constant-size field/enum dictionaries probed per rec
 (@metainfo_messageclasses lookup, protobuf.rb:654-657; descriptor-pool lookups
 :455,477,487) into small dimension tables joined with an explicit broadcast hash
 join — the canonical Spark shape for a per-row map probe. Single source of truth:
-the Python rows below render both the Spark DataFrame and a DuckDB VALUES CTE so
-oracles match exactly.
+the Python rows below render one VALUES text per dictionary, and that one SQL
+text feeds both engines — the DuckDB oracles inline it as a CTE, and Spark
+plans it as a ``LocalRelation``. Building a dim is analysis only: no Python
+worker, no RDD, no job until the broadcast reads the rows from the driver.
 
 `tools.sink` drives the tag-based fan-out routing (FIXTURES.md §2).
 """
@@ -34,40 +36,6 @@ TOOLS_ROWS = [
 ]
 
 
-# per-session cache: building + broadcasting a dim costs a Python->JVM
-# round-trip (~100ms); pipelines call enrich() per query, so reuse the frame.
-# WeakKeyDictionary keyed on the live SparkSession: entries die with the
-# session object, so stopped sessions (bench.run_scaling creates/stops many
-# per process) don't pin DataFrames or grow the cache unboundedly.
-import weakref  # noqa: E402
-
-_DIM_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _cached(spark: SparkSession, key: str, build) -> DataFrame:
-    per_session = _DIM_CACHE.setdefault(spark, {})
-    if key not in per_session:
-        per_session[key] = build()
-    return per_session[key]
-
-
-def roles_df(spark: SparkSession) -> DataFrame:
-    return _cached(spark, "roles", lambda: spark.createDataFrame(
-        ROLES_ROWS, "role string, role_group string, is_agent boolean"))
-
-
-def tools_df(spark: SparkSession) -> DataFrame:
-    return _cached(spark, "tools", lambda: spark.createDataFrame(
-        TOOLS_ROWS, "tool string, tool_family string, sink string"))
-
-
-def enums_df(spark: SparkSession) -> DataFrame:
-    rows = default_registry().enum_rows()
-    return spark.createDataFrame(rows, "enum_class string, code int, name string")
-
-
 def _values_cte(rows, cols) -> str:
     def lit(v):
         if isinstance(v, bool):
@@ -85,3 +53,15 @@ TOOLS_SQL = _values_cte(TOOLS_ROWS, ["tool", "tool_family", "sink"])
 ENUMS_SQL = _values_cte(
     default_registry().enum_rows(), ["enum_class", "code", "name"]
 )
+
+
+def roles_df(spark: SparkSession) -> DataFrame:
+    return spark.sql(f"SELECT * FROM {ROLES_SQL}")
+
+
+def tools_df(spark: SparkSession) -> DataFrame:
+    return spark.sql(f"SELECT * FROM {TOOLS_SQL}")
+
+
+def enums_df(spark: SparkSession) -> DataFrame:
+    return spark.sql(f"SELECT * FROM {ENUMS_SQL}")

@@ -347,9 +347,12 @@ def test_cosine_topk_zero_norm_vector_is_null_scored_never_a_crash(spark):
     out = SIM.cosine_topk(emb, n_queries=2, k=3).collect()  # must not raise
     assert len(out) == 6  # k rows per query, ranks contiguous
     assert all(r["neighbor_id"] != 8 for r in out)  # NULL score ranks last
-    # and the bucketed near-dup path survives a zero vector too
-    nd = SIM.neardup_pairs(emb, threshold=0.5).collect()
-    assert all(8 not in (r["a_id"], r["b_id"]) for r in nd)
+    # and the bucketed near-dup path survives a zero vector too, and a NULL
+    # vector: its cosine is NULL in the oracle, so it is in no pair
+    with_null = emb.unionByName(spark.createDataFrame(
+        [(9, None)], "vec_id long, embedding array<double>"))
+    nd = SIM.neardup_pairs(with_null, threshold=0.5).collect()
+    assert nd and all({8, 9}.isdisjoint((r["a_id"], r["b_id"])) for r in nd)
 
 
 def test_fingerprint_kernels_match_reference_on_edge_texts():

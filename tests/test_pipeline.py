@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -109,3 +111,20 @@ def test_fan_out_parquet_and_writeto(spark, tmp_path):
     parts = spark.sql("SHOW CREATE TABLE fanout_v2_test").first()[0]
     assert "PARTITIONED BY (sink)" in parts
     spark.sql("DROP TABLE fanout_v2_test")
+
+
+def test_combos_density_sizes_nested_partitioned_input(tmp_path, monkeypatch):
+    """A Hive-partitioned input keeps its parquet under key=value/ dirs; the
+    salt-combo density must size the whole tree, not only top-level files.
+    The 65 MiB file is sparse, so it takes no disk."""
+    from logstash_codec_protobuf_spark.plans.pipeline import _combos_per_partition
+
+    monkeypatch.delenv("SPARK_GRAFT_COMBOS_PER_PARTITION", raising=False)
+    part = tmp_path / "transcripts" / "part=a"
+    part.mkdir(parents=True)
+    big = part / "f0.parquet"
+    big.touch()
+    os.truncate(big, 65 << 20)
+    assert _combos_per_partition(SF_DIR, str(tmp_path / "transcripts")) == 4
+    os.truncate(big, 1 << 20)
+    assert _combos_per_partition(SF_DIR, str(tmp_path / "transcripts")) == 1

@@ -50,6 +50,37 @@ def test_route_counts_has_single_data_shuffle(spark, tr):
     assert broadcast_exchanges == 2  # roles + tools dictionaries
 
 
+def test_enrich_dictionaries_are_local_relations_no_python(spark, tr):
+    """The dictionaries are VALUES texts planned as local relations: each
+    broadcast reads its rows from the driver, so the pipeline path forks no
+    Python worker. A dim built from a Python list plans as `Scan
+    ExistingRDD` over a PythonRDD and costs a 4-task job per broadcast."""
+    from logstash_codec_protobuf_spark.schema import default_registry
+    from logstash_codec_protobuf_spark.sources.dims import (
+        ROLES_ROWS, TOOLS_ROWS, enums_df, roles_df, tools_df)
+
+    plan = _executed(route_all(enrich(parse_turns(tr), spark, tag_unknown=False)))
+    lines = plan.splitlines()
+    under = [
+        re.sub(r"^[\s:+\-|]*", "", lines[i + 1])
+        for i, line in enumerate(lines) if "BroadcastExchange" in line
+    ]
+    assert len(under) == 2 and all(
+        u.startswith("LocalTableScan") for u in under), plan
+    assert not re.search(r"ExistingRDD|EvalPython|InPandas", plan), plan
+
+    for df, want, types in (
+        (roles_df(spark), ROLES_ROWS,
+         "role string, role_group string, is_agent boolean"),
+        (tools_df(spark), TOOLS_ROWS,
+         "tool string, tool_family string, sink string"),
+        (enums_df(spark), default_registry().enum_rows(),
+         "enum_class string, code int, name string"),
+    ):
+        assert ", ".join(f"{n} {t}" for n, t in df.dtypes) == types
+        assert [tuple(r) for r in df.collect()] == want
+
+
 def test_parse_scan_prunes_to_referenced_columns(spark, tr):
     """Selecting one parsed field must read ONLY `text` from parquet — the
     struct projection cannot force a full-row scan."""

@@ -29,10 +29,8 @@ def enrich(df: DataFrame, spark: SparkSession, tag_unknown: bool = True) -> Data
     Adds `role_group`, `is_agent`, `tool_family`, `sink`, and (if tagging)
     `tags`.
     """
-    out = (
-        df.join(F.broadcast(roles_df(spark)), on="role", how="left")
-        .join(F.broadcast(tools_df(spark)), on="tool", how="left")
-    )
+    out = join_tools(
+        df.join(F.broadcast(roles_df(spark)), on="role", how="left"), spark)
     if tag_unknown:
         tags = F.coalesce(
             F.col("tags") if "tags" in df.columns else F.lit(None).cast("array<string>"),
@@ -42,6 +40,12 @@ def enrich(df: DataFrame, spark: SparkSession, tag_unknown: bool = True) -> Data
         tags = F.when(F.col("role_group").isNull(), add_tag(tags, UNKNOWN_ROLE_TAG)).otherwise(tags)
         out = out.withColumn("tags", F.when(F.size(tags) > 0, tags))
     return out
+
+
+def join_tools(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """Left-broadcast-join the tools dictionary alone: adds `tool_family` and
+    `sink`, all that routing reads."""
+    return df.join(F.broadcast(tools_df(spark)), on="tool", how="left")
 
 
 def unmatched_keys(df: DataFrame, spark: SparkSession, key: str = "tool") -> DataFrame:

@@ -4,7 +4,7 @@ The reference codec is transport-agnostic and stateless per message (no
 watermarks/windows/state, SURVEY.md §2.10), so the batch engine is the primary
 target; this module exists because the codec's natural seat in production IS a
 stream (Kafka -> Logstash pipeline, protobuf.rb:30-43). The same operator
-functions are reused verbatim — parse_turns / enrich / route_all are all
+functions are reused verbatim — parse_turns / join_tools / route_all are all
 narrow transformations, so they compose with readStream unchanged. Streaming
 adds exactly two things the batch path doesn't have:
 
@@ -23,9 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import CodecConfig
-from ..operators.enrich import enrich
+from ..operators.enrich import join_tools
 from ..operators.parse import parse_turns
 from ..operators.route import route_all
+from ..plans.pipeline import PARQUET_CODEC
 
 
 def read_transcript_stream(spark: SparkSession, source_dir: str,
@@ -42,8 +43,8 @@ def read_transcript_stream(spark: SparkSession, source_dir: str,
 def streaming_parse_route(stream: DataFrame, spark: SparkSession,
                           cfg: CodecConfig | None = None) -> DataFrame:
     """The batch operators, unchanged, over an unbounded frame."""
-    return route_all(enrich(parse_turns(stream, cfg, impl="native"), spark,
-                            tag_unknown=False))
+    return route_all(join_tools(parse_turns(stream, cfg, impl="native"),
+                                spark))
 
 
 def streaming_windowed_counts(routed: DataFrame, window: str = "1 hour",
@@ -158,13 +159,15 @@ def streaming_wire_decode(stream: DataFrame, payload_col: str = "payload",
 
 def run_stream_to_sinks(spark: SparkSession, source_dir: str, out_dir: str,
                         cfg: CodecConfig | None = None):
-    """Continuous fan-out: routed rows land partitioned by sink with streaming
-    checkpointing (resume = restart with the same checkpoint dir)."""
+    """Continuous fan-out: routed rows land partitioned by sink, in the
+    batch engine's parquet codec, with streaming checkpointing (resume =
+    restart with the same checkpoint dir)."""
     routed = streaming_parse_route(read_transcript_stream(spark, source_dir),
                                    spark, cfg)
     return (
         routed.writeStream
         .option("checkpointLocation", f"{out_dir}/_checkpoint")
+        .option("compression", PARQUET_CODEC)
         .partitionBy("sink")
         .trigger(availableNow=True)
         .start(f"{out_dir}/routed")

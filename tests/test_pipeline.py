@@ -128,3 +128,91 @@ def test_combos_density_sizes_nested_partitioned_input(tmp_path, monkeypatch):
     assert _combos_per_partition(SF_DIR, str(tmp_path / "transcripts")) == 4
     os.truncate(big, 1 << 20)
     assert _combos_per_partition(SF_DIR, str(tmp_path / "transcripts")) == 1
+
+
+def _staged(spark, path) -> str:
+    from logstash_codec_protobuf_spark.sources.transcripts import transcripts_df
+
+    transcripts_df(spark, SF_DIR).write.mode("overwrite").parquet(str(path))
+    return str(path)
+
+
+def _column_codecs(root) -> set[str]:
+    """Codec of every column chunk of every parquet file under ``root``."""
+    import pyarrow.parquet as pq
+
+    files = [os.path.join(d, f) for d, _, fs in os.walk(root)
+             for f in fs if f.endswith(".parquet")]
+    assert files, root
+    codecs = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            codecs |= {rg.column(j).compression for j in range(rg.num_columns)}
+    return codecs
+
+
+def test_engine_writes_zstd_over_a_snappy_session_default(spark, tmp_path):
+    """The parquet codec is the engine's, not the session's: with the
+    session default set to snappy, the routed store, both aggregates and
+    the streaming twin's routed sink are zstd in every column chunk."""
+    from logstash_codec_protobuf_spark.streaming.stream import (
+        run_stream_to_sinks)
+
+    key = "spark.sql.parquet.compression.codec"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "snappy")
+    try:
+        out = str(tmp_path / "job")
+        run_pipeline(spark, SF_DIR, out, n_buckets=4, wave_size=2)
+        for d in ("routed", "conv_stats", "hourly_stats"):
+            assert _column_codecs(f"{out}/{d}") == {"ZSTD"}, d
+        src = _staged(spark, tmp_path / "tr")
+        stream_out = str(tmp_path / "stream")
+        run_stream_to_sinks(spark, src, stream_out).awaitTermination(120)
+        assert _column_codecs(f"{stream_out}/routed") == {"ZSTD"}
+    finally:
+        spark.conf.set(key, prev)
+
+
+# jobs of one warm call over staged transcripts, 8 buckets in two waves:
+# the input's schema inference, 4 + 2 for the two wave writes (the first
+# builds the persisted routed frame and broadcasts the tools dictionary)
+# and 5 for the two aggregates
+WARM_CALL_JOBS = 12
+
+
+def test_warm_call_job_budget(spark, tmp_path):
+    """Every job one warm call launches is in the caller's job group, also
+    from the aggregate threads, and carries a run_pipeline description. The
+    read-back uses the schema the call wrote, so no job infers it from the
+    files under routed/."""
+    src = _staged(spark, tmp_path / "tr")
+    run_pipeline(spark, SF_DIR, str(tmp_path / "cold"), n_buckets=8,
+                 wave_size=4, transcripts_path=src)
+    sc = spark.sparkContext
+    sc.setJobGroup("run_pipeline_budget", "caller")
+    try:
+        run_pipeline(spark, SF_DIR, str(tmp_path / "warm"), n_buckets=8,
+                     wave_size=4, transcripts_path=src)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc._jsc.clearJobGroup()
+    ids = set(sc.statusTracker().getJobIdsForGroup("run_pipeline_budget"))
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    described = {}
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() in ids:
+            d = j.description()
+            described[j.jobId()] = d.get() if d.isDefined() else None
+    assert len(ids) == WARM_CALL_JOBS, described
+    assert all(d and d.startswith("run_pipeline: ")
+               for d in described.values()), described
+    assert "run_pipeline: read back routed" not in described.values(), described
+    assert {d for d in described.values() if "aggregate" in d} == {
+        "run_pipeline: aggregate conv_stats",
+        "run_pipeline: aggregate hourly_stats"}, described

@@ -17,11 +17,16 @@ from .conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")
-def tr(spark, tmp_path_factory):
-    """Transcripts as a parquet source (so scan-level assertions apply)."""
+def tr_path(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("plans") / "tr")
     transcripts_df(spark, SF_DIR).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def tr(spark, tr_path):
+    """Transcripts as a parquet source (so scan-level assertions apply)."""
+    return spark.read.parquet(tr_path)
 
 
 def _executed(df) -> str:
@@ -79,6 +84,26 @@ def test_enrich_dictionaries_are_local_relations_no_python(spark, tr):
     ):
         assert ", ".join(f"{n} {t}" for n, t in df.dtypes) == types
         assert [tuple(r) for r in df.collect()] == want
+
+
+def test_wave_plan_broadcasts_the_tools_dictionary_only(spark, tr_path):
+    """run_pipeline's wave plan joins only the dictionary routing reads
+    (`tools.sink`): exactly one BroadcastExchange, over the tools
+    LocalTableScan. A roles join there adds no written column but costs a
+    broadcast job per call and a hash probe per row."""
+    from logstash_codec_protobuf_spark.config import CodecConfig
+    from logstash_codec_protobuf_spark.plans.pipeline import _routed_wave
+
+    plan = _executed(_routed_wave(spark, SF_DIR, CodecConfig(), 8, "native",
+                                  transcripts_path=tr_path))
+    lines = plan.splitlines()
+    under = [
+        re.sub(r"^[\s:+\-|]*", "", lines[i + 1])
+        for i, line in enumerate(lines) if "BroadcastExchange" in line
+    ]
+    assert len(under) == 1, plan
+    assert re.match(r"LocalTableScan \[tool#\d+, sink#\d+\]", under[0]), plan
+    assert "role_group" not in plan, plan
 
 
 def test_parse_scan_prunes_to_referenced_columns(spark, tr):

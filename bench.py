@@ -1,68 +1,69 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""Headline benchmark: run the 16 headline pipeline leaves on the tables in
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test tables), best of two rounds, on
+a local[N] session sized from the host, and print ONE JSON line.
 
-Default: run the headline pipeline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
-
---scaling: run the identical end-to-end job at local[8] and local[32] on the
-same input and report throughput at both + scaling efficiency (the sandbox
-evidence for the north_rule's N vs 4N executor criterion) into
-BENCH/BASELINE.md.
+Run: ``python bench.py 2>/dev/null | tail -1``. It takes no arguments.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-
-import pandas as pd  # module-level: pandas_udf type hints must resolve
-# against function globals under `from __future__ import annotations`
 import shutil
-import sys
 import tempfile
 import time
 
+ROUNDS = 2
+# 1-minute load average above which the record is flagged contended
+LOAD_MAX = 4.0
+# session default, used by the staged inputs; the engine's own writes are
+# zstd whatever it says (plans.pipeline.PARQUET_CODEC)
+PARQUET_CODEC = "snappy"
+# shuffle/broadcast block codec: at the headline's 100k-turn scale the
+# shuffles are tiny, and zstd's CPU cost was pure overhead (+7% composite,
+# BENCH/bench_r7_clean_run*.log)
+IO_CODEC = "lz4"
+# split-size cap: without it a ~3GB staged input packs into ~24 scan splits
+# (128MB default) and a wide local[N] can never saturate its cores
+MAX_PARTITION_BYTES = "16m"
 
-def make_spark(cpus: int, shuffle_partitions: int | None = None,
-               io_codec: str | None = None):
+
+def _host_size() -> tuple[int, str]:
+    """Usable cores and a driver heap of half of RAM, capped at 24 GiB."""
+    cores = len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    return cores, f"{min(24 << 10, mem_kb // 2048)}m"
+
+
+def make_spark():
     from pyspark.sql import SparkSession
 
+    cpus, heap = _host_size()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(f"bench-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "24g"))
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
-        # split-size cap: without it a ~3GB staged input packs into ~24 scan
-        # splits (128MB default) and local[32] can never saturate its cores —
-        # the single biggest scaling lever found while measuring
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-        # shuffle blocks on tmpfs: the sandbox has ONE disk, and routing's
-        # explicit shuffle would serialize on it at every parallelism level —
-        # a real cluster shuffles through per-executor local NVMe
+        .config("spark.driver.memory", heap)
+        .config("spark.sql.parquet.compression.codec", PARQUET_CODEC)
+        .config("spark.sql.files.maxPartitionBytes", MAX_PARTITION_BYTES)
+        # shuffle blocks on tmpfs: on a one-disk host routing's explicit
+        # shuffle would serialize on it at every parallelism level — a real
+        # cluster shuffles through per-executor local NVMe
         .config("spark.local.dir",
                 os.environ.get("SPARK_GRAFT_LOCAL_DIR",
                                "/dev/shm/spark_local"
                                if os.path.isdir("/dev/shm") else "/tmp"))
-        # shuffle/broadcast block codec, a WORKLOAD-SIZE knob (round 7):
-        # at 20M-turn exchange volume the single-socket memory bus is the
-        # bottleneck and DENSER compression wins — zstd cut the fan-out
-        # wave 23.2s -> 20.7s at local[32] (BENCH/e2e_decompose_r7_zstd.md)
-        # — so run_scaling pins zstd explicitly; at the 100k-turn headline
-        # scale the shuffles are tiny and zstd's CPU cost is pure overhead
-        # (+7% composite, A/B BENCH/bench_r7_clean_run*.log), so the
-        # default stays lz4. A cluster deployment sets this per job class.
-        .config("spark.io.compression.codec",
-                io_codec
-                or os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
+        .config("spark.io.compression.codec", IO_CODEC)
         .getOrCreate()
     )
 
@@ -84,7 +85,7 @@ def _loadavg() -> float:
         return -1.0
 
 
-def bench_queries(spark, sf_dir: str, rounds: int = 2
+def bench_queries(spark, sf_dir: str, rounds: int = ROUNDS
                   ) -> tuple[dict[str, float], list[dict], int]:
     from pyspark.sql import functions as F
 
@@ -196,10 +197,10 @@ def bench_queries(spark, sf_dir: str, rounds: int = 2
     # the at-scale ingest shape: wire payloads pre-exist in storage (Kafka /
     # parquet), decode is scan -> decode -> consume. Staged once like the
     # transcripts table, replicated x10 so per-payload decode work dominates
-    # per-task fixed costs (raw sf0.1 is ~3k rows/task — pure scheduling;
-    # same sizing as --wiredecodeab). The JVM DynamicMessage path (zero
-    # Python workers, BENCH/jvm_wire_decode_r6.md) is the headline, the
-    # Arrow vector path rides as the per-round comparison twin.
+    # per-task fixed costs (raw sf0.1 is ~3k rows/task — pure scheduling).
+    # The JVM DynamicMessage path (zero Python workers,
+    # BENCH/jvm_wire_decode_r6.md) is the headline, the Arrow vector path
+    # rides as the per-round comparison twin.
     from logstash_codec_protobuf_spark.operators import pb_wire as _PW
     pay_path = tempfile.mkdtemp(prefix="bench_pay_")
     _good0, _ = split_dead_letter(parse_turns(tr, impl="native"))
@@ -254,10 +255,10 @@ def bench_queries(spark, sf_dir: str, rounds: int = 2
         times: dict[str, float] = {}
         load0 = _loadavg()
         for name, fn in cases.items():
-            cache.release_tracked()  # query boundary: drop the previous
-            t0 = time.time()         # case's persisted intermediates (same
-            fn()                     # lifecycle as the @query wrapper)
-            times[name] = round(time.time() - t0, 3)
+            # query boundary: drop the previous case's persisted
+            # intermediates (same lifecycle as the @query wrapper)
+            cache.release_tracked()
+            times[name] = round(_timed(fn), 3)
         runs.append({"times": times, "loadavg_start": load0})
     shutil.rmtree(tr_path, ignore_errors=True)
     shutil.rmtree(pay_path, ignore_errors=True)
@@ -268,1234 +269,28 @@ def bench_queries(spark, sf_dir: str, rounds: int = 2
     return best, runs, n_turns
 
 
-CAL_REF_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH",
-    "calibration_ref.json")
-
-
-def _calibration_kernel(spark) -> float:
-    """The pure-ALU embarrassingly-parallel kernel from run_scaling: zero
-    IO, zero shuffle, zero Python — its wall time moves ONLY with host
-    health, making it the degraded-window detector loadavg is not (the
-    r5/r6 anomaly inflated every case 30-50% at loadavg < 2)."""
-    def k():
-        spark.range(0, 6_000_000_000, 1, 256).selectExpr(
-            "sum(id % 7 + id % 13)").collect()
-
-    k()  # warm codegen once
-    return min(_timed(k) for _ in range(2))
-
-
-def calibration_gate(spark, cpus: int) -> dict:
-    """Pre-flight gate for the OFFICIAL bench run (round-6 verdict item 4:
-    two consecutive driver artifacts landed in degraded host windows that
-    loadavg missed). Runs the calibration kernel and compares against the
-    stored idle-host reference (BENCH/calibration_ref.json, written by
-    ``--calref`` on a known-clean host); while the kernel runs slow, waits
-    and retries (bounded) so the expensive bench only starts on a healthy
-    host. Never aborts — a wedged driver round is worse than an annotated
-    noisy one — but the returned flags make the window visible."""
-    ref = None
+def run_once(sf_dir: str) -> dict:
+    spark = make_spark()
     try:
-        with open(CAL_REF_PATH) as f:
-            ref = json.load(f).get(f"local{cpus}")
-    except Exception:
-        pass
-    tol = float(os.environ.get("SPARK_GRAFT_CAL_TOL", "0.15"))
-    retries = int(os.environ.get("SPARK_GRAFT_CAL_RETRIES", "5"))
-    wait = float(os.environ.get("SPARK_GRAFT_CAL_WAIT", "60"))
-    cal = _calibration_kernel(spark)
-    attempts = [round(cal, 3)]
-    while ref is not None and cal > ref * (1 + tol) and len(attempts) <= retries:
-        time.sleep(wait)
-        cal = _calibration_kernel(spark)
-        attempts.append(round(cal, 3))
-    return {
-        "calibration_sec": round(cal, 3),
-        "calibration_ref_sec": ref,
-        "calibration_attempts": attempts,
-        "calibration_ok": bool(ref is None or cal <= ref * (1 + tol)),
-    }
-
-
-def run_calref(cpus: int) -> dict:
-    """Measure and store the idle-host calibration reference
-    (``--calref``). Run this ONLY on a verified-quiet host — it anchors
-    every future gate decision."""
-    spark = make_spark(cpus)
-    try:
-        cal = min(_calibration_kernel(spark) for _ in range(2))
-    finally:
-        spark.stop()
-    ref: dict = {}
-    try:
-        with open(CAL_REF_PATH) as f:
-            ref = json.load(f)
-    except Exception:
-        pass
-    ref[f"local{cpus}"] = round(cal, 3)
-    os.makedirs(os.path.dirname(CAL_REF_PATH), exist_ok=True)
-    with open(CAL_REF_PATH, "w") as f:
-        json.dump(ref, f, indent=1)
-    return {"written": CAL_REF_PATH, **ref}
-
-
-def run_once(cpus: int, sf_dir: str, rounds: int = 2) -> dict:
-    spark = make_spark(cpus)
-    try:
-        cal = calibration_gate(spark, cpus)
-        times, runs, n_turns = bench_queries(spark, sf_dir, rounds=rounds)
-        return {"times": times, "runs": runs, "n_turns": n_turns, **cal}
+        times, runs, n_turns = bench_queries(spark, sf_dir)
+        return {"times": times, "runs": runs, "n_turns": n_turns}
     finally:
         spark.stop()
 
 
 def _timed(fn) -> float:
-    import time
-
     t0 = time.time()
     fn()
     return time.time() - t0
 
 
-def run_scaling(sf_dir: str, sf: str) -> dict:
-    """North_rule scaling evidence: the IDENTICAL job + input at local[8] and
-    local[32] (the sandbox stand-in for N vs 4N executors).
-
-    The input is the sf transcripts table deterministically replicated
-    $SPARK_GRAFT_SCALE_REPL times (default 200 -> 20M turns at sf0.1) so the
-    measurement is compute-bound, not session-overhead-bound — the same reason
-    a real 4N-executor test uses a dataset 4N executors can't idle through.
-    Writes BENCH/BASELINE.md and returns the JSON report.
-    """
-    import time
-
-    from pyspark.sql import functions as F
-
-    repl = int(os.environ.get("SPARK_GRAFT_SCALE_REPL", "200"))
-    stage_dir = tempfile.mkdtemp(prefix="bench_scaling_tr_")
-    spark = make_spark(32)
-    try:
-        from logstash_codec_protobuf_spark.sources.transcripts import (
-            replicated_transcripts,
-        )
-
-        replicated_transcripts(spark, sf_dir, repl).repartition(256).write.mode(
-            "overwrite"
-        ).parquet(stage_dir)
-    finally:
-        spark.stop()
-
-    results = {}
-    lo, hi = sorted(int(x) for x in os.environ.get(
-        "SPARK_GRAFT_SCALE_LEVELS", "8,32").split(","))
-    cycles = int(os.environ.get("SPARK_GRAFT_SCALE_CYCLES", "2"))
-    # local[32] runs FIRST: the staged parquet then sits in the OS page cache
-    # for the local[8] run, so any cache bias HELPS the small config — the
-    # reported efficiency is a conservative lower bound. Levels are also
-    # INTERLEAVED across cycles and the per-level minimum kept, so transient
-    # host load (this sandbox is shared) can't systematically punish one level.
-    for n in [lvl for _ in range(cycles) for lvl in (hi, lo)]:
-        # zstd pinned: the 20M-turn exchange is memory-bus-bound and denser
-        # compression is a measured win there (see make_spark codec note)
-        spark = make_spark(n, io_codec=os.environ.get(
-            "SPARK_GRAFT_IO_CODEC", "zstd"))
-        try:
-            from logstash_codec_protobuf_spark.operators.enrich import enrich
-            from logstash_codec_protobuf_spark.operators.parse import parse_turns
-            from logstash_codec_protobuf_spark.operators.route import route_all
-            from logstash_codec_protobuf_spark.plans.pipeline import run_pipeline
-
-            tr = spark.read.parquet(stage_dir)
-            # full-column scan warms the OS page cache + codegen before timing
-            # (a bare count() reads only parquet footers)
-            n_turns = tr.count()
-            tr.selectExpr("sum(length(text))", "sum(turn_idx)").collect()
-
-            # hardware-ceiling calibration: a PERFECT embarrassingly-parallel
-            # pure-ALU kernel (no memory streaming, no shuffle, no IO). On a
-            # single socket, all-core turbo droop + shared memory bus cap ANY
-            # job's 8->32-thread speedup well below 4x; normalizing against
-            # this ceiling separates engine design from host physics.
-            def _cal():
-                spark.range(0, 6_000_000_000, 1, 256).selectExpr(
-                    "sum(id % 7 + id % 13)").collect()
-
-            _cal()
-            t_cal = min(_timed(_cal) for _ in range(3))
-
-            # SHUFFLE ceiling: the minimal-logic exchange at the SAME row
-            # count and ~payload width as the routed write — range ->
-            # repartition -> consume, zero parse, zero files, zero Python.
-            # The e2e composite is exchange-dominated, and ser/deser+codec
-            # through one socket's memory bus has a LOWER 8->32 ceiling
-            # than the pure-ALU kernel; measuring it turns "the residual
-            # e2e gap is host bus saturation" into a number instead of an
-            # assertion (round-6 verdict item 1).
-            def _shuf():
-                (spark.range(0, n_turns, 1, 256)
-                 .selectExpr("id", "repeat('x', 150) AS pad")
-                 .repartition(int(spark.conf.get(
-                     "spark.sql.shuffle.partitions")), "id")
-                 .selectExpr("sum(id)", "sum(length(pad))", "count(1)")
-                 .collect())
-
-            _shuf()
-            t_shuf = min(_timed(_shuf) for _ in range(2))
-
-            def _pr():
-                # consume EVERY routed column: Catalyst would otherwise prune
-                # the parse down to the 2 fields a bare sink-count needs,
-                # and the kernel would no longer measure the decode stage
-                routed = route_all(enrich(parse_turns(tr, impl="native"),
-                                          spark, tag_unknown=False))
-                routed.selectExpr(
-                    "sum(hash(conv_id, turn_idx, ts, text, tool, cents,"
-                    " decoder_exception, sink))", "count(1)").collect()
-
-            _pr()  # warm
-            t_pr = min(_timed(_pr) for _ in range(2))  # min damps host noise
-
-            # sink writes land on tmpfs: local mode shares ONE disk, and a
-            # disk-bound write can't evidence executor scaling (a real
-            # cluster writes through N distinct disks/object-store lanes)
-            e2e_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-
-            def _e2e():
-                out = tempfile.mkdtemp(prefix=f"bench_e2e_{n}_", dir=e2e_base)
-                try:
-                    run_pipeline(spark, sf_dir, out, n_buckets=8, wave_size=8,
-                                 transcripts_path=stage_dir)
-                finally:
-                    shutil.rmtree(out, ignore_errors=True)
-
-            # min-of-2 like the other kernels: a single-shot e2e gave the
-            # composite asymmetric noise exposure (cal takes min-of-6,
-            # parse_route min-of-4 across cycles) and one transient spike
-            # stuck in the official ratio
-            t_e2e = min(_timed(_e2e) for _ in range(2))
-            prev = results.get(n)
-            if prev is not None:
-                t_pr = min(t_pr, prev["parse_route_sec"])
-                t_e2e = min(t_e2e, prev["e2e_sec"])
-                t_cal = min(t_cal, prev["calibration_sec"])
-                t_shuf = min(t_shuf, prev["shuffle_kernel_sec"])
-            results[n] = {
-                "parse_route_sec": round(t_pr, 3),
-                "e2e_sec": round(t_e2e, 3),
-                "calibration_sec": round(t_cal, 3),
-                "shuffle_kernel_sec": round(t_shuf, 3),
-                "parse_route_tps": round(n_turns / t_pr),
-                "e2e_tps": round(n_turns / t_e2e),
-            }
-        finally:
-            spark.stop()
-    shutil.rmtree(stage_dir, ignore_errors=True)
-
-    ratio = hi / lo
-    eff_pr = (results[hi]["parse_route_tps"] / results[lo]["parse_route_tps"]) / ratio
-    eff_e2e = (results[hi]["e2e_tps"] / results[lo]["e2e_tps"]) / ratio
-    eff_cal = (results[lo]["calibration_sec"] / results[hi]["calibration_sec"]) / ratio
-    eff_shuf = (results[lo]["shuffle_kernel_sec"]
-                / results[hi]["shuffle_kernel_sec"]) / ratio
-    report = {
-        "sf": sf,
-        "replication": repl,
-        "n_turns": n_turns,
-        "levels": [lo, hi],
-        f"local{lo}": results[lo],
-        f"local{hi}": results[hi],
-        "scaling_efficiency_parse_route": round(eff_pr, 3),
-        "scaling_efficiency_e2e": round(eff_e2e, 3),
-        "scaling_efficiency_hardware_ceiling": round(eff_cal, 3),
-        "scaling_efficiency_shuffle_ceiling": round(eff_shuf, 3),
-        "normalized_efficiency_parse_route": round(min(1.0, eff_pr / eff_cal), 3),
-        "normalized_efficiency_e2e": round(min(1.0, eff_e2e / eff_cal), 3),
-        # the e2e composite is exchange-dominated: its host ceiling is the
-        # minimal-logic shuffle kernel, not the pure-ALU kernel
-        "normalized_efficiency_e2e_vs_shuffle": round(
-            min(1.0, eff_e2e / eff_shuf), 3),
-    }
-    md = f"""# BENCH baseline — scaling evidence
-
-North_rule criterion: throughput scaling efficiency >= 0.8 between N and 4N
-executors. Sandbox evidence: the identical parse->enrich->route job on the
-identical input ({n_turns:,} turns = sf{sf} transcripts x{repl} deterministic
-replication) at local[{lo}] vs local[{hi}] (one JVM, N vs 4N executor threads).
-
-| config | parse->route tps | e2e fan-out tps | calibration sec | shuffle kernel sec | parse->route sec | e2e sec |
-| --- | --- | --- | --- | --- | --- | --- |
-| local[{lo}]  | {results[lo]['parse_route_tps']:,} | {results[lo]['e2e_tps']:,} | {results[lo]['calibration_sec']} | {results[lo]['shuffle_kernel_sec']} | {results[lo]['parse_route_sec']} | {results[lo]['e2e_sec']} |
-| local[{hi}] | {results[hi]['parse_route_tps']:,} | {results[hi]['e2e_tps']:,} | {results[hi]['calibration_sec']} | {results[hi]['shuffle_kernel_sec']} | {results[hi]['parse_route_sec']} | {results[hi]['e2e_sec']} |
-
-Raw scaling efficiency (tps_32 / tps_8) / 4:
-- parse->route: **{eff_pr:.3f}**
-- end-to-end (checkpointed fan-out write): **{eff_e2e:.3f}**
-- hardware ceiling (pure-ALU calibration kernel, zero IO/shuffle/memory
-  streaming — the BEST any job can do on this box): **{eff_cal:.3f}**
-- SHUFFLE ceiling (minimal-logic exchange at the same row count and
-  payload width: range -> repartition -> consume, zero parse, zero files,
-  zero Python — the best ANY exchange of this volume can do on this box):
-  **{eff_shuf:.3f}**
-
-Efficiency normalized to the measured ceilings:
-- parse->route vs ALU ceiling: **{min(1.0, eff_pr / eff_cal):.3f}**
-- end-to-end vs ALU ceiling: **{min(1.0, eff_e2e / eff_cal):.3f}**
-- end-to-end vs SHUFFLE ceiling (the composite is exchange-dominated, so
-  this is the ceiling that matches its phase mix): **{min(1.0, eff_e2e / eff_shuf):.3f}**
-
-Why the ceiling exists — and why it does not exist on a real cluster: a
-local[N] "cluster" multiplies threads on ONE socket. Going 8 -> 32 active
-cores drops all-core turbo frequency and saturates the one shared memory bus,
-so even a perfect embarrassingly-parallel kernel measures far below 4x here.
-Scaling N -> 4N *executors* multiplies sockets, memory buses, and disks
-together — the resources that cap this measurement scale WITH the cluster.
-The engine-side requirements for >= 0.8 at the cluster level are structural
-and hold by construction: the parse->enrich stage is a narrow 1:1 pipeline
-(zero shuffle, zero coordination), routing uses one explicit bounded shuffle
-keyed on (bucket, sink, salt) so no hot sink serializes a task, aggregates
-are salted two-phase, and the dimension joins are broadcast. Nothing in the
-plan grows with executor count except parallelism.
-"""
-    os.makedirs("BENCH", exist_ok=True)
-    # tiny-input smoke runs must not clobber the judge-relevant sf0.1 doc
-    # (an sf0.001 CLI check once overwrote the 20M-turn measurement)
-    suffix = "latest" if sf == "0.1" else f"sf{sf}_smoke"
-    with open(f"BENCH/scaling_{lo}v{hi}_{suffix}.md", "w") as f:
-        f.write(md)
-    return report
-
-
-def run_wiredecode_ab(sf_dir: str, sf: str) -> dict:
-    """Wire-decode implementation A/B over a persisted payload frame,
-    interleaved N times warm: the Arrow decode (numpy record-transposed
-    walker) and, when the shaded protobuf runtime is on the classpath, the
-    vendored JVM DynamicMessage decode (zero Python workers), each alone
-    and as the full encode+decode roundtrip.
-
-    Also times a PASS-THROUGH pandas UDF over the same payload frame: the
-    fixed Arrow serialize->python->deserialize floor any Python-side decode
-    pays (``arrow_floor_*``); only a JVM path removes it."""
-    from pyspark.sql import functions as F
-
-    from logstash_codec_protobuf_spark.operators import pb_wire as PW
-    from logstash_codec_protobuf_spark.operators.parse import (
-        parse_turns, split_dead_letter,
-    )
-    from logstash_codec_protobuf_spark.sources.transcripts import transcripts_df
-
-    n_ab = int(os.environ.get("SPARK_GRAFT_AB_N", "5"))
-    spark = make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    report: dict = {"sf": sf, "n_ab": n_ab, "loadavg_start": _loadavg()}
-    try:
-        tr = transcripts_df(spark, sf_dir)
-        good, _ = split_dead_letter(parse_turns(tr, impl="native"))
-        p = F.col("parsed")
-        # replicate so per-payload UDF work dominates fixed per-task costs
-        # (at sf0.1 raw, 97k rows over 32 cores is ~3k rows/task — mostly
-        # scheduling + Arrow framing, not decode)
-        repl = int(os.environ.get("SPARK_GRAFT_AB_REPL", "10"))
-        flat = good.select(
-            *[p[c].alias(c) for c in ("conv_id", "turn_idx", "role", "tool",
-                                      "colour", "cents", "body_type", "horn",
-                                      "wings", "msg")],
-            F.explode(F.sequence(F.lit(1), F.lit(repl))).alias("_rep"),
-        ).drop("_rep").persist()
-        payloads = PW.encode_turn_wire(flat).select("payload") \
-            .repartition(128).persist()
-        n = payloads.count()
-        report["n_payloads"] = n
-        report["repl"] = repl
-
-        def decode_run(impl):
-            df = PW.decode_turn_wire(payloads, impl=impl)
-            return _consume(df.filter(F.col("decoded")["error"].isNull()))
-
-        @F.pandas_udf("int")
-        def _passthru(s: pd.Series) -> pd.Series:
-            return s.str.len().astype("int32")
-
-        def floor_run():
-            return _consume(payloads.select(_passthru("payload").alias("x"))
-                            .filter(F.col("x") >= 0))
-
-        def roundtrip_run(impl):
-            # flat is persisted above: without the barrier, projection
-            # collapse re-runs the regexp parse once per encode reference
-            dec = PW.decode_turn_wire(PW.encode_turn_wire(flat), impl=impl)
-            return _consume(dec.filter(F.col("decoded")["error"].isNull()))
-
-        # second arm: the vendored JVM DynamicMessage harness (zero Python
-        # workers, no Arrow floor at all) — present when the shaded protobuf
-        # runtime is on the classpath (it ships with the Spark distro)
-        jvm_ok = PW.jvm_dynamic_available(spark)
-
-        # warm both paths (python worker pool + codegen)
-        decode_run("arrow"); floor_run()
-        if jvm_ok:
-            decode_run("jvm_dynamic")
-        vec, vec_rt, floor = [], [], []
-        jvm, jvm_rt = [], []
-        for _ in range(n_ab):
-            floor.append(_timed(floor_run))
-            vec.append(_timed(lambda: decode_run("arrow")))
-            if jvm_ok:
-                jvm.append(_timed(lambda: decode_run("jvm_dynamic")))
-                jvm_rt.append(_timed(lambda: roundtrip_run("jvm_dynamic")))
-            vec_rt.append(_timed(lambda: roundtrip_run("arrow")))
-        payloads.unpersist()
-        flat.unpersist()
-        med = lambda xs: sorted(xs)[len(xs) // 2]
-        if jvm_ok:
-            report.update({
-                "decode_jvm_dynamic_sec": [round(x, 3) for x in jvm],
-                "decode_jvm_dynamic_median": round(med(jvm), 3),
-                "roundtrip_jvm_dynamic_sec": [round(x, 3) for x in jvm_rt],
-                "roundtrip_jvm_dynamic_median": round(med(jvm_rt), 3),
-                "decode_payloads_per_sec_jvm_dynamic": round(
-                    n / max(med(jvm), 1e-9)),
-            })
-        report.update({
-            "decode_vector_sec": [round(x, 3) for x in vec],
-            "roundtrip_vector_sec": [round(x, 3) for x in vec_rt],
-            "decode_vector_median": round(med(vec), 3),
-            "decode_payloads_per_sec_vector": round(n / max(med(vec), 1e-9)),
-            "arrow_floor_sec": [round(x, 3) for x in floor],
-            "arrow_floor_median": round(med(floor), 3),
-        })
-    finally:
-        spark.stop()
-    report["loadavg_end"] = _loadavg()
-    return report
-
-
-def run_guard_ab(sf_dir: str, sf: str) -> dict:
-    """Bucket-guard cost A/B (round-5 verdict item 2): dedup_jaccard_lsh and
-    simhash_neardup drifted +14-17 pct across clean r4->r5 runs, both
-    downstream of _guard_oversize_buckets' accounting. Three interleaved
-    warm arms per consumer: 'lazy' (the new default — guard structure, no
-    construction-time action), 'eager' (r5 behavior: construction-time
-    probe + warning log), 'uncapped' (max_bucket=10^9 — guard structure
-    with an empty exclusion set; the no-guard foil). eager/lazy - 1 prices
-    the probe the verdict flagged; lazy/uncapped - 1 prices the guard's
-    sizes-agg + anti-join themselves."""
-    from logstash_codec_protobuf_spark import cache
-    from logstash_codec_protobuf_spark.operators import dedup as DD
-
-    n_ab = int(os.environ.get("SPARK_GRAFT_AB_N", "5"))
-    spark = make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    report: dict = {"sf": sf, "n_ab": n_ab, "loadavg_start": _loadavg()}
-    try:
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-        def jaccard(cap, accounting="lazy"):
-            n = _consume(DD.ngram_jaccard_pairs(
-                docs, threshold=0.5, max_bucket=cap, accounting=accounting))
-            cache.release_tracked()
-            return n
-
-        def simhash(cap, accounting="lazy"):
-            n = _consume(DD.simhash_neardup_pairs(
-                docs, max_bucket=cap, accounting=accounting))
-            cache.release_tracked()
-            return n
-
-        jaccard(DD.LSH_MAX_BUCKET); simhash(DD.LSH_MAX_BUCKET)  # warm
-        arms = {"lazy": (DD.LSH_MAX_BUCKET, "lazy"),
-                "eager": (DD.LSH_MAX_BUCKET, "eager"),
-                "uncapped": (10**9, "lazy")}
-        res = {f"{c}_{a}": [] for c in ("jaccard", "simhash") for a in arms}
-        for _ in range(n_ab):
-            for arm, (cap, acc) in arms.items():
-                res[f"jaccard_{arm}"].append(
-                    _timed(lambda: jaccard(cap, acc)))
-                res[f"simhash_{arm}"].append(
-                    _timed(lambda: simhash(cap, acc)))
-        med = lambda xs: sorted(xs)[len(xs) // 2]
-        report.update({k: [round(x, 3) for x in v] for k, v in res.items()})
-        for c in ("jaccard", "simhash"):
-            report[f"{c}_eager_probe_overhead"] = round(
-                med(res[f"{c}_eager"]) / max(med(res[f"{c}_lazy"]), 1e-9)
-                - 1, 3)
-            report[f"{c}_guard_overhead"] = round(
-                med(res[f"{c}_lazy"]) / max(med(res[f"{c}_uncapped"]), 1e-9)
-                - 1, 3)
-    finally:
-        spark.stop()
-    report["loadavg_end"] = _loadavg()
-    return report
-
-
-def run_ivfseed(sf_dir: str, sf: str) -> dict:
-    """IVF seeding scale comparison (round-5 verdict item 4): farthest-point
-    runs K-1 sequential driver rounds — fine at K=8, structurally wrong at
-    large K — while kmeans|| runs O(rounds) passes independent of K. Times
-    both at K=8 and kmeans|| at K=64 on the sf embeddings (optionally
-    farthest at K=64 too, SPARK_GRAFT_IVFSEED_FARTHEST64=1, to price the
-    63-round foil)."""
-    from logstash_codec_protobuf_spark import cache
-    from logstash_codec_protobuf_spark.operators import ivf as IVF
-
-    spark = make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    report: dict = {"sf": sf, "loadavg_start": _loadavg()}
-    try:
-        emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        report["n_vectors"] = emb.count()
-
-        def far(k):
-            n = IVF.ivf_seed_farthest(emb, k=k).count()
-            cache.release_tracked()
-            return n
-
-        def par(k):
-            n = IVF.ivf_seed_scalable(emb, k=k).count()
-            cache.release_tracked()
-            return n
-
-        par(8)  # warm
-        report["farthest_k8_sec"] = round(_timed(lambda: far(8)), 2)
-        report["kmeanspar_k8_sec"] = round(_timed(lambda: par(8)), 2)
-        report["kmeanspar_k64_sec"] = round(_timed(lambda: par(64)), 2)
-        if os.environ.get("SPARK_GRAFT_IVFSEED_FARTHEST64"):
-            report["farthest_k64_sec"] = round(_timed(lambda: far(64)), 2)
-
-        if os.environ.get("SPARK_GRAFT_IVFSEED_K1024"):
-            # round-6 verdict item 7: the flat-in-K claim was measured only
-            # to K=64; pin the extrapolation at K=1024 on a replicated
-            # corpus (each replica jitters dim 0 deterministically so
-            # vectors stay distinct; oversample l=2k keeps the candidate
-            # pool ~1 + rounds*2k — the driver-side greedy is
-            # O(candidates*K), the corpus passes stay O(rounds))
-            from pyspark.sql import functions as F
-
-            repl = int(os.environ.get("SPARK_GRAFT_IVFSEED_REPL", "64"))
-            n0 = report["n_vectors"]
-            reps = F.explode(
-                F.sequence(F.lit(0), F.lit(repl - 1))).alias("_rep")
-            big_dir = tempfile.mkdtemp(prefix="bench_ivfseed_big_")
-            (
-                emb.select("*", reps)
-                .withColumn("vec_id",
-                            F.col("vec_id") + F.col("_rep") * F.lit(n0))
-                .withColumn(
-                    "embedding",
-                    F.transform(
-                        "embedding",
-                        lambda x, i: x + F.when(
-                            i == 0,
-                            (F.col("_rep") % 97).cast("double") * 1e-3
-                        ).otherwise(F.lit(0.0)),
-                    ).cast("array<float>"))
-                .drop("_rep")
-                .repartition(64)
-                .write.mode("overwrite").parquet(big_dir)
-            )
-            try:
-                bigemb = spark.read.parquet(big_dir)
-                report["n_vectors_big"] = bigemb.count()
-
-                def parbig(k):
-                    out = IVF.ivf_seed_scalable(bigemb, k=k)
-                    n = out.count()
-                    cache.release_tracked()
-                    assert n == k, (n, k)
-                    return n
-
-                parbig(8)  # warm the big-corpus scan
-                report["kmeanspar_big_k64_sec"] = round(
-                    _timed(lambda: parbig(64)), 2)
-                report["kmeanspar_big_k1024_sec"] = round(
-                    _timed(lambda: parbig(1024)), 2)
-            finally:
-                shutil.rmtree(big_dir, ignore_errors=True)
-    finally:
-        spark.stop()
-    report["loadavg_end"] = _loadavg()
-    return report
-
-
-def run_skew(sf_dir: str, sf: str) -> dict:
-    """Hot-conversation window stress: naive vs segmented sessionization on a
-    replicated table where conv-hot stays ONE key (~30% of all rows in a
-    single Window partition). The scaling replicator suffixes replica ids —
-    correct for throughput runs, but it splits the hot key; this mode
-    preserves conv-hot's identity and offsets turn_idx per replica, so the
-    naive plan pays a single-task sort over the whole hot conversation while
-    the segmented plan's sorts stay bounded at seg_size."""
-    from pyspark.sql import functions as F
-
-    from logstash_codec_protobuf_spark.operators import aggregate as agg
-    from logstash_codec_protobuf_spark.sources.transcripts import transcripts_df
-
-    repl = int(os.environ.get("SPARK_GRAFT_SKEW_REPL", "50"))
-    stage = tempfile.mkdtemp(prefix="bench_skew_")
-    spark = make_spark(32)
-    try:
-        tr = transcripts_df(spark, sf_dir)
-        max_turn = tr.agg(F.max("turn_idx")).first()[0]
-        reps = F.explode(F.sequence(F.lit(0), F.lit(repl - 1))).alias("_rep")
-        big = (
-            tr.select("*", reps)
-            .withColumn("turn_idx",
-                        F.col("turn_idx") + F.col("_rep") * (max_turn + 1))
-            .withColumn(
-                "conv_id",
-                F.when(F.col("conv_id") == "conv-hot", F.lit("conv-hot"))
-                .otherwise(F.concat_ws("-r", F.col("conv_id"),
-                                       F.col("_rep").cast("string"))),
-            )
-            .drop("_rep")
-        )
-        big.repartition(256).write.mode("overwrite").parquet(stage)
-        t = spark.read.parquet(stage)
-        n = t.count()
-        hot = t.filter(F.col("conv_id") == "conv-hot").count()
-
-        def run(segmented):
-            return _timed(lambda: agg.session_stats(
-                t, segmented=segmented).count())
-
-        def rank_run(segmented):
-            # consume the rank column (sum) so Catalyst can't prune the window
-            if segmented:
-                r = agg.turn_order_segmented(t)
-            else:
-                r = agg.turn_order_check(t)
-            return _timed(
-                lambda: r.selectExpr("sum(turn_rank)", "count(1)").collect()
-            )
-
-        run(True)  # warm
-        seg = min(run(True) for _ in range(2))
-        naive = min(run(False) for _ in range(2))
-        rank_seg = min(rank_run(True) for _ in range(2))
-        rank_naive = min(rank_run(False) for _ in range(2))
-        report = {
-            "sf": sf, "replication": repl, "n_turns": n,
-            "hot_conv_rows": hot, "hot_fraction": round(hot / n, 3),
-            "session_stats_naive_sec": round(naive, 2),
-            "session_stats_segmented_sec": round(seg, 2),
-            "speedup": round(naive / seg, 2),
-            "turn_rank_naive_sec": round(rank_naive, 2),
-            "turn_rank_segmented_sec": round(rank_seg, 2),
-            "rank_speedup": round(rank_naive / rank_seg, 2),
-        }
-        os.makedirs("BENCH", exist_ok=True)
-        with open("BENCH/skew_window_latest.md", "w") as f:
-            f.write(f"""# Hot-key window stress — naive vs segmented sessionization
-
-Input: sf{sf} transcripts x{repl} with conv-hot PRESERVED as one key
-({n:,} turns, hot conversation = {hot:,} rows = {hot / n:.0%} of the table).
-`Window.partitionBy(conv_id)` puts all of it through ONE task's sort; the
-segment-and-merge plan (seg_size=1024 windows + a 1/1024-size merge level)
-bounds every sort. Result-identical (tests/test_aggregate.py).
-
-| plan | sessionize wall sec | row_number wall sec |
-| --- | --- | --- |
-| naive single window | {naive:.2f} | {rank_naive:.2f} |
-| segment-and-merge   | {seg:.2f} | {rank_seg:.2f} |
-
-Speedup at this scale: sessionize **{naive / seg:.2f}x**, rank
-**{rank_naive / rank_seg:.2f}x** — and the gap is structural: the naive
-plan's wall clock is lower-bounded by one core sorting the hot
-conversation, so it grows linearly with the hot key while the segmented
-plan keeps scaling with the cluster. row_number is the same prefix-sum
-decomposition (within-segment rank + broadcast per-segment count offsets,
-aggregate.turn_order_segmented), so both operators ride the same fix.
-""")
-        return report
-    finally:
-        spark.stop()
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def run_sfscale(sf_dir: str, sf: str) -> dict:
-    """Order-of-magnitude data-scale slope for the headline parse->route
-    kernel: the same job at ~2M, ~20M, and ~200M turns (sf0.1 transcripts
-    deterministically replicated x20/x200/x2000 — the x2000 point is the
-    sf1-equivalent '1M-turn base replicated x200' of the round-3 verdict)
-    on the same local[32] session size. Evidence target: turns/sec holds
-    flat (wall time grows ~linearly with rows); a superlinear slope would
-    flag a hidden all-pairs/skew/spill stage before it ever reaches a
-    cluster. Writes BENCH/sf_scale_latest.md."""
-    from logstash_codec_protobuf_spark.operators.enrich import enrich
-    from logstash_codec_protobuf_spark.operators.parse import parse_turns
-    from logstash_codec_protobuf_spark.operators.route import route_all
-    from logstash_codec_protobuf_spark.sources.transcripts import (
-        replicated_transcripts,
-    )
-
-    repls = [int(x) for x in os.environ.get(
-        "SPARK_GRAFT_SFSCALE_REPLS", "20,200,2000").split(",")]
-    spark = make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    results: dict[int, dict] = {}
-    try:
-        for k in repls:
-            stage = tempfile.mkdtemp(prefix=f"bench_sfscale_{k}_")
-            # partition count scales with the data so each split stays
-            # ~page-cache friendly and 32 cores never starve; partitioning
-            # is set on the BASE before the explode (replicated_transcripts)
-            # so the heavy 1->k map stage itself runs wide — repartitioning
-            # AFTER the explode would both strand cores during the explode
-            # and shuffle the full k-times output
-            replicated_transcripts(
-                spark, sf_dir, k, parts=max(64, min(1024, k * 2))
-            ).write.mode("overwrite").parquet(stage)
-            # per-level split sizing: the global 16m cap packs a small
-            # level's files into a handful of scan splits (x20 staged ~24MB
-            # -> 2 splits -> 2 busy cores), which would bill core-starvation
-            # to the small level and fake a sublinear slope. Target ~128
-            # splits at every level so each point runs at full parallelism.
-            size = sum(
-                os.path.getsize(os.path.join(stage, f))
-                for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            split = max(1 << 20, min(16 << 20, size // 128))
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-            tr = spark.read.parquet(stage)
-            n = tr.count()
-            tr.selectExpr("sum(length(text))").collect()  # page-cache warm
-
-            def _pr():
-                routed = route_all(enrich(parse_turns(tr, impl="native"),
-                                          spark, tag_unknown=False))
-                routed.selectExpr(
-                    "sum(hash(conv_id, turn_idx, ts, text, tool, cents,"
-                    " decoder_exception, sink))", "count(1)").collect()
-
-            _pr()  # codegen/python-pool warm
-            passes = [round(_timed(_pr), 2) for _ in range(3)]
-            t = min(passes)  # min damps shared-host noise (documented 2-3x
-            # transient swings on this sandbox); every pass is logged
-            results[k] = {"n_turns": n, "parse_route_sec": t,
-                          "passes": passes, "tps": round(n / t),
-                          "loadavg": _loadavg()}
-            shutil.rmtree(stage, ignore_errors=True)
-    finally:
-        spark.stop()
-
-    # slope from the two LARGEST levels: the smallest point is dominated by
-    # fixed per-job overhead (~1 s) and would flatter the slope
-    mid, hi = results[repls[-2]], results[repls[-1]]
-    scale = hi["n_turns"] / mid["n_turns"]
-    slope = (hi["parse_route_sec"] / mid["parse_route_sec"]) / scale
-    report = {"sf": sf, "repls": repls,
-              **{f"x{k}": v for k, v in results.items()},
-              "wall_slope_vs_linear": round(slope, 3)}
-    os.makedirs("BENCH", exist_ok=True)
-    rows = "\n".join(
-        f"| x{k} | {r['n_turns']:,} | {r['parse_route_sec']} | "
-        f"{r['passes']} | {r['tps']:,} | {r['loadavg']} |"
-        for k, r in sorted(results.items())
-    )
-    with open("BENCH/sf_scale_latest.md", "w") as f:
-        f.write(f"""# Data-scale slope: parse->route kernel, sf{sf} replicated
-
-Same job, same local[32] session config, input replicated one and two
-orders of magnitude. A scale-correct kernel holds turns/sec ~flat; the
-normalized wall slope vs perfect linear between the two LARGEST levels is
-**{slope:.3f}** (1.0 = ideal, >1 = superlinear growth = hidden
-scale-killer; the smallest level is fixed-overhead-dominated and excluded
-from the slope). Per-level wall = min of 3 logged passes (shared host).
-
-| input | turns | parse_route wall sec (min) | passes | turns/sec | loadavg after case |
-| --- | --- | --- | --- | --- | --- |
-{rows}
-""")
-    return report
-
-
-def run_docscale(sf_dir: str, sf: str) -> dict:
-    """Dedup-tier scale stress: the documents table replicated 1x/10x/100x
-    with a per-replica character substitution (translate over rep-derived
-    vowel mappings) so replicas are DISTINCT documents — pair counts grow
-    ~linearly and the measurement isolates the engine's candidate-generation
-    cost from the quadratic output a truly duplicated corpus implies.
-
-    Evidence target: LSH candidate generation is O(n * bands) + output, the
-    fingerprint stages are O(n) — wall time must grow ~linearly with the
-    corpus, never quadratically (the all-pairs trap)."""
-    from pyspark.sql import functions as F
-
-    from logstash_codec_protobuf_spark.operators import dedup as DD
-
-    repls = [int(x) for x in os.environ.get(
-        "SPARK_GRAFT_DOCSCALE_REPLS", "1,10,100").split(",")]
-    spark = make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    results: dict[int, dict] = {}
-    try:
-        docs0 = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        n0 = docs0.count()
-        # untimed warm pass: JVM/codegen/Python-worker init must not be
-        # billed to the smallest corpus (it made 1x slower than 4x)
-        from logstash_codec_protobuf_spark import cache as _c
-        DD.minhash_pairs(docs0).count()
-        _c.release_tracked()
-        DD.dedup_clusters_star(docs0).count()
-        _c.release_tracked()
-        for k in repls:
-            stage = tempfile.mkdtemp(prefix=f"bench_docscale_{k}_")
-            reps = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("_rep")
-            # mapping must be injective over rep (rep%26 AND rep div 26 both
-            # feed it) — a colliding mapping makes identical replicas, whose
-            # LSH cliques add the quadratic output this mode must exclude
-            sub = ("concat(char(97 + _rep % 26), char(97 + (_rep*3+1) % 26),"
-                   " char(97 + (_rep*5+2) % 26), char(97 + (_rep*7+3) % 26),"
-                   " char(97 + (_rep*11+4) % 26),"
-                   " char(97 + (_rep div 26) % 26),"
-                   " char(97 + (_rep div 26 * 3 + 5) % 26))")
-            big = (
-                docs0.select("*", reps)
-                .withColumn("doc_id",
-                            F.col("doc_id") + F.col("_rep") * (n0 + 1))
-                .withColumn("text",
-                            F.expr(f"translate(text, 'aeioust', {sub})"))
-                .drop("_rep")
-            )
-            big.repartition(max(32, k)).write.mode("overwrite").parquet(stage)
-            docs = spark.read.parquet(stage)
-            n = docs.count()
-
-            t_bands = _timed(lambda: DD.minhash_bands(docs).count())
-            from logstash_codec_protobuf_spark import cache
-            cache.release_tracked()
-            n_pairs = [0]
-
-            def _pairs():
-                n_pairs[0] = DD.minhash_pairs(docs).count()
-
-            t_pairs = _timed(_pairs)
-            cache.release_tracked()
-            t_exact = _timed(
-                lambda: docs.groupBy(F.md5("text")).count().count())
-            t_clusters = _timed(
-                lambda: DD.dedup_clusters_star(docs).count())
-            cache.release_tracked()
-            results[k] = {
-                "n_docs": n, "minhash_bands_sec": round(t_bands, 2),
-                "lsh_pairs_sec": round(t_pairs, 2), "n_pairs": n_pairs[0],
-                "exact_dedup_sec": round(t_exact, 2),
-                "clusters_sec": round(t_clusters, 2),
-            }
-            shutil.rmtree(stage, ignore_errors=True)
-    finally:
-        spark.stop()
-
-    base = results[repls[0]]
-    report: dict = {"sf": sf, "repls": repls,
-                    **{f"x{k}": v for k, v in results.items()}}
-    rows = []
-    for k in repls:
-        r = results[k]
-        rows.append(
-            f"| {k}x | {r['n_docs']:,} | {r['minhash_bands_sec']} | "
-            f"{r['lsh_pairs_sec']} | {r['n_pairs']:,} | "
-            f"{r['exact_dedup_sec']} | {r['clusters_sec']} |"
-        )
-    hi = repls[-1]
-    growth = results[hi]["lsh_pairs_sec"] / max(base["lsh_pairs_sec"], 1e-9)
-    report["pairs_time_growth_at_max"] = round(growth, 2)
-    report["input_growth_at_max"] = hi / repls[0]
-    md = f"""# Dedup-tier scale stress — candidate generation vs corpus size
-
-Documents replicated with per-replica character substitution: replicas are
-distinct documents but stay near-dups of their base through the consonant
-skeleton, so the PAIR OUTPUT grows superlinearly (a worst case for the
-candidate join) while the input grows {hi}x. An all-pairs design would pay
-{hi * hi}x time on input alone; banded LSH must stay ~linear in input +
-output.
-
-| corpus | docs | minhash bands sec | LSH pairs sec | pairs found | exact dedup sec | clusters (star) sec |
-| --- | --- | --- | --- | --- | --- | --- |
-{chr(10).join(rows)}
-
-At {hi}x input, LSH candidate-pair time grew **{growth:.1f}x** (quadratic
-would be {hi * hi // repls[0]}x). Fingerprint stages are narrow 1:1 scans.
-Cluster resolution is star contraction (O(log n) shuffle waves): the
-replica-chained near-dup graph reaches diameter 16 at 50x, where min-label
-propagation measured 16 rounds / 211 s against contraction's 5 rounds /
-36 s on the same graph (one-off probe, this host) — the diameter cliff is
-why contraction is the measured path here and the default in
-dedup_survivors.
-"""
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/dedup_scale_latest.md", "w") as f:
-        f.write(md)
-    return report
-
-
-def run_ccrounds(sf_dir: str, sf: str) -> dict:
-    """Cluster-resolution round-count evidence: min-label propagation needs
-    `component diameter` rounds; large-star/small-star contraction needs
-    O(log n). At 10^12 docs a crawl-mirror chain can be arbitrarily deep, so
-    the round count — each round a full shuffle wave over the edge set — IS
-    the scale difference.
-
-    Levels: synthetic path graphs (worst-case diameter) at increasing n,
-    plus the real LSH pair graph of the documents corpus (shallow — shows
-    contraction costs nothing extra on the easy, common case)."""
-    from pyspark.sql import functions as F
-
-    from logstash_codec_protobuf_spark import cache
-    from logstash_codec_protobuf_spark.operators import dedup as DD
-
-    chain_ns = [int(x) for x in os.environ.get(
-        "SPARK_GRAFT_CC_NS", "256,1024,4096").split(",")]
-    prop_cap = int(os.environ.get("SPARK_GRAFT_CC_PROP_CAP", "24"))
-    spark = make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    report: dict = {"sf": sf, "chains": {}, "lsh_graph": {}}
-    try:
-        # warm pass so JVM/codegen init is not billed to the first level
-        w = spark.range(8).select(F.col("id").alias("doc_id"),
-                                  F.lit("x").alias("text"))
-        wp = w.select(F.col("doc_id").alias("a_id"),
-                      (F.col("doc_id") + 1).alias("b_id")).filter("b_id < 8")
-        DD.dedup_clusters_star(w, pairs=wp).count()
-
-        for n in chain_ns:
-            docs = spark.range(n).select(F.col("id").alias("doc_id"),
-                                         F.lit("x").alias("text"))
-            pairs = docs.select(
-                F.col("doc_id").alias("a_id"),
-                (F.col("doc_id") + 1).alias("b_id")
-            ).filter(F.col("b_id") < n)
-            r_star: list[int] = []
-            t_star = _timed(lambda: DD.dedup_clusters_star(
-                docs, pairs=pairs, rounds_out=r_star).count())
-            row = {"star_rounds": r_star[0], "star_sec": round(t_star, 2),
-                   "prop_rounds_needed": n - 1}
-            if n == chain_ns[0]:
-                # show, don't tell: propagation capped at prop_cap rounds
-                # cannot merge the chain — since the non-convergence guard
-                # it fails LOUDLY (ValueError) instead of returning partial
-                # labels; the probe records the refusal + wall cost
-                t0p = time.time()
-                try:
-                    DD.dedup_clusters(docs, pairs=pairs,
-                                      max_iter=prop_cap).count()
-                    row["prop_capped_outcome"] = "converged (unexpected)"
-                except ValueError:
-                    row["prop_capped_outcome"] = (
-                        f"raised non-convergence after {prop_cap} rounds")
-                row["prop_capped_sec"] = round(time.time() - t0p, 2)
-            report["chains"][n] = row
-
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        pairs = DD.minhash_pairs(docs)
-        r_star, r_prop = [], []
-        t_star = _timed(lambda: DD.dedup_clusters_star(
-            docs, pairs=pairs, rounds_out=r_star).count())
-        cache.release_tracked()
-        pairs = DD.minhash_pairs(docs)
-        t_prop = _timed(lambda: DD.dedup_clusters(
-            docs, pairs=pairs, rounds_out=r_prop).count())
-        cache.release_tracked()
-        report["lsh_graph"] = {
-            "n_docs": docs.count(),
-            "star_rounds": r_star[0], "star_sec": round(t_star, 2),
-            "prop_rounds": r_prop[0], "prop_sec": round(t_prop, 2),
-        }
-    finally:
-        spark.stop()
-
-    rows = []
-    for n, r in report["chains"].items():
-        capped = (f"{r['prop_capped_outcome']} / {r['prop_capped_sec']}s"
-                  if "prop_capped_outcome" in r else "—")
-        rows.append(f"| path {n:,} | {r['star_rounds']} | {r['star_sec']} | "
-                    f"{r['prop_rounds_needed']} | {capped} |")
-    g = report["lsh_graph"]
-    md = f"""# Cluster-resolution rounds — star contraction vs min-label propagation
-
-Connected components over the near-dup pair graph is the one iterative
-operator in the dedup tier; every round is a full shuffle wave over the edge
-set, so ROUND COUNT is the scale axis. Min-label propagation converges in
-`diameter` rounds; alternating large-star/small-star contraction (Kiveris et
-al., SoCC'14) in O(log n). Worst case input: a path graph (crawl mirrors
-chained by shared boilerplate).
-
-| graph | star rounds | star sec | propagation rounds needed | propagation capped at {prop_cap} |
-| --- | --- | --- | --- | --- |
-{chr(10).join(rows)}
-
-Real (shallow) LSH pair graph, documents sf{sf} ({g['n_docs']:,} docs):
-star {g['star_rounds']} rounds / {g['star_sec']}s vs propagation
-{g['prop_rounds']} rounds / {g['prop_sec']}s — contraction costs nothing
-extra on the common shallow case and removes the diameter cliff entirely;
-`dedup_clusters_star` is the drop-in for adversarial graphs (parity-tested:
-identical labeling, same oracle).
-"""
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/cc_star_latest.md", "w") as f:
-        f.write(md)
-    return report
-
-
-def run_boilerplate(sf_dir: str, sf: str) -> dict:
-    """The identical-boilerplate pathology (round-4 verdict item 2): a crawl
-    corpus with one page duplicated N times puts all N copies in the SAME 4
-    LSH band buckets — all-pairs emission is N(N-1)/2 rows (5*10^9 at
-    N=100k; a job-killer at web scale). Measures the two defenses on planted
-    buckets of growing N:
-
-    - star-edge candidate generation (exact-dedup pre-contraction): output
-      is N-1 edges, time must stay ~flat in N beyond the linear scan;
-    - guarded all-pairs (LSH_MAX_BUCKET): the oversize bucket is excluded
-      with logged accounting, so pair time must stay flat too;
-    - unguarded all-pairs is run ONLY at the smallest N as the foil (its
-      quadratic output makes larger N pointless to run).
-    """
-    from pyspark.sql import functions as F
-
-    from logstash_codec_protobuf_spark import cache
-    from logstash_codec_protobuf_spark.operators import dedup as DD
-
-    ns = [int(x) for x in os.environ.get(
-        "SPARK_GRAFT_BOILER_NS", "10000,100000").split(",")]
-    foil_n = int(os.environ.get("SPARK_GRAFT_BOILER_FOIL_N", "2000"))
-    spark = make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    boiler = ("Cookie consent: this site uses cookies to improve your "
-              "experience. Accept all cookies to continue browsing. " * 4)
-    results: dict[int, dict] = {}
-    report: dict = {"sf": sf, "planted_ns": ns, "foil_n": foil_n}
-    try:
-        docs0 = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        n0 = docs0.count()
-        # warm pass (JVM/codegen/Python-worker init)
-        DD.minhash_star_edges(docs0).count()
-        cache.release_tracked()
-
-        def planted(n: int):
-            # plain persist + explicit unpersist at iteration end instead of
-            # localCheckpoint: checkpoint RDD blocks are untracked by the
-            # cache registry and would accumulate across the N sweep within
-            # this one bench process (the same pinning issue the guard fix
-            # removed from dedup.py). Persisted OUTSIDE cache.track because
-            # the mid-iteration release_tracked() between the star and
-            # guarded timings must not evict the shared input.
-            extra = spark.range(n).select(
-                (F.col("id") + n0 + 1).alias("doc_id"),
-                F.lit(boiler).alias("text"))
-            df = docs0.select("doc_id", "text").union(extra) \
-                .repartition(32).persist()
-            df.count()  # materialize eagerly so timing excludes the plant
-            return df
-
-        # foil: unguarded all-pairs on the smallest planted bucket
-        foil = planted(foil_n)
-        n_foil_pairs = [0]
-        t_foil = _timed(lambda: n_foil_pairs.__setitem__(
-            0, DD.minhash_pairs(foil, max_bucket=10**9).count()))
-        cache.release_tracked()
-        foil.unpersist()
-        report["unguarded_foil"] = {
-            "planted": foil_n, "pairs": n_foil_pairs[0],
-            "sec": round(t_foil, 2)}
-
-        for n in ns:
-            docs = planted(n)
-            n_star, n_pairs = [0], [0]
-            t_star = _timed(lambda: n_star.__setitem__(
-                0, DD.minhash_star_edges(docs).count()))
-            cache.release_tracked()
-            t_guard = _timed(lambda: n_pairs.__setitem__(
-                0, DD.minhash_pairs(docs).count()))
-            cache.release_tracked()
-            docs.unpersist()
-            results[n] = {
-                "n_docs": n0 + n,
-                "star_edges": n_star[0], "star_sec": round(t_star, 2),
-                "guarded_pairs": n_pairs[0],
-                "guarded_sec": round(t_guard, 2),
-            }
-        report.update({f"planted_{n}": v for n, v in results.items()})
-    finally:
-        spark.stop()
-
-    lo, hi = ns[0], ns[-1]
-    star_growth = results[hi]["star_sec"] / max(results[lo]["star_sec"], 1e-9)
-    guard_growth = (results[hi]["guarded_sec"]
-                    / max(results[lo]["guarded_sec"], 1e-9))
-    report["star_time_growth"] = round(star_growth, 2)
-    report["guarded_time_growth"] = round(guard_growth, 2)
-    rows = [
-        f"| +{n:,} identical | {r['n_docs']:,} | {r['star_edges']:,} | "
-        f"{r['star_sec']} | {r['guarded_pairs']:,} | {r['guarded_sec']} |"
-        for n, r in results.items()
-    ]
-    f_ = report["unguarded_foil"]
-    md = f"""# Identical-boilerplate bucket stress — candidate generation stays linear
-
-One page duplicated N times lands every copy in the same 4 LSH band
-buckets. Unguarded all-pairs emission is N(N-1)/2 rows — the foil run below
-pays {f_['pairs']:,} pairs at a planted bucket of just {f_['planted']:,}
-({f_['sec']}s); at N=100,000 that design would emit ~5x10^9 pairs per band.
-
-| corpus | docs | star edges | star sec | guarded pairs | guarded sec |
-| --- | --- | --- | --- | --- | --- |
-{chr(10).join(rows)}
-
-From +{lo:,} to +{hi:,} planted copies ({hi // lo}x): star-edge candidate
-time grew {star_growth:.2f}x and guarded all-pairs time {guard_growth:.2f}x
-— both linear-or-flatter, while unguarded pair OUTPUT would have grown
-{(hi * hi) // (lo * lo)}x. The star path (exact-dedup pre-contraction +
-doc->bucket-min edges, dedup.py minhash_star_edges) is the default edge
-source for cluster resolution; the guarded path logs every excluded bucket
-(never a silent cap). Generated by `bench.py --boilerplate`.
-"""
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/dedup_boilerplate.md", "w") as f:
-        f.write(md)
-    return report
-
-
-def run_annrecall(sf_dir: str, sf: str) -> dict:
-    """Recall@k accounting for the approximate ANN tiers (round-4 verdict
-    item 5): every operator is hash-exact vs its OWN deterministic contract,
-    but 'approximate' only becomes a measured trade once recall against the
-    brute-force cosine ground truth is recorded. Sweeps LSH multiprobe
-    on/off, IVF n_probe 1/2/4 under first-K vs farthest-point seeds, on the
-    full embeddings corpus at this SF; writes BENCH/ann_recall.md."""
-    from logstash_codec_protobuf_spark.operators import ivf as IVF
-    from logstash_codec_protobuf_spark.operators import similarity as SIM
-
-    n_q = int(os.environ.get("SPARK_GRAFT_ANN_QUERIES", "64"))
-    k = int(os.environ.get("SPARK_GRAFT_ANN_K", "5"))
-    n_cent = 8
-    spark = make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    report: dict = {"sf": sf, "n_queries": n_q, "k": k, "configs": {}}
-    try:
-        emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        n_vec = emb.count()
-        report["n_vectors"] = n_vec
-        exact = {(r["query_id"], r["neighbor_id"])
-                 for r in SIM.cosine_topk(emb, n_queries=n_q, k=k).collect()}
-
-        def recall(df) -> float:
-            approx = {(r["query_id"], r["neighbor_id"])
-                      for r in df.collect()}
-            return round(len(exact & approx) / len(exact), 4)
-
-        far = [r["vec_id"]
-               for r in IVF.ivf_seed_farthest(emb, k=n_cent).collect()]
-        report["farthest_seeds"] = far
-        report["configs"]["lsh_multiprobe_off"] = recall(
-            SIM.lsh_topk(emb, n_queries=n_q, k=k, multiprobe=False))
-        report["configs"]["lsh_multiprobe_on"] = recall(
-            SIM.lsh_topk(emb, n_queries=n_q, k=k, multiprobe=True))
-        for planes in (3, 2):
-            report["configs"][f"lsh_planes{planes}_multiprobe"] = recall(
-                SIM.lsh_topk(emb, n_queries=n_q, k=k, n_planes=planes))
-        for seeds, tag in ((None, "firstk"), (far, "farthest")):
-            for np_ in (1, 2, 4, 6):
-                report["configs"][f"ivf_{tag}_probe{np_}"] = recall(
-                    IVF.ivf_topk(emb, n_queries=n_q, k=k,
-                                 n_centroids=n_cent, n_probe=np_,
-                                 seed_ids=seeds))
-    finally:
-        spark.stop()
-
-    c = report["configs"]
-    md = f"""# ANN recall@{k} vs brute-force cosine ground truth
-
-Corpus: `{sf_dir}/embeddings.parquet` ({report['n_vectors']} vectors, 64-dim),
-{n_q} queries, ground truth = `cosine_topk` (exact, every pair scored).
-Recall@{k} = |approx top-{k} ∩ exact top-{k}| / |exact top-{k}|, micro-averaged
-over queries. Every config below is ALSO hash-exact vs its own DuckDB oracle
-— this table measures the approximation quality those contracts deliberately
-trade for sublinear probe cost.
-
-| config | probe fraction of corpus | recall@{k} |
-|---|---|---|
-| hyperplane LSH 4 planes, single bucket | ~1/16 | {c['lsh_multiprobe_off']} |
-| hyperplane LSH 4 planes + 1-bit multiprobe | ~5/16 | {c['lsh_multiprobe_on']} |
-| hyperplane LSH 3 planes + multiprobe | ~4/8 | {c['lsh_planes3_multiprobe']} |
-| hyperplane LSH 2 planes + multiprobe | ~3/4 | {c['lsh_planes2_multiprobe']} |
-| IVF first-K seeds, n_probe=1 | ~1/8 | {c['ivf_firstk_probe1']} |
-| IVF first-K seeds, n_probe=2 | ~2/8 | {c['ivf_firstk_probe2']} |
-| IVF first-K seeds, n_probe=4 | ~4/8 | {c['ivf_firstk_probe4']} |
-| IVF first-K seeds, n_probe=6 | ~6/8 | {c['ivf_firstk_probe6']} |
-| IVF farthest-point seeds, n_probe=1 | ~1/8 | {c['ivf_farthest_probe1']} |
-| IVF farthest-point seeds, n_probe=2 | ~2/8 | {c['ivf_farthest_probe2']} |
-| IVF farthest-point seeds, n_probe=4 | ~4/8 | {c['ivf_farthest_probe4']} |
-| IVF farthest-point seeds, n_probe=6 | ~6/8 | {c['ivf_farthest_probe6']} |
-
-Reading, honestly: this synthetic corpus is near-UNIFORM in 64-dim space —
-the adversarial regime for any partition-based ANN, since true top-{k}
-neighbors are barely closer than the bulk and scatter across every
-partition. Multiprobe is the cheap LSH lever (hamming-1 buckets recover
-neighbors just across one hyperplane: +0.4 recall for 4x probes); IVF
-recall climbs near-linearly with probed fraction, exactly the
-no-cluster-structure signature; farthest-point seeding does NOT help here
-(nothing to straddle) — its value shows on clustered corpora, pinned
-separately by the planted-4-cluster pytest
-(test_farthest_point_seeding_beats_first_k_on_clustered_corpus). On a real
-embedding corpus (doc vectors cluster by topic) the curves shift left.
-The pytest floor
-(tests/test_dedup_similarity.py::test_ann_recall_floor_at_documented_settings)
-pins recall@{k} >= 0.8 at the settings that clear it even in this
-worst-case regime (IVF n_probe=6; LSH 2 planes + multiprobe) so a silent
-recall regression fails CI, not a training run.
-"""
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/ann_recall.md", "w") as f:
-        f.write(md)
-    return report
-
-
 def main() -> None:
+    argparse.ArgumentParser(description=__doc__).parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    if "--scaling" in sys.argv:
-        print(json.dumps(run_scaling(sf_dir, sf)))
-        return
-
-    if "--wiredecodeab" in sys.argv:
-        print(json.dumps(run_wiredecode_ab(sf_dir, sf)))
-        return
-
-    if "--ivfseed" in sys.argv:
-        print(json.dumps(run_ivfseed(sf_dir, sf)))
-        return
-
-    if "--guardab" in sys.argv:
-        print(json.dumps(run_guard_ab(sf_dir, sf)))
-        return
-
-    if "--skew" in sys.argv:
-        print(json.dumps(run_skew(sf_dir, sf)))
-        return
-
-    if "--docscale" in sys.argv:
-        print(json.dumps(run_docscale(sf_dir, sf)))
-        return
-
-    if "--sfscale" in sys.argv:
-        print(json.dumps(run_sfscale(sf_dir, sf)))
-        return
-
-    if "--ccrounds" in sys.argv:
-        print(json.dumps(run_ccrounds(sf_dir, sf)))
-        return
-
-    if "--annrecall" in sys.argv:
-        print(json.dumps(run_annrecall(sf_dir, sf)))
-        return
-
-    if "--boilerplate" in sys.argv:
-        print(json.dumps(run_boilerplate(sf_dir, sf)))
-        return
-
-    if "--calref" in sys.argv:
-        print(json.dumps(run_calref(cpus)))
-        return
-
     load_start = _loadavg()
-    load_max = float(os.environ.get("SPARK_GRAFT_LOAD_MAX", "4.0"))
-    r = run_once(cpus, sf_dir,
-                 rounds=int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "2")))
+    r = run_once(sf_dir)
     total = sum(r["times"].values())
     out = {
         "metric": "pipeline_wall_sec",
@@ -1504,17 +299,9 @@ def main() -> None:
         "queries": r["times"],
         "runs": r["runs"],
         "loadavg_start": load_start,
-        "calibration_sec": r.get("calibration_sec"),
-        "calibration_ref_sec": r.get("calibration_ref_sec"),
-        "calibration_attempts": r.get("calibration_attempts"),
-        # contention annotation, not an abort: a wedged driver round is worse
-        # than an annotated noisy one — the judge reads the flag + both runs.
-        # Since round 7 the pure-ALU calibration gate is the primary signal
-        # (the r5/r6 degraded windows inflated 30-50% at loadavg < 2); the
-        # gate waits+retries BEFORE the bench, so a true flag here means the
-        # host stayed degraded past the bounded retries.
-        "load_contended": bool(load_start > load_max
-                               or not r.get("calibration_ok", True)),
+        # contention annotation, not an abort: the record carries the flag
+        # and every round's per-case times
+        "load_contended": load_start > LOAD_MAX,
         "sf": sf,
         "n_turns": r["n_turns"],
         "turns_per_sec_e2e": round(r["n_turns"] / max(r["times"]["e2e_fanout_write"], 1e-9)),

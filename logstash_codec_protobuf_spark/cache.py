@@ -1,6 +1,6 @@
 """Persist lifecycle for the query registry.
 
-The driver (and bench.py) runs the whole ``queries()`` surface in ONE Spark
+The driver runs the whole ``queries()`` surface in ONE Spark
 session. Operators persist intermediates for good reasons — projection
 collapse would re-run an expensive expression tree once per downstream
 reference, and self-join operators would evaluate their fingerprint frame

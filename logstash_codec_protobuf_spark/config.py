@@ -49,9 +49,6 @@ class CodecConfig:
     # malformed-bytes WIRE_ERROR, so pipelines can route/alert on them —
     # never a silent truncation. Raise it to widen the decoded lineage.
     max_recursion_depth: int = 3
-    # explicit shuffle sizing for the routing fan-out (north_rule: explicit
-    # repartition before the routing shuffle; sized for the target SF)
-    route_partitions: int | None = None
     # salting for hot-conversation skew (north_rule). Round 7: the
     # PRE-WRITE repartitions no longer hash salted combos at all — that
     # was a murmur3 lottery that measured as the whole 8->32 e2e scaling
@@ -59,10 +56,6 @@ class CodecConfig:
     # deterministically via route.probe_repartition. These widths still
     # salt the AGGREGATION paths (conv_stats two-phase etc.).
     salt_buckets: int = 8
-    # legacy write-side salt floor (kept for the decomposition evidence
-    # script BENCH/e2e_decompose_r7.py; the write path now uses
-    # probe_repartition's combos_per_partition sizing instead)
-    write_salt_buckets: int = 4
     sinks: tuple[str, ...] = field(
         default=("sink_a", "sink_b", "sink_c", "sink_d", DEAD_LETTER_SINK)
     )

@@ -6,13 +6,13 @@ failures become substitute events tagged `_protobufdecodefailure`
 `tools.sink` dictionary column, with the dead-letter sink as one more route.
 
 Scale design (north_rule): the routed write is the job's one big shuffle, so it
-is made EXPLICIT — ``repartition(route_partitions, "sink", salt)`` right before
-the write. The salt spreads each sink's rows over many tasks (a sink is a
-low-cardinality hot key by construction; without the salt all of sink_b lands in
-one task at 100 TB). `partitionBy("sink")` on the writer then lays files out per
-sink directory. A single ``persist`` lets good/dead flows share the parse stage
-instead of re-reading the source per sink (single-pass multi-sink fan-out,
-SURVEY.md §4).
+is made EXPLICIT — ``probe_repartition`` of salted (sink, conversation) combos
+over ``spark.sql.shuffle.partitions`` tasks right before the write. The salt
+spreads each sink's rows over many tasks (a sink is a low-cardinality hot key
+by construction; without the salt all of sink_b lands in one task at 100 TB).
+`partitionBy("sink")` on the writer then lays files out per sink directory. A
+single ``persist`` lets good/dead flows share the parse stage instead of
+re-reading the source per sink (single-pass multi-sink fan-out, SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -138,25 +138,6 @@ def probe_repartition(df: DataFrame, n: int, group_idx,
     )
 
 
-def adaptive_salt_buckets(n_partitions: int, n_groups: int,
-                          floor: int) -> int:
-    """Salt width for a keyed pre-write repartition, scaled with target
-    parallelism (round-6 verdict item 1 — the 8->32 e2e gap).
-
-    Hash-partitioning k distinct (group, salt) combos into n tasks is
-    balls-in-bins: with the old fixed salt, 160 combos into 32 tasks put
-    ~2x the mean mass on the slowest task (measured: the fan-out wave ran
-    46.3s vs 22.6s with adequate salt at local[32] on 20M turns,
-    BENCH/e2e_decompose_r7.md) while 8 tasks saw only ~1.3x — an imbalance
-    that GROWS with parallelism and silently caps scaling. Sizing combos to
-    >= 16x the partition count keeps the expected max-bin mass within a few
-    percent of the mean at any executor count, while files per group
-    directory stay bounded at the salt width."""
-    import math
-
-    return max(floor, math.ceil(16 * n_partitions / max(n_groups, 1)))
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     """True when the Iceberg Spark runtime is on the JVM classpath (cluster
     deployments add ``org.apache.iceberg:iceberg-spark-runtime``)."""
@@ -190,9 +171,7 @@ def fan_out(
       ``base_path`` — identical layout and shuffle behavior.
     """
     cfg = cfg or CodecConfig()
-    n = int(cfg.route_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    ))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     sink_pos = F.array_position(
         F.array(*[F.lit(s) for s in cfg.sinks]), F.col("sink")) - F.lit(1)
     routed = probe_repartition(df, n, sink_pos, len(cfg.sinks))

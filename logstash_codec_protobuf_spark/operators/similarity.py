@@ -81,26 +81,36 @@ def _bucket_nrm_udf(n_planes: int):
     per row — measured as the dominant cost of every LSH consumer. The
     numpy twin folds in the identical index order against the identical
     double literals, so bucket ids and norms are bit-equal to the SQL
-    template (pinned by test_bucket_nrm_kernel_matches_sql_template)."""
+    template (pinned by test_bucket_nrm_kernel_matches_sql_template),
+    dirty components included: a NULL one makes the SQL fold NULL (bucket
+    0, NULL norm), a NaN one makes it NaN (every bit set, since NaN >= 0
+    is TRUE in Spark SQL and DuckDB; NaN norm). An Arrow UDF, because the
+    pandas boundary would turn a NaN norm into NULL."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     P = np.array(_hyperplanes(n_planes), dtype=np.float64)  # (p, dim)
 
-    @F.pandas_udf(T.StructType([
-        T.StructField("bucket", T.LongType()),
-        T.StructField("nrm", T.DoubleType()),
-    ]))
-    def kernel(emb: pd.Series) -> pd.DataFrame:
-        V = np.stack(emb.to_numpy()).astype(np.float64)
+    def kernel(emb):
+        V = np.stack(emb.to_numpy(zero_copy_only=False)).astype(np.float64)
+        null = (pc.is_null(emb.flatten()).to_numpy(zero_copy_only=False)
+                .reshape(V.shape).any(axis=1))
         bucket = np.zeros(len(V), dtype=np.int64)
         for p in range(P.shape[0]):
             acc = np.zeros(len(V), dtype=np.float64)
             for i in range(V.shape[1]):
                 acc = acc + V[:, i] * P[p, i]
-            bucket |= (acc >= 0).astype(np.int64) << p
-        return pd.DataFrame({"bucket": bucket, "nrm": _nrm_np(V)})
+            bucket |= (np.isnan(acc) | (acc >= 0)).astype(np.int64) << p
+        bucket[null] = 0
+        return pa.StructArray.from_arrays(
+            [pa.array(bucket), pa.array(_nrm_np(V), mask=null)],
+            names=["bucket", "nrm"])
 
-    return kernel
+    return F.arrow_udf(kernel, T.StructType([
+        T.StructField("bucket", T.LongType()),
+        T.StructField("nrm", T.DoubleType()),
+    ]))
 
 
 def _local_topk(k: int):

@@ -87,15 +87,11 @@ def _combos_per_partition(sf_dir: str, transcripts_path: str | None) -> int:
     opens/commits cost ~0.5s against a 2s write (A/B in
     OPTIMIZATION_r08.md). At 20M-turn scale the wider combo space is what
     averages hot-combo mass across tasks, so size, not parallelism, picks
-    the density — same pattern as the workload-size io codec choice
-    (bench.py). Threshold: staged 20M-turn input is ~3 GB, the headline
+    the density. Threshold: staged 20M-turn input is ~3 GB, the headline
     derivation input is ~2 MB; 64 MB splits them with orders of magnitude
-    of margin. SPARK_GRAFT_COMBOS_PER_PARTITION overrides for deployments."""
+    of margin."""
     import os
 
-    env = os.environ.get("SPARK_GRAFT_COMBOS_PER_PARTITION")
-    if env:
-        return max(1, int(env))
     try:
         if transcripts_path is not None:
             # the whole tree: a Hive-partitioned input keeps its files
@@ -169,8 +165,7 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
         # (Resume across PROCESSES still prunes completed buckets at the scan.)
         routed_all = routed_all.persist()
     try:
-        n = int(cfg.route_partitions
-                or spark.conf.get("spark.sql.shuffle.partitions"))
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         sinks = ", ".join(_sql_str(s) for s in cfg.sinks)
         group_idx = F.expr(
             f"_bucket * {len(cfg.sinks)} + array_position(array({sinks}), sink)"

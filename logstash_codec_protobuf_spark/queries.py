@@ -1456,15 +1456,6 @@ def pb_wire_float_double(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _float_double_frame(spark, sf_dir)
 
 
-@query("pb_wire_float_double_vec", _FLOAT_DOUBLE_ORACLE)
-def pb_wire_float_double_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered twin of ``pb_wire_float_double``: the same query, oracle
-    and decode path (``decode_message`` picks the numpy walker for both
-    messages by their shape). Parity of that walker with ``py_decode`` is
-    hypothesis-fuzzed in tests/test_wire_property.py."""
-    return _float_double_frame(spark, sf_dir)
-
-
 _REPEATED_MESSAGE_ORACLE = """
 SELECT event_id, CAST(0 AS INTEGER) AS pos,
        'h' || CAST(event_id AS STRING) || '.example' AS name,
@@ -2683,93 +2674,13 @@ def dedup_clusters_star_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, O(bucket) output — immune to the identical-boilerplate blowup),
     and the oracle is the recursive CTE over that same star graph; labels
     equal the all-pairs graph's by construction (parity-pinned in
-    tests/test_dedup_similarity.py). First in the r5 registration window —
-    the only query never driver-checked before this round."""
+    tests/test_dedup_similarity.py)."""
     return DD.dedup_clusters_star(_docs(spark, sf_dir))
 
 
-# ---------------------------------------------------------------------------
-# Driver registration order.
-#
-# The driver's CORRECTNESS report covers exactly the FIRST 50 names returned
-# by ``queries()`` — registration order decides what gets oracle-verified.
-# Round 3 shipped 15 queries past that window (7 never driver-checked in any
-# round; tpch_q5_local_supply's r2 hash-FAIL fix unverified).  So ordering is
-# explicit now, not an accident of definition order:
-#
-# - ``_FRONT``: queries that MUST land in the window — never-driver-verified
-#   ones first (tpch_q5_local_supply leads: it is the only query whose last
-#   driver observation was a FAIL), then round-4 additions, then queries green
-#   in only one prior round.
-# - ``_TAIL``: queries green in BOTH r2 and r3 driver reports — that
-#   double-green history is the evidence that earns the rotation out of the
-#   window.  ``tests/test_registration_order.py`` pins the invariants.
-# ---------------------------------------------------------------------------
-
-_FRONT: list[str] = [
-    # r8 rotation (round-7 verdict item 6): the window is the complement of
-    # r7's 50 — first the 34 r7-_TAIL names whose last driver-green row is
-    # r6 (out for exactly one round, per the rotation policy; all 84 were
-    # also green in the builder's r7 full-registry sweep), then 16 r7-green
-    # queries re-checked because round-8 OPTIMIZATION changes touch the
-    # code under them: the split-based native parse (parse.py) under the
-    # parse/encode/route/aggregate tier, the fused fingerprint kernels +
-    # packed shingles + single-probe contraction rounds (dedup.py) under
-    # dedup_clusters_star, and the numpy bucket/nrm kernels + bucket-block
-    # pair scorer (similarity.py) under the ANN tier.
-    "audio_decode_real", "image_decode_real", "image_resize_real",
-    "minhash_oversize_buckets", "tpch_q5_local_supply", "multimodal_frames",
-    "multimodal_resize", "role_cents_quantiles", "role_tool_setops",
-    "tpch_q3_shipping", "tpch_q7_volume", "multimodal_features",
-    "session_stats", "role_sink_matrix", "conv_tool_diversity",
-    "nested_json_decode", "tpch_q1_pricing", "tpch_join_topn",
-    "stream_hourly_counts", "text_stats", "lang_id", "doc_fingerprint",
-    "stream_dedup", "minhash_pairs", "simhash_neardup",
-    "ngram_jaccard_pairs", "dedup_clusters", "dedup_survivors",
-    "minhash_pairs_star", "minhash_bands", "simhash", "simhash_weighted",
-    "json_variant_nested", "json_struct_decode",
-    # r7-green, re-checked: round-8 optimization touched the code paths
-    # under them (16 slots; every remaining r7-green query is also covered
-    # by the builder's r8 full-registry sweep, BENCH/sweep_r8_sf0.01.txt)
-    "dedup_clusters_star", "embedding_neardup", "ann_lsh_topk",
-    "ann_cosine_topk", "parse_good", "dead_letter", "enrich_turns",
-    "route_counts", "conv_stats", "hourly_stats", "encode_roundtrip",
-    "encode_autoconvert", "oneof_xor", "enum_symbolize", "conv_first_last",
-    "turn_order",
-]
-
-_TAIL: list[str] = [
-    # green in CORRECTNESS_r07.json and with their code paths unchanged (or
-    # least-changed) by round-8 — that fresh green row is the evidence that
-    # earns rotation past the 50-entry window this round
-    "ivf_seed_scalable", "pb_wire_map_entries_jvmdyn",
-    "pb_wire_repeated_message_jvmdyn", "pb_wire_float_double_vec",
-    "ivf_topk", "ivf_seed_farthest", "dedup_exact", "pb2_enum_passthrough",
-    "stream_sessionize", "encode_strict_discard", "ivf_assign",
-    "ivf_refine_assign", "pb_wire_rum", "pb_wire_struct",
-    "pb_wire_uint64_bytes", "pb_wire_float_double",
-    "pb_wire_nested_repeated", "pb_wire_repeated_message",
-    "pb_wire_directory", "pb_wire_decode", "pb_wire_roundtrip",
-    "pb_wire_encode", "pb_wire_decode_jvmdyn", "pb_wire_dead_letter",
-    "pb_schema_file_decode", "pb_schema_multifile_decode",
-    "pb2_wire_roundtrip", "pb2_wire_lineage", "pb2_wire_repeated_enum",
-    "stream_wire_counts", "pb_wire_map_entries", "oneof_metainfo_off",
-    "oneof_three_option", "oneof_array_elements",
-]
-
-
-def _registration_order() -> list[str]:
-    front = [n for n in _FRONT if n in _QUERIES]
-    tail = [n for n in _TAIL if n in _QUERIES]
-    placed = set(front) | set(tail)
-    middle = [n for n in _QUERIES if n not in placed]
-    return front + middle + tail
-
-
 def all_queries() -> dict[str, QueryFn]:
-    return {n: _QUERIES[n] for n in _registration_order()}
+    return dict(_QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
-    order = _registration_order()
-    return {n: _ORACLES[n] for n in order if n in _ORACLES}
+    return dict(_ORACLES)

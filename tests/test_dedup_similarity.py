@@ -874,8 +874,25 @@ def test_bucket_nrm_kernel_matches_sql_template(spark):
     """Round-8: the fused numpy (bucket, nrm) kernel must be BIT-equal to
     the SQL hyperplane-signature + norm-fold templates it replaced — the
     bucket id decides candidate membership, so even a one-ulp divergence
-    would change neardup/lsh_topk results."""
+    would change neardup/lsh_topk results. Dirty components ride along: a
+    NaN dot product sets the bit in SQL (NaN >= 0 is TRUE in Spark and
+    DuckDB), an infinite one keeps its sign, and a NULL one makes the fold
+    NULL (no bit, NULL norm)."""
+    import math
+
     emb = load_table(spark, SF_DIR, "embeddings")
+    base = [float(v) for v in emb.orderBy("vec_id").first()["embedding"]]
+    inf = float("inf")
+    dirty = []
+    for vid, edits in enumerate(({0: math.nan}, {3: inf}, {7: -inf},
+                                 {1: inf, 2: -inf}, {5: None}),
+                                start=1_000_000):
+        vec = list(base)
+        for i, v in edits.items():
+            vec[i] = v
+        dirty.append((vid, vec, 0))
+    emb = emb.unionByName(spark.createDataFrame(dirty, emb.schema))
+    n_dirty = 0
     for planes in (2, 4):
         sql_bucket = F.expr(SIM.lsh_bucket_expr("embedding", planes))
         sql_nrm = F.expr(
@@ -891,7 +908,13 @@ def test_bucket_nrm_kernel_matches_sql_template(spark):
         )
         for r in got:
             assert r["nb"] == r["sb"], (planes, r)
-            assert r["nn"] == r["sn"], (planes, r)  # exact, not approx
+            if r["sn"] is not None and math.isnan(r["sn"]):
+                assert r["nn"] is not None and math.isnan(r["nn"]), (
+                    planes, r)
+            else:
+                assert r["nn"] == r["sn"], (planes, r)  # exact, not approx
+            n_dirty += r["vec_id"] >= 1_000_000
+    assert n_dirty == 2 * len(dirty)
 
 
 def test_packed_shingles_bijective_vs_string_kernel(spark):

@@ -33,5 +33,7 @@ def test_every_query_has_oracle():
     deterministic by construction, so even they render exact DuckDB twins."""
     missing = set(Q.all_queries()) - set(Q.all_oracles()) - ROWS_ONLY
     assert not missing, f"queries without oracle: {missing}"
+    orphans = set(Q.all_oracles()) - set(Q.all_queries())
+    assert not orphans, f"oracles without a query: {orphans}"
     stale = ROWS_ONLY & set(Q.all_oracles())
     assert not stale, f"ROWS_ONLY entries that now have oracles: {stale}"

@@ -113,13 +113,12 @@ def test_fan_out_parquet_and_writeto(spark, tmp_path):
     spark.sql("DROP TABLE fanout_v2_test")
 
 
-def test_combos_density_sizes_nested_partitioned_input(tmp_path, monkeypatch):
+def test_combos_density_sizes_nested_partitioned_input(tmp_path):
     """A Hive-partitioned input keeps its parquet under key=value/ dirs; the
     salt-combo density must size the whole tree, not only top-level files.
     The 65 MiB file is sparse, so it takes no disk."""
     from logstash_codec_protobuf_spark.plans.pipeline import _combos_per_partition
 
-    monkeypatch.delenv("SPARK_GRAFT_COMBOS_PER_PARTITION", raising=False)
     part = tmp_path / "transcripts" / "part=a"
     part.mkdir(parents=True)
     big = part / "f0.parquet"

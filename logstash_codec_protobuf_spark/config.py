@@ -32,6 +32,12 @@ TYPECONVERSION_TAG = "_protobuf_type_converted"  # protobuf.rb:168
 DEAD_LETTER_SINK = "dead_letter"
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes, the parser's
+    default), for expressions built as SQL text."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 @dataclass(frozen=True)
 class CodecConfig:
     message: str = "turn_payload"

@@ -11,7 +11,7 @@ Two interchangeable implementations, asserted identical in tests:
 - ``impl="arrow"``  — scalar ``pandas_udf`` returning a StructType; the compiled
   regex runs once per batch over a pandas Series (``str.extract``, C-backed).
   This is the input_hint's "vectorized pandas/Arrow UDF, no per-row Python".
-- ``impl="native"`` — pure Column expressions (``rlike`` + ``regexp_extract``),
+- ``impl="native"`` — SQL expressions (one ``rlike``, one ``split``),
   zero Python workers, fully codegen'd. Used as the default production path; the
   arrow path exists for formats regex-SQL can't express (and to honor the
   north-star shape).
@@ -28,7 +28,7 @@ import re
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from ..config import CodecConfig, DEAD_LETTER_TAG
+from ..config import CodecConfig, DEAD_LETTER_TAG, sql_str
 
 # Wire format of sources.transcripts — the engine's "compiled schema".
 PAYLOAD_REGEX = (
@@ -60,39 +60,57 @@ _PARSE_ERROR = "payload does not match PB3 wire format"
 # On a matched row piece i+1 is exactly "<name>=<group_i>" for the first 9
 # groups (none of them can contain '|'), so substring == regexp_extract.
 _PREFIX_LEN = [5, 5, 5, 5, 7, 6, 6, 5, 6]
+_SPLIT_RX = r"\|"
 
 
-def _native_parse_col(text: Column) -> Column:
-    """JVM-side parse: matched rows -> populated struct, else error struct.
+def _native_parse(df: DataFrame) -> DataFrame:
+    """JVM-side parse of ``df.text`` into ``parsed``, as three projections
+    of SQL text: ``_perr`` (one RLIKE: NULL when the row matches, else the
+    error), ``_parts`` (one ``split``, only where ``_perr`` is NULL), then
+    ``parsed = named_struct(<field>, CASE WHEN _perr IS NULL THEN ... END,
+    ..., 'error', _perr)``.
 
-    One regex validation pass (rlike) + one split + one regexp_extract for
-    the final msg group, instead of the old 1 rlike + 10 regexp_extract —
-    the payload regex ran 11 times per row and dominated every consumer of
-    the parse stage (round-8; equivalence pinned by test_parse parity).
-    msg alone keeps the regex extract because ``(.*)$`` excludes a trailing
-    line terminator where a split piece would keep it; the other nine
-    groups are '|'-free by construction, so their split pieces are
-    byte-identical to the regex groups whenever the row matches at all.
+    A helper column referenced more than once above it stays a column of
+    its own (CollapseProject does not duplicate it), so every row runs the
+    regex once and the split once. A single ``CASE WHEN rlike THEN
+    struct(...)`` is out of reach of subexpression elimination: its branch
+    ran the split once per field, nine times a row. And because ``parsed``
+    is a ``named_struct`` whose ``error`` is a plain column, a consumer
+    that reads ``parsed.error`` and a few fields gets only those fields'
+    expressions (CollapseProject + SimplifyExtractValueOps); the routed
+    store's plan has no ``regexp_extract`` at all.
+
+    The first nine groups are '|'-free by construction, so on a matched row
+    split piece i+1 minus its ``<name>=`` prefix is byte-identical to the
+    regex group. msg alone keeps ``regexp_extract``: ``(.*)$`` excludes a
+    trailing line terminator where the split piece would keep it
+    (equivalence pinned by test_parse's 11-pass regex reference).
     """
-    parts = F.split(text, r"\|", 11)
+    ok = "_perr IS NULL"
 
-    def grp(i: int, typ: str) -> Column:
+    def grp(i: int, typ: str) -> str:
         if i == 10:  # msg: the only group where split and regex can differ
-            c = F.regexp_extract(text, PAYLOAD_REGEX, 10)
+            c = f"regexp_extract(`text`, {sql_str(PAYLOAD_REGEX)}, 10)"
         else:
-            c = F.substring(F.element_at(parts, i + 1),
-                            _PREFIX_LEN[i - 1] + 1, 2_000_000_000)
-        return c if typ == "string" else c.cast(typ)
+            c = (f"substring(element_at(_parts, {i + 1}), "
+                 f"{_PREFIX_LEN[i - 1] + 1}, 2000000000)")
+        if typ != "string":
+            c = f"CAST({c} AS {typ.upper()})"
+        return f"CASE WHEN {ok} THEN {c} END"
 
-    good = F.struct(
-        *[grp(i + 1, typ).alias(name) for i, (name, typ) in enumerate(_GROUPS)],
-        F.lit(None).cast("string").alias("error"),
+    fields = ", ".join(f"'{name}', {grp(i + 1, typ)}"
+                       for i, (name, typ) in enumerate(_GROUPS))
+    return (
+        df.withColumn("_perr", F.expr(
+            f"CASE WHEN `text` RLIKE {sql_str(PAYLOAD_REGEX)} THEN NULL"
+            f" ELSE {sql_str(_PARSE_ERROR)} END"))
+        .withColumn("_parts", F.expr(
+            f"CASE WHEN {ok} THEN split(`text`, {sql_str(_SPLIT_RX)}, 11)"
+            " END"))
+        .withColumn("parsed", F.expr(
+            f"named_struct({fields}, 'error', _perr)"))
+        .drop("_perr", "_parts")
     )
-    bad = F.struct(
-        *[F.lit(None).cast(typ).alias(name) for name, typ in _GROUPS],
-        F.lit(_PARSE_ERROR).alias("error"),
-    )
-    return F.when(text.rlike(PAYLOAD_REGEX), good).otherwise(bad)
 
 
 @F.pandas_udf(PARSED_TYPE)
@@ -120,12 +138,10 @@ def parse_turns(df: DataFrame, cfg: CodecConfig | None = None,
     1:1 projection, no shuffle — Catalyst pipelines it into the scan stage.
     """
     if impl == "native":
-        parsed = _native_parse_col(F.col("text"))
-    elif impl == "arrow":
-        parsed = _arrow_parse_udf(F.col("text"))
-    else:
-        raise ValueError(f"unknown parse impl: {impl}")
-    return df.withColumn("parsed", parsed)
+        return _native_parse(df)
+    if impl == "arrow":
+        return df.withColumn("parsed", _arrow_parse_udf(F.col("text")))
+    raise ValueError(f"unknown parse impl: {impl}")
 
 
 def parse_failed(parsed: Column) -> Column:

@@ -46,8 +46,11 @@ import json
 import os
 import struct
 from decimal import Decimal
+from typing import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..functions.portable import DUCK, Dialect
@@ -976,49 +979,93 @@ def _plan_types(plan) -> set[str]:
     return out
 
 
-def _flat_columns(cols: dict, plan, prefix: str = "") -> dict:
-    """``flat_decode_frame`` columns -> the decoded shape's top-level
-    columns: fields in spec order (a nested message re-assembled from its
-    flattened ``<field>.<sub>`` columns, NULL where absent), then the
-    ``oneof_<group>`` slots."""
-    out = {}
-    for name in plan.field_names:
-        if name in plan.subplans:
-            sub = _flat_columns(cols, plan.subplans[name], f"{prefix}{name}.")
-            out[name] = [
-                dict(zip(sub, vals)) if present else None
-                for present, *vals in zip(cols[f"{prefix}{name}._present"],
-                                          *sub.values())]
+def _arrow_column(c, typ):
+    """One ``flat_decode_frame`` column as a ``pa.Array`` of ``typ``.
+    Masked (Int64 / Float64) columns keep their numpy values and the
+    kernel's mask, so a NaN double stays NaN; only the mask is NULL."""
+    if isinstance(c, pd.Series):  # the scalar-fallback patch-up's frame
+        c = c.array
+        if c.dtype == object:
+            c = [None if v is pd.NA else v for v in c]
+    if isinstance(c, pd.api.extensions.ExtensionArray) \
+            and c.dtype != object:
+        a = pa.array(c)  # __arrow_array__: values + mask, no NaN sniffing
+    else:
+        a = pa.array(c, pa.int64() if pa.types.is_integer(typ) else typ,
+                     from_pandas=False)
+    # int32 fields come back int64: wrap like protobuf-java's readInt32
+    return a if a.type == typ else a.cast(typ, safe=False)
+
+
+def _flat_arrays(cols: dict, plan, atype, prefix: str = "") -> list:
+    """``flat_decode_frame`` columns -> the child arrays of ``atype``, the
+    decoded struct's Arrow type: a nested message is a child struct array
+    re-assembled from its flattened ``<field>.<sub>`` columns, NULL where
+    ``<field>._present`` is not true; ``oneof_<group>`` reads the kernel's
+    ``_pb_oneof_<group>`` column."""
+    out = []
+    for f in atype:
+        if f.name in plan.subplans:
+            pre = f"{prefix}{f.name}."
+            present = np.asarray(cols[pre + "_present"]) == True  # noqa: E712
+            out.append(pa.StructArray.from_arrays(
+                _flat_arrays(cols, plan.subplans[f.name], f.type, pre),
+                fields=list(f.type), mask=pa.array(~present)))
+        elif f.name.startswith("oneof_") \
+                and f.name[6:] in plan.oneof_groups:
+            out.append(_arrow_column(
+                cols[f"{prefix}_pb_oneof_{f.name[6:]}"], f.type))
         else:
-            out[name] = cols[prefix + name]
-    for g in plan.oneof_groups:
-        out[f"oneof_{g}"] = cols[f"{prefix}_pb_oneof_{g}"]
+            out.append(_arrow_column(cols[prefix + f.name], f.type))
     return out
+
+
+def _batch_decode_udf(decode_batch, schema: T.StructType, name: str):
+    """``decode_batch`` (payload ``BinaryArray`` -> decoded ``StructArray``)
+    as an Arrow UDF named ``name``.
+
+    An iterator UDF, not a scalar one: Spark chains a scalar Arrow UDF
+    into a scalar Arrow UDF that feeds it and then evaluates the inner one
+    twice per row (once for its own column, once inside the chain), so
+    ``decode(encode(x))`` in one plan would encode every row twice."""
+    def udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for payload in batches:
+            yield decode_batch(payload)
+
+    udf.__name__ = name
+    return F.arrow_udf(udf, schema)
 
 
 def _flat_decode_udf(plan, schema: T.StructType):
     """The Arrow-batch decode over the numpy record-transposed walker
     (``pb_wire_vec``): same semantics as ``py_decode`` (fuzz-pinned in
     tests/test_wire_property.py), no per-payload Python byte walk. The
+    payload ``BinaryArray``'s offsets and data buffers feed the kernel
+    directly (``flat_decode_frame``'s ``_pre`` seam) and each batch goes
+    back as one ``pa.StructArray``: no pandas frame on either side. The
     plan (registry included) rides in the closure, pickled to each
     executor once."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
     from .pb_wire_vec import flat_decode_frame
 
-    names = schema.fieldNames()
-    int_cols = [f.name for f in schema
-                if isinstance(f.dataType, (T.IntegerType, T.LongType))]
+    atype = to_arrow_type(schema)
 
-    @F.pandas_udf(schema)
-    def _decode_vec(payload: pd.Series) -> pd.DataFrame:
-        cols = flat_decode_frame(payload, plan)
-        out = pd.DataFrame({**_flat_columns(cols, plan),
-                            "error": cols["error"]}, columns=names)
-        for c in int_cols:
-            if out[c].dtype != "Int64":
-                out[c] = out[c].astype("Int64")
-        return out
+    def _decode_batch(payload):
+        n = len(payload)
+        _, offs, data = payload.buffers()
+        offsets = (np.frombuffer(offs, np.int32, n + 1, 4 * payload.offset)
+                   .astype(np.int64) if n else np.zeros(1, np.int64))
+        arr = (np.frombuffer(data, np.uint8) if data is not None
+               else np.zeros(0, np.uint8))
+        isnull = payload.is_null().to_numpy(zero_copy_only=False)
+        cols = flat_decode_frame(None, plan, _pre=(
+            arr, offsets[:-1].copy(), offsets[1:], isnull,
+            lambda i: payload[i].as_py()))
+        return pa.StructArray.from_arrays(
+            _flat_arrays(cols, plan, atype), fields=list(atype))
 
-    return _decode_vec
+    return _batch_decode_udf(_decode_batch, schema, "_decode_vec")
 
 
 def _cell(v, dt: T.DataType):
@@ -1060,7 +1107,6 @@ def _row_decode_udf(registry: SchemaRegistry, message: str,
     fields = T.StructType(schema.fields[:-1])
 
     def _decode(payload):
-        import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
         rows = []
@@ -1077,7 +1123,7 @@ def _row_decode_udf(registry: SchemaRegistry, message: str,
                              else WIRE_ERROR})
         return pa.array(rows, to_arrow_type(schema))
 
-    return F.arrow_udf(_decode, schema)
+    return _batch_decode_udf(_decode, schema, "_decode")
 
 
 # ---------------------------------------------------------------------------

@@ -220,10 +220,12 @@ def flat_decode_frame(payload, plan: FlatPlan, _pre=None) -> dict[str, object]:
     ``error``. Error rows are all-NULL with WIRE_ERROR; fallback rows are
     patched via ``py_decode``.
 
-    ``_pre``: internal recursion seam for the one-level nested pass —
-    ``(arr, pos, end, isnull, rowbytes)`` where offsets index the PARENT
-    batch buffer directly (sub-slices are never re-concatenated) and
-    ``rowbytes(i)`` yields row i's bytes for the scalar fallback."""
+    ``_pre``: the seam for callers that already hold the payloads in one
+    buffer — the Arrow UDF (a ``BinaryArray``'s data buffer and offsets)
+    and the one-level nested pass — ``(arr, pos, end, isnull, rowbytes)``
+    where offsets index that buffer directly (sub-slices are never
+    re-concatenated) and ``rowbytes(i)`` yields row i's bytes for the
+    scalar fallback."""
     from .pb_wire import py_decode
 
     if _pre is None:
@@ -595,10 +597,12 @@ def flat_decode_frame(payload, plan: FlatPlan, _pre=None) -> dict[str, object]:
             f.name for f in plan.varints
             if f.ftype in _UNSIGNED_TYPES | _SIGNED_TYPES | _SINT_TYPES
         }  # enum codes are int32-truncated upstream: always representable
-        # mutability for the patch: Arrow-backed columns become object
+        # mutability for the patch: Arrow-backed columns become object,
+        # and so do floats — a NaN set into a Float64 column turns NULL
         cols = {
             k: (c.to_numpy(dtype=object, na_value=None)
-                if isinstance(c, pd.arrays.ArrowExtensionArray) else c)
+                if isinstance(c, (pd.arrays.ArrowExtensionArray,
+                                  pd.arrays.FloatingArray)) else c)
             for k, c in cols.items()
         }
         msg_names = {f.name for f in plan.messages}

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import CodecConfig, DEAD_LETTER_SINK
+from ..config import CodecConfig, DEAD_LETTER_SINK, sql_str
 
 
 def assign_sink(df: DataFrame, cfg: CodecConfig | None = None) -> DataFrame:
@@ -35,17 +35,18 @@ def route_all(parsed_enriched: DataFrame) -> DataFrame:
 
     This replaces the good/dead union shape, which costs a SECOND full scan of
     the parse pipeline (each union branch re-reads the source) — at 100 TB
-    that's the difference between one pass and two.
+    that's the difference between one pass and two. The projection is SQL
+    text: a composed Column costs tens of py4j round trips of call-site
+    capture per operator, a ``selectExpr`` string a few.
     """
-    p = F.col("parsed")
-    return parsed_enriched.select(
-        F.col("conv_id"), F.col("turn_idx"), F.col("ts"), F.col("text"),
-        F.when(p["error"].isNull(), F.col("tool")).alias("tool"),
-        F.when(p["error"].isNull(), p["cents"]).alias("cents"),
-        p["error"].alias("decoder_exception"),
-        F.when(p["error"].isNotNull(), F.lit(DEAD_LETTER_SINK))
-        .otherwise(F.coalesce(F.col("sink"), F.lit(DEAD_LETTER_SINK)))
-        .alias("sink"),
+    dead = sql_str(DEAD_LETTER_SINK)
+    return parsed_enriched.selectExpr(
+        "conv_id", "turn_idx", "ts", "text",
+        "CASE WHEN parsed.error IS NULL THEN tool END AS tool",
+        "CASE WHEN parsed.error IS NULL THEN parsed.cents END AS cents",
+        "parsed.error AS decoder_exception",
+        f"CASE WHEN parsed.error IS NOT NULL THEN {dead}"
+        f" ELSE coalesce(sink, {dead}) END AS sink",
     )
 
 
@@ -100,7 +101,7 @@ def partition_probe_values(n: int) -> list[int]:
     return probes  # type: ignore[return-value]
 
 
-def probe_repartition(df: DataFrame, n: int, group_idx,
+def probe_repartition(df: DataFrame, n: int, group_idx: str,
                       n_groups: int, conv_col: str = "conv_id",
                       combos_per_partition: int = 4) -> DataFrame:
     """Deterministically balanced pre-write repartition (round-6 verdict
@@ -122,20 +123,19 @@ def probe_repartition(df: DataFrame, n: int, group_idx,
     ~combos_per_partition combos from DIFFERENT interleaved groups (mass
     averaging), no partition is empty, and each task writes at most
     ~combos_per_partition files — balance AND file count both bounded by
-    construction, not by hash luck."""
+    construction, not by hash luck.
+
+    ``group_idx`` is SQL text for the row's group in ``[0, n_groups)``;
+    the whole partition key is one SQL expression, so building it costs a
+    few py4j round trips rather than one call-site capture per operator."""
     import math
 
     s = max(1, math.ceil(combos_per_partition * n / max(n_groups, 1)))
-    salt = F.pmod(F.xxhash64(F.col(conv_col), F.lit("wsalt")), F.lit(s))
-    combo = group_idx * F.lit(s) + salt
-    slot = F.pmod(combo, F.lit(n)).cast("int")
-    probes = F.array(*[F.lit(int(p)) for p in partition_probe_values(n)])
-    pkey = F.element_at(probes, slot + F.lit(1)).cast("int")
-    return (
-        df.withColumn("_pkey", pkey)
-        .repartition(n, F.col("_pkey"))
-        .drop("_pkey")
-    )
+    salt = f"pmod(xxhash64(`{conv_col}`, 'wsalt'), {s})"
+    slot = f"CAST(pmod(({group_idx}) * {s} + {salt}, {n}) AS INT)"
+    probes = ", ".join(str(int(p)) for p in partition_probe_values(n))
+    pkey = f"CAST(element_at(array({probes}), {slot} + 1) AS INT)"
+    return df.repartition(n, F.expr(pkey))
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -172,9 +172,9 @@ def fan_out(
     """
     cfg = cfg or CodecConfig()
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sink_pos = F.array_position(
-        F.array(*[F.lit(s) for s in cfg.sinks]), F.col("sink")) - F.lit(1)
-    routed = probe_repartition(df, n, sink_pos, len(cfg.sinks))
+    sinks = ", ".join(sql_str(s) for s in cfg.sinks)
+    routed = probe_repartition(
+        df, n, f"array_position(array({sinks}), sink) - 1", len(cfg.sinks))
     if table is not None:
         spark = routed.sparkSession
         if mode == "overwrite":

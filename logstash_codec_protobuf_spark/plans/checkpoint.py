@@ -18,6 +18,7 @@ import json
 import os
 import shutil
 import tempfile
+from urllib.parse import unquote
 
 
 class CheckpointManifest:
@@ -44,6 +45,27 @@ class CheckpointManifest:
         with os.fdopen(fd, "w") as f:
             json.dump(metrics, f)
         os.replace(tmp, self._path(bucket))
+
+    def landed_counts(self, data_dir: str, bucket: int) -> dict[str, int]:
+        """Rows per sink under ``<data_dir>/_bucket=<bucket>/sink=<s>/``,
+        summed from the parquet footers. Sink directory names are escaped
+        the way Spark escapes partition values; sinks without rows have no
+        directory and are absent."""
+        import pyarrow.parquet as pq
+
+        counts: dict[str, int] = {}
+        root = os.path.join(data_dir, f"_bucket={bucket}")
+        if not os.path.isdir(root):
+            return counts
+        for d in os.listdir(root):
+            if not d.startswith("sink="):
+                continue
+            n = sum(pq.read_metadata(os.path.join(root, d, f)).num_rows
+                    for f in os.listdir(os.path.join(root, d))
+                    if f.endswith(".parquet") and not f.startswith((".", "_")))
+            if n:
+                counts[unquote(d[len("sink="):])] = n
+        return counts
 
     def clear_partial_output(self, data_dir: str, bucket: int) -> None:
         """Remove sink output of a bucket that died before its manifest commit

@@ -4,6 +4,22 @@ One logical plan per lineage wave; Catalyst fuses scan+parse+enrich (broadcast
 joins are shuffle-free) into a single stage, so the only exchanges are the
 explicit pre-route repartition and the aggregate shuffles — exactly the two the
 north star budgets for.
+
+Each row's work is done once, and only the work the routed store keeps:
+
+- **No persist.** A wave's ``_bucket IN (...)`` filter is over
+  ``pmod(crc32(conv_id), n)``, an input column, so Catalyst pushes it down
+  to sit directly on the scan, below the parse: each wave parses only its
+  own rows. The cost is one more input scan per extra wave; at scale the
+  cached frame it replaces would have spilled the whole parsed input anyway,
+  and its build, compression and cache scan are gone.
+- **A parse Catalyst can prune.** The routed store reads ``parsed.error``
+  and ``parsed.cents``; ``parse_turns``' native path is a ``named_struct``
+  over shared ``_perr`` / ``_parts`` columns, so the wave runs one RLIKE
+  and one split per row and no ``regexp_extract``.
+- **Counts from the footers.** The manifest's per-(bucket, sink) counts are
+  the row counts in the parquet footers the wave's write just committed,
+  not metrics evaluated per row during the write.
 """
 
 from __future__ import annotations
@@ -12,7 +28,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import CodecConfig, DEAD_LETTER_SINK
+from ..config import CodecConfig, DEAD_LETTER_SINK, sql_str
 from ..operators import aggregate as agg
 from ..operators.enrich import join_tools
 from ..operators.parse import parse_turns, split_dead_letter
@@ -29,10 +45,6 @@ PARQUET_CODEC = "zstd"
 def _parquet_writer(df: DataFrame):
     """``df.write`` with the engine's parquet codec."""
     return df.write.option("compression", PARQUET_CODEC)
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def run_parse_stage(
@@ -57,7 +69,11 @@ def run_parse_stage(
 def _routed_wave(spark: SparkSession, sf_dir: str, cfg: CodecConfig,
                  n_buckets: int, impl: str,
                  transcripts_path: str | None = None) -> DataFrame:
-    """Full-row routed frame with lineage bucket column (no action yet)."""
+    """Full-row routed frame with lineage bucket column (no action yet).
+
+    Nothing here is cached: ``_bucket`` is a function of the input's
+    ``conv_id``, so a wave's filter on it is pushed down to the scan and
+    each wave parses, joins and routes only its own buckets' rows."""
     if transcripts_path is not None:
         tr = spark.read.parquet(transcripts_path)
     else:
@@ -107,6 +123,35 @@ def _combos_per_partition(sf_dir: str, transcripts_path: str | None) -> int:
     except OSError:
         return 4  # unknown input: keep the mass-averaging default
     return 1 if size < (64 << 20) else 4
+
+
+def _wave_frame(routed_all: DataFrame, wave: list[int], cfg: CodecConfig,
+                combos_per_partition: int) -> DataFrame:
+    """The frame one wave writes: the rows of ``routed_all`` in the wave's
+    buckets, repartitioned for the write.
+
+    The pre-write repartition is DETERMINISTICALLY balanced (round-7,
+    round-6 verdict item 1 — the 8->32 e2e gap): the old
+    repartition(n, _bucket, sink, salt) had two failure modes, both
+    measured on 20M turns (BENCH/e2e_decompose_r7*):
+    1. pmod(crc32(conv_id), 4) was fully determined by _bucket =
+       pmod(crc32(conv_id), 8) — zero salt entropy, one task per
+       (bucket, sink), 46.3s vs 22.6s at local[32];
+    2. even with an independent salt, hashing a small combo space into n
+       tasks is a murmur3 lottery (22.6-57.9s for the SAME mass
+       distribution). probe_repartition assigns combos to partitions
+       round-robin via driver-computed probe integers: balance and
+       files-per-task both hold by construction at any parallelism.
+    """
+    n = int(routed_all.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sinks = ", ".join(sql_str(s) for s in cfg.sinks)
+    group_idx = (f"_bucket * {len(cfg.sinks)}"
+                 f" + array_position(array({sinks}), sink) - 1")
+    in_wave = routed_all.filter(
+        F.expr(f"_bucket IN ({', '.join(map(str, wave))})"))
+    return probe_repartition(in_wave, n, group_idx,
+                             len(wave) * len(cfg.sinks),
+                             combos_per_partition=combos_per_partition)
 
 
 def run_pipeline(
@@ -160,83 +205,39 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     routed_all = _routed_wave(spark, sf_dir, cfg, n_buckets, impl,
                               transcripts_path=transcripts_path)
     waves = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
-    if len(waves) > 1:
-        # parse once, not once per wave: the wave filters then hit cached rows.
-        # (Resume across PROCESSES still prunes completed buckets at the scan.)
-        routed_all = routed_all.persist()
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        sinks = ", ".join(_sql_str(s) for s in cfg.sinks)
-        group_idx = F.expr(
-            f"_bucket * {len(cfg.sinks)} + array_position(array({sinks}), sink)"
-            " - 1")
-        for wi, wave in enumerate(waves):
-            if fail_after_waves is not None and wi >= fail_after_waves:
-                raise RuntimeError("simulated kill")
-            sc.setJobDescription(f"run_pipeline: wave {wi} write routed")
-            t0 = time.time()
-            wave_df = routed_all.filter(F.col("_bucket").isin(wave))
-            # per-(bucket, sink) counts via the observe API: collected DURING
-            # the write action, no post-write read-back (which doubled the
-            # write-path IO at scale). Spark's file commit protocol stages
-            # task output and commits atomically with the action, so on a
-            # successful write the observed counts ARE the landed rows; a
-            # failed action raises before the manifest entry commits. The
-            # metric set is bounded: wave_size buckets x |cfg.sinks|. Each
-            # metric is SQL text: a composed Column costs ~70 py4j round
-            # trips for call-site capture, F.expr a few.
-            from pyspark.sql import Observation
-
-            obs = Observation(f"wave_{wi}")
-            metric_exprs = [
-                F.expr(f"count_if(_bucket = {b} AND sink = {_sql_str(s)})"
-                       f" AS `c_{b}_{s}`")
-                for b in wave for s in cfg.sinks
-            ]
-            wave_df = wave_df.observe(obs, *metric_exprs)
-            # explicit pre-write repartition, DETERMINISTICALLY balanced
-            # (round-7, round-6 verdict item 1 — the 8->32 e2e gap): the
-            # old repartition(n, _bucket, sink, salt) had two failure
-            # modes, both measured on 20M turns (BENCH/e2e_decompose_r7*):
-            # 1. pmod(crc32(conv_id), 4) was fully determined by _bucket =
-            #    pmod(crc32(conv_id), 8) — zero salt entropy, one task per
-            #    (bucket, sink), 46.3s vs 22.6s at local[32];
-            # 2. even with an independent salt, hashing a small combo
-            #    space into n tasks is a murmur3 lottery (22.6-57.9s for
-            #    the SAME mass distribution). probe_repartition assigns
-            #    combos to partitions round-robin via driver-computed
-            #    probe integers: balance and files-per-task both hold by
-            #    construction at any parallelism.
-            (
-                _parquet_writer(probe_repartition(
-                    wave_df, n, group_idx, len(wave) * len(cfg.sinks),
-                    combos_per_partition=cpp))
-                .mode("append").partitionBy("_bucket", "sink")
-                .parquet(data_dir)
-            )
-            got = obs.get  # available once the write action completed
-            dt = time.time() - t0
-            for b in wave:
-                counts = {s: int(got[f"c_{b}_{s}"]) for s in cfg.sinks
-                          if got[f"c_{b}_{s}"]}
-                manifest.complete(b, {
-                    "sinks": counts,
-                    "rows": int(sum(counts.values())),
-                    "wave_wall_sec": dt,
-                })
-    finally:
-        if len(waves) > 1:
-            routed_all.unpersist()
+    for wi, wave in enumerate(waves):
+        if fail_after_waves is not None and wi >= fail_after_waves:
+            raise RuntimeError("simulated kill")
+        sc.setJobDescription(f"run_pipeline: wave {wi} write routed")
+        t0 = time.time()
+        (
+            _parquet_writer(_wave_frame(routed_all, wave, cfg, cpp))
+            .mode("append").partitionBy("_bucket", "sink")
+            .parquet(data_dir)
+        )
+        dt = time.time() - t0
+        # per-(bucket, sink) counts from the footers of the files the write
+        # just committed: Spark's commit protocol publishes task output
+        # atomically with the action, so these ARE the landed rows, and a
+        # failed action raises before the manifest entry commits. No
+        # per-row metric expression, no read of the data itself.
+        for b in wave:
+            counts = manifest.landed_counts(data_dir, b)
+            manifest.complete(b, {
+                "sinks": counts,
+                "rows": int(sum(counts.values())),
+                "wave_wall_sec": dt,
+            })
 
     # final aggregates over the routed store (reads back only needed
     # columns), with the schema this call just wrote: no schema-inference
-    # job, no footer reads. The two aggregate writes are independent jobs —
+    # job over routed/. The two aggregate writes are independent jobs —
     # submit them from two driver threads so the second back-fills the
     # first's task tail instead of waiting for it (guide §2.6; actions are
     # sequential only because driver code calls them sequentially).
     sc.setJobDescription("run_pipeline: read back routed")
     routed = spark.read.schema(routed_all.schema).parquet(data_dir)
-    good = routed.filter(F.col("sink") != DEAD_LETTER_SINK)
+    good = routed.filter(F.expr(f"sink != {sql_str(DEAD_LETTER_SINK)}"))
     from concurrent.futures import ThreadPoolExecutor
 
     group = sc.getLocalProperty("spark.jobGroup.id")

@@ -62,13 +62,15 @@ def test_parse_is_narrow_no_shuffle(spark):
 
 
 def test_native_parse_split_path_matches_pure_regex_reference(spark):
-    """Round-8: the split-based native parse must equal the old 11-pass
-    regexp_extract formulation byte-for-byte on every edge shape — empty
-    fields, '|' and '=' inside msg, trailing newline (the '$'-before-final-
-    terminator regex subtlety), unicode, corrupt rows."""
+    """The native parse_turns (one RLIKE, one shared split) must equal the
+    11-pass regexp_extract formulation byte-for-byte on every edge shape —
+    empty fields, '|' and '=' inside msg, trailing newline (the '$'-before-
+    final-terminator regex subtlety), unicode, corrupt rows, a NULL text,
+    and quote and backslash characters in conv and msg (the parse is SQL
+    text, so these guard its literal escaping) — with the same schema."""
     from pyspark.sql import Column, functions as F
     from logstash_codec_protobuf_spark.operators.parse import (
-        PAYLOAD_REGEX, _GROUPS, _PARSE_ERROR, _native_parse_col)
+        PAYLOAD_REGEX, _GROUPS, _PARSE_ERROR)
 
     def reference(text: Column) -> Column:
         def grp(i, typ):
@@ -94,8 +96,16 @@ def test_native_parse_split_path_matches_pure_regex_reference(spark):
         "PB3|conv=c|turn=x|role=r|tool=t|colour=1|cents=1|oneof=x|horn=1|wings=1|msg=baddigits",
         "",
         "PB3|conv=c|turn=1|role=r|tool=t|colour=1|cents=1|oneof=x|horn=1|wings=1",
+        None,
+        "PB3|conv=o'brien|turn=2|role=r|tool=t|colour=1|cents=1|oneof=x|horn=1|wings=1|msg=it's 'quoted'",
+        "PB3|conv=c\\d|turn=2|role=r|tool=t|colour=1|cents=1|oneof=x|horn=1|wings=1|msg=back\\slash \\| \\\\",
+        "PB3|conv=\\'|turn=2|role=r|tool=t|colour=1|cents=1|oneof=x|horn=1|wings=1|msg='\\",
     ]
-    df = spark.createDataFrame([(p,) for p in payloads], "text string")
-    got = df.select(_native_parse_col(F.col("text")).alias("p")).collect()
-    ref = df.select(reference(F.col("text")).alias("p")).collect()
-    assert [r["p"].asDict() for r in got] == [r["p"].asDict() for r in ref]
+    df = spark.createDataFrame([(i, p) for i, p in enumerate(payloads)],
+                               "i int, text string")
+    got = parse_turns(df, impl="native").orderBy("i")
+    ref = df.select("i", "text", reference(F.col("text")).alias("parsed")) \
+        .orderBy("i")
+    assert got.schema["parsed"].dataType == ref.schema["parsed"].dataType
+    assert [r["parsed"].asDict() for r in got.collect()] == \
+        [r["parsed"].asDict() for r in ref.collect()]

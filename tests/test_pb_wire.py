@@ -963,6 +963,42 @@ def test_jvm_dynamic_nested_dead_letter(spark):
     assert bytes(row["payload"]) == b"\xff"
 
 
+def test_flat_decoder_keeps_nan_and_inf_like_jvm_dynamic(spark):
+    """NaN, +inf, -inf and finite floats decode as themselves through the
+    flat Arrow decoder, exactly as through jvm_dynamic: a nested double
+    (probe_result.task.latency) and top-level floats (user_agent.major /
+    minor), also on a row the scalar fallback patches (a duplicated string
+    field). A pandas boundary there used to turn NaN into NULL."""
+    import math
+
+    from logstash_codec_protobuf_spark.functions.wire import (
+        py_field_float, py_field_string)
+
+    if not W.jvm_dynamic_available(spark):
+        pytest.skip("shaded protobuf runtime unavailable")
+    vals = [float("nan"), float("inf"), float("-inf"), 1.5, 0.0]
+    df = spark.createDataFrame(list(enumerate(vals)),
+                               "event_id long, v double")
+    v = F.col("v")
+    probe = df.select("event_id", W.encode_message(F.struct(
+        F.lit("u").alias("uuid"),
+        F.struct(F.lit("ERROR").alias("status"), v.alias("latency"))
+        .alias("task")), "probe_result").alias("payload"))
+    ua = df.select("event_id", W.encode_message(F.struct(
+        F.lit("fam").alias("family"), v.cast("float").alias("major"),
+        (-v).cast("float").alias("minor")), "user_agent").alias("payload"))
+    dup = (py_field_string(1, "a") + py_field_string(1, "b")
+           + py_field_float(2, math.nan))
+    ua = ua.union(spark.createDataFrame([(9, bytearray(dup))],
+                                        "event_id long, payload binary"))
+    _impl_parity(probe, "probe_result")
+    _impl_parity(ua, "user_agent")
+    lat = [r["decoded"]["task"]["latency"] for r in W.decode_message(
+        probe, "payload", "probe_result").orderBy("event_id").collect()]
+    assert math.isnan(lat[0])
+    assert lat[1:] == [math.inf, -math.inf, 1.5, 0.0]
+
+
 def test_jvm_dynamic_recursive_type_refused():
     """A recursive message graph has no finite StructType: without a depth
     bound the schema builder must refuse unicorn (mother/father:

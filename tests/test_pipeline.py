@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -75,6 +76,48 @@ def test_killed_run_resumes_without_reprocessing(spark, tmp_path):
         for r in spark.read.parquet(f"{out}/routed").groupBy("sink").count().collect()
     }
     assert landed == _expected_sinks(SF_DIR)
+
+
+def _landed_by_bucket_sink(spark, out) -> dict[int, dict[str, int]]:
+    """Rows read back from each routed/_bucket=<b>/sink=<s>/ directory."""
+    got: dict[int, dict[str, int]] = {}
+    for r in spark.read.parquet(f"{out}/routed") \
+            .groupBy("_bucket", "sink").count().collect():
+        got.setdefault(r["_bucket"], {})[r["sink"]] = r["count"]
+    return got
+
+
+def test_manifest_counts_equal_landed_rows(spark, tmp_path):
+    """Each bucket's per-sink manifest counts equal the rows read back from
+    its _bucket=<b>/sink=<s>/ directories, for a fresh run and for a
+    resume after a kill; sinks without rows stay absent. The resume
+    rewrites the manifest entries of the resumed buckets only."""
+    fresh = str(tmp_path / "fresh")
+    run_pipeline(spark, SF_DIR, fresh, n_buckets=4, wave_size=2)
+    manifest = CheckpointManifest(f"{fresh}/manifest").completed()
+    landed = _landed_by_bucket_sink(spark, fresh)
+    assert {b: m["sinks"] for b, m in manifest.items()} == {
+        b: landed.get(b, {}) for b in range(4)}
+    assert all(m["rows"] == sum(m["sinks"].values())
+               for m in manifest.values())
+    assert all(n > 0 for m in manifest.values() for n in m["sinks"].values())
+
+    out = str(tmp_path / "resumed")
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_pipeline(spark, SF_DIR, out, n_buckets=4, wave_size=2,
+                     fail_after_waves=1)
+    paths = {b: Path(CheckpointManifest(f"{out}/manifest")._path(b))
+             for b in range(4)}
+    first = {b: p.read_text() for b, p in paths.items() if p.exists()}
+    assert len(first) == 2
+    run_pipeline(spark, SF_DIR, out, n_buckets=4, wave_size=2)
+    assert {b: paths[b].read_text() for b in first} == first
+    resumed = CheckpointManifest(f"{out}/manifest").completed()
+    landed = _landed_by_bucket_sink(spark, out)
+    assert {b: m["sinks"] for b, m in resumed.items()} == {
+        b: landed.get(b, {}) for b in range(4)}
+    assert {b: m["sinks"] for b, m in resumed.items()} == {
+        b: m["sinks"] for b, m in manifest.items()}
 
 
 def test_fan_out_parquet_and_writeto(spark, tmp_path):
@@ -176,8 +219,9 @@ def test_engine_writes_zstd_over_a_snappy_session_default(spark, tmp_path):
 
 
 # jobs of one warm call over staged transcripts, 8 buckets in two waves:
-# the input's schema inference, 4 + 2 for the two wave writes (the first
-# builds the persisted routed frame and broadcasts the tools dictionary)
+# the input's schema inference, 3 + 3 for the two wave writes (each
+# broadcasts the tools dictionary, runs the pre-write exchange and writes;
+# nothing is persisted, so each wave scans and parses only its own rows)
 # and 5 for the two aggregates
 WARM_CALL_JOBS = 12
 

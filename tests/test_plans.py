@@ -106,6 +106,36 @@ def test_wave_plan_broadcasts_the_tools_dictionary_only(spark, tr_path):
     assert "role_group" not in plan, plan
 
 
+def test_wave_write_parses_each_row_once_without_cache(spark, tr_path):
+    """One wave's write plan, as run_pipeline builds it: one RLIKE and one
+    split per row, no regexp_extract (the routed store reads only
+    parsed.error and parsed.cents), nothing cached, and the wave's _bucket
+    filter directly on the scan, below the parse — each wave parses only
+    its own rows."""
+    from logstash_codec_protobuf_spark.config import CodecConfig
+    from logstash_codec_protobuf_spark.plans.pipeline import (
+        _routed_wave, _wave_frame)
+
+    cfg = CodecConfig()
+    routed = _routed_wave(spark, SF_DIR, cfg, 8, "native",
+                          transcripts_path=tr_path)
+    plan = _executed(_wave_frame(routed, [4, 5, 6, 7], cfg, 1))
+    assert plan.count("RLIKE") == 1, plan
+    assert plan.count("split(") == 1, plan
+    assert "regexp_extract" not in plan, plan
+    assert "InMemoryRelation" not in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
+    lines = [re.sub(r"^[\s:+\-|]*(\*\(\d+\) )?", "", line)
+             for line in plan.splitlines()]
+    at = [i for i, line in enumerate(lines) if line.startswith("Filter")
+          and "pmod(crc32(" in line]
+    assert len(at) == 1, plan
+    below = [line.split(" ")[0] for line in lines[at[0] + 1:at[0] + 3]
+             if not line.startswith("ColumnarToRow")]
+    assert below[0] == "FileScan", plan
+    assert all("RLIKE" not in line for line in lines[at[0]:]), plan
+
+
 def test_parse_scan_prunes_to_referenced_columns(spark, tr):
     """Selecting one parsed field must read ONLY `text` from parquet — the
     struct projection cannot force a full-row scan."""
@@ -168,6 +198,23 @@ def test_wire_decode_is_arrow_batched(spark, tr):
     assert plan.count("_decode_vec(") == 1, plan[:500]
     assert plan.count("turn_wire_encode_arrow(") == 1, plan[:500]
     assert "BatchEvalPython" not in plan
+
+
+def test_row_decode_over_encode_encodes_once(spark):
+    """decode_message(encode_message(v)) for a message the per-row decoder
+    serves (contact has a map) plans the encoder once. Both decoders are
+    iterator Arrow UDFs, which Spark does not chain into the scalar
+    encoder: a chain evaluates the inner UDF a second time per row."""
+    from logstash_codec_protobuf_spark.operators import pb_wire as PW
+
+    i = F.col("id")
+    enc = spark.range(3).select(PW.encode_message(F.struct(
+        F.concat(F.lit("c"), i.cast("string")).alias("name"),
+        F.create_map(F.lit("h"), i.cast("int")).alias("phone_numbers")),
+        "contact").alias("payload"))
+    plan = _executed(PW.decode_message(enc, "payload", "contact"))
+    assert plan.count("_encode(") == 1, plan
+    assert plan.count("_decode(") == 1, plan
 
 
 def test_segmented_sessionize_windows_on_segment_key(spark, tr):
@@ -379,8 +426,8 @@ def test_probe_repartition_balance_and_coverage(spark):
                   F.element_at(F.array(*[F.lit(s) for s in sinks]),
                                (F.col("id") % 5 + 1).cast("int"))
                   .alias("sink")))
-    sink_pos = F.array_position(
-        F.array(*[F.lit(s) for s in sinks]), F.col("sink")) - F.lit(1)
+    sink_pos = "array_position(array({}), sink) - 1".format(
+        ", ".join(f"'{s}'" for s in sinks))
     out = probe_repartition(df, n, sink_pos, len(sinks))
     sizes = (out.withColumn("pid", F.spark_partition_id())
              .groupBy("pid").count().collect())

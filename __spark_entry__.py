@@ -17,7 +17,7 @@ from logstash_codec_protobuf_spark import queries as Q
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query: vectorized decode -> broadcast enrich -> tag-based route,
+    """Flagship query: vectorized decode -> enrich lookups -> tag-based route,
     per-sink routed-row counts (incl. dead_letter)."""
     return Q.route_counts_q(spark, "/root/testdata/sf0.001")
 

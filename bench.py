@@ -106,8 +106,7 @@ def bench_queries(spark, sf_dir: str, rounds: int = ROUNDS
 
     def routed_counts(impl):
         def run():
-            routed = route_all(enrich(parse_turns(tr, impl=impl), spark,
-                                      tag_unknown=False))
+            routed = route_all(enrich(parse_turns(tr, impl=impl)))
             return routed.groupBy("sink").count().collect()
         return run
 
@@ -115,11 +114,10 @@ def bench_queries(spark, sf_dir: str, rounds: int = ROUNDS
         good, _ = split_dead_letter(parse_turns(tr, impl="native"))
         flat = good.select("conv_id", "turn_idx",
                            F.col("parsed")["cents"].alias("cents"))
-        return _consume(agg.conv_stats_salted(flat))
+        return _consume(agg.conv_stats(flat))
 
     def hourly_run():
-        routed = route_all(enrich(parse_turns(tr, impl="native"), spark,
-                                  tag_unknown=False))
+        routed = route_all(enrich(parse_turns(tr, impl="native")))
         return _consume(agg.hourly_stats(
             routed.filter(F.col("decoder_exception").isNull())))
 
@@ -223,7 +221,7 @@ def bench_queries(spark, sf_dir: str, rounds: int = ROUNDS
     cases = {
         "parse_route_native": routed_counts("native"),
         "parse_route_arrow": routed_counts("arrow"),
-        "conv_stats_salted": conv_stats_run,
+        "conv_stats": conv_stats_run,
         "hourly_stats": hourly_run,
         "encode_roundtrip": encode_run,
         "pb_wire_roundtrip": pb_wire_run,

@@ -28,7 +28,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 DEAD_LETTER_TAG = "_protobufdecodefailure"  # protobuf.rb:231
-TYPECONVERSION_TAG = "_protobuf_type_converted"  # protobuf.rb:168
 DEAD_LETTER_SINK = "dead_letter"
 
 
@@ -55,13 +54,6 @@ class CodecConfig:
     # malformed-bytes WIRE_ERROR, so pipelines can route/alert on them —
     # never a silent truncation. Raise it to widen the decoded lineage.
     max_recursion_depth: int = 3
-    # salting for hot-conversation skew (north_rule). Round 7: the
-    # PRE-WRITE repartitions no longer hash salted combos at all — that
-    # was a murmur3 lottery that measured as the whole 8->32 e2e scaling
-    # gap (BENCH/e2e_decompose_r7*.md) — they place combos on partitions
-    # deterministically via route.probe_repartition. These widths still
-    # salt the AGGREGATION paths (conv_stats two-phase etc.).
-    salt_buckets: int = 8
     sinks: tuple[str, ...] = field(
         default=("sink_a", "sink_b", "sink_c", "sink_d", DEAD_LETTER_SINK)
     )

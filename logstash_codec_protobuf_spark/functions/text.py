@@ -60,10 +60,6 @@ def stopword_ratio_raw(d: Dialect, lang: str = "en", text: str = "text") -> str:
     return f"(CAST({d.alen(hits)} AS DOUBLE) / {d.alen(toks)})"
 
 
-def stopword_ratio(d: Dialect, lang: str = "en", text: str = "text") -> str:
-    return d.trunc6(stopword_ratio_raw(d, lang, text))
-
-
 def quality_score(d: Dialect, text: str = "text") -> str:
     """Heuristic quality in [0,1]: alpha density + length saturation + stopword
     presence (the classic cheap pre-filter before expensive dedup)."""

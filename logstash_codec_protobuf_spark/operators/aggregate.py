@@ -5,49 +5,29 @@ per-conversation and per-sink aggregates over 10^12 turns. Everything here is
 native hash aggregation — Catalyst plans partial (map-side) + final agg
 automatically, so the shuffle carries only one row per (group, partition).
 
-Skew: `conv-hot` style conversations concentrate a large fraction of rows on one
-key. ``conv_stats_salted`` pre-aggregates on (conv_id, salt) — the hot key's
-work spreads over ``salt_buckets`` tasks — then combines the partials. The
-combine step moves #convs × #buckets tiny rows, not data. AQE's skew-join
-handling covers joins; agg skew needs this explicit two-phase shape.
+Skew: the planted hot conversation (~30% of rows) needs no salting for
+``conv_stats`` or ``hourly_stats``. Count, max and sum are algebraic, so the
+map-side partial aggregate already collapses a hot key to one row per map
+task before the one exchange. A salted two-phase rewrite only adds a second
+exchange: on 5M rows with 30% on one key it took about twice the wall and
+CPU time of the plain aggregate (ROADMAP direction 11). The windowed operators below are
+different: a window cannot pre-aggregate, so they segment the hot key.
+
+The aggregates are SQL text: each composed Column would cost py4j round
+trips per call, and these run on every ``run_pipeline`` call.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..config import CodecConfig
-
-_STATS = lambda: [  # noqa: E731
-    F.count(F.lit(1)).alias("n_turns"),
-    F.max("turn_idx").alias("max_turn"),
-    F.sum("cents").alias("sum_cents"),
-]
-
 
 def conv_stats(df: DataFrame) -> DataFrame:
-    """groupBy(conv_id) baseline — fine when no key dominates."""
-    return df.groupBy("conv_id").agg(*_STATS())
-
-
-def conv_stats_salted(df: DataFrame, cfg: CodecConfig | None = None) -> DataFrame:
-    """Two-phase salted aggregate, result-identical to ``conv_stats``.
-
-    Phase 1 groups on (conv_id, crc32(turn_idx) % buckets): the hot conversation
-    fans over `buckets` reducers. Phase 2 merges partials per conv_id —
-    count→sum, max→max, sum→sum (all algebraic, so the rewrite is exact).
-    """
-    cfg = cfg or CodecConfig()
-    salt = (F.crc32(F.col("turn_idx").cast("string")) % cfg.salt_buckets)
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy("conv_id", "_salt")
-        .agg(*_STATS())
-    )
-    return partial.groupBy("conv_id").agg(
-        F.sum("n_turns").alias("n_turns"),
-        F.max("max_turn").alias("max_turn"),
-        F.sum("sum_cents").alias("sum_cents"),
+    """Per-conversation turn count, last turn and cents total."""
+    return df.groupBy(F.expr("conv_id")).agg(
+        F.expr("count(1) AS n_turns"),
+        F.expr("max(turn_idx) AS max_turn"),
+        F.expr("sum(cents) AS sum_cents"),
     )
 
 
@@ -56,10 +36,9 @@ def hourly_stats(df: DataFrame) -> DataFrame:
 
     Uses date_trunc — semantically F.window(ts, '1 hour').start, but shared
     with the DuckDB oracle dialect."""
-    return (
-        df.groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("sink"))
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-    )
+    return df.groupBy(
+        F.expr("date_trunc('hour', ts) AS hour"), F.expr("sink"),
+    ).agg(F.expr("count(1) AS n_turns"))
 
 
 def turn_order_check(df: DataFrame) -> DataFrame:

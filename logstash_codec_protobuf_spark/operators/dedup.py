@@ -51,10 +51,6 @@ LSH_MAX_BUCKET = 1024
 _LOG = __import__("logging").getLogger(__name__)
 
 
-def exact_keys(d: Dialect, text: str = "text") -> str:
-    return f"md5({text})"
-
-
 def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact dedup: canonical id + copy count per content hash."""
     return (

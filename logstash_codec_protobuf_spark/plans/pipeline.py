@@ -1,9 +1,8 @@
 """The end-to-end job: parse -> enrich -> route -> aggregate, checkpointed.
 
-One logical plan per lineage wave; Catalyst fuses scan+parse+enrich (broadcast
-joins are shuffle-free) into a single stage, so the only exchanges are the
-explicit pre-route repartition and the aggregate shuffles — exactly the two the
-north star budgets for.
+One logical plan per lineage wave; Catalyst fuses scan+parse+enrich (the
+dictionary lookups are a projection, no join) into a single stage, so the
+only exchanges are the explicit pre-route repartition and one per aggregate.
 
 Each row's work is done once, and only the work the routed store keeps:
 
@@ -73,7 +72,7 @@ def _routed_wave(spark: SparkSession, sf_dir: str, cfg: CodecConfig,
 
     Nothing here is cached: ``_bucket`` is a function of the input's
     ``conv_id``, so a wave's filter on it is pushed down to the scan and
-    each wave parses, joins and routes only its own buckets' rows."""
+    each wave parses, enriches and routes only its own buckets' rows."""
     if transcripts_path is not None:
         tr = spark.read.parquet(transcripts_path)
     else:
@@ -87,9 +86,9 @@ def _routed_wave(spark: SparkSession, sf_dir: str, cfg: CodecConfig,
                 f"decode failed (stop_on_error): {first[0]['error']}"
                 f" on payload {first[0]['text']!r}"
             )
-    # route_all reads only tools.sink: the roles join would add a broadcast
-    # job per call and a hash probe per row for no written column
-    routed = route_all(join_tools(parsed, spark))
+    # route_all reads only tools.sink: the role lookups would add a map
+    # probe per row for no written column
+    routed = route_all(join_tools(parsed))
     return routed.withColumn(
         "_bucket", F.pmod(F.crc32(F.col("conv_id")), F.lit(n_buckets)).cast("int")
     )
@@ -249,7 +248,7 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
         sc.setJobDescription(f"run_pipeline: aggregate {name}")
         _parquet_writer(df).mode("overwrite").parquet(f"{out_dir}/{name}")
 
-    aggregates = {"conv_stats": agg.conv_stats_salted(good, cfg),
+    aggregates = {"conv_stats": agg.conv_stats(good),
                   "hourly_stats": agg.hourly_stats(good)}
     with ThreadPoolExecutor(max_workers=2) as pool:
         for f in [pool.submit(write_aggregate, name, df)

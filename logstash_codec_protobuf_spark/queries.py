@@ -212,7 +212,7 @@ def oneof_xor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# enrich (broadcast dictionary joins, generalizing protobuf.rb:654-657)
+# enrich (dictionary map lookups, generalizing protobuf.rb:654-657)
 # --------------------------------------------------------------------------
 
 @query(
@@ -230,7 +230,7 @@ WHERE t.event_id % 37 <> 0
 )
 def enrich_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat = _good_flat(spark, sf_dir)
-    return enrich(flat, spark, tag_unknown=False).select(
+    return enrich(flat).select(
         "conv_id", "turn_idx", "role", "role_group", "is_agent",
         "tool", "tool_family", "sink",
     )
@@ -254,10 +254,9 @@ SELECT sink, CAST(count(*) AS BIGINT) AS n_rows FROM (
 )
 def route_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-sink routed-row counts — the north star's headline invariant.
-    Single pass: parse -> broadcast enrich -> sink resolution -> hash agg."""
+    Single pass: parse -> enrich lookups -> sink resolution -> hash agg."""
     tr = transcripts_df(spark, sf_dir)
-    routed = route_all(enrich(parse_turns(tr, impl="native"), spark,
-                              tag_unknown=False))
+    routed = route_all(enrich(parse_turns(tr, impl="native")))
     return routed.groupBy("sink").agg(F.count(F.lit(1)).alias("n_rows"))
 
 
@@ -278,9 +277,9 @@ FROM _tr_num WHERE event_id % 37 <> 0 GROUP BY conv_key
     ),
 )
 def conv_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-phase per-conversation aggregate (hot-conv skew defusal);
-    result-identical to plain groupBy."""
-    return agg.conv_stats_salted(_good_flat(spark, sf_dir))
+    """Per-conversation aggregate: one partial/final hash aggregate, whose
+    map-side partials collapse the hot conversation before the shuffle."""
+    return agg.conv_stats(_good_flat(spark, sf_dir))
 
 
 @query(
@@ -300,7 +299,7 @@ def hourly_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-hour windowed aggregate per sink (batch twin of the streaming
     window)."""
     flat = _good_flat(spark, sf_dir)
-    enriched = assign_sink(enrich(flat, spark, tag_unknown=False))
+    enriched = assign_sink(enrich(flat))
     return agg.hourly_stats(enriched).withColumn(
         "hour", F.col("hour").cast("string")
     )
@@ -321,7 +320,7 @@ GROUP BY 1, 2
 )
 def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRUCTURED STREAMING end to end, oracle-checked: the same batch
-    operators (parse -> broadcast enrich -> route) over readStream
+    operators (parse -> enrich -> route) over readStream
     micro-batches, tumbling-hour window counts per sink, drained
     deterministically with availableNow into a complete-mode memory sink —
     so the unbounded plan's final answer is comparable row-for-row with the
@@ -340,9 +339,7 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = tempfile.mkdtemp(prefix="q_stream_tr_")
     try:
         transcripts_df(spark, sf_dir).write.mode("overwrite").parquet(stage)
-        routed = streaming_parse_route(
-            read_transcript_stream(spark, stage), spark
-        )
+        routed = streaming_parse_route(read_transcript_stream(spark, stage))
         counts = (
             routed.groupBy(F.window("ts", "1 hour").alias("win"),
                            F.col("sink"))
@@ -2246,7 +2243,7 @@ GROUP BY r.role
 def role_sink_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: routed-row counts as a role x sink matrix (groupBy().pivot())."""
     flat = _good_flat(spark, sf_dir)
-    enriched = enrich(flat, spark, tag_unknown=False)
+    enriched = enrich(flat)
     return (
         enriched.groupBy("role")
         .pivot("sink", ["sink_a", "sink_b", "sink_c", "sink_d"])

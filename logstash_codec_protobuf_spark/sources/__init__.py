@@ -1,3 +1,3 @@
 from .tables import load_table, register_views  # noqa: F401
 from .transcripts import TRANSCRIPTS_CTE, transcripts_df  # noqa: F401
-from .dims import roles_df, tools_df, enums_df, ROLES_SQL, TOOLS_SQL, ENUMS_SQL  # noqa: F401
+from .dims import enums_df, ROLES_SQL, TOOLS_SQL, ENUMS_SQL  # noqa: F401

@@ -11,8 +11,8 @@ by construction.
 
 Properties engineered in:
 - **Skew**: all users with ``user_id % 10 < 3`` collapse into one hot conversation
-  (`conv-hot`, ~30% of rows) — exercises the north_rule's hot-conversation
-  salting / skew handling.
+  (`conv-hot`, ~30% of rows) — exercises the hot-key handling of the
+  pre-write repartition and the segmented windows.
 - **Malformed payloads**: every 37th event carries an unparseable `text` →
   dead-letter route (protobuf.rb:229-233, untested in the reference; FIXTURES.md §4).
 - **Stable turn ordering**: ``turn_idx`` = row_number over (conv, ts, event_id) —
@@ -104,44 +104,3 @@ def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql(TRANSCRIPTS_SQL)
-
-
-def replicated_transcripts(spark: SparkSession, sf_dir: str,
-                           factor: int = 10, parts: int | None = None
-                           ) -> DataFrame:
-    """Deterministic scale-up of the transcripts table for benchmarking:
-    each conversation is cloned `factor` times under a replica-suffixed
-    conv_id, preserving per-conversation structure (turn counts, skew shape,
-    malformed fraction). Used to make the scaling-efficiency measurement
-    compute-bound instead of overhead-bound.
-
-    The BASE is repartitioned to ``parts`` BEFORE the explode: the source
-    table is tiny (a handful of scan splits), so without this the 1->factor
-    explode — the expensive map stage at factor>=1000 — runs on those few
-    splits' tasks and strands the other cores. Repartitioning the small
-    side costs a shuffle of base rows only, never of the exploded output."""
-    tr = transcripts_df(spark, sf_dir)
-    from pyspark.sql import functions as F
-
-    tr = tr.repartition(parts if parts is not None
-                        else max(32, min(256, factor // 4)))
-    reps = F.explode(F.sequence(F.lit(0), F.lit(factor - 1))).alias("_rep")
-    return (
-        tr.select("*", reps)
-        .withColumn("conv_id", F.concat_ws("-r", F.col("conv_id"),
-                                           F.col("_rep").cast("string")))
-        .withColumn(
-            "text",
-            F.when(F.col("text").startswith("PB3|conv="),
-                   F.concat(F.lit("PB3|conv="), F.col("conv_id"),
-                            F.regexp_replace(F.col("text"),
-                                             r"^PB3\|conv=[^|]*", "")))
-            .otherwise(F.col("text")),
-        )
-        .drop("_rep")
-    )
-
-
-def oracle_with_transcripts(body: str) -> str:
-    """Wrap an oracle SQL body so `transcripts` is available as a CTE in DuckDB."""
-    return f"WITH {TRANSCRIPTS_CTE}\n{body}"

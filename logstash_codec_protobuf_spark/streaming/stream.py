@@ -40,11 +40,10 @@ def read_transcript_stream(spark: SparkSession, source_dir: str,
     )
 
 
-def streaming_parse_route(stream: DataFrame, spark: SparkSession,
+def streaming_parse_route(stream: DataFrame,
                           cfg: CodecConfig | None = None) -> DataFrame:
     """The batch operators, unchanged, over an unbounded frame."""
-    return route_all(join_tools(parse_turns(stream, cfg, impl="native"),
-                                spark))
+    return route_all(join_tools(parse_turns(stream, cfg, impl="native")))
 
 
 def streaming_windowed_counts(routed: DataFrame, window: str = "1 hour",
@@ -163,7 +162,7 @@ def run_stream_to_sinks(spark: SparkSession, source_dir: str, out_dir: str,
     batch engine's parquet codec, with streaming checkpointing (resume =
     restart with the same checkpoint dir)."""
     routed = streaming_parse_route(read_transcript_stream(spark, source_dir),
-                                   spark, cfg)
+                                   cfg)
     return (
         routed.writeStream
         .option("checkpointLocation", f"{out_dir}/_checkpoint")

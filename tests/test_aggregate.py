@@ -20,14 +20,6 @@ def _flat(spark):
     )
 
 
-def test_salted_agg_equals_plain(spark):
-    """Two-phase salted aggregate must be result-identical to groupBy."""
-    flat = _flat(spark)
-    plain = agg.conv_stats(flat)
-    salted = agg.conv_stats_salted(flat)
-    assert plain.exceptAll(salted).isEmpty() and salted.exceptAll(plain).isEmpty()
-
-
 def test_hot_conversation_exists(spark):
     """The synthetic input must actually exercise skew: one conv >= 25% of rows."""
     flat = _flat(spark)

@@ -83,7 +83,7 @@ def test_pipeline_plans_fit_jit_limit(spark, tmp_path):
         F.col("sink") != DEAD_LETTER_SINK)
     builds = {
         "wave": lambda: _routed_wave(spark, SF_DIR, cfg, 8, "native"),
-        "conv_stats": lambda: agg.conv_stats_salted(good, cfg),
+        "conv_stats": lambda: agg.conv_stats(good),
         "hourly_stats": lambda: agg.hourly_stats(good),
     }
     sizes = {k: max_method_code_size(spark, b) for k, b in builds.items()}

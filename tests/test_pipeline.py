@@ -219,11 +219,13 @@ def test_engine_writes_zstd_over_a_snappy_session_default(spark, tmp_path):
 
 
 # jobs of one warm call over staged transcripts, 8 buckets in two waves:
-# the input's schema inference, 3 + 3 for the two wave writes (each
-# broadcasts the tools dictionary, runs the pre-write exchange and writes;
-# nothing is persisted, so each wave scans and parses only its own rows)
-# and 5 for the two aggregates
-WARM_CALL_JOBS = 12
+# the input's schema inference, 2 + 2 for the two wave writes (each runs
+# the pre-write exchange and writes; the dictionaries are map lookups, so
+# no broadcast job, and nothing is persisted, so each wave scans and parses
+# only its own rows) and 2 + 2 for the two aggregates (each a map-side
+# partial aggregate feeding its one exchange, then the final aggregate's
+# write)
+WARM_CALL_JOBS = 9
 
 
 def test_warm_call_job_budget(spark, tmp_path):

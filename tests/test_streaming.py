@@ -55,7 +55,7 @@ def test_windowed_counts_under_watermark(spark, tmp_path):
     """Tumbling-hour counts per sink from the stream equal the batch
     hourly aggregation."""
     src = _staged_transcripts(spark, tmp_path)
-    routed = streaming_parse_route(read_transcript_stream(spark, src), spark)
+    routed = streaming_parse_route(read_transcript_stream(spark, src))
     win = streaming_windowed_counts(routed, window="1 hour", watermark="2 hours")
     q = (
         win.writeStream.format("memory").queryName("win_counts")
@@ -74,9 +74,7 @@ def test_windowed_counts_under_watermark(spark, tmp_path):
     from logstash_codec_protobuf_spark.operators.parse import parse_turns
     from logstash_codec_protobuf_spark.operators.route import route_all
 
-    batch = route_all(
-        enrich(parse_turns(spark.read.parquet(src)), spark, tag_unknown=False)
-    )
+    batch = route_all(enrich(parse_turns(spark.read.parquet(src))))
     expected = {
         (str(r["h"]), r["sink"]): r["n"]
         for r in batch.groupBy(

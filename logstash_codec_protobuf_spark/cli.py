@@ -47,16 +47,25 @@ def main(argv: list[str] | None = None) -> dict:
                    help="lineage buckets (resume granularity)")
     p.add_argument("--wave-size", type=int, default=16,
                    help="buckets committed per wave")
-    p.add_argument("--impl", choices=["native", "arrow"], default="native",
-                   help="parse implementation")
-    p.add_argument("--stop-on-error", action="store_true")
-    p.add_argument("--proto-version", type=int, choices=[2, 3], default=3)
+    p.add_argument("--stop-on-error", action="store_true",
+                   help="batch mode: raise on the first payload that does "
+                        "not parse instead of routing it to dead_letter")
     p.add_argument("--streaming", action="store_true",
                    help="run the Structured Streaming fan-out twin over "
                         "--transcripts-path (availableNow drain; re-running "
                         "with the same --out resumes from the streaming "
                         "checkpoint and reprocesses nothing)")
     args = p.parse_args(argv)
+    # refuse a combination before any session is built
+    if args.streaming:
+        if args.stop_on_error:
+            p.error("--stop-on-error is batch-only: the streaming twin "
+                    "routes every failed parse to dead_letter")
+        if not args.transcripts_path:
+            p.error("--streaming requires --transcripts-path "
+                    "(a transcripts parquet directory to stream from)")
+    elif not args.sf_dir:
+        p.error("--sf-dir is required in batch mode")
 
     # absolute imports: under `spark-submit cli.py` the file runs as a
     # parentless __main__ script (relative imports raise ImportError); the
@@ -64,33 +73,26 @@ def main(argv: list[str] | None = None) -> dict:
     from logstash_codec_protobuf_spark.config import CodecConfig
     from logstash_codec_protobuf_spark.plans.pipeline import run_pipeline
 
-    cfg = CodecConfig(stop_on_error=args.stop_on_error,
-                      proto_version=args.proto_version)
     from pyspark.sql import SparkSession
 
     existing = SparkSession.getActiveSession()
     spark = existing or build_session()
     try:
         if args.streaming:
-            if not args.transcripts_path:
-                p.error("--streaming requires --transcripts-path "
-                        "(a transcripts parquet directory to stream from)")
             from logstash_codec_protobuf_spark.streaming.stream import (
                 run_stream_to_sinks)
 
-            q = run_stream_to_sinks(spark, args.transcripts_path,
-                                    args.out, cfg)
+            q = run_stream_to_sinks(spark, args.transcripts_path, args.out)
             q.awaitTermination()
             rows = spark.read.parquet(f"{args.out}/routed").count()
             result = {"streaming": True, "rows": int(rows),
                       "out_dir": args.out}
         else:
-            if not args.sf_dir:
-                p.error("--sf-dir is required in batch mode")
             result = run_pipeline(
-                spark, args.sf_dir, args.out, cfg,
+                spark, args.sf_dir, args.out,
+                CodecConfig(stop_on_error=args.stop_on_error),
                 n_buckets=args.buckets, wave_size=args.wave_size,
-                impl=args.impl, transcripts_path=args.transcripts_path,
+                transcripts_path=args.transcripts_path,
             )
         print(json.dumps(result))
         return result

@@ -1,10 +1,9 @@
 """Pipeline configuration.
 
-Mirrors the reference codec's 8 config knobs
-(/root/reference/lib/logstash/codecs/protobuf.rb:87-154) re-expressed for a
-columnar engine:
+Re-expresses the reference codec's config knobs
+(lib/logstash/codecs/protobuf.rb:87-154) for a columnar
+engine. Four of them are ``CodecConfig`` fields:
 
-- ``class_name``        -> ``message``: which registered message spec parses `text`
 - ``protobuf_version``  -> ``proto_version``: 2 => enums stay ints, strict encode
                            errors (protobuf.rb:633-643); 3 => enums symbolize to
                            names, lenient encode with dead-letter (protobuf.rb:376-402)
@@ -21,11 +20,21 @@ columnar engine:
                            dead-letter / strict raise, protobuf.rb:410-420)
                            instead of converting; exact-type values still
                            encode (spec/codecs/pb3_encode_spec.rb:180-207).
+
+The others have no field. ``class_file``, ``include_path`` and
+``protobuf_root_directory`` are the parameters of ``schema.register_codec``,
+which loads message specs into a registry. ``class_name`` picks the message
+a payload parses as: the pipeline parses one message format
+(``operators.parse``), and the wire codec takes the message per call
+(``pb_wire.decode_message``). The reference's recursive walk has no nesting
+bound; the engine's, for self-referencing messages, is the constant
+``pb_wire.MAX_RECURSION_DEPTH``, because a columnar output schema has a
+fixed depth.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 DEAD_LETTER_TAG = "_protobufdecodefailure"  # protobuf.rb:231
 DEAD_LETTER_SINK = "dead_letter"
@@ -39,7 +48,6 @@ def sql_str(s: str) -> str:
 
 @dataclass(frozen=True)
 class CodecConfig:
-    message: str = "turn_payload"
     proto_version: int = 3
     stop_on_error: bool = False
     set_oneof_metainfo: bool = False  # reference default (protobuf.rb:110-116)
@@ -47,13 +55,3 @@ class CodecConfig:
     # False = mismatched-type leaves are type errors (null -> dead-letter /
     # strict raise), never conversions; exact-type values still encode
     encoder_autoconvert_types: bool = True
-    # Nesting bound for SELF-REFERENCING messages (human.pb.rb:16-17; the
-    # reference's recursive walk protobuf.rb:287-336 is unbounded, but a
-    # columnar output schema has a fixed depth). Payloads nested deeper than
-    # this dead-letter LOUDLY with pb_wire.DEPTH_ERROR — a distinct tag from
-    # malformed-bytes WIRE_ERROR, so pipelines can route/alert on them —
-    # never a silent truncation. Raise it to widen the decoded lineage.
-    max_recursion_depth: int = 3
-    sinks: tuple[str, ...] = field(
-        default=("sink_a", "sink_b", "sink_c", "sink_d", DEAD_LETTER_SINK)
-    )

@@ -1,10 +1,11 @@
 """Compile a SchemaRegistry to a protobuf FileDescriptorSet (binary).
 
-This is the bridge that lets the engine swap its Arrow-batch wire decoder for
-Spark's JVM-native ``from_protobuf``/``to_protobuf`` (the spark-protobuf
-module) when the jar is on the cluster classpath: those functions accept a
-``binaryDescriptorSet`` — the serialized ``google.protobuf.FileDescriptorSet``
-a ``protoc --descriptor_set_out`` run produces.
+This is what the JVM decoder, ``decode_message(impl='jvm_dynamic')``,
+parses against: the vendored ``WireDecodeRow`` builds a protobuf-java
+``DynamicMessage`` descriptor from the serialized
+``google.protobuf.FileDescriptorSet`` — the bytes a ``protoc
+--descriptor_set_out`` run produces, and the ``binaryDescriptorSet`` that
+spark-protobuf's ``from_protobuf`` takes.
 
 The sandbox ships neither protoc nor the protobuf Python package, so the
 descriptor set is serialized with the engine's OWN wire encoder
@@ -24,7 +25,7 @@ below are from the published google/protobuf/descriptor.proto:
 The reference plugin solves the same problem one layer up: it loads compiled
 ``_pb.rb`` descriptor classes into the Google::Protobuf descriptor pool
 (protobuf.rb:164-199); this module is that compilation step, targeting
-Spark's descriptor-set entry point instead of a Ruby VM.
+a JVM descriptor-set entry point instead of a Ruby VM.
 
 ``map<k,v>`` fields compile to the canonical protoc lowering: a synthetic
 nested ``<FieldName>Entry`` message (key=1, value=2) with
@@ -49,6 +50,10 @@ _LABEL_OPTIONAL = 1
 _LABEL_REPEATED = 3
 _TYPE_ENUM = 14
 _TYPE_MESSAGE = 11
+# the set is one proto3 file, all messages and enums in one package; the
+# pb2 dialect differs only in enum passthrough (pb_wire._jvm_wire_cfg)
+PACKAGE = "sparkgraft"
+SYNTAX = "proto3"
 
 
 def _entry_name(field_name: str) -> str:
@@ -62,7 +67,7 @@ def _map_kv(ftype: str) -> tuple[str, str]:
 
 
 def _field_descriptor(spec_field, number: int, oneof_index: int | None,
-                      package: str, msg_name: str = "") -> bytes:
+                      msg_name: str = "") -> bytes:
     f = spec_field
     buf = py_field_string(1, f.name)
     buf += py_field_varint(3, number)
@@ -74,14 +79,14 @@ def _field_descriptor(spec_field, number: int, oneof_index: int | None,
         buf += py_field_varint(5, _TYPE_CODES[f.type])
     elif f.type.startswith("enum:"):
         buf += py_field_varint(5, _TYPE_ENUM)
-        buf += py_field_string(6, f".{package}.{f.type[5:]}")
+        buf += py_field_string(6, f".{PACKAGE}.{f.type[5:]}")
     elif f.type.startswith("message:"):
         buf += py_field_varint(5, _TYPE_MESSAGE)
-        buf += py_field_string(6, f".{package}.{f.type[8:]}")
+        buf += py_field_string(6, f".{PACKAGE}.{f.type[8:]}")
     elif is_map:
         buf += py_field_varint(5, _TYPE_MESSAGE)
         buf += py_field_string(
-            6, f".{package}.{msg_name}.{_entry_name(f.name)}")
+            6, f".{PACKAGE}.{msg_name}.{_entry_name(f.name)}")
     else:
         raise ValueError(f"descriptor set: unsupported field type {f.type}")
     if oneof_index is not None:
@@ -92,7 +97,7 @@ def _field_descriptor(spec_field, number: int, oneof_index: int | None,
     return buf
 
 
-def _map_entry_descriptor(f, package: str) -> bytes:
+def _map_entry_descriptor(f) -> bytes:
     """The synthetic nested DescriptorProto protoc lowers a map field to:
     message <Name>Entry { options.map_entry = true; K key = 1; V value = 2 }
     """
@@ -107,10 +112,10 @@ def _map_entry_descriptor(f, package: str) -> bytes:
             fb += py_field_varint(5, _TYPE_CODES[ftype])
         elif ftype.startswith("enum:"):
             fb += py_field_varint(5, _TYPE_ENUM)
-            fb += py_field_string(6, f".{package}.{ftype[5:]}")
+            fb += py_field_string(6, f".{PACKAGE}.{ftype[5:]}")
         elif ftype.startswith("message:"):
             fb += py_field_varint(5, _TYPE_MESSAGE)
-            fb += py_field_string(6, f".{package}.{ftype[8:]}")
+            fb += py_field_string(6, f".{PACKAGE}.{ftype[8:]}")
         else:
             raise ValueError(f"descriptor set: unsupported map type {ftype}")
         fb += py_field_string(10, fname)  # json_name
@@ -120,7 +125,7 @@ def _map_entry_descriptor(f, package: str) -> bytes:
     return buf
 
 
-def _message_descriptor(msg: MessageSpec, package: str) -> bytes:
+def _message_descriptor(msg: MessageSpec) -> bytes:
     groups: list[str] = []
     for f in msg.fields:
         if f.oneof and f.oneof not in groups:
@@ -129,9 +134,9 @@ def _message_descriptor(msg: MessageSpec, package: str) -> bytes:
     for num, f in msg.wire_fields():
         idx = groups.index(f.oneof) if f.oneof else None
         buf += py_field_len(
-            2, _field_descriptor(f, num, idx, package, msg.name))
+            2, _field_descriptor(f, num, idx, msg.name))
         if f.type.startswith("map<"):  # nested_type = 3
-            buf += py_field_len(3, _map_entry_descriptor(f, package))
+            buf += py_field_len(3, _map_entry_descriptor(f))
     for g in groups:
         buf += py_field_len(8, py_field_string(1, g))
     return buf
@@ -146,11 +151,10 @@ def _enum_descriptor(name: str, values: dict[int, str]) -> bytes:
 
 
 def descriptor_set_bytes(registry: SchemaRegistry,
-                         messages: list[str] | None = None,
-                         package: str = "sparkgraft",
-                         syntax: str = "proto3") -> bytes:
+                         messages: list[str] | None = None) -> bytes:
     """Serialize (a subset of) the registry as a binary FileDescriptorSet —
-    the ``binaryDescriptorSet`` argument of ``from_protobuf``."""
+    the ``binaryDescriptorSet`` of ``from_protobuf``, which the
+    ``jvm_dynamic`` decoder parses too."""
     names = list(messages) if messages is not None else sorted(registry.messages)
     # Transitively close over message-typed fields: a type_name reference to
     # a message absent from the set is unresolvable on the JVM from_protobuf
@@ -173,18 +177,18 @@ def descriptor_set_bytes(registry: SchemaRegistry,
                     seen.add(dep)
                     names.append(dep)
                     frontier.append(dep)
-    file_proto = py_field_string(1, f"{package}.proto")
-    file_proto += py_field_string(2, package)
+    file_proto = py_field_string(1, f"{PACKAGE}.proto")
+    file_proto += py_field_string(2, PACKAGE)
     enums_needed: list[str] = []
     for m in names:
         spec = registry.messages[m]
         for f in spec.fields:
             if f.type.startswith("enum:") and f.type[5:] not in enums_needed:
                 enums_needed.append(f.type[5:])
-        file_proto += py_field_len(4, _message_descriptor(spec, package))
+        file_proto += py_field_len(4, _message_descriptor(spec))
     for e in enums_needed:
         file_proto += py_field_len(
             5, _enum_descriptor(e, registry.enums[e].values)
         )
-    file_proto += py_field_string(12, syntax)
+    file_proto += py_field_string(12, SYNTAX)
     return py_field_len(1, file_proto)

@@ -23,8 +23,9 @@ from ..sources.dims import ROLE_LOOKUPS, TOOL_LOOKUPS
 def enrich(df: DataFrame, spark: SparkSession | None = None,
            tag_unknown: bool = False) -> DataFrame:
     """Adds `tool_family` and `sink` (by `tool`), `role_group` and
-    `is_agent` (by `role`). ``spark`` is unused; ``tag_unknown=True`` is no
-    longer supported."""
+    `is_agent` (by `role`). ``spark`` is unused and ``tag_unknown=True``
+    raises; both stay in the signature because the benchmark's traced
+    replay (``perfbench/workloads.py``) passes them."""
     if tag_unknown:
         raise ValueError("enrich no longer tags unknown keys")
     return df.selectExpr("*", *TOOL_LOOKUPS, *ROLE_LOOKUPS)

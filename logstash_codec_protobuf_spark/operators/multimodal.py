@@ -9,12 +9,11 @@ Real, stdlib-only decoders cover the formats that don't need codec
 libraries: RGB8 PNG (zlib + all five defilters), 24-bit BMP, P6 PPM
 (``decode_image_pure``) and RIFF/PCM16 WAV audio (``decode_audio_pure``) —
 each with planted payloads and closed-form oracles. Codec-bound formats
-(JPEG/MP3/AAC/video) stay gated: ``decode_image`` raises
-NotImplementedError unless PIL is importable, and the default feature
-extractor computes deterministic fake features (byte length, prefix
-checksum, derived width/height). Either way the Spark-side plumbing —
-schema, Arrow batch iteration, partitioning — is real and tested, and the
-fake features are reproducible in SQL, giving the plumbing an exact oracle.
+(JPEG/MP3/AAC/video) have no decoder here: the feature extractor and the
+resize planner compute deterministic stand-in features (byte length, prefix
+checksum, derived width/height). The Spark-side plumbing — schema, Arrow
+batch iteration, partitioning — is real and tested, and the stand-in
+features are reproducible in SQL, giving the plumbing an exact oracle.
 """
 
 from __future__ import annotations
@@ -35,24 +34,6 @@ FEATURE_SCHEMA = T.StructType([
     T.StructField("height", T.IntegerType()),
 ])
 
-try:  # real decoders, if the environment has them
-    from PIL import Image  # noqa: F401
-    HAS_PIL = True
-except ImportError:
-    HAS_PIL = False
-
-
-def decode_image(payload: bytes):
-    """Real image decode — gated on an optional dependency."""
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL; this environment ships without image "
-            "libraries — use extract_features (deterministic stub) instead"
-        )
-    import io
-    return Image.open(io.BytesIO(payload))
-
-
 def _prefix_checksum(payload: bytes, n: int = 16) -> int:
     acc = 0
     for byte in payload[:n]:
@@ -69,51 +50,29 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, batch_hint: int | None = None,
-                     real_decode: bool = False) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    ``real_decode=True`` (requires PIL; callers opt in when payloads hold
-    real image bytes) decodes each payload and reports actual pixel
-    dimensions; the default computes deterministic stub features — n_bytes,
-    16-byte prefix polynomial checksum, width/height derived from both.
-    Either way the Spark plumbing — mapInPandas Arrow batches, schema,
-    partition-preserving 1:1 shape — is identical; the stub keeps an exact
-    SQL oracle (features_oracle)."""
-
-    def _stub_row(pdf: pd.DataFrame) -> pd.DataFrame:
-        payloads = pdf["payload"]
-        n_bytes = payloads.map(len)
-        checksum = payloads.map(_prefix_checksum)
-        return pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "media_type": pdf["media_type"],
-            "n_bytes": n_bytes.astype("int64"),
-            "checksum": pd.Series(checksum, dtype="int64"),
-            "width": (64 + n_bytes % 512).astype("int32"),
-            "height": (64 + pd.Series(checksum) % 512).astype("int32"),
-        })
+def extract_features(media: DataFrame) -> DataFrame:
+    """Arrow-batched feature extraction over binary payloads:
+    deterministic stub features — n_bytes, 16-byte prefix polynomial
+    checksum, width/height derived from both — through the real Spark
+    plumbing (mapInPandas Arrow batches, schema, partition-preserving 1:1
+    shape), with an exact SQL oracle (features_oracle). Real pixel
+    dimensions come from ``decode_images``."""
 
     def _stub_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield _stub_row(pdf)
+            payloads = pdf["payload"]
+            n_bytes = payloads.map(len)
+            checksum = payloads.map(_prefix_checksum)
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"],
+                "media_type": pdf["media_type"],
+                "n_bytes": n_bytes.astype("int64"),
+                "checksum": pd.Series(checksum, dtype="int64"),
+                "width": (64 + n_bytes % 512).astype("int32"),
+                "height": (64 + pd.Series(checksum) % 512).astype("int32"),
+            })
 
-    def _pil_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = _stub_row(pdf)
-            widths, heights = [], []
-            for p in pdf["payload"]:
-                img = decode_image(bytes(p))
-                widths.append(img.width)
-                heights.append(img.height)
-            out["width"] = pd.Series(widths, dtype="int32")
-            out["height"] = pd.Series(heights, dtype="int32")
-            yield out
-
-    if real_decode and not HAS_PIL:
-        raise NotImplementedError("real_decode=True requires PIL")
-    fn = _pil_batch if real_decode else _stub_batch
-    return media.mapInPandas(fn, FEATURE_SCHEMA)
+    return media.mapInPandas(_stub_batch, FEATURE_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType([
@@ -190,29 +149,22 @@ RESIZE_SCHEMA = T.StructType([
 ])
 
 
-def resize_images(media: DataFrame, max_side: int = 128,
-                  real_decode: bool = False) -> DataFrame:
+def resize_images(media: DataFrame, max_side: int = 128) -> DataFrame:
     """Aspect-preserving resize planning over binary payloads: compute the
     target (out_width, out_height) that fits ``max_side`` — the metadata
-    half of an image-resize stage, over the stub dimensions (or real PIL
-    dimensions + actual resample when ``real_decode``). The scale factor is
-    reported in integer parts-per-million so the oracle is exact (a double
-    ratio column would be fine too — this keeps it integral)."""
-    if real_decode and not HAS_PIL:
-        raise NotImplementedError("real_decode=True requires PIL")
+    half of an image-resize stage, over the stub dimensions
+    (``resize_images_real`` decodes and resamples real images). The scale
+    factor is reported in integer parts-per-million so the oracle is exact
+    (a double ratio column would be fine too — this keeps it integral)."""
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 buf = bytes(payload)
-                if real_decode:  # pragma: no cover - needs PIL
-                    img = decode_image(buf)
-                    w, h = img.width, img.height
-                else:
-                    n = len(buf)
-                    c = _prefix_checksum(buf)
-                    w, h = 64 + n % 512, 64 + c % 512
+                n = len(buf)
+                c = _prefix_checksum(buf)
+                w, h = 64 + n % 512, 64 + c % 512
                 scale_ppm = min(max_side * 1_000_000 // max(w, h), 1_000_000)
                 ow = w * scale_ppm // 1_000_000
                 oh = h * scale_ppm // 1_000_000
@@ -258,10 +210,10 @@ FROM documents
 # ---------------------------------------------------------------------------
 # REAL image decode, in-sandbox (round-5 verdict item 6): pure-Python/numpy
 # decoders for two uncompressed container formats — 24-bit BI_RGB BMP and
-# binary PPM (P6). No PIL needed; compressed formats (PNG/JPEG) stay behind
-# the PIL gate above. This makes `real` decode executable end-to-end in the
-# jar-less, lib-less sandbox: real headers, real row padding, real
-# bottom-up BMP scanline order — with an exact closed-form oracle.
+# binary PPM (P6), with no image library. This makes `real` decode
+# executable end-to-end without codec libraries: real headers, real row
+# padding, real bottom-up BMP scanline order — with an exact closed-form
+# oracle.
 # ---------------------------------------------------------------------------
 
 import numpy as np
@@ -387,8 +339,8 @@ def encode_ppm(width: int, height: int, pixel_bytes: bytes) -> bytes:
 # CRC verification, IHDR validation, IDAT inflate, and all five scanline
 # defilters (None/Sub/Up/Average/Paeth). The planted writer applies a
 # DIFFERENT filter per row (y % 5) so the decoder's defilter math is
-# exercised end-to-end, not just filter-0 passthrough. JPEG (DCT) stays
-# PIL-gated — there is no stdlib inverse DCT.
+# exercised end-to-end, not just filter-0 passthrough. JPEG (DCT) has no
+# decoder — there is no stdlib inverse DCT.
 # ---------------------------------------------------------------------------
 
 import struct as _struct

@@ -18,11 +18,10 @@ registry spec drives both directions.
   flat_encode``: numpy varints, Arrow string buffers), and
   ``functions.wire`` renders the same bytes as portable SQL, which DuckDB
   runs as the bit-exact oracle. ``decode_turn_wire`` is ``decode_message``
-  over turn_wire, or JVM-native ``from_protobuf`` (zero Python workers)
-  when the spark-protobuf jar is on the classpath.
-- ``impl='jvm_dynamic'`` decodes JVM-side without that jar: a vendored
-  Java UDF parses with the protobuf-java runtime the Spark Connect jar
-  ships shaded.
+  over turn_wire.
+- ``impl='jvm_dynamic'`` decodes JVM-side (zero Python workers): a
+  vendored Java UDF parses with the protobuf-java runtime the Spark
+  Connect jar ships shaded, so no spark-protobuf jar is needed.
 
 Wire parser semantics mirrored from the reference:
 - unknown fields are skipped by wire type (forward compatibility),
@@ -64,13 +63,14 @@ from ..functions.wire import (
 from ..schema import SchemaRegistry, default_registry
 
 WIRE_ERROR = "payload does not match pb3 wire format"
-# Distinct dead-letter tag for recursive messages that exceed the configured
-# nesting bound (config.max_recursion_depth). The reference's recursion is
-# unbounded (spec/helpers/pb2/human.pb.rb:16-17 self-referencing Human;
+# Nested message levels below the root that decode_message unrolls for a
+# SELF-REFERENCING message. The reference's recursion is unbounded
+# (spec/helpers/pb2/human.pb.rb:16-17 self-referencing Human;
 # protobuf.rb:287-336 recursive walk); a columnar engine must bound the
-# OUTPUT SCHEMA depth, so deeper payloads dead-letter LOUDLY under their own
-# tag — routable separately from malformed bytes — instead of erroring as
-# generic wire garbage or truncating silently.
+# OUTPUT SCHEMA depth. A deeper payload dead-letters LOUDLY under its own
+# tag, DEPTH_ERROR — routable separately from malformed bytes — instead of
+# erroring as generic wire garbage or truncating silently.
+MAX_RECURSION_DEPTH = 3
 DEPTH_ERROR = "message nesting exceeds max_recursion_depth"
 
 _VARINT_TYPES = {"int32", "int64", "uint32", "uint64", "sint32", "sint64",
@@ -202,12 +202,13 @@ def _decode_plan(registry: SchemaRegistry, message: str, proto_version: int
 
 
 def py_decode(buf: bytes, registry: SchemaRegistry, message: str,
-              proto_version: int = 3, depth: int = 4) -> dict:
+              proto_version: int = 3,
+              depth: int = MAX_RECURSION_DEPTH + 1) -> dict:
     """bytes -> dict per the registered message spec (pb3_to_hash semantics,
     protobuf.rb:287-336). Raises ValueError(WIRE_ERROR) on malformed input;
     ValueError(DEPTH_ERROR) when nesting exceeds the depth budget (``depth``
-    counts message levels INCLUDING the root, so ``depth =
-    max_recursion_depth + 1`` allows max_recursion_depth nested levels)."""
+    counts message levels INCLUDING the root, so ``depth = n + 1`` allows
+    n nested levels; the default is ``decode_message``'s bound)."""
     if depth <= 0:
         raise ValueError(DEPTH_ERROR)
     by_num, base, ctors = _decode_plan(registry, message, proto_version)
@@ -825,7 +826,8 @@ def decoded_schema(registry: SchemaRegistry, message: str,
     ``map<k,v>`` fields as ``array<struct<key,value>>`` in first-seen key
     order — then one ``oneof_<group>`` string slot per oneof.
 
-    ``depth`` is ``max_recursion_depth``: message fields more than
+    ``depth`` is a nesting bound (``decode_message`` passes
+    ``MAX_RECURSION_DEPTH``): message fields more than
     ``depth`` levels below the root are dropped, which gives the recursive
     ``unicorn`` and ``human`` a finite shape (``py_decode`` dead-letters a
     deeper payload with DEPTH_ERROR, so nothing is lost silently).
@@ -872,17 +874,18 @@ def _with_error(schema: T.StructType) -> T.StructType:
                         + [T.StructField("error", T.StringType())])
 
 
-def _decoded_or_dead_letter(df: DataFrame, raw: Column, fields,
+def _decoded_or_dead_letter(df: DataFrame, raw: Column,
                             schema: T.StructType) -> DataFrame:
     """Append ``decoded`` from a JVM-side parse ``raw`` (NULL when the
-    bytes do not parse): ``fields(parsed)`` plus a NULL ``error``, else the
+    bytes do not parse): its fields plus a NULL ``error``, else the
     dead-letter row — every field NULL, ``error`` WIRE_ERROR — with the
     original bytes left in place. ``raw`` is materialized once as a column
     so a non-deterministic UDF runs once per row however often the
     projection references it."""
     p = F.col("_pb")
     ok = F.when(p.isNull(), F.lit(None)).otherwise(F.struct(
-        *fields(p), F.lit(None).cast("string").alias("error")))
+        *[p[f.name].alias(f.name) for f in schema.fields[:-1]],
+        F.lit(None).cast("string").alias("error")))
     dead = F.struct(*[
         (F.lit(WIRE_ERROR) if f.name == "error" else F.lit(None))
         .cast(f.dataType).alias(f.name) for f in schema])
@@ -924,12 +927,11 @@ def encode_message(value: Column, message: str,
 
 def decode_message(df: DataFrame, payload_col: str, message: str,
                    registry: SchemaRegistry | None = None,
-                   proto_version: int = 3, impl: str = "arrow",
-                   max_recursion_depth: int = 3) -> DataFrame:
+                   proto_version: int = 3, impl: str = "arrow") -> DataFrame:
     """BinaryType payload -> ``df`` plus a ``decoded`` struct of
     ``decoded_schema(registry, message, proto_version)`` then ``error``
     (NULL on success; WIRE_ERROR, or DEPTH_ERROR past
-    ``max_recursion_depth`` nested levels, with every field NULL and the
+    ``MAX_RECURSION_DEPTH`` nested levels, with every field NULL and the
     original bytes kept) — the reference's recursive walk
     (protobuf.rb:212-218, 287-336) for any registered message.
 
@@ -955,20 +957,18 @@ def decode_message(df: DataFrame, payload_col: str, message: str,
         cfg = _jvm_wire_cfg(reg, proto_version, message)
         return _decoded_or_dead_letter(
             df, F.call_udf(name, F.col(payload_col), F.lit(cfg)),
-            lambda p: [p[f.name].alias(f.name) for f in row_schema.fields],
             _with_error(row_schema))
     if impl != "arrow":
         raise ValueError(f"unknown decode impl: {impl}")
     schema = _with_error(decoded_schema(reg, message, proto_version,
-                                        max_recursion_depth))
+                                        MAX_RECURSION_DEPTH))
     from .pb_wire_vec import build_flat_plan
 
     plan = build_flat_plan(reg, message, proto_version)
     if plan is not None and "uint64" not in _plan_types(plan):
         udf = _flat_decode_udf(plan, schema)
     else:
-        udf = _row_decode_udf(reg, message, proto_version,
-                              max_recursion_depth, schema)
+        udf = _row_decode_udf(reg, message, proto_version, schema)
     return df.withColumn("decoded", udf(F.col(payload_col)))
 
 
@@ -1100,8 +1100,7 @@ def _row(d: dict, schema: T.StructType) -> dict:
 
 
 def _row_decode_udf(registry: SchemaRegistry, message: str,
-                    proto_version: int, max_recursion_depth: int,
-                    schema: T.StructType):
+                    proto_version: int, schema: T.StructType):
     """The Arrow-batch decode that runs ``py_decode`` per payload: maps,
     repeated and recursive messages, bytes, uint64, Struct."""
     fields = T.StructType(schema.fields[:-1])
@@ -1114,8 +1113,7 @@ def _row_decode_udf(registry: SchemaRegistry, message: str,
             try:
                 if buf is None:
                     raise ValueError(WIRE_ERROR)
-                d = py_decode(buf, registry, message, proto_version,
-                              depth=max_recursion_depth + 1)
+                d = py_decode(buf, registry, message, proto_version)
                 rows.append({**_row(d, fields), "error": None})
             except ValueError as e:
                 # keep the tag: DEPTH_ERROR routes apart from malformed bytes
@@ -1127,41 +1125,14 @@ def _row_decode_udf(registry: SchemaRegistry, message: str,
 
 
 # ---------------------------------------------------------------------------
-# JVM paths: spark-protobuf's from_protobuf/to_protobuf, and the vendored
-# DynamicMessage harness
+# the JVM path: the vendored DynamicMessage harness
 # ---------------------------------------------------------------------------
-
-def encode_turn_wire_jvm(df: DataFrame) -> DataFrame:
-    """JVM-native encode via ``to_protobuf`` + the compiled descriptor set —
-    the symmetric swap-in to ``decode_turn_wire_jvm`` when the
-    spark-protobuf jar is present. ``encode_turn_wire`` remains the DEFAULT
-    even on such clusters (it carries the bit-exact DuckDB oracle); this
-    path exists for schema evolution cases where the descriptor, not the
-    registry-driven kernel, must be authoritative."""
-    from pyspark.sql.protobuf.functions import to_protobuf
-
-    from ..descriptors import descriptor_set_bytes
-
-    desc = descriptor_set_bytes(default_registry(), ["turn_wire"])
-    event = F.struct(
-        F.col("conv_id"), F.col("turn_idx"), F.col("role"), F.col("tool"),
-        F.col("colour"), F.col("cents"),
-        F.when(F.col("body_type") == "unicorn", F.col("horn")).alias("horn"),
-        F.when(F.col("body_type") == "pegasus", F.col("wings"))
-        .alias("wings"),
-        F.col("msg"),
-    )
-    out = df.withColumn(
-        "payload", to_protobuf(event, "sparkgraft.turn_wire",
-                               binaryDescriptorSet=desc)
-    )
-    return out.withColumn("payload_hex", F.lower(F.hex(F.col("payload"))))
-
 
 def spark_protobuf_available(spark) -> bool:
     """True when the spark-protobuf jar is on the JVM classpath (cluster
-    deployments add ``org.apache.spark:spark-protobuf_2.13``; the sandbox
-    ships only the Python wrapper)."""
+    deployments add ``org.apache.spark:spark-protobuf_2.13``). No engine
+    path reads it: its only caller is the benchmark's host stamp
+    (``perfbench/run.py``)."""
     try:
         spark._jvm.java.lang.Class.forName(
             "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst"
@@ -1169,48 +1140,6 @@ def spark_protobuf_available(spark) -> bool:
         return True
     except Exception:
         return False
-
-
-def decode_turn_wire_jvm(df: DataFrame, payload_col: str = "payload",
-                         registry: SchemaRegistry | None = None,
-                         proto_version: int = 3) -> DataFrame:
-    """JVM-native decode via ``from_protobuf`` + a descriptor set compiled
-    from the registry (descriptors.descriptor_set_bytes) — zero Python
-    workers, the 100 TB path when the spark-protobuf jar is present. The
-    output is aligned to the Arrow UDF's ``decoded`` struct contract:
-    oneof discriminator from whichever member is non-null, PERMISSIVE
-    null-struct -> dead-letter error row."""
-    from pyspark.sql.protobuf.functions import from_protobuf
-
-    from ..descriptors import descriptor_set_bytes
-
-    reg = registry if registry is not None else default_registry()
-    desc = descriptor_set_bytes(reg, ["turn_wire"])
-    options = {"mode": "PERMISSIVE"}
-    if proto_version == 2:
-        options["enums.as.ints"] = "true"  # pb2: codes pass through
-    raw = from_protobuf(F.col(payload_col), "sparkgraft.turn_wire",
-                        binaryDescriptorSet=desc, options=options)
-
-    def fields(p: Column) -> list:
-        colour = (p["colour"].cast("long") if proto_version == 2
-                  else p["colour"].cast("string"))
-        return [
-            p["conv_id"].alias("conv_id"),
-            p["turn_idx"].cast("int").alias("turn_idx"),
-            p["role"].alias("role"), p["tool"].alias("tool"),
-            colour.alias("colour"),
-            p["cents"].cast("long").alias("cents"),
-            p["horn"].cast("int").alias("horn"),
-            p["wings"].cast("int").alias("wings"),
-            p["msg"].alias("msg"),
-            F.when(p["horn"].isNotNull(), F.lit("horn"))
-             .when(p["wings"].isNotNull(), F.lit("wings"))
-             .alias("oneof_body"),
-        ]
-
-    schema = TURN_WIRE_DECODED if proto_version == 3 else TURN_WIRE_DECODED_PB2
-    return _decoded_or_dead_letter(df, raw, fields, schema)
 
 
 _JVM_WIRE_JAR = os.path.join(
@@ -1300,45 +1229,36 @@ def _ensure_jvm_row_udf(spark, message: str, proto_version: int,
 
 def _jvm_wire_cfg(reg: SchemaRegistry, proto_version: int,
                   message: str) -> str:
-    from ..descriptors import descriptor_set_bytes
+    from ..descriptors import PACKAGE, descriptor_set_bytes
 
     dialect = "pb3" if proto_version == 3 else "pb2"
-    # proto3 syntax for BOTH dialects: the engine's pb2 contract keeps
-    # proto3-style default emission (decode-plan template, _decode_plan)
-    # and differs only in enum passthrough, carried by the dialect flag
-    desc = descriptor_set_bytes(reg, [message], syntax="proto3")
+    # the set is proto3 syntax for BOTH dialects: the engine's pb2 contract
+    # keeps proto3-style default emission (decode-plan template,
+    # _decode_plan) and differs only in enum passthrough, carried by the
+    # dialect flag
+    desc = descriptor_set_bytes(reg, [message])
     return (base64.b64encode(desc).decode("ascii")
-            + f"|sparkgraft.{message}|" + dialect)
+            + f"|{PACKAGE}.{message}|" + dialect)
 
 
 def decode_turn_wire(df: DataFrame, payload_col: str = "payload",
                      registry: SchemaRegistry | None = None,
-                     proto_version: int = 3, impl: str = "auto",
+                     proto_version: int = 3, impl: str = "arrow",
                      oneof_metainfo: bool = True) -> DataFrame:
     """BinaryType payload -> ``decoded`` struct column (1:1 projection) of
     shape ``TURN_WIRE_DECODED`` (``TURN_WIRE_DECODED_PB2`` under
     ``proto_version=2``, which keeps enum codes as ints). Pass ``registry``
     to decode with schema specs loaded from disk.
 
-    ``impl``: 'auto' uses the JVM-native ``from_protobuf`` path whenever the
-    spark-protobuf jar is on the classpath (no Python workers), else
-    'arrow'; 'jvm' forces ``from_protobuf``; 'arrow' and 'jvm_dynamic' are
-    ``decode_message``'s impls.
+    ``impl``: ``decode_message``'s, 'arrow' (the default) or 'jvm_dynamic';
+    any other value raises ``ValueError``.
 
     ``oneof_metainfo``: mirrors the reference's ``pb3_set_oneof_metainfo``
     config (protobuf.rb:110-116, spec/codecs/pb3_decode_spec.rb:347-452 —
     whose DEFAULT is false): when disabled the chosen-member discriminator
     column is nulled; member values themselves always decode."""
-    if impl not in ("auto", "jvm", "jvm_dynamic", "arrow"):
-        raise ValueError(f"unknown decode impl: {impl}")
-    if impl == "jvm" or (
-        impl == "auto" and spark_protobuf_available(df.sparkSession)
-    ):
-        out = decode_turn_wire_jvm(df, payload_col, registry, proto_version)
-    else:
-        out = decode_message(df, payload_col, "turn_wire", registry,
-                             proto_version,
-                             "arrow" if impl == "auto" else impl)
+    out = decode_message(df, payload_col, "turn_wire", registry,
+                         proto_version, impl)
     if not oneof_metainfo:
         schema = (TURN_WIRE_DECODED if proto_version == 3
                   else TURN_WIRE_DECODED_PB2)

@@ -17,12 +17,17 @@ re-reading the source per sink (single-pass multi-sink fan-out, SURVEY.md §4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from ..config import CodecConfig, DEAD_LETTER_SINK, sql_str
+from ..config import DEAD_LETTER_SINK, sql_str
+from ..sources.dims import SINKS
+
+# SQL text: the row's `sink` as its index in SINKS, the fan-out group
+SINK_INDEX = ("array_position(array("
+              + ", ".join(sql_str(s) for s in SINKS) + "), sink) - 1")
 
 
-def assign_sink(df: DataFrame, cfg: CodecConfig | None = None) -> DataFrame:
+def assign_sink(df: DataFrame) -> DataFrame:
     """Resolve each row's destination sink: dictionary sink for enriched rows,
     dead_letter for unmatched tools (keep-don't-drop, protobuf.rb:229-233)."""
     return df.withColumn("sink", F.coalesce(F.col("sink"), F.lit(DEAD_LETTER_SINK)))
@@ -138,22 +143,9 @@ def probe_repartition(df: DataFrame, n: int, group_idx: str,
     return df.repartition(n, F.expr(pkey))
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when the Iceberg Spark runtime is on the JVM classpath (cluster
-    deployments add ``org.apache.iceberg:iceberg-spark-runtime``)."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def fan_out(
     df: DataFrame,
     base_path: str | None = None,
-    cfg: CodecConfig | None = None,
     mode: str = "append",
     table: str | None = None,
 ) -> None:
@@ -170,11 +162,8 @@ def fan_out(
     - otherwise: parquet ``partitionBy("sink")`` directories at
       ``base_path`` — identical layout and shuffle behavior.
     """
-    cfg = cfg or CodecConfig()
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sinks = ", ".join(sql_str(s) for s in cfg.sinks)
-    routed = probe_repartition(
-        df, n, f"array_position(array({sinks}), sink) - 1", len(cfg.sinks))
+    routed = probe_repartition(df, n, SINK_INDEX, len(SINKS))
     if table is not None:
         spark = routed.sparkSession
         if mode == "overwrite":

@@ -31,7 +31,8 @@ from ..config import CodecConfig, DEAD_LETTER_SINK, sql_str
 from ..operators import aggregate as agg
 from ..operators.enrich import join_tools
 from ..operators.parse import parse_turns, split_dead_letter
-from ..operators.route import probe_repartition, route_all
+from ..operators.route import SINK_INDEX, probe_repartition, route_all
+from ..sources.dims import SINKS
 from ..sources.transcripts import transcripts_df
 from .checkpoint import CheckpointManifest
 
@@ -48,13 +49,12 @@ def _parquet_writer(df: DataFrame):
 
 def run_parse_stage(
     spark: SparkSession, sf_dir: str, cfg: CodecConfig | None = None,
-    impl: str = "native",
 ) -> tuple[DataFrame, DataFrame]:
     """parse + dead-letter split, honoring stop_on_error
     (protobuf.rb:139-140,227-228)."""
     cfg = cfg or CodecConfig()
     tr = transcripts_df(spark, sf_dir)
-    good, dead = split_dead_letter(parse_turns(tr, cfg, impl=impl), cfg)
+    good, dead = split_dead_letter(parse_turns(tr))
     if cfg.stop_on_error:
         first = dead.select("decoder_exception", "message").take(1)
         if first:
@@ -66,7 +66,7 @@ def run_parse_stage(
 
 
 def _routed_wave(spark: SparkSession, sf_dir: str, cfg: CodecConfig,
-                 n_buckets: int, impl: str,
+                 n_buckets: int,
                  transcripts_path: str | None = None) -> DataFrame:
     """Full-row routed frame with lineage bucket column (no action yet).
 
@@ -77,7 +77,7 @@ def _routed_wave(spark: SparkSession, sf_dir: str, cfg: CodecConfig,
         tr = spark.read.parquet(transcripts_path)
     else:
         tr = transcripts_df(spark, sf_dir)
-    parsed = parse_turns(tr, cfg, impl=impl)
+    parsed = parse_turns(tr)
     if cfg.stop_on_error:
         first = parsed.filter(F.col("parsed.error").isNotNull()) \
             .select("parsed.error", "text").take(1)
@@ -124,7 +124,7 @@ def _combos_per_partition(sf_dir: str, transcripts_path: str | None) -> int:
     return 1 if size < (64 << 20) else 4
 
 
-def _wave_frame(routed_all: DataFrame, wave: list[int], cfg: CodecConfig,
+def _wave_frame(routed_all: DataFrame, wave: list[int],
                 combos_per_partition: int) -> DataFrame:
     """The frame one wave writes: the rows of ``routed_all`` in the wave's
     buckets, repartitioned for the write.
@@ -143,13 +143,11 @@ def _wave_frame(routed_all: DataFrame, wave: list[int], cfg: CodecConfig,
        files-per-task both hold by construction at any parallelism.
     """
     n = int(routed_all.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sinks = ", ".join(sql_str(s) for s in cfg.sinks)
-    group_idx = (f"_bucket * {len(cfg.sinks)}"
-                 f" + array_position(array({sinks}), sink) - 1")
+    group_idx = f"_bucket * {len(SINKS)} + {SINK_INDEX}"
     in_wave = routed_all.filter(
         F.expr(f"_bucket IN ({', '.join(map(str, wave))})"))
     return probe_repartition(in_wave, n, group_idx,
-                             len(wave) * len(cfg.sinks),
+                             len(wave) * len(SINKS),
                              combos_per_partition=combos_per_partition)
 
 
@@ -160,7 +158,6 @@ def run_pipeline(
     cfg: CodecConfig | None = None,
     n_buckets: int = 8,
     wave_size: int = 4,
-    impl: str = "native",
     fail_after_waves: int | None = None,
     transcripts_path: str | None = None,
 ) -> dict:
@@ -170,7 +167,8 @@ def run_pipeline(
     writes land under `_bucket=<b>/sink=<s>/` before the bucket's manifest entry
     commits. A killed run (simulated by ``fail_after_waves``) resumes by
     pruning completed buckets from the scan — completed data is never re-parsed
-    or re-written.
+    or re-written. The parse is ``parse_turns``' native path, the one that
+    starts no Python worker.
 
     Every job the call launches carries a ``run_pipeline: ...`` job
     description, and the caller's job group, also from the aggregate threads;
@@ -182,7 +180,7 @@ def run_pipeline(
     try:
         sc.setJobDescription("run_pipeline: plan")
         return _run_pipeline(spark, sf_dir, out_dir, cfg, n_buckets,
-                             wave_size, impl, fail_after_waves,
+                             wave_size, fail_after_waves,
                              transcripts_path)
     finally:
         sc.setJobDescription(caller_description)
@@ -190,7 +188,7 @@ def run_pipeline(
 
 def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
                   cfg: CodecConfig, n_buckets: int, wave_size: int,
-                  impl: str, fail_after_waves: int | None,
+                  fail_after_waves: int | None,
                   transcripts_path: str | None) -> dict:
     sc = spark.sparkContext
     data_dir = f"{out_dir}/routed"
@@ -201,7 +199,7 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     for b in todo:
         manifest.clear_partial_output(data_dir, b)
 
-    routed_all = _routed_wave(spark, sf_dir, cfg, n_buckets, impl,
+    routed_all = _routed_wave(spark, sf_dir, cfg, n_buckets,
                               transcripts_path=transcripts_path)
     waves = [todo[i:i + wave_size] for i in range(0, len(todo), wave_size)]
     for wi, wave in enumerate(waves):
@@ -210,7 +208,7 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
         sc.setJobDescription(f"run_pipeline: wave {wi} write routed")
         t0 = time.time()
         (
-            _parquet_writer(_wave_frame(routed_all, wave, cfg, cpp))
+            _parquet_writer(_wave_frame(routed_all, wave, cpp))
             .mode("append").partitionBy("_bucket", "sink")
             .parquet(data_dir)
         )

@@ -1552,7 +1552,7 @@ def pb2_wire_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     generations: self -> mother -> grandmother, plus a father branch) through
     encode and back. The recursive human spec (human.pb.rb:16-17) nests as
     length-delimited sub-messages; py_decode recurses with a depth bound
-    (max_recursion_depth, which also bounds the decoded struct)."""
+    (pb_wire.MAX_RECURSION_DEPTH, which also bounds the decoded struct)."""
     e = F.col("event_id")
 
     def person(prefix: str, age: Column, *more: Column) -> Column:

@@ -22,28 +22,29 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import CodecConfig
 from ..operators.enrich import join_tools
 from ..operators.parse import parse_turns
 from ..operators.route import route_all
 from ..plans.pipeline import PARQUET_CODEC
 
 
-def read_transcript_stream(spark: SparkSession, source_dir: str,
-                           schema: str | None = None) -> DataFrame:
-    schema = schema or ("conv_id string, turn_idx int, role string, "
-                        "text string, tool string, ts timestamp")
+# the transcripts contract a stream source declares (a file stream cannot
+# infer it)
+TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
+                     "text string, tool string, ts timestamp")
+
+
+def read_transcript_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", "8")  # bounded micro-batches
         .parquet(source_dir)
     )
 
 
-def streaming_parse_route(stream: DataFrame,
-                          cfg: CodecConfig | None = None) -> DataFrame:
+def streaming_parse_route(stream: DataFrame) -> DataFrame:
     """The batch operators, unchanged, over an unbounded frame."""
-    return route_all(join_tools(parse_turns(stream, cfg, impl="native")))
+    return route_all(join_tools(parse_turns(stream)))
 
 
 def streaming_windowed_counts(routed: DataFrame, window: str = "1 hour",
@@ -144,25 +145,23 @@ def dedup_stream(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
 
 
 def streaming_wire_decode(stream: DataFrame, payload_col: str = "payload",
-                          registry=None, impl: str = "auto") -> DataFrame:
+                          registry=None, impl: str = "arrow") -> DataFrame:
     """Wire-format decode over an unbounded stream: the decode is a
     stateless 1:1 projection, so it composes with readStream unchanged —
     the streaming twin of the codec's Kafka seat (protobuf.rb:30-43).
-    All batch impls work here, including ``impl='jvm_dynamic'`` (the
-    vendored Java UDF registers on the stream's own session; zero Python
-    workers in the micro-batch plan — the Kafka-at-100TB shape)."""
+    Both impls work here: with ``impl='jvm_dynamic'`` the vendored Java
+    UDF registers on the stream's own session, and the micro-batch plan has
+    zero Python workers — the Kafka-at-100TB shape."""
     from ..operators.pb_wire import decode_turn_wire
 
     return decode_turn_wire(stream, payload_col, registry, impl=impl)
 
 
-def run_stream_to_sinks(spark: SparkSession, source_dir: str, out_dir: str,
-                        cfg: CodecConfig | None = None):
+def run_stream_to_sinks(spark: SparkSession, source_dir: str, out_dir: str):
     """Continuous fan-out: routed rows land partitioned by sink, in the
     batch engine's parquet codec, with streaming checkpointing (resume =
     restart with the same checkpoint dir)."""
-    routed = streaming_parse_route(read_transcript_stream(spark, source_dir),
-                                   cfg)
+    routed = streaming_parse_route(read_transcript_stream(spark, source_dir))
     return (
         routed.writeStream
         .option("checkpointLocation", f"{out_dir}/_checkpoint")

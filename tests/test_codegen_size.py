@@ -82,7 +82,7 @@ def test_pipeline_plans_fit_jit_limit(spark, tmp_path):
     good = spark.read.parquet(f"{out}/routed").filter(
         F.col("sink") != DEAD_LETTER_SINK)
     builds = {
-        "wave": lambda: _routed_wave(spark, SF_DIR, cfg, 8, "native"),
+        "wave": lambda: _routed_wave(spark, SF_DIR, cfg, 8),
         "conv_stats": lambda: agg.conv_stats(good),
         "hourly_stats": lambda: agg.hourly_stats(good),
     }

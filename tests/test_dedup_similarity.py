@@ -138,14 +138,6 @@ def test_multimodal_batch_plumbing(spark):
         assert 64 <= r["height"] < 64 + 512
 
 
-def test_decode_image_stub_gated(spark):
-    import pytest
-
-    if not MM.HAS_PIL:
-        with pytest.raises(NotImplementedError, match="PIL"):
-            MM.decode_image(b"\x89PNG")
-
-
 def test_ivf_topk_recall_and_refinement(spark):
     """IVF probing must recover a solid fraction of true top-5 neighbors, and
     Lloyd refinement must not increase quantization error (monotone inertia)."""
@@ -166,36 +158,6 @@ def test_ivf_topk_recall_and_refinement(spark):
     i1 = IVF.ivf_inertia(emb, one)
     i2 = IVF.ivf_inertia(emb, two)
     assert i1 <= i0 + 1e-9 and i2 <= i1 + 1e-9, (i0, i1, i2)
-
-
-def test_multimodal_real_decode_gating(spark):
-    """real_decode=True requires PIL (absent in this sandbox -> loud error,
-    never a silent stub); when PIL is present the same plumbing reports
-    actual pixel dimensions."""
-    import pytest
-
-    from .conftest import SF_DIR as _SF
-
-    media = MM.with_binary_payload(
-        __import__("logstash_codec_protobuf_spark.sources.tables",
-                   fromlist=["load_table"]).load_table(spark, _SF, "documents")
-    ).limit(4)
-    if not MM.HAS_PIL:
-        with pytest.raises(Exception):
-            MM.extract_features(media, real_decode=True).collect()
-    else:  # pragma: no cover - exercised only where PIL ships
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.new("RGB", (20, 10)).save(buf, format="PNG")
-        real = spark.createDataFrame(
-            [(1, bytearray(buf.getvalue()), "image/png")],
-            "doc_id long, payload binary, media_type string",
-        )
-        row = MM.extract_features(real, real_decode=True).first()
-        assert (row["width"], row["height"]) == (20, 10)
 
 
 def test_dedup_clusters_transitive_closure(spark):

@@ -100,49 +100,6 @@ def test_descriptor_nested_and_repeated_labels():
     assert ident["type"] == 4                       # TYPE_UINT64
 
 
-def test_jvm_dispatch_falls_back_without_jar(spark):
-    """In this sandbox the spark-protobuf jar is absent: 'auto' must choose
-    the Arrow path and still decode correctly; with the jar present this
-    same test exercises the JVM path (whichever is available)."""
-    from logstash_codec_protobuf_spark.queries import _good_flat
-
-    from .conftest import SF_DIR
-
-    available = W.spark_protobuf_available(spark)
-    enc = W.encode_turn_wire(_good_flat(spark, SF_DIR).drop("ts", "text"))
-    dec = W.decode_turn_wire(enc, impl="auto")
-    row = dec.select("decoded", "conv_id", "cents").first()
-    assert row["decoded"]["conv_id"] == row["conv_id"]
-    assert row["decoded"]["cents"] == row["cents"]
-    if not available:
-        # forcing the jvm path must fail loudly, not silently mis-decode
-        import pytest as _pytest
-
-        with _pytest.raises(Exception):
-            W.decode_turn_wire_jvm(enc).first()
-
-
-def test_to_protobuf_swap_in_gating(spark):
-    """Without the jar, the JVM encode path must fail loudly; the SQL
-    encoder (the default either way) keeps working. With the jar, the same
-    call round-trips through to_protobuf."""
-    import pytest
-
-    from logstash_codec_protobuf_spark.queries import _good_flat
-
-    from .conftest import SF_DIR
-
-    flat = _good_flat(spark, SF_DIR).drop("ts", "text").limit(5)
-    assert W.encode_turn_wire(flat).first()["payload_hex"]  # default path
-    if not W.spark_protobuf_available(spark):
-        with pytest.raises(Exception):
-            W.encode_turn_wire_jvm(flat).first()
-    else:  # pragma: no cover - jar-equipped clusters only
-        row = W.decode_turn_wire(
-            W.encode_turn_wire_jvm(flat), impl="jvm").first()
-        assert row["decoded"]["conv_id"] == row["conv_id"]
-
-
 def test_descriptor_set_transitive_message_closure():
     """descriptor_set_bytes must transitively include message-typed
     dependencies (and their enums): probe_result references

@@ -92,3 +92,21 @@ def test_streaming_route_enriches_dirty_tools_like_the_left_join(spark, tmp_path
     assert got == want and len(got) == len(TOOLS)
     assert {got[i] for i in range(len(TOOLS_ROWS), len(TOOLS))} == {
         "dead_letter"}
+
+
+def test_values_text_reads_back_the_same_in_spark_and_duckdb(spark):
+    """A dictionary string with a quote and a backslash reads back as
+    written from the text Spark parses (the one ``enums_df`` plans) and
+    from the DuckDB text the oracles inline: the two dialects escape a
+    backslash differently."""
+    import duckdb
+
+    from logstash_codec_protobuf_spark.config import sql_str
+    from logstash_codec_protobuf_spark.sources.dims import _values_cte
+
+    rows = [("it's", "a\\b")]
+    in_spark = spark.sql(
+        f"SELECT * FROM {_values_cte(rows, ['k', 'v'], sql_str)}").collect()
+    in_duck = duckdb.sql(f"SELECT * FROM {_values_cte(rows, ['k', 'v'])}")
+    assert [tuple(r) for r in in_spark] == rows
+    assert in_duck.fetchall() == rows

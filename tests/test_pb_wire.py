@@ -208,6 +208,15 @@ def test_decode_udf_roundtrip_and_dead_letter(spark):
     assert out[0] == W.WIRE_ERROR
 
 
+@pytest.mark.parametrize("impl", ["jvm", "auto"])
+def test_decode_turn_wire_refuses_unknown_impl(spark, impl):
+    """decode_turn_wire has two impls, 'arrow' and 'jvm_dynamic'; any other
+    name raises at plan time instead of falling back to one of them."""
+    df = spark.createDataFrame([(bytearray(b"\x08\x01"),)], "payload binary")
+    with pytest.raises(ValueError, match="unknown decode impl"):
+        W.decode_turn_wire(df, impl=impl)
+
+
 # ---------------------------------------------------------------------------
 # float/double (wire types 5/1), Struct, depth-3 recursion, repeated messages
 # ---------------------------------------------------------------------------
@@ -315,9 +324,10 @@ def test_human_depth3_recursion_py():
 
 
 def test_human_depth_knob_py():
-    """max_recursion_depth is a real knob: a depth-4 lineage dead-letters
-    with DEPTH_ERROR at the default bound (3 nested levels) and decodes when
-    the bound is raised — never a silent truncation either way."""
+    """py_decode's depth bound is a real knob: a depth-4 lineage
+    dead-letters with DEPTH_ERROR at the default bound (3 nested levels) and
+    decodes when the bound is raised — never a silent truncation either
+    way."""
     reg = default_registry()
 
     def lineage(n: int) -> bytes:
@@ -329,7 +339,8 @@ def test_human_depth_knob_py():
         return buf
 
     # boundary: exactly 3 nested levels fits the default budget
-    d = W.py_decode(lineage(3), reg, "human", proto_version=2, depth=4)
+    assert W.MAX_RECURSION_DEPTH == 3
+    d = W.py_decode(lineage(3), reg, "human", proto_version=2)
     assert d["mother"]["mother"]["mother"]["first_name"] == "gen3"
     # one deeper: distinct loud error
     with pytest.raises(ValueError, match="max_recursion_depth"):
@@ -344,7 +355,7 @@ def test_human_depth_knob_py():
 def test_human_depth4_dead_letters_with_depth_tag(spark):
     """Through Spark: a depth-4 Human payload in a batch dead-letters under
     DEPTH_ERROR while its depth-3 neighbors decode — the tag survives the
-    Arrow UDF boundary for separate routing (config.max_recursion_depth)."""
+    Arrow UDF boundary for separate routing (pb_wire.MAX_RECURSION_DEPTH)."""
     reg = default_registry()
     grandma = py_field_string(1, "Jancsi") + py_field_varint(6, 77)
     mother = (py_field_string(1, "Jane") + py_field_len(4, grandma)
@@ -1003,7 +1014,7 @@ def test_jvm_dynamic_recursive_type_refused():
     """A recursive message graph has no finite StructType: without a depth
     bound the schema builder must refuse unicorn (mother/father:
     message:unicorn) with the arrow-routing hint rather than recursing
-    forever; with max_recursion_depth it unrolls exactly that many levels."""
+    forever; with a depth bound it unrolls exactly that many levels."""
     reg = default_registry()
     with pytest.raises(NotImplementedError, match="recursive"):
         W.decoded_schema(reg, "unicorn", 3)

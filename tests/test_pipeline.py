@@ -78,6 +78,18 @@ def test_killed_run_resumes_without_reprocessing(spark, tmp_path):
     assert landed == _expected_sinks(SF_DIR)
 
 
+def test_stop_on_error_raises_before_any_bucket_commits(spark, tmp_path):
+    """stop_on_error (protobuf.rb:139-140,227-228): the input has corrupt
+    payloads, so the call raises on the first one and commits no bucket."""
+    from logstash_codec_protobuf_spark.config import CodecConfig
+
+    out = str(tmp_path / "strict")
+    with pytest.raises(ValueError, match=r"decode failed \(stop_on_error\)"):
+        run_pipeline(spark, SF_DIR, out, CodecConfig(stop_on_error=True),
+                     n_buckets=4, wave_size=2)
+    assert not list(Path(out, "manifest").glob("bucket=*.json"))
+
+
 def _landed_by_bucket_sink(spark, out) -> dict[int, dict[str, int]]:
     """Rows read back from each routed/_bucket=<b>/sink=<s>/ directory."""
     got: dict[int, dict[str, int]] = {}
@@ -125,9 +137,7 @@ def test_fan_out_parquet_and_writeto(spark, tmp_path):
     parquet partitionBy directories, and the DataFrameWriterV2 (writeTo)
     catalog path — Iceberg on a cluster, the built-in session catalog here
     (same API seam either way)."""
-    from logstash_codec_protobuf_spark.operators.route import (
-        fan_out, iceberg_available,
-    )
+    from logstash_codec_protobuf_spark.operators.route import fan_out
 
     df = spark.range(200).select(
         F.concat(F.lit("conv-"), (F.col("id") % 9).cast("string"))
@@ -143,7 +153,6 @@ def test_fan_out_parquet_and_writeto(spark, tmp_path):
     assert back.count() == 200
     assert back.select("sink").distinct().count() == 3
     # writeTo path: first write creates partitioned-by-sink, second appends
-    assert not iceberg_available(spark)  # sandbox: session catalog stands in
     spark.sql("DROP TABLE IF EXISTS fanout_v2_test")
     import shutil
     shutil.rmtree("spark-warehouse/fanout_v2_test", ignore_errors=True)

@@ -37,7 +37,7 @@ def _no_join(plan: str) -> bool:
     return not re.search(r"Join|BroadcastExchange", plan)
 
 
-def test_enrich_uses_broadcast_joins_only(spark, tr):
+def test_enrich_is_map_lookups_without_join_or_broadcast(spark, tr):
     """The dictionaries are map lookups in a projection: the enrich path
     plans no join of any kind and no broadcast. A join here (a hash-table
     build and a broadcast job for a dictionary of a few rows) or a
@@ -77,7 +77,7 @@ def test_enrich_dictionaries_are_local_relations_no_python(spark, tr):
     assert [tuple(r) for r in df.collect()] == default_registry().enum_rows()
 
 
-def test_wave_plan_broadcasts_the_tools_dictionary_only(spark, tr_path):
+def test_wave_plan_has_no_join_broadcast_or_role_lookup(spark, tr_path):
     """run_pipeline's wave plan reads the tools dictionary as map lookups:
     no join and no BroadcastExchange, so a wave launches no broadcast job.
     It reads only what routing needs (`tools.sink`): no role lookup, which
@@ -85,7 +85,7 @@ def test_wave_plan_broadcasts_the_tools_dictionary_only(spark, tr_path):
     from logstash_codec_protobuf_spark.config import CodecConfig
     from logstash_codec_protobuf_spark.plans.pipeline import _routed_wave
 
-    plan = _executed(_routed_wave(spark, SF_DIR, CodecConfig(), 8, "native",
+    plan = _executed(_routed_wave(spark, SF_DIR, CodecConfig(), 8,
                                   transcripts_path=tr_path))
     assert _no_join(plan), plan
     assert "role_group" not in plan, plan
@@ -101,10 +101,9 @@ def test_wave_write_parses_each_row_once_without_cache(spark, tr_path):
     from logstash_codec_protobuf_spark.plans.pipeline import (
         _routed_wave, _wave_frame)
 
-    cfg = CodecConfig()
-    routed = _routed_wave(spark, SF_DIR, cfg, 8, "native",
+    routed = _routed_wave(spark, SF_DIR, CodecConfig(), 8,
                           transcripts_path=tr_path)
-    plan = _executed(_wave_frame(routed, [4, 5, 6, 7], cfg, 1))
+    plan = _executed(_wave_frame(routed, [4, 5, 6, 7], 1))
     assert plan.count("RLIKE") == 1, plan
     assert plan.count("split(") == 1, plan
     assert "regexp_extract" not in plan, plan
@@ -136,7 +135,7 @@ def test_conv_filter_pushed_to_parquet(spark, tr):
     assert m and "EqualTo(conv_id,conv-hot)" in m.group(1), plan
 
 
-def test_salted_agg_partial_before_shuffle(spark, tr):
+def test_conv_stats_partial_agg_below_its_one_exchange(spark, tr):
     """conv_stats is one partial/final aggregate: exactly one exchange, with
     the partial_ functions (map-side combine) below it, so the shuffle
     carries one row per (conversation, map task), not rows. A salted

@@ -96,11 +96,13 @@ def bench_queries(spark, sf_dir: str, rounds: int = ROUNDS
     from logstash_codec_protobuf_spark.operators.route import route_all
     from logstash_codec_protobuf_spark.plans.pipeline import run_pipeline
     from logstash_codec_protobuf_spark.sources.transcripts import transcripts_df
+    from logstash_codec_protobuf_spark.storage import parquet_writer
 
     # materialize the transcripts input once so per-query timings measure the
     # engine, not the synthetic derivation (at scale the table pre-exists)
     tr_path = tempfile.mkdtemp(prefix="bench_tr_")
-    transcripts_df(spark, sf_dir).write.mode("overwrite").parquet(tr_path)
+    parquet_writer(transcripts_df(spark, sf_dir)).mode("overwrite") \
+        .parquet(tr_path)
     tr = spark.read.parquet(tr_path)
     n_turns = tr.count()
 
@@ -203,13 +205,13 @@ def bench_queries(spark, sf_dir: str, rounds: int = ROUNDS
     pay_path = tempfile.mkdtemp(prefix="bench_pay_")
     _good0, _ = split_dead_letter(parse_turns(tr, impl="native"))
     _p0 = F.col("parsed")
-    _PW.encode_turn_wire(_good0.select(
+    _payloads = _PW.encode_turn_wire(_good0.select(
         *[_p0[c].alias(c) for c in ("conv_id", "turn_idx", "role", "tool",
                                     "colour", "cents", "body_type", "horn",
                                     "wings", "msg")],
         F.explode(F.sequence(F.lit(1), F.lit(10))).alias("_rep"),
-    ).drop("_rep")).select("payload").repartition(64) \
-        .write.mode("overwrite").parquet(pay_path)
+    ).drop("_rep")).select("payload").repartition(64)
+    parquet_writer(_payloads).mode("overwrite").parquet(pay_path)
     payloads_stored = spark.read.parquet(pay_path)
 
     def decode_stored_run(impl):

@@ -1,7 +1,10 @@
 #!/usr/bin/env bash
-# Build sparkgraft-jvm-wire.jar: the JVM-side wire decoder compiled against
-# the protobuf-java runtime the Spark Connect jar shades
-# (org.sparkproject.connect.protobuf) plus Spark's Java UDF interface.
+# Build sparkgraft-engine.jar, the engine's JVM side:
+# - org.sparkgraft.WireDecodeRow, the wire decoder, compiled against the
+#   protobuf-java runtime the Spark Connect jar shades
+#   (org.sparkproject.connect.protobuf) plus Spark's Java UDF interface;
+# - org.sparkgraft.fs.NioLocalFileSystem, the local FileSystem every engine
+#   parquet write uses, compiled against Hadoop's client API.
 # Requires only a JDK and a pyspark/Spark install — no network, no protoc.
 set -euo pipefail
 cd "$(dirname "$0")"
@@ -14,10 +17,13 @@ EOF
 
 CONNECT_JAR=$(ls "$SPARK_JARS"/spark-connect_2.13-*.jar | head -1)
 SQL_API_JAR=$(ls "$SPARK_JARS"/spark-sql-api_2.13-*.jar | head -1)
+HADOOP_JAR=$(ls "$SPARK_JARS"/hadoop-client-api-*.jar | head -1)
 
 rm -rf classes && mkdir -p classes
 javac --release 17 -encoding UTF-8 \
-  -cp "$CONNECT_JAR:$SQL_API_JAR" \
-  -d classes src/org/sparkgraft/WireDecodeRow.java
-jar cf sparkgraft-jvm-wire.jar -C classes .
-echo "built $(pwd)/sparkgraft-jvm-wire.jar"
+  -cp "$CONNECT_JAR:$SQL_API_JAR:$HADOOP_JAR" \
+  -d classes src/org/sparkgraft/WireDecodeRow.java \
+  src/org/sparkgraft/fs/NioLocalFileSystem.java
+jar cf sparkgraft-engine.jar -C classes .
+rm -rf classes
+echo "built $(pwd)/sparkgraft-engine.jar"

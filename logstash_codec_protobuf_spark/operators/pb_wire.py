@@ -42,7 +42,6 @@ from __future__ import annotations
 import base64
 import functools
 import json
-import os
 import struct
 from decimal import Decimal
 from typing import Iterator
@@ -61,6 +60,7 @@ from ..functions.wire import (
     varint_field_hex,
 )
 from ..schema import SchemaRegistry, default_registry
+from ..storage import ensure_engine_jar
 
 WIRE_ERROR = "payload does not match pb3 wire format"
 # Nested message levels below the root that decode_message unrolls for a
@@ -1142,12 +1142,6 @@ def spark_protobuf_available(spark) -> bool:
         return False
 
 
-_JVM_WIRE_JAR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "jvm", "sparkgraft-jvm-wire.jar",
-)
-
-
 def jvm_dynamic_available(spark) -> bool:
     """True when the protobuf-java runtime the Spark Connect jar shades
     (``org.sparkproject.connect.protobuf``) is on the JVM classpath — the
@@ -1208,7 +1202,7 @@ def _register_java_udf(spark, name: str, cls_name: str,
 
 def _ensure_jvm_row_udf(spark, message: str, proto_version: int,
                         schema: T.StructType) -> str:
-    """Idempotently ADD JAR the vendored harness and register the
+    """Load the engine jar (``storage.ensure_engine_jar``) and register the
     Row-returning Java UDF under a per-(message, dialect) name — the
     registered return type is part of the function, so each shape gets its
     own. ``ADD JAR`` lands on the session's shared classloader, so the path
@@ -1220,7 +1214,7 @@ def _ensure_jvm_row_udf(spark, message: str, proto_version: int,
         seen = set()
         spark._sg_jvm_wire_udfs = seen
     if name not in seen:
-        spark.sql(f"ADD JAR '{_JVM_WIRE_JAR}'")
+        ensure_engine_jar(spark)
         _register_java_udf(spark, name, "org.sparkgraft.WireDecodeRow",
                            schema)
         seen.add(name)

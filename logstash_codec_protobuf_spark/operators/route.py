@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import DEAD_LETTER_SINK, sql_str
 from ..sources.dims import SINKS
+from ..storage import parquet_writer
 
 # SQL text: the row's `sink` as its index in SINKS, the fan-out group
 SINK_INDEX = ("array_position(array("
@@ -184,4 +185,4 @@ def fan_out(
         return
     if base_path is None:
         raise ValueError("fan_out needs either base_path or table")
-    routed.write.mode(mode).partitionBy("sink").parquet(base_path)
+    parquet_writer(routed).mode(mode).partitionBy("sink").parquet(base_path)

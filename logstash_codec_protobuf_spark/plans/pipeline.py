@@ -34,17 +34,8 @@ from ..operators.parse import parse_turns, split_dead_letter
 from ..operators.route import SINK_INDEX, probe_repartition, route_all
 from ..sources.dims import SINKS
 from ..sources.transcripts import transcripts_df
+from ..storage import parquet_writer
 from .checkpoint import CheckpointManifest
-
-# The engine's parquet codec, not the session default: every file
-# run_pipeline and its streaming twin write is zstd. On the routed rows it
-# measured 30.4 B/row against snappy's 44.6 (-32%) at no write-wall cost.
-PARQUET_CODEC = "zstd"
-
-
-def _parquet_writer(df: DataFrame):
-    """``df.write`` with the engine's parquet codec."""
-    return df.write.option("compression", PARQUET_CODEC)
 
 
 def run_parse_stage(
@@ -208,7 +199,7 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
         sc.setJobDescription(f"run_pipeline: wave {wi} write routed")
         t0 = time.time()
         (
-            _parquet_writer(_wave_frame(routed_all, wave, cpp))
+            parquet_writer(_wave_frame(routed_all, wave, cpp))
             .mode("append").partitionBy("_bucket", "sink")
             .parquet(data_dir)
         )
@@ -244,7 +235,7 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
         # its jobs in the caller's job group and name them
         sc.setLocalProperty("spark.jobGroup.id", group)
         sc.setJobDescription(f"run_pipeline: aggregate {name}")
-        _parquet_writer(df).mode("overwrite").parquet(f"{out_dir}/{name}")
+        parquet_writer(df).mode("overwrite").parquet(f"{out_dir}/{name}")
 
     aggregates = {"conv_stats": agg.conv_stats(good),
                   "hourly_stats": agg.hourly_stats(good)}

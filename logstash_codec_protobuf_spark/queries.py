@@ -27,6 +27,7 @@ from .operators.route import assign_sink, route_all, route_counts
 from .sources.dims import ENUMS_SQL, ROLES_SQL, TOOLS_SQL
 from .sources.tables import load_table
 from .sources.transcripts import TRANSCRIPTS_CTE, transcripts_df
+from .storage import parquet_writer
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -338,7 +339,8 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = tempfile.mkdtemp(prefix="q_stream_tr_")
     try:
-        transcripts_df(spark, sf_dir).write.mode("overwrite").parquet(stage)
+        parquet_writer(transcripts_df(spark, sf_dir)).mode("overwrite") \
+            .parquet(stage)
         routed = streaming_parse_route(read_transcript_stream(spark, stage))
         counts = (
             routed.groupBy(F.window("ts", "1 hour").alias("win"),
@@ -389,7 +391,7 @@ def stream_wire_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = PW.encode_turn_wire(flat).select("payload", "ts")
     stage = tempfile.mkdtemp(prefix="q_stream_wire_")
     try:
-        enc.write.mode("overwrite").parquet(stage)
+        parquet_writer(enc).mode("overwrite").parquet(stage)
         stream = (
             spark.readStream.schema("payload binary, ts timestamp")
             .option("maxFilesPerTrigger", "8")
@@ -449,10 +451,10 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stage = tempfile.mkdtemp(prefix="q_stream_sess_")
     try:
-        (transcripts_df(spark, sf_dir)
-         .repartition(8, "conv_id")
-         .sortWithinPartitions("conv_id", "turn_idx")
-         .write.mode("overwrite").parquet(stage))
+        parquet_writer(transcripts_df(spark, sf_dir)
+                       .repartition(8, "conv_id")
+                       .sortWithinPartitions("conv_id", "turn_idx")) \
+            .mode("overwrite").parquet(stage)
         stream = (
             spark.readStream
             .schema("conv_id string, turn_idx int, role string, "
@@ -497,7 +499,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay = tr.filter(F.col("turn_idx") % 5 == 0)
     stage = tempfile.mkdtemp(prefix="q_stream_dedup_")
     try:
-        tr.union(replay).write.mode("overwrite").parquet(stage)
+        parquet_writer(tr.union(replay)).mode("overwrite").parquet(stage)
         stream = (
             spark.readStream
             .schema("conv_id string, turn_idx int, role string, "

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.enrich import join_tools
 from ..operators.parse import parse_turns
 from ..operators.route import route_all
-from ..plans.pipeline import PARQUET_CODEC
+from ..storage import PARQUET_CODEC
 
 
 # the transcripts contract a stream source declares (a file stream cannot
@@ -160,7 +160,12 @@ def streaming_wire_decode(stream: DataFrame, payload_col: str = "payload",
 def run_stream_to_sinks(spark: SparkSession, source_dir: str, out_dir: str):
     """Continuous fan-out: routed rows land partitioned by sink, in the
     batch engine's parquet codec, with streaming checkpointing (resume =
-    restart with the same checkpoint dir)."""
+    restart with the same checkpoint dir).
+
+    Unlike the batch writes, this sink still lands through Hadoop's
+    forking ``chmod``: ``FileStreamSink`` takes its Hadoop conf from the
+    session, not from writer options, so ``storage.WRITE_OPTIONS``' local
+    FileSystem cannot be set per write here (see ``storage``)."""
     routed = streaming_parse_route(read_transcript_stream(spark, source_dir))
     return (
         routed.writeStream

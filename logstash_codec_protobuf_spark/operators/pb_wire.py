@@ -11,8 +11,11 @@ registry spec drives both directions.
   ``decoded`` struct (``decoded_schema``: fields in wire order, one
   ``oneof_<group>`` slot per oneof, then ``error``). ``py_encode`` and
   ``py_decode`` are the per-row cores and the reference the tests compare
-  against; decode picks the numpy record-transposed walker
-  (``pb_wire_vec``) whenever the message shape allows.
+  against. Decode picks the numpy record-transposed walker
+  (``pb_wire_vec.flat_decode``) whenever the message shape allows: it
+  returns the decoded Arrow struct itself, and the row decoder (``py_decode``
+  per payload) takes the rows it hands off, so both paths share one
+  conversion from Python values into the decoded shape.
 - turn_wire, the transcript turn, has its own fast encoder:
   ``encode_turn_wire`` is one Arrow-batch kernel (``pb_wire_vec.
   flat_encode``: numpy varints, Arrow string buffers), and
@@ -47,7 +50,6 @@ from decimal import Decimal
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
@@ -964,60 +966,12 @@ def decode_message(df: DataFrame, payload_col: str, message: str,
                                         MAX_RECURSION_DEPTH))
     from .pb_wire_vec import build_flat_plan
 
+    rows = _row_decode_batch(reg, message, proto_version, schema)
     plan = build_flat_plan(reg, message, proto_version)
-    if plan is not None and "uint64" not in _plan_types(plan):
-        udf = _flat_decode_udf(plan, schema)
-    else:
-        udf = _row_decode_udf(reg, message, proto_version, schema)
+    udf = (_batch_decode_udf(rows, schema, "_decode") if plan is None
+           else _batch_decode_udf(_flat_decode_batch(plan, schema, rows),
+                                  schema, "_decode_vec"))
     return df.withColumn("decoded", udf(F.col(payload_col)))
-
-
-def _plan_types(plan) -> set[str]:
-    out = {f.ftype for f in plan.varints}
-    for sub in plan.subplans.values():
-        out |= _plan_types(sub)
-    return out
-
-
-def _arrow_column(c, typ):
-    """One ``flat_decode_frame`` column as a ``pa.Array`` of ``typ``.
-    Masked (Int64 / Float64) columns keep their numpy values and the
-    kernel's mask, so a NaN double stays NaN; only the mask is NULL."""
-    if isinstance(c, pd.Series):  # the scalar-fallback patch-up's frame
-        c = c.array
-        if c.dtype == object:
-            c = [None if v is pd.NA else v for v in c]
-    if isinstance(c, pd.api.extensions.ExtensionArray) \
-            and c.dtype != object:
-        a = pa.array(c)  # __arrow_array__: values + mask, no NaN sniffing
-    else:
-        a = pa.array(c, pa.int64() if pa.types.is_integer(typ) else typ,
-                     from_pandas=False)
-    # int32 fields come back int64: wrap like protobuf-java's readInt32
-    return a if a.type == typ else a.cast(typ, safe=False)
-
-
-def _flat_arrays(cols: dict, plan, atype, prefix: str = "") -> list:
-    """``flat_decode_frame`` columns -> the child arrays of ``atype``, the
-    decoded struct's Arrow type: a nested message is a child struct array
-    re-assembled from its flattened ``<field>.<sub>`` columns, NULL where
-    ``<field>._present`` is not true; ``oneof_<group>`` reads the kernel's
-    ``_pb_oneof_<group>`` column."""
-    out = []
-    for f in atype:
-        if f.name in plan.subplans:
-            pre = f"{prefix}{f.name}."
-            present = np.asarray(cols[pre + "_present"]) == True  # noqa: E712
-            out.append(pa.StructArray.from_arrays(
-                _flat_arrays(cols, plan.subplans[f.name], f.type, pre),
-                fields=list(f.type), mask=pa.array(~present)))
-        elif f.name.startswith("oneof_") \
-                and f.name[6:] in plan.oneof_groups:
-            out.append(_arrow_column(
-                cols[f"{prefix}_pb_oneof_{f.name[6:]}"], f.type))
-        else:
-            out.append(_arrow_column(cols[prefix + f.name], f.type))
-    return out
 
 
 def _batch_decode_udf(decode_batch, schema: T.StructType, name: str):
@@ -1036,36 +990,31 @@ def _batch_decode_udf(decode_batch, schema: T.StructType, name: str):
     return F.arrow_udf(udf, schema)
 
 
-def _flat_decode_udf(plan, schema: T.StructType):
-    """The Arrow-batch decode over the numpy record-transposed walker
-    (``pb_wire_vec``): same semantics as ``py_decode`` (fuzz-pinned in
-    tests/test_wire_property.py), no per-payload Python byte walk. The
-    payload ``BinaryArray``'s offsets and data buffers feed the kernel
-    directly (``flat_decode_frame``'s ``_pre`` seam) and each batch goes
-    back as one ``pa.StructArray``: no pandas frame on either side. The
-    plan (registry included) rides in the closure, pickled to each
-    executor once."""
+def _flat_decode_batch(plan, schema: T.StructType, rows):
+    """The batch decode over the numpy record-transposed walker
+    (``pb_wire_vec.flat_decode``): it returns the decoded ``StructArray``
+    itself, no per-payload Python byte walk. The rows it hands off go
+    through ``rows``, the row decoder's batch function, and land back at
+    their positions with one ``take``; the parity suite
+    (tests/test_wire_property.py) pins the result to ``rows`` over the
+    whole batch. The plan rides in the closure, pickled to each executor
+    once."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    from .pb_wire_vec import flat_decode_frame
+    from .pb_wire_vec import flat_decode
 
     atype = to_arrow_type(schema)
 
-    def _decode_batch(payload):
-        n = len(payload)
-        _, offs, data = payload.buffers()
-        offsets = (np.frombuffer(offs, np.int32, n + 1, 4 * payload.offset)
-                   .astype(np.int64) if n else np.zeros(1, np.int64))
-        arr = (np.frombuffer(data, np.uint8) if data is not None
-               else np.zeros(0, np.uint8))
-        isnull = payload.is_null().to_numpy(zero_copy_only=False)
-        cols = flat_decode_frame(None, plan, _pre=(
-            arr, offsets[:-1].copy(), offsets[1:], isnull,
-            lambda i: payload[i].as_py()))
-        return pa.StructArray.from_arrays(
-            _flat_arrays(cols, plan, atype), fields=list(atype))
+    def decode(payload):
+        out, handoff = flat_decode(payload, plan, atype)
+        redo = np.nonzero(handoff)[0]
+        if not redo.size:
+            return out
+        at = np.arange(len(out))
+        at[redo] = len(out) + np.arange(redo.size)
+        return pa.concat_arrays([out, rows(payload.take(redo))]).take(at)
 
-    return _batch_decode_udf(_decode_batch, schema, "_decode_vec")
+    return decode
 
 
 def _cell(v, dt: T.DataType):
@@ -1099,29 +1048,31 @@ def _row(d: dict, schema: T.StructType) -> dict:
             for f in schema}
 
 
-def _row_decode_udf(registry: SchemaRegistry, message: str,
-                    proto_version: int, schema: T.StructType):
-    """The Arrow-batch decode that runs ``py_decode`` per payload: maps,
-    repeated and recursive messages, bytes, uint64, Struct."""
+def _row_decode_batch(registry: SchemaRegistry, message: str,
+                      proto_version: int, schema: T.StructType):
+    """The batch decode that runs ``py_decode`` per payload: maps, repeated
+    and recursive messages, bytes, uint64, Struct, and the rows the flat
+    walker hands off."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    atype = to_arrow_type(schema)
     fields = T.StructType(schema.fields[:-1])
 
-    def _decode(payload):
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        rows = []
+    def decode(payload):
+        out = []
         for buf in payload.to_pylist():
             try:
                 if buf is None:
                     raise ValueError(WIRE_ERROR)
                 d = py_decode(buf, registry, message, proto_version)
-                rows.append({**_row(d, fields), "error": None})
+                out.append({**_row(d, fields), "error": None})
             except ValueError as e:
                 # keep the tag: DEPTH_ERROR routes apart from malformed bytes
-                rows.append({"error": DEPTH_ERROR if str(e) == DEPTH_ERROR
-                             else WIRE_ERROR})
-        return pa.array(rows, to_arrow_type(schema))
+                out.append({"error": DEPTH_ERROR if str(e) == DEPTH_ERROR
+                            else WIRE_ERROR})
+        return pa.array(out, atype)
 
-    return _batch_decode_udf(_decode, schema, "_decode")
+    return decode
 
 
 # ---------------------------------------------------------------------------
@@ -1173,31 +1124,26 @@ def _register_java_udf(spark, name: str, cls_name: str,
     references the decode output anyway.
 
     Registration goes through ``functions.udf(UDF2, DataType)`` via
-    explicit reflection (the typed overload py4j's resolver misses);
-    ``registerJavaFunction`` is the deterministic fallback if the internal
-    surface drifts."""
+    explicit reflection (the typed overload py4j's resolver misses). A
+    failure there raises: a deterministic ``registerJavaFunction`` stand-in
+    would decode, but put the decoder back into every filter above it
+    (``test_jvm_udf_runs_once_under_an_error_filter``)."""
     gw = spark.sparkContext._gateway
     jvm = spark._jvm
-    try:
-        loader = spark._jsparkSession.sharedState().jarClassLoader()
-        inst = loader.loadClass(cls_name).newInstance()
-        jdt = jvm.org.apache.spark.sql.types.DataType.fromJson(
-            return_type.json())
-        fcls = jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.functions")
-        udf2cls = jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.api.java.UDF2")
-        dtcls = jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.types.DataType")
-        params = gw.new_array(jvm.java.lang.Class, 2)
-        params[0], params[1] = udf2cls, dtcls
-        method = fcls.getMethod("udf", params)
-        args = gw.new_array(jvm.java.lang.Object, 2)
-        args[0], args[1] = inst, jdt
-        judf = method.invoke(None, args).asNondeterministic()
-        spark._jsparkSession.udf().register(name, judf)
-    except Exception:
-        spark.udf.registerJavaFunction(name, cls_name, return_type)
+    loader = spark._jsparkSession.sharedState().jarClassLoader()
+    inst = loader.loadClass(cls_name).newInstance()
+    jdt = jvm.org.apache.spark.sql.types.DataType.fromJson(return_type.json())
+    fcls = jvm.java.lang.Class.forName("org.apache.spark.sql.functions")
+    udf2cls = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.api.java.UDF2")
+    dtcls = jvm.java.lang.Class.forName("org.apache.spark.sql.types.DataType")
+    params = gw.new_array(jvm.java.lang.Class, 2)
+    params[0], params[1] = udf2cls, dtcls
+    method = fcls.getMethod("udf", params)
+    args = gw.new_array(jvm.java.lang.Object, 2)
+    args[0], args[1] = inst, jdt
+    judf = method.invoke(None, args).asNondeterministic()
+    spark._jsparkSession.udf().register(name, judf)
 
 
 def _ensure_jvm_row_udf(spark, message: str, proto_version: int,

@@ -5,7 +5,7 @@ spec/codecs/pb3_encode_spec.rb:25-41, generalized to generated messages)."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from logstash_codec_protobuf_spark.functions.wire import (
     py_field_len, py_field_sint, py_field_string, py_field_varint, py_unzigzag,
@@ -603,60 +603,56 @@ def test_fast_decode_matches_naive_on_repeated_fixed_message(buf, trunc):
 
 
 # ---------------------------------------------------------------------------
-# vectorized (numpy) flat decoder vs the scalar spec decoder — the fast path
-# that replaced the per-payload Python byte walk (round-5 verdict item 1)
-# must be record-for-record identical to py_decode, including the error and
-# representability boundaries.
+# the flat (numpy) decoder vs the row decoder, batch for batch: the flat
+# batch function (the walker, its hand-off rows re-decoded by the row
+# decoder and put back in place) must equal the row decoder's batch function
+# (py_decode per payload) on the same BinaryArray, NaN equal to NaN —
+# including the error and int64-representability boundaries.
 # ---------------------------------------------------------------------------
 
-import pandas as _pd
+import functools as _functools
+
+import pyarrow as _pa
+from pyspark.sql.pandas.types import to_arrow_type
 
 from logstash_codec_protobuf_spark.operators.pb_wire_vec import (
-    _fits_int64, build_flat_plan, flat_decode_frame,
+    build_flat_plan, flat_decode,
 )
 
-_PLAN3 = build_flat_plan(REG, "turn_wire", 3)
-_PLAN2 = build_flat_plan(REG, "turn_wire", 2)
-_TURN_NAMES = list(_PLAN3.field_names)
+
+# a varint past uint64: ten bytes, the last one > 1
+_PAST_U64 = b"\xff" * 9 + b"\x7f"
 
 
-def _scalar_reference(buf, proto_version=3):
-    """What the scalar UDF row builder produces for one payload (including
-    the int64-representability dead-letter rule)."""
-    out = {n: None for n in _TURN_NAMES}
-    out["_pb_oneof_body"] = None
-    out["error"] = W.WIRE_ERROR
-    if buf is None:
-        return out
-    try:
-        d = W.py_decode(bytes(buf), REG, "turn_wire",
-                        proto_version=proto_version)
-    except ValueError:
-        return out
-    for k in ("turn_idx", "cents", "horn", "wings"):
-        if d[k] is not None and not _fits_int64(d[k]):
-            return out
-    # (enum codes are int32-truncated inside py_decode — always fit)
-    res = {n: d[n] for n in _TURN_NAMES}
-    res["_pb_oneof_body"] = d["_pb_oneof"].get("body")
-    res["error"] = None
-    return res
+def _fx(num: int, wt: int, data: bytes) -> bytes:
+    return bytes([(num << 3) | wt]) + data
 
 
-def _assert_batch_parity(payloads, proto_version=3):
-    plan = _PLAN3 if proto_version == 3 else _PLAN2
-    cols = flat_decode_frame(_pd.Series(payloads, dtype=object), plan)
-    frame = _pd.DataFrame(cols)
+@_functools.cache
+def _decoders(message, proto_version=3, reg=REG):
+    """(flat batch function, row batch function, plan, Arrow type) of the
+    decoded struct of ``message``, as ``decode_message`` builds them."""
+    schema = W._with_error(W.decoded_schema(reg, message, proto_version,
+                                            W.MAX_RECURSION_DEPTH))
+    rows = W._row_decode_batch(reg, message, proto_version, schema)
+    plan = build_flat_plan(reg, message, proto_version)
+    assert plan is not None, message  # the walker owns this shape
+    return (W._flat_decode_batch(plan, schema, rows), rows, plan,
+            to_arrow_type(schema))
+
+
+def _assert_batch_parity(payloads, message="turn_wire", proto_version=3,
+                         reg=REG):
+    """Both batch functions over one BinaryArray of ``payloads``; returns
+    the flat batch as Python rows."""
+    flat, rows = _decoders(message, proto_version, reg)[:2]
+    batch = _pa.array(payloads, _pa.binary())
+    got, want = flat(batch).to_pylist(), rows(batch).to_pylist()
+    assert len(got) == len(want) == len(payloads)
     for i, p in enumerate(payloads):
-        want = _scalar_reference(p, proto_version)
-        for k, wv in want.items():
-            gv = frame.iloc[i][k]
-            gv = None if gv is _pd.NA else gv
-            if gv is None and wv is None:
-                continue
-            assert gv == wv, (
-                f"row {i} field {k}: vector={gv!r} scalar={wv!r} "
-                f"payload={bytes(p) if p is not None else None!r}")
+        assert _nan_norm(got[i]) == _nan_norm(want[i]), (
+            f"row {i}: flat={got[i]!r} rows={want[i]!r} payload={p!r}")
+    return got
 
 
 @given(st.lists(turn_values, min_size=1, max_size=8))
@@ -695,6 +691,10 @@ _turnrec = st.one_of(
 @given(st.lists(st.lists(_turnrec, max_size=9).map(b"".join),
                 min_size=1, max_size=12))
 @settings(max_examples=300, deadline=None)
+# varints past uint64 on every varint field kind: int32 wraps to 32 bits,
+# the sint64 value does not fit its LONG column (a dead-letter), the enum
+# code wraps to int32
+@example([_fx(k, 0, _PAST_U64) for k in (2, 5, 6, 8)])
 def test_vector_decoder_matches_scalar_on_wire_shaped(payloads):
     _assert_batch_parity(payloads, proto_version=3)
     _assert_batch_parity(payloads, proto_version=2)
@@ -702,8 +702,8 @@ def test_vector_decoder_matches_scalar_on_wire_shaped(payloads):
 # ---------------------------------------------------------------------------
 # string member inside a oneof (no such shape in turn_wire): a string that
 # LOSES the oneof must still get its UTF-8 validated — py_decode validates
-# every occurrence in wire order, so the vector path routes losers through
-# the scalar fallback (round-6 advice item 2)
+# every occurrence in wire order, so the walker hands losers off to the row
+# decoder
 # ---------------------------------------------------------------------------
 
 import pytest
@@ -718,45 +718,34 @@ _OF_REG.register_message(MessageSpec("of_str", (
     FieldSpec("b", "int64", oneof="pick", number=2),
     FieldSpec("tag", "string", number=3),
 )))
-_OF_PLAN = build_flat_plan(_OF_REG, "of_str", 3)
 _BAD_UTF8 = b"\xff\xfe"
 
 
-def _of_decode(payloads):
-    cols = flat_decode_frame(_pd.Series(payloads, dtype=object), _OF_PLAN)
-    return _pd.DataFrame(cols)
-
-
-def _cell(frame, i, k):
-    v = frame.iloc[i][k]
-    return None if v is _pd.NA else v
-
-
 def test_oneof_string_loser_still_utf8_validated():
-    assert _OF_PLAN is not None  # flat shape: the vector path owns it
     p_invalid_then_b = py_field_len(1, _BAD_UTF8) + py_field_varint(2, 7)
     p_valid_then_b = py_field_string(1, "hi") + py_field_varint(2, 7)
     p_invalid_b_revalid = (py_field_len(1, _BAD_UTF8) + py_field_varint(2, 7)
                            + py_field_string(1, "ok"))
     p_valid_only = py_field_string(1, "solo")
-    f = _of_decode([p_invalid_then_b, p_valid_then_b,
-                    p_invalid_b_revalid, p_valid_only])
+    f = _assert_batch_parity([p_invalid_then_b, p_valid_then_b,
+                              p_invalid_b_revalid, p_valid_only],
+                             "of_str", reg=_OF_REG)
     # py_decode parity: the invalid LOSER dead-letters the row
     with pytest.raises(ValueError):
         W.py_decode(p_invalid_then_b, _OF_REG, "of_str")
-    assert _cell(f, 0, "error") == W.WIRE_ERROR and _cell(f, 0, "a") is None
+    assert f[0]["error"] == W.WIRE_ERROR and f[0]["a"] is None
     # a valid loser: row decodes, b wins, a is nulled
     d1 = W.py_decode(p_valid_then_b, _OF_REG, "of_str")
     assert d1 == {"a": None, "b": 7, "tag": "", "_pb_oneof": {"pick": "b"}}
-    assert _cell(f, 1, "error") is None and _cell(f, 1, "b") == 7
-    assert _cell(f, 1, "a") is None and _cell(f, 1, "_pb_oneof_pick") == "b"
+    assert f[1] == {"a": None, "b": 7, "tag": "", "oneof_pick": "b",
+                    "error": None}
     # re-occurrence after a sibling win: earlier invalid bytes still error
     with pytest.raises(ValueError):
         W.py_decode(p_invalid_b_revalid, _OF_REG, "of_str")
-    assert _cell(f, 2, "error") == W.WIRE_ERROR
+    assert f[2]["error"] == W.WIRE_ERROR
     # control: plain valid string decodes on the fast path
-    assert _cell(f, 3, "error") is None and _cell(f, 3, "a") == "solo"
-    assert _cell(f, 3, "_pb_oneof_pick") == "a"
+    assert f[3] == {"a": "solo", "b": None, "tag": "", "oneof_pick": "a",
+                    "error": None}
 
 
 @given(st.lists(st.one_of(
@@ -769,47 +758,16 @@ def test_oneof_string_loser_still_utf8_validated():
 @settings(max_examples=300, deadline=None)
 def test_oneof_string_loser_fuzz_matches_py_decode(buf):
     """Random interleavings of oneof string/varint members + a plain string:
-    vector path and py_decode agree on decode vs dead-letter and values."""
-    try:
-        want = W.py_decode(buf, _OF_REG, "of_str")
-        err = None
-    except ValueError:
-        want, err = None, W.WIRE_ERROR
-    f = _of_decode([buf])
-    got_err = f.iloc[0]["error"]
-    got_err = None if got_err is _pd.NA or got_err is None else got_err
-    assert got_err == err, buf
-    if want is not None:
-        for k in ("a", "tag"):
-            gv = f.iloc[0][k]
-            gv = None if gv is _pd.NA else gv
-            assert gv == want[k], (k, buf)
-        gb = f.iloc[0]["b"]
-        gb = None if gb is _pd.NA else gb
-        assert gb == want["b"], buf
-        gp = f.iloc[0]["_pb_oneof_pick"]
-        gp = None if gp is _pd.NA else gp
-        assert gp == want["_pb_oneof"].get("pick"), buf
+    the flat and row decoders agree on decode vs dead-letter and values."""
+    _assert_batch_parity([buf], "of_str", reg=_OF_REG)
 
 # ---------------------------------------------------------------------------
-# round-7: one NESTING level + fixed32/64 floats in the vector decoder —
-# probe_result.task (singular nested message; rum_pb.rb ProbeResult shape)
-# and user_agent's non-contiguous fixed32 floats must match py_decode
-# record-for-record, including sub-level wire errors (which kill the parent
-# row), duplicate submessages (last wins), presence vs empty, and >uint64
-# varint fallbacks at either level.
+# one NESTING level + fixed32/64 floats in the walker — probe_result.task
+# (singular nested message; rum_pb.rb ProbeResult shape) and user_agent's
+# non-contiguous fixed32 floats, including sub-level wire errors (which kill
+# the parent row), duplicate submessages (last wins), presence vs empty, and
+# >uint64 varint hand-offs at either level.
 # ---------------------------------------------------------------------------
-
-import math as _math
-
-_PROBE_PLAN = build_flat_plan(REG, "probe_result", 3)
-_UA_PLAN = build_flat_plan(REG, "user_agent", 3)
-assert _PROBE_PLAN is not None and _PROBE_PLAN.messages, "nested plan"
-assert _UA_PLAN is not None and _UA_PLAN.fixeds, "fixed plan"
-
-
-def _fx(num: int, wt: int, data: bytes) -> bytes:
-    return bytes([(num << 3) | wt]) + data
 
 
 _subrec = st.one_of(
@@ -835,49 +793,13 @@ _proberec = st.one_of(
 )
 
 
-def _veq(a, b) -> bool:
-    if isinstance(a, float) and isinstance(b, float) \
-            and _math.isnan(a) and _math.isnan(b):
-        return True
-    return a == b
-
-
-def _nested_reference(buf):
-    sub_names = _PROBE_PLAN.subplans["task"].field_names
-    out = {"uuid": None, "task._present": None, "error": W.WIRE_ERROR}
-    out.update({f"task.{sn}": None for sn in sub_names})
-    if buf is None:
-        return out
-    try:
-        d = W.py_decode(bytes(buf), REG, "probe_result")
-    except ValueError:
-        return out
-    sub = d["task"]
-    res = {"uuid": d["uuid"], "task._present": sub is not None,
-           "error": None}
-    res.update({f"task.{sn}": (None if sub is None else sub[sn])
-                for sn in sub_names})
-    return res
-
-
 @given(st.lists(st.one_of(
     st.none(),
     st.lists(_proberec, max_size=6).map(b"".join)),
     min_size=1, max_size=10))
 @settings(max_examples=300, deadline=None)
 def test_vector_decoder_matches_scalar_on_nested_probe(payloads):
-    cols = flat_decode_frame(_pd.Series(payloads, dtype=object), _PROBE_PLAN)
-    frame = _pd.DataFrame(cols)
-    for i, p in enumerate(payloads):
-        want = _nested_reference(p)
-        for k, wv in want.items():
-            gv = frame.iloc[i][k]
-            gv = None if gv is _pd.NA else gv
-            if gv is None and wv is None:
-                continue
-            assert _veq(gv, wv), (
-                f"row {i} field {k}: vector={gv!r} scalar={wv!r} "
-                f"payload={bytes(p) if p is not None else None!r}")
+    _assert_batch_parity(payloads, "probe_result")
 
 
 _uarec = st.one_of(
@@ -896,24 +818,96 @@ _uarec = st.one_of(
                 min_size=1, max_size=10))
 @settings(max_examples=300, deadline=None)
 def test_vector_decoder_matches_scalar_on_fixed32_floats(payloads):
-    cols = flat_decode_frame(_pd.Series(payloads, dtype=object), _UA_PLAN)
-    frame = _pd.DataFrame(cols)
+    _assert_batch_parity(payloads, "user_agent")
+
+
+# ---------------------------------------------------------------------------
+# one fixed batch with every hand-off class between fast-path rows, at both
+# levels: each handed-off row must come back at its own position
+# ---------------------------------------------------------------------------
+
+# a uint32 value >= 2^63: fits the varint, not the int64 column
+_U32_HIGH = py_varint(1 << 63)
+
+_OF_REG.register_message(MessageSpec("ho_inner", (
+    FieldSpec("a", "string", oneof="pick", number=1),
+    FieldSpec("b", "int64", oneof="pick", number=2),
+    FieldSpec("u", "uint32", number=3),
+    FieldSpec("s", "string", number=4),
+)))
+_OF_REG.register_message(MessageSpec("ho_outer", (
+    FieldSpec("a", "string", oneof="pick", number=1),
+    FieldSpec("b", "int64", oneof="pick", number=2),
+    FieldSpec("u", "uint32", number=3),
+    FieldSpec("s", "string", number=4),
+    FieldSpec("sub", "message:ho_inner", number=5),
+)))
+
+
+def _assert_handoffs_in_place(message, reg, cases):
+    """``cases``: (payload, handed off?) in batch order. The walker must hand
+    off exactly the flagged rows, and the flat batch must equal the row
+    decoder's at every position (each row decodes to a distinct value, so a
+    row put back at the wrong index fails)."""
+    payloads = [p for p, _ in cases]
+    _, rows, plan, atype = _decoders(message, 3, reg)
+    _, handoff = flat_decode(_pa.array(payloads, _pa.binary()), plan, atype)
+    assert [bool(h) for h in handoff] == [h for _, h in cases]
+    got = _assert_batch_parity(payloads, message, reg=reg)
+    decoded = [repr(_nan_norm(r)) for r in got if r["error"] is None]
+    assert len(set(decoded)) == len(decoded)
     for i, p in enumerate(payloads):
-        try:
-            d = W.py_decode(bytes(p), REG, "user_agent")
-            want = {n: d[n] for n in _UA_PLAN.field_names}
-            want["error"] = None
-        except ValueError:
-            want = {n: None for n in _UA_PLAN.field_names}
-            want["error"] = W.WIRE_ERROR
-        for k, wv in want.items():
-            gv = frame.iloc[i][k]
-            gv = None if gv is _pd.NA else gv
-            if gv is None and wv is None:
-                continue
-            assert _veq(gv, wv), (
-                f"row {i} field {k}: vector={gv!r} scalar={wv!r} "
-                f"payload={bytes(p)!r}")
+        alone = rows(_pa.array([p], _pa.binary())).to_pylist()[0]
+        assert _nan_norm(got[i]) == _nan_norm(alone), i
+
+
+def test_flat_decoder_puts_every_handoff_back_in_place_probe_result():
+    def task(i, *recs):
+        return py_field_len(2, py_field_string(4, f"10.0.0.{i}")
+                            + b"".join(recs))
+
+    def uuid(i):
+        return py_field_string(1, f"r{i}")
+
+    ok = py_field_varint(2, 1) + _fx(3, 1, _struct.pack("<d", 2.5))
+    _assert_handoffs_in_place("probe_result", REG, [
+        (uuid(0) + task(0, ok), False),
+        (py_field_string(1, "x") + uuid(1) + task(1), True),  # dup string
+        (uuid(2), False),                                   # absent task
+        (uuid(3) + task(30) + task(3, ok), True),           # dup message
+        (None, False),                                      # dead-letter
+        (uuid(5) + py_field_len(2, b""), False),            # empty task
+        (uuid(6) + _fx(9, 0, _PAST_U64) + task(6), True),   # unknown > u64
+        (b"\x0a\x05r7", False),                             # overrun length
+        (uuid(8) + task(8, _fx(2, 0, _PAST_U64)), True),    # sub > u64
+        (uuid(9) + task(9, py_field_string(5, "a"),
+                        py_field_string(5, "b")), True),    # sub dup string
+        (uuid(10) + task(10, _fx(3, 1, _struct.pack("<d", math.nan))),
+         False),
+        (uuid(11) + task(11, py_field_len(6, _BAD_UTF8)), False),
+    ])
+
+
+def test_flat_decoder_puts_every_handoff_back_in_place_oneof_uint32():
+    def inner(i, *recs):
+        return py_field_len(5, py_field_string(4, f"in{i}") + b"".join(recs))
+
+    def s(i):
+        return py_field_string(4, f"r{i}")
+
+    _assert_handoffs_in_place("ho_outer", _OF_REG, [
+        (s(0) + py_field_string(1, "x") + inner(0), False),
+        (s(1) + py_field_string(1, "x") + py_field_varint(2, 1), True),
+        (s(2) + _fx(3, 0, _U32_HIGH), True),              # uint32 >= 2^63
+        (s(3) + py_field_varint(3, (1 << 63) - 1), False),  # largest fit
+        (s(4) + inner(4, py_field_string(1, "y"), py_field_varint(2, 4)),
+         True),                                           # sub oneof loser
+        (s(5) + inner(5, py_field_varint(2, 5), py_field_string(1, "z")),
+         False),                                          # string wins
+        (s(6) + inner(6, _fx(3, 0, _U32_HIGH)), True),    # sub uint32
+        (s(7) + py_field_len(1, _BAD_UTF8) + py_field_varint(2, 7), True),
+        (s(8) + inner(8, py_field_varint(3, 1 << 40)), False),
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -922,7 +916,6 @@ def test_vector_decoder_matches_scalar_on_fixed32_floats(payloads):
 # ---------------------------------------------------------------------------
 
 import duckdb as _duckdb
-import pyarrow as _pa
 
 from logstash_codec_protobuf_spark.functions.portable import DUCK
 

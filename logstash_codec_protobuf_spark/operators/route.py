@@ -10,9 +10,11 @@ is made EXPLICIT — ``probe_repartition`` of salted (sink, conversation) combos
 over ``spark.sql.shuffle.partitions`` tasks right before the write. The salt
 spreads each sink's rows over many tasks (a sink is a low-cardinality hot key
 by construction; without the salt all of sink_b lands in one task at 100 TB).
-`partitionBy("sink")` on the writer then lays files out per sink directory. A
-single ``persist`` lets good/dead flows share the parse stage instead of
-re-reading the source per sink (single-pass multi-sink fan-out, SURVEY.md §4).
+`partitionBy("sink")` on the writer then lays files out per sink directory.
+``route_all`` gives every parsed row, good or failed, its sink in one
+projection over the parse output, so good and dead-letter flows come from
+one scan of the source instead of one per sink (single-pass multi-sink
+fan-out, SURVEY.md §4).
 """
 
 from __future__ import annotations

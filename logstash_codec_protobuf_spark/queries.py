@@ -1918,7 +1918,7 @@ def ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("minhash_bands", f"SELECT * FROM ({DD.minhash_bands_oracle()})")
 def minhash_bands_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH bucket assignment (16 perms over char-4-gram shingles,
-    2 bands x 8 rows)."""
+    4 bands x 4 rows)."""
     return DD.minhash_bands(_docs(spark, sf_dir))
 
 
@@ -1926,9 +1926,9 @@ def minhash_bands_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate near-dup pairs — the O(n) scale path for fuzzy dedup.
     Round 5: buckets above LSH_MAX_BUCKET are excluded from pairwise
-    emission with logged accounting (oracle mirrors the HAVING clause) —
-    the all-pairs join is never exposed to a degenerate boilerplate
-    bucket."""
+    emission (oracle mirrors the HAVING clause; minhash_oversize_buckets
+    lists the exclusions) — the all-pairs join is never exposed to a
+    degenerate boilerplate bucket."""
     return DD.minhash_pairs(_docs(spark, sf_dir))
 
 
@@ -1948,39 +1948,29 @@ def minhash_oversize_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bucket guard's exclusions as a first-class dead-letter frame
     (round-5 ADVICE): every LSH band bucket whose membership exceeds the cap,
     with its doc count — what ``minhash_pairs`` drops from pairwise emission.
-    Queryable (route to exact dedup / star edges), not just a log line. The
-    cap here is 8 so the frame is non-trivial at driver SF; production uses
-    LSH_MAX_BUCKET=1024 — the semantics are cap-independent."""
+    Queryable (route to exact dedup / star edges). The cap here is 8 so the
+    frame is non-trivial at driver SF; production uses LSH_MAX_BUCKET=1024
+    — the semantics are cap-independent."""
     return DD.minhash_oversize_buckets(_docs(spark, sf_dir), max_bucket=8)
 
 
 @query("simhash", DD.simhash_oracle())
 def simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """32-bit SimHash fingerprints over token hashes."""
+    """32-bit SimHash fingerprints over char-4-gram shingle hashes."""
     return DD.simhash(_docs(spark, sf_dir))
 
 
 @query("dedup_clusters", DD.dedup_clusters_oracle())
 def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster resolution over the LSH pair graph: connected
-    components by iterative min-label propagation; every doc labeled with
+    """Duplicate-cluster resolution over the guarded LSH pair graph:
+    connected components by star contraction (the closure
+    dedup_clusters_star runs over its star edges); every doc labeled with
     its component's min doc_id (the canonical survivor). Oracle: recursive
     CTE computing min reachable id."""
     return DD.dedup_clusters(_docs(spark, sf_dir))
 
 
-_SURVIVOR_ORACLE = f"""
-WITH RECURSIVE pairs AS ({DD.minhash_star_edges_oracle()}),
-edges AS (
-  SELECT a_id AS s, b_id AS t FROM pairs
-  UNION
-  SELECT b_id, a_id FROM pairs
-),
-reach(node, r) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.t, reach.r FROM edges e JOIN reach ON e.s = reach.node
-),
+_SURVIVOR_ORACLE = DD.component_ctes(DD.minhash_star_edges_oracle()) + f""",
 clusters AS (
   SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY node
 ),
@@ -2004,10 +1994,8 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters -> ONE survivor per cluster, chosen by quality score
     (deterministic tie-break on doc_id) — what a training-data pipeline
     actually keeps. Cluster partitions are near-dup groups (tiny), so the
-    rank window never sees a hot key. Clustering uses star contraction (the
-    O(log n)-round path): replica-chained near-dup graphs reach diameter 16
-    on the 50x docscale corpus, where propagation took 16 shuffle waves /
-    211s vs contraction's 5 / 36s (BENCH/dedup_scale_latest.md). The oracle
+    rank window never sees a hot key. Clusters come from dedup_clusters_star:
+    star contraction (O(log n) rounds) over the star-edge graph. The oracle
     is the star-edge recursive CTE (exact-dedup reps -> bucket-min star
     graph) — component-identical to the all-pairs candidate graph by the
     minhash_star_edges proof. Label parity with the GUARDED all-pairs

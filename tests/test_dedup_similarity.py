@@ -17,6 +17,26 @@ def _docs(spark):
     return load_table(spark, SF_DIR, "documents")
 
 
+def _union_find_labels(nodes, edges):
+    """Component-min label of every node of an undirected graph by
+    union-find — the ground truth for the Spark component closure. The
+    larger root always attaches under the smaller, so a root is the min of
+    its set."""
+    parent = {x: x for x in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in nodes}
+
+
 def test_exact_dedup_finds_planted_duplicates(spark):
     """Planted copies collapse to one canonical id."""
     docs = spark.createDataFrame(
@@ -194,16 +214,23 @@ def test_dedup_clusters_deep_chain_converges(spark):
 
 
 def test_star_contraction_matches_propagation(spark):
-    """dedup_clusters_star (O(log n)-round scale path) must produce exactly
-    the labeling of min-label propagation — on the real corpus's LSH pair
-    graph and on a branchy synthetic graph with singletons."""
+    """dedup_clusters (its default guarded LSH pair graph) and
+    dedup_clusters_star over the same pairs must both produce the
+    component-min labeling union-find gives — the labels min-label
+    propagation converges to — on the real corpus's LSH pair graph; and
+    the star path must on a branchy synthetic graph with singletons."""
     docs = _docs(spark)
     pairs = DD.minhash_pairs(docs)
-    prop = {(r["doc_id"], r["cluster_id"], r["is_canonical"])
-            for r in DD.dedup_clusters(docs, pairs=pairs).collect()}
+    ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
+    labels = _union_find_labels(
+        ids, [(r["a_id"], r["b_id"]) for r in pairs.collect()])
+    want = {(d, c, d == c) for d, c in labels.items()}
+    assert len(want) == len(ids) and not all(c for _, _, c in want)
+    got = {(r["doc_id"], r["cluster_id"], r["is_canonical"])
+           for r in DD.dedup_clusters(docs).collect()}
     star = {(r["doc_id"], r["cluster_id"], r["is_canonical"])
             for r in DD.dedup_clusters_star(docs, pairs=pairs).collect()}
-    assert star == prop and len(star) == docs.count()
+    assert got == want and star == want
 
     sdocs = spark.createDataFrame(
         [(i, f"d{i}") for i in range(9)], "doc_id long, text string")
@@ -241,33 +268,13 @@ def test_star_contraction_matches_union_find_on_random_graphs(spark):
     half-merged stars, multi-hub components, dense cores + pendants)."""
     import random
 
-    def union_find_labels(n, edges):
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # component min == min over members' roots after full compression
-        comp: dict[int, int] = {}
-        for i in range(n):
-            r = find(i)
-            comp[r] = min(comp.get(r, i), i)
-        return {i: comp[find(i)] for i in range(n)}
-
     rng = random.Random(20260817)
     for trial, (n, n_edges) in enumerate(
             [(30, 15), (40, 60), (25, 8), (50, 30)]):
         edges = {(min(a, b), max(a, b))
                  for a, b in ((rng.randrange(n), rng.randrange(n))
                               for _ in range(n_edges)) if a != b}
-        want = union_find_labels(n, edges)
+        want = _union_find_labels(range(n), edges)
         docs = spark.createDataFrame([(i, "x") for i in range(n)],
                                      "doc_id long, text string")
         pairs = spark.createDataFrame(sorted(edges),
@@ -287,8 +294,6 @@ def test_cluster_resolution_raises_on_non_convergence(spark):
                                  "doc_id long, text string")
     chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "a_id long, b_id long")
-    with pytest.raises(ValueError, match="did not converge"):
-        DD.dedup_clusters(docs, pairs=chain, max_iter=3).collect()
     with pytest.raises(ValueError, match="did not converge"):
         DD.dedup_clusters_star(docs, pairs=chain, max_iter=2).collect()
     # empty pair graph: converged before round one, all singletons
@@ -321,20 +326,29 @@ def test_fingerprint_kernels_match_reference_on_edge_texts():
     """The numpy kernels (utf-32 windows, packed-key dedup, matmul poly
     hash, matrix vote) must equal the obvious per-char reference on edge
     inputs: non-BMP chars (packed fast path must NOT engage), shorter-than-k
-    strings, repeated shingles, single-shingle texts. Runs the pandas_udf
-    inner functions directly — no Spark session."""
+    strings, repeated shingles, single-shingle texts. Runs the fused
+    kernels' numpy cores and pandas_udf inner functions directly — no Spark
+    session."""
+    import numpy as np
     import pandas as pd
 
     from logstash_codec_protobuf_spark.functions.portable import MOD
     from logstash_codec_protobuf_spark.operators.dedup import (
-        MINHASH_PERMS, MINHASH_SHINGLE_K as K, _minhash_sigs_udf,
-        _shingle_hashes_all_udf, _shingle_hashes_udf, _simhash32_udf)
+        MINHASH_PERMS, MINHASH_SHINGLE_K as K, _basis_arr,
+        _minhash_sigs_text_udf, _simhash32_all_text_udf, _vote32)
 
     def ref_hash(s):
         acc = 0
         for ch in s:
             acc = (acc * 31 + ord(ch)) % MOD
         return ((acc * 48271 % MOD) * 48271) % MOD
+
+    def ref_vote(hs):
+        ref = 0
+        for b in range(32):
+            if 2 * sum((h >> b) & 1 for h in hs) > len(hs):
+                ref |= 1 << b
+        return ref
 
     texts = [
         "abc",                      # shorter than k -> []
@@ -345,27 +359,22 @@ def test_fingerprint_kernels_match_reference_on_edge_texts():
         "the quick brown fox " * 4,
     ]
     s = pd.Series(texts)
-    got_distinct = _shingle_hashes_udf.func(s)
-    got_all = _shingle_hashes_all_udf.func(s)
-    for t, gd, ga in zip(texts, got_distinct, got_all):
+    sigs = _minhash_sigs_text_udf.func(s)
+    votes_all = _simhash32_all_text_udf.func(s)
+    for t, sig, vote_all in zip(texts, sigs, votes_all):
         grams = [t[i:i + K] for i in range(len(t) - K + 1)]
-        assert sorted(ga) == sorted(ref_hash(g) for g in grams)
-        assert sorted(gd) == sorted(
-            ref_hash(g) for g in dict.fromkeys(grams))
+        distinct = [ref_hash(g) for g in dict.fromkeys(grams)]
+        assert sorted(_basis_arr(t).tolist()) == sorted(distinct)
+        if distinct:
+            assert list(sig) == [min((h * a + b) % MOD for h in distinct)
+                                 for a, b in MINHASH_PERMS]
+        else:  # amin over an empty basis is NULL in the SQL template
+            assert sig is None
+        assert int(vote_all) == ref_vote([ref_hash(g) for g in grams])
 
-    hb = pd.Series([[5, 5, 7], [MOD - 1, 0, 1], [2 ** 30]])
-    votes = _simhash32_udf.func(hb)
-    for hs, v in zip(hb, votes):
-        ref = 0
-        for b in range(32):
-            if 2 * sum((h >> b) & 1 for h in hs) > len(hs):
-                ref |= 1 << b
-        assert int(v) == ref
-    assert int(_simhash32_udf.func(pd.Series([[]]))[0]) == 0
-
-    sigs = _minhash_sigs_udf.func(pd.Series([[3, 99, MOD - 1]]))
-    for (a, b), got in zip(MINHASH_PERMS, sigs[0]):
-        assert got == min((h * a + b) % MOD for h in [3, 99, MOD - 1])
+    # [1, 2] ties bits 0 and 1 (one of two set): a tie sets no bit
+    for hs in ([5, 5, 7], [MOD - 1, 0, 1], [2 ** 30], [1, 2], []):
+        assert _vote32(np.array(hs, dtype=np.int64)) == ref_vote(hs)
 
 
 def test_farthest_point_seeding_beats_first_k_on_clustered_corpus(spark):
@@ -478,33 +487,35 @@ def test_star_edges_cluster_identically_to_all_pairs_with_planted_dups(spark):
     assert star_n < pair_n
 
 
-def test_oversize_bucket_guard_drops_loudly(spark, caplog):
-    """Buckets past max_bucket are excluded from pairwise emission AND the
-    exclusion is logged — never a silent cap. 30 identical docs with
-    max_bucket=8: every band bucket is oversize, so no pair among them
-    survives; distinct-content docs are unaffected."""
-    import logging
+def test_oversize_bucket_guard_drops_loudly(spark):
+    """Buckets past max_bucket are excluded from pairwise emission, never
+    silently: the exclusions are the queryable minhash_oversize_buckets
+    frame. 30 identical docs with max_bucket=8: every band bucket is
+    oversize, so no pair among them survives; distinct-content docs are
+    unaffected. Construction is plan-only (round-6: a construction-time
+    probe cost +10% on the idle A/B and fired a full job)."""
+    import duckdb
+    import pandas as pd
 
     rows = [(i, "identical boilerplate page body " * 5) for i in range(30)]
     rows += [(100 + i, f"unique document number {i} with its own words {i}")
              for i in range(4)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    with caplog.at_level(logging.WARNING,
-                         logger="logstash_codec_protobuf_spark.operators.dedup"):
-        pairs = DD.minhash_pairs(docs, max_bucket=8,
-                                 accounting="eager").collect()
-    assert any("excluded from pairwise emission" in r.message
-               for r in caplog.records)
-    # the DEFAULT is lazy (round-6: the eager probe cost +10% on the idle
-    # A/B and fired a full job at plan-only construction time): identical
-    # pairs, no construction-time warning, exclusions queryable instead
-    caplog.clear()
-    with caplog.at_level(logging.WARNING,
-                         logger="logstash_codec_protobuf_spark.operators.dedup"):
-        lazy_frame = DD.minhash_pairs(docs, max_bucket=8)  # plan-only
-    assert not caplog.records  # construction ran no accounting job
-    assert sorted((r["a_id"], r["b_id"]) for r in lazy_frame.collect()) \
-        == sorted((r["a_id"], r["b_id"]) for r in pairs)
+    sc = spark.sparkContext
+    sc.setJobGroup("oversize_guard_construction", "construction")
+    try:
+        frame = DD.minhash_pairs(docs, max_bucket=8)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(
+        "oversize_guard_construction")) == []
+    pairs = frame.collect()
+    # the same pairs as the oracle, whose HAVING clause mirrors the cap
+    con = duckdb.connect()
+    con.register("documents",
+                 pd.DataFrame(rows, columns=["doc_id", "text"]))
+    assert sorted((r["a_id"], r["b_id"]) for r in pairs) \
+        == sorted(con.execute(DD.minhash_pairs_oracle(8)).fetchall())
     over = {(r["band_idx"], r["band_key"]): r["n_docs"] for r in
             DD.minhash_oversize_buckets(docs, max_bucket=8).collect()}
     assert over and all(v == 30 for v in over.values())
@@ -564,8 +575,8 @@ def test_ann_recall_floor_at_documented_settings(spark):
 
 def test_null_text_null_propagates_through_fingerprint_kernels(spark):
     """A NULL text row must null-propagate through every Arrow fingerprint
-    kernel (shingles for any k, minhash basis/signatures, simhash votes,
-    weighted basis) exactly like the SQL templates they replace — never
+    kernel (shingles for any k, minhash signatures, simhash votes,
+    weighted votes) exactly like the SQL templates they replace — never
     kill the batch with len(None) (round-5 self-review finding)."""
     docs = spark.createDataFrame(
         [(0, "a real document body here"), (1, None), (2, "another doc")],
@@ -576,7 +587,7 @@ def test_null_text_null_propagates_through_fingerprint_kernels(spark):
         assert rows[1] is None and rows[0]
     sigs = {r["doc_id"]: r["s"] for r in docs.select(
         "doc_id",
-        DD._minhash_sigs_udf(DD._shingle_hashes_udf(F.col("text"))).alias("s"),
+        DD._minhash_sigs_text_udf(F.col("text")).alias("s"),
     ).collect()}
     assert sigs[1] is None and len(sigs[0]) == 16
     sh = {r["doc_id"]: r["simhash32"]

@@ -1,2 +1,2 @@
-from .pipeline import run_pipeline, run_parse_stage  # noqa: F401
+from .pipeline import run_pipeline  # noqa: F401
 from .checkpoint import CheckpointManifest  # noqa: F401

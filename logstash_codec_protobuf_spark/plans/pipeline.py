@@ -2,7 +2,7 @@
 
 One logical plan per lineage wave; Catalyst fuses scan+parse+enrich (the
 dictionary lookups are a projection, no join) into a single stage, so the
-only exchanges are the explicit pre-route repartition and one per aggregate.
+only exchanges are each wave's pre-write rebalance and one per aggregate.
 
 Each row's work is done once, and only the work the routed store keeps:
 
@@ -16,6 +16,10 @@ Each row's work is done once, and only the work the routed store keeps:
   and ``parsed.cents``; ``parse_turns``' native path is a ``named_struct``
   over shared ``_perr`` / ``_parts`` columns, so the wave runs one RLIKE
   and one split per row and no ``regexp_extract``.
+- **Task sizes from measured bytes.** The pre-write exchange is Spark's
+  ``REBALANCE`` on ``(_bucket, sink)``: AQE coalesces small partitions and
+  splits a hot one by the shuffle bytes it measured, so the file count
+  follows the data with no input-size guess, salt or hand-placed layout.
 - **Counts from the footers.** The manifest's per-(bucket, sink) counts are
   the row counts in the parquet footers the wave's write just committed,
   not metrics evaluated per row during the write.
@@ -30,30 +34,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..config import CodecConfig, DEAD_LETTER_SINK, sql_str
 from ..operators import aggregate as agg
 from ..operators.enrich import join_tools
-from ..operators.parse import parse_turns, split_dead_letter
-from ..operators.route import SINK_INDEX, probe_repartition, route_all
-from ..sources.dims import SINKS
+from ..operators.parse import parse_turns
+from ..operators.route import route_all
 from ..sources.transcripts import transcripts_df
 from ..storage import parquet_writer
 from .checkpoint import CheckpointManifest
-
-
-def run_parse_stage(
-    spark: SparkSession, sf_dir: str, cfg: CodecConfig | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """parse + dead-letter split, honoring stop_on_error
-    (protobuf.rb:139-140,227-228)."""
-    cfg = cfg or CodecConfig()
-    tr = transcripts_df(spark, sf_dir)
-    good, dead = split_dead_letter(parse_turns(tr))
-    if cfg.stop_on_error:
-        first = dead.select("decoder_exception", "message").take(1)
-        if first:
-            raise ValueError(
-                f"decode failed (stop_on_error): {first[0]['decoder_exception']}"
-                f" on payload {first[0]['message']!r}"
-            )
-    return good, dead
 
 
 def _routed_wave(spark: SparkSession, sf_dir: str, cfg: CodecConfig,
@@ -85,61 +70,23 @@ def _routed_wave(spark: SparkSession, sf_dir: str, cfg: CodecConfig,
     )
 
 
-def _combos_per_partition(sf_dir: str, transcripts_path: str | None) -> int:
-    """Salt-combo density for the pre-write probe repartition, derived from
-    INPUT SIZE (round-8, verdict item 1): at headline scale the +29% clean-
-    bench e2e regression was file-count overhead — combos_per_partition=4
-    wrote 160 files where 40 carry the same rows, and the extra writer
-    opens/commits cost ~0.5s against a 2s write (A/B in
-    OPTIMIZATION_r08.md). At 20M-turn scale the wider combo space is what
-    averages hot-combo mass across tasks, so size, not parallelism, picks
-    the density. Threshold: staged 20M-turn input is ~3 GB, the headline
-    derivation input is ~2 MB; 64 MB splits them with orders of magnitude
-    of margin."""
-    import os
-
-    try:
-        if transcripts_path is not None:
-            # the whole tree: a Hive-partitioned input keeps its files
-            # under key=value/ subdirectories
-            size = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(transcripts_path)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        else:
-            size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        return 4  # unknown input: keep the mass-averaging default
-    return 1 if size < (64 << 20) else 4
-
-
-def _wave_frame(routed_all: DataFrame, wave: list[int],
-                combos_per_partition: int) -> DataFrame:
+def _wave_frame(routed_all: DataFrame, wave: list[int]) -> DataFrame:
     """The frame one wave writes: the rows of ``routed_all`` in the wave's
-    buckets, repartitioned for the write.
+    buckets, rebalanced on the write's partition columns.
 
-    The pre-write repartition is DETERMINISTICALLY balanced (round-7,
-    round-6 verdict item 1 — the 8->32 e2e gap): the old
-    repartition(n, _bucket, sink, salt) had two failure modes, both
-    measured on 20M turns (BENCH/e2e_decompose_r7*):
-    1. pmod(crc32(conv_id), 4) was fully determined by _bucket =
-       pmod(crc32(conv_id), 8) — zero salt entropy, one task per
-       (bucket, sink), 46.3s vs 22.6s at local[32];
-    2. even with an independent salt, hashing a small combo space into n
-       tasks is a murmur3 lottery (22.6-57.9s for the SAME mass
-       distribution). probe_repartition assigns combos to partitions
-       round-robin via driver-computed probe integers: balance and
-       files-per-task both hold by construction at any parallelism.
+    The pre-write exchange is a ``REBALANCE`` on ``(_bucket, sink)``: the
+    wave's few dozen (bucket, sink) groups, of very uneven mass, are
+    hashed to partitions, and AQE sizes the partitions by the map-output
+    bytes it measured. Small ones are coalesced, each group still landing
+    one file in its directory; a partition over
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is split over
+    several tasks, each landing a file of about that size. Without AQE it
+    is a hash repartition on the same columns: the same rows land in the
+    same directories, each group in one task.
     """
-    n = int(routed_all.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    group_idx = f"_bucket * {len(SINKS)} + {SINK_INDEX}"
     in_wave = routed_all.filter(
         F.expr(f"_bucket IN ({', '.join(map(str, wave))})"))
-    return probe_repartition(in_wave, n, group_idx,
-                             len(wave) * len(SINKS),
-                             combos_per_partition=combos_per_partition)
+    return in_wave.hint("rebalance", "_bucket", "sink")
 
 
 def run_pipeline(
@@ -183,7 +130,6 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
                   transcripts_path: str | None) -> dict:
     sc = spark.sparkContext
     data_dir = f"{out_dir}/routed"
-    cpp = _combos_per_partition(sf_dir, transcripts_path)
     manifest = CheckpointManifest(f"{out_dir}/manifest")
     done = manifest.completed()
     todo = [b for b in range(n_buckets) if b not in done]
@@ -199,7 +145,7 @@ def _run_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
         sc.setJobDescription(f"run_pipeline: wave {wi} write routed")
         t0 = time.time()
         (
-            parquet_writer(_wave_frame(routed_all, wave, cpp))
+            parquet_writer(_wave_frame(routed_all, wave))
             .mode("append").partitionBy("_bucket", "sink")
             .parquet(data_dir)
         )

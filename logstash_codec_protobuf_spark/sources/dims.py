@@ -16,15 +16,14 @@ a ``'`` and keeps ``\\`` as is, while Spark's parser reads ``\\`` as an
 escape. ``ROLES_SQL`` / ``TOOLS_SQL`` / ``ENUMS_SQL`` are the DuckDB texts;
 whatever Spark parses goes through ``config.sql_str``.
 
-`tools.sink` drives the tag-based fan-out routing (FIXTURES.md §2);
-``SINKS`` is every sink a row can land in, in a fixed order.
+`tools.sink` drives the tag-based fan-out routing (FIXTURES.md §2).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import DEAD_LETTER_SINK, sql_str
+from ..config import sql_str
 from ..schema import default_registry
 
 ROLES_ROWS = [
@@ -48,11 +47,6 @@ TOOLS_ROWS = [
 for _rows in (ROLES_ROWS, TOOLS_ROWS):
     if len({r[0] for r in _rows}) != len(_rows):
         raise ValueError(f"duplicate dictionary key: {_rows}")
-
-
-# every sink a routed row can land in: the tools' sinks in first-seen order,
-# then the dead letter (the pipeline's group index and file layout use it)
-SINKS = tuple(dict.fromkeys(r[2] for r in TOOLS_ROWS)) + (DEAD_LETTER_SINK,)
 
 
 def _duck_str(s: str) -> str:

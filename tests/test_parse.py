@@ -2,15 +2,13 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from logstash_codec_protobuf_spark.config import DEAD_LETTER_TAG, CodecConfig
+from logstash_codec_protobuf_spark.config import DEAD_LETTER_TAG
 from logstash_codec_protobuf_spark.operators.parse import (
     parse_turns, split_dead_letter,
 )
 from logstash_codec_protobuf_spark.sources.transcripts import transcripts_df
-from logstash_codec_protobuf_spark.plans.pipeline import run_parse_stage
 
 from .conftest import SF_DIR
 
@@ -41,14 +39,6 @@ def test_good_rows_have_no_error(spark):
     tr = transcripts_df(spark, SF_DIR)
     good, _ = split_dead_letter(parse_turns(tr))
     assert good.filter(F.col("parsed.error").isNotNull()).isEmpty()
-
-
-def test_stop_on_error_raises(spark):
-    """stop_on_error: fail fast instead of dead-lettering
-    (protobuf.rb:139-140,227-228)."""
-    cfg = CodecConfig(stop_on_error=True)
-    with pytest.raises(ValueError, match="decode failed"):
-        run_parse_stage(spark, SF_DIR, cfg)
 
 
 def test_parse_is_narrow_no_shuffle(spark):

@@ -167,20 +167,62 @@ def test_fan_out_parquet_and_writeto(spark, tmp_path):
     spark.sql("DROP TABLE fanout_v2_test")
 
 
-def test_combos_density_sizes_nested_partitioned_input(tmp_path):
-    """A Hive-partitioned input keeps its parquet under key=value/ dirs; the
-    salt-combo density must size the whole tree, not only top-level files.
-    The 65 MiB file is sparse, so it takes no disk."""
-    from logstash_codec_protobuf_spark.plans.pipeline import _combos_per_partition
+def _files_per_dir(root) -> dict[str, int]:
+    """Parquet files per ``_bucket=<b>/sink=<s>`` directory under ``root``."""
+    return {os.path.relpath(d, root): n for d, _, fs in os.walk(root)
+            if (n := sum(f.endswith(".parquet") for f in fs))}
 
-    part = tmp_path / "transcripts" / "part=a"
-    part.mkdir(parents=True)
-    big = part / "f0.parquet"
-    big.touch()
-    os.truncate(big, 65 << 20)
-    assert _combos_per_partition(SF_DIR, str(tmp_path / "transcripts")) == 4
-    os.truncate(big, 1 << 20)
-    assert _combos_per_partition(SF_DIR, str(tmp_path / "transcripts")) == 1
+
+def test_wave_rebalance_places_groups_by_measured_bytes(spark, tmp_path):
+    """A wave's one data exchange is a rebalance on (_bucket, sink), with
+    no probe key and no salt. At default settings a small wave lands one
+    file per (bucket, sink); with a small advisory partition size a hot
+    (bucket, sink) group is split over several files, and the footers
+    still count every input row in its own directory."""
+    from logstash_codec_protobuf_spark.config import CodecConfig
+    from logstash_codec_protobuf_spark.plans.pipeline import (
+        _routed_wave, _wave_frame)
+    from logstash_codec_protobuf_spark.storage import parquet_writer
+
+    src = _staged(spark, tmp_path / "tr")
+    wave = _wave_frame(_routed_wave(spark, SF_DIR, CodecConfig(), 8,
+                                    transcripts_path=src), [0, 1, 2, 3])
+    plan = wave._jdf.queryExecution().executedPlan().toString()
+    exchanges = [line for line in plan.splitlines() if "Exchange " in line]
+    assert len(exchanges) == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(_bucket#\d+, sink#\d+, \d+\),"
+                     r" REBALANCE_PARTITIONS_BY_COL", exchanges[0]), plan
+    assert "element_at(array(" not in plan, plan
+    assert "xxhash64" not in plan, plan
+
+    small = str(tmp_path / "small")
+    parquet_writer(wave).partitionBy("_bucket", "sink").parquet(small)
+    files = _files_per_dir(small)
+    assert files and set(files.values()) == {1}, files
+
+    # one hot (bucket 1, sink_b) group of 120k rows over eight map tasks,
+    # next to small groups in both buckets
+    hot = spark.range(0, 160_000, 1, 8).selectExpr(
+        "repeat(md5(CAST(id AS STRING)), 2) AS text",
+        "CASE WHEN id < 120000 THEN 'sink_b' ELSE element_at("
+        "array('sink_a', 'sink_c', 'dead_letter'), CAST(id % 3 + 1 AS INT))"
+        " END AS sink",
+        "CAST(CASE WHEN id < 120000 THEN 1 ELSE id % 2 END AS INT) AS _bucket")
+    expected: dict[int, dict[str, int]] = {}
+    for r in hot.groupBy("_bucket", "sink").count().collect():
+        expected.setdefault(r["_bucket"], {})[r["sink"]] = r["count"]
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "256k")
+    try:
+        split = str(tmp_path / "split")
+        parquet_writer(_wave_frame(hot, [0, 1])) \
+            .partitionBy("_bucket", "sink").parquet(split)
+    finally:
+        spark.conf.set(key, prev)
+    assert _files_per_dir(split)["_bucket=1/sink=sink_b"] >= 2
+    manifest = CheckpointManifest(str(tmp_path / "manifest"))
+    assert {b: manifest.landed_counts(split, b) for b in (0, 1)} == expected
 
 
 def _staged(spark, path) -> str:

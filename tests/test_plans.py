@@ -103,7 +103,7 @@ def test_wave_write_parses_each_row_once_without_cache(spark, tr_path):
 
     routed = _routed_wave(spark, SF_DIR, CodecConfig(), 8,
                           transcripts_path=tr_path)
-    plan = _executed(_wave_frame(routed, [4, 5, 6, 7], 1))
+    plan = _executed(_wave_frame(routed, [4, 5, 6, 7]))
     assert plan.count("RLIKE") == 1, plan
     assert plan.count("split(") == 1, plan
     assert "regexp_extract" not in plan, plan
@@ -355,71 +355,3 @@ def test_guarded_pairs_excludes_oversize_without_reshuffling_bands(spark):
         "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan
     cache.release_tracked()
-
-
-# ---------------------------------------------------------------------------
-# round-7: deterministic pre-write partition placement (the 8->32 fix)
-# ---------------------------------------------------------------------------
-
-def test_murmur3_int_matches_spark_hash(spark):
-    """_murmur3_int must replicate Catalyst's Murmur3 for INT columns —
-    the probe search is only valid if the driver-side hash is the one
-    HashPartitioning applies."""
-    from pyspark.sql import functions as F
-
-    from logstash_codec_protobuf_spark.operators.route import _murmur3_int
-
-    rows = (spark.range(0, 500)
-            .select(F.col("id").cast("int").alias("x"),
-                    F.hash(F.col("id").cast("int")).alias("h")).collect())
-    assert all(r["h"] == _murmur3_int(r["x"]) for r in rows)
-
-
-def test_partition_probe_values_place_exactly(spark):
-    """repartition(n, probe[p]) must land rows in EXACTLY partition p —
-    the deterministic-placement property the fan-out write relies on
-    (BENCH/e2e_decompose_r7*.md: hash placement of small combo spaces is
-    a murmur3 lottery; probes bypass it)."""
-    from pyspark.sql import functions as F
-
-    from logstash_codec_protobuf_spark.operators.route import (
-        partition_probe_values,
-    )
-
-    for n in (5, 16, 33):
-        probes = partition_probe_values(n)
-        assert len(set(probes)) == n
-        df = spark.createDataFrame(
-            [(p, i) for i, p in enumerate(probes)], "pkey int, slot int")
-        got = (df.repartition(n, "pkey")
-               .withColumn("pid", F.spark_partition_id()).collect())
-        assert all(r["pid"] == r["slot"] for r in got), n
-
-
-def test_probe_repartition_balance_and_coverage(spark):
-    """On a realistic routed frame: no empty partitions, every partition's
-    row count within 2x of the mean, and group (sink) content spread —
-    the by-construction properties that replaced hash luck."""
-    from pyspark.sql import functions as F
-
-    from logstash_codec_protobuf_spark.operators.route import (
-        probe_repartition,
-    )
-
-    n = 16
-    sinks = ["a", "b", "c", "d", "dead_letter"]
-    df = (spark.range(0, 20_000)
-          .select(F.concat(F.lit("conv-"), (F.col("id") % 997)
-                           .cast("string")).alias("conv_id"),
-                  F.element_at(F.array(*[F.lit(s) for s in sinks]),
-                               (F.col("id") % 5 + 1).cast("int"))
-                  .alias("sink")))
-    sink_pos = "array_position(array({}), sink) - 1".format(
-        ", ".join(f"'{s}'" for s in sinks))
-    out = probe_repartition(df, n, sink_pos, len(sinks))
-    sizes = (out.withColumn("pid", F.spark_partition_id())
-             .groupBy("pid").count().collect())
-    counts = {r["pid"]: r["count"] for r in sizes}
-    assert len(counts) == n, f"empty partitions: {set(range(n)) - set(counts)}"
-    mean = sum(counts.values()) / n
-    assert max(counts.values()) < 2 * mean, counts

@@ -217,24 +217,27 @@ def neardup_pairs(emb: DataFrame, threshold: float = 0.9,
     # grouped by the bucket they meet in, and one Arrow task scores a whole
     # bucket block with vectorized index-order folds — arithmetic identical
     # to the pair_dot/try_divide/trunc6 expression tree, pinned by the
-    # exact DuckDB oracle. Block memory is bounded by chunking the probe
-    # side, so a hot bucket can never OOM a task. A NULL vector's cosine is
-    # NULL in the oracle, so it never passes the threshold: drop it before
-    # the kernels, whose np.stack cannot take a missing row.
+    # exact DuckDB oracle. Each vector carries the norm the bucket kernel
+    # folded (the same fold as _nrm_np), so no block recomputes it. Block
+    # memory is bounded by chunking the probe side, so a hot bucket can
+    # never OOM a task. A NULL vector's cosine is NULL in the oracle, so it
+    # never passes the threshold: drop it before the kernels, whose
+    # np.stack cannot take a missing row.
     h = cache.track(
         spread(emb.select("vec_id", "embedding")
                .filter(F.col("embedding").isNotNull())).select(
             "vec_id", "embedding",
             _bucket_nrm_udf(n_planes)(F.col("embedding")).alias("_bn"))
-        .select("vec_id", "embedding", F.col("_bn.bucket").alias("bucket"))
+        .select("vec_id", "embedding", F.col("_bn.bucket").alias("bucket"),
+                F.col("_bn.nrm").alias("nrm"))
     )
     probes = "array(bucket" + "".join(
         f" , bucket ^ {1 << p}" for p in range(n_planes)
     ) + ")"
     a = h.select(F.lit(0).alias("side"), F.col("vec_id").alias("id"),
-                 "embedding", F.explode(F.expr(probes)).alias("g"))
+                 "embedding", "nrm", F.explode(F.expr(probes)).alias("g"))
     b = h.select(F.lit(1).alias("side"), F.col("vec_id").alias("id"),
-                 "embedding", F.col("bucket").alias("g"))
+                 "embedding", "nrm", F.col("bucket").alias("g"))
     thr = float(threshold)
 
     def score_block(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -249,8 +252,8 @@ def neardup_pairs(emb: DataFrame, threshold: float = 0.9,
         Bv = np.stack(B["embedding"].to_numpy()).astype(np.float64)
         a_ids = A["id"].to_numpy()
         b_ids = B["id"].to_numpy()
-        a_nrm = _nrm_np(Av)
-        b_nrm = _nrm_np(Bv)
+        a_nrm = A["nrm"].to_numpy(dtype=np.float64)
+        b_nrm = B["nrm"].to_numpy(dtype=np.float64)
         out = []
         step = max(1, (1 << 22) // max(len(b_ids), 1))  # <=4M cells/chunk
         for lo in range(0, len(a_ids), step):

@@ -162,10 +162,11 @@ def run_stream_to_sinks(spark: SparkSession, source_dir: str, out_dir: str):
     batch engine's parquet codec, with streaming checkpointing (resume =
     restart with the same checkpoint dir).
 
-    Unlike the batch writes, this sink still lands through Hadoop's
-    forking ``chmod``: ``FileStreamSink`` takes its Hadoop conf from the
-    session, not from writer options, so ``storage.WRITE_OPTIONS``' local
-    FileSystem cannot be set per write here (see ``storage``)."""
+    Unlike the batch writes, this sink still lands v1 pages through
+    Hadoop's forking ``chmod``: ``FileStreamSink`` takes its Hadoop conf
+    from the session, not from writer options, so ``storage.WRITE_OPTIONS``'
+    page version and local FileSystem cannot be set per write here (see
+    ``storage``)."""
     routed = streaming_parse_route(read_transcript_stream(spark, source_dir))
     return (
         routed.writeStream

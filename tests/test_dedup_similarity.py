@@ -982,3 +982,42 @@ def test_neardup_bucket_block_chunking_is_boundary_exact(spark):
     sizes = Counter(b.values())
     big = sizes.most_common(1)[0][1]
     assert big * 5 > (1 << 22) // big
+
+
+def test_neardup_carried_norm_keeps_dirty_component_pairs(spark):
+    """neardup_pairs scores with the norm the bucket kernel folded, carried
+    with each vector instead of folded again per block: the clean pairs
+    keep the oracle's scores bit for bit, and a vector with a NaN, NULL or
+    infinite component is in no pair. The oracle also lists the pairs of
+    an infinite-component vector, scored NaN (inf / inf), since NaN >= t
+    is TRUE in DuckDB; the kernel drops them (numpy's NaN >= t is false),
+    as it did when each block folded its own norms."""
+    import math
+
+    import duckdb
+
+    emb = load_table(spark, SF_DIR, "embeddings").orderBy("vec_id").limit(20)
+    rows = [(r["vec_id"], [float(v) for v in r["embedding"]])
+            for r in emb.collect()]
+    # a near twin of every vector, so there are pairs to score
+    rows += [(vid + 500_000, [v * 1.01 + 0.001 * (i % 3)
+                              for i, v in enumerate(vec)])
+             for vid, vec in rows]
+    for vid, (i, v) in enumerate(((0, math.nan), (5, None), (9, math.inf)),
+                                 start=1_000_000):
+        for src in (rows[0], rows[1]):  # a dirty twin of two clean vectors
+            vec = list(src[1])
+            vec[i] = v
+            rows.append((vid, vec))
+            vid += 10
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = {(r["a_id"], r["b_id"]): r["score"]
+           for r in SIM.neardup_pairs(df, threshold=0.5).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    want = {(a, b): s for a, b, s in
+            con.execute(SIM.neardup_pairs_oracle(0.5)).fetchall()}
+    assert len(got) >= 20
+    assert got == {k: s for k, s in want.items() if not math.isnan(s)}
+    assert all(a < 1_000_000 and b < 1_000_000 for a, b in got)
